@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.Bridge
 
 /** Benchmark entrypoint. Prints machine-readable JSON result lines.
   *
@@ -138,23 +139,6 @@ object Bench {
           ()
         }
       })
-    val busFlush: () => Unit = {
-      try {
-        val sc = spark.sparkContext
-        val busM = sc.getClass.getMethods.find(_.getName == "listenerBus").get
-        val bus = busM.invoke(sc)
-        bus.getClass.getMethods
-          .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-          .map(m => () => { try m.invoke(bus) catch { case _: Throwable => () }; () })
-          .orElse(bus.getClass.getMethods
-            .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 1)
-            .map(m => () => {
-              try m.invoke(bus, java.lang.Long.valueOf(2000L))
-              catch { case _: Throwable => () }; ()
-            }))
-          .getOrElse(() => ())
-      } catch { case _: Throwable => () => () }
-    }
     // INTER-PASS HOOK (env SPARK_GRAFT_INTERPASS_CMD): a shell command
     // run before the first timed pass and after every pass, with
     // GRAFT_PASS=0..reps in its environment — the r13 judge's
@@ -371,7 +355,7 @@ object Bench {
         // this row's clock starts (see the warmup-loop note)
         graft.operators.PrefixSum.releaseCaches()
         graft.operators.Dedup.releaseAdmissionCaches()
-        busFlush()
+        Bridge.drainListenerBus(spark.sparkContext)
         val j0 = jobCounter.get()
         val tm0 = taskMsCounter.get()
         val t0 = System.nanoTime()
@@ -389,7 +373,7 @@ object Bench {
               false
           }
         val dt = (System.nanoTime() - t0) / 1e9
-        busFlush()
+        Bridge.drainListenerBus(spark.sparkContext)
         val dj = jobCounter.get() - j0
         val dTaskSec = (taskMsCounter.get() - tm0) / 1000.0
         if (ok) {

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.graftshim.Bridge
 
 /** Stats-adaptive execution gates shared by the driver-side collect
   * points (declared-query local frames, candidate-spine
@@ -8,131 +9,75 @@ import org.apache.spark.sql.DataFrame
   *
   * The one decision here: a plan whose LEAF SCANS total under
   * `smallPlanBytes` runs its consuming action with adaptive query
-  * execution scoped OFF — at that size AQE's per-exchange query-stage
+  * execution OFF — at that size AQE's per-exchange query-stage
   * materialization pays a scheduler-floor job per shuffle with nothing
-  * to re-plan (the r15 job-floor watch list was exactly this class),
-  * while a plan reading real volume keeps runtime re-planning (skew
-  * splits, runtime broadcast, partition coalescing — the things that
-  * matter at 100 TB). The gate keys on what the query READS
-  * (file-stat-backed leaf relation statistics, conservative), never on
-  * the final frame's post-aggregate estimate, which is tiny even over
-  * a 100 TB scan. Purely physical: results are identical either way.
-  */
+  * to re-plan, while a plan reading real volume keeps runtime
+  * re-planning (skew splits, runtime broadcast, partition coalescing —
+  * the things that matter at 100 TB). The gate keys on what the query
+  * READS (file-stat-backed leaf relation statistics, conservative),
+  * never on the final frame's post-aggregate estimate, which is tiny
+  * even over a 100 TB scan. Purely physical: results are identical
+  * either way.
+  *
+  * Gate sessions: a gate never writes the caller's conf. A gated
+  * action re-binds its plan to a GATE SESSION — a clone of the
+  * caller's session (same context, catalog data and cache) that holds
+  * the gate's settings — so concurrent queries on the caller's session,
+  * gated or not, always plan with the caller's own conf. Gate sessions
+  * are cached per (parent session, settings) and rebuilt when the
+  * parent's conf has changed since the clone, so a gate always derives
+  * from the parent's current conf. Nothing mutates a gate session
+  * after it is built, so the cache map is the only shared state. A
+  * gate opened inside a gated body is a gate of the gate session: its
+  * settings stack on the enclosing gate's. */
 object PlanGate {
 
   val smallPlanBytes: Long = 256L << 20
 
-  /** Process-wide lock guarding session-conf scope TRANSITIONS (the
-    * set and restore phases of [[withConfScope]], plus the few
-    * residual whole-window scopes like IvfIndex's dynamic-overwrite
-    * write). Unserialized, two overlapping scopes on the shared
-    * session could each capture the other's TEMPORARY value as its
-    * "previous" and make the override permanent (r16 verdict).
-    * Reentrant, so nested scopes (`withAqeOffIfSmall(cappedCollect
-    * (...))`) self-lock without deadlock.
-    *
-    * Residual, documented: a concurrent query on ANOTHER thread that
-    * compiles while a scope is open still plans with the scope's
-    * physical knobs (AQE off / capped width / high limit
-    * initial-partitions). Those knobs are physical-only — results are
-    * identical — and the gated scopes are by construction small-plan
-    * fast paths, so the window is milliseconds; serving deployments
-    * wanting zero cross-talk run maintenance actions on a dedicated
-    * session (`spark.newSession()` shares the catalog and cache but
-    * not the conf). */
-  private[graft] val confScopeLock =
-    new java.util.concurrent.locks.ReentrantLock()
+  private final case class Gate(snapshot: Map[String, String],
+                                session: SparkSession)
 
-  private[graft] def confScoped[T](body: => T): T = {
-    confScopeLock.lock()
-    try body finally confScopeLock.unlock()
-  }
-
-  /** Per-(session, key) open-scope ledger: the steady-state value the
-    * FIRST scope to open a key observed, plus how many scopes of that
-    * key are currently open. Guarded by [[confScopeLock]]. */
-  private final case class ScopeEntry(original: Option[String], depth: Int)
-  private val scopeState =
-    scala.collection.mutable.Map.empty[(Int, String), ScopeEntry]
-
-  /** Run `body` with the session-conf `settings` applied, holding
-    * [[confScopeLock]] only for the set and restore phases — the body
-    * (the consuming action, often a whole collect or write) runs
-    * OUTSIDE the lock, so concurrent gated actions no longer
-    * serialize end-to-end (they used to: every declared-query local
-    * frame routed its full collect through one process-wide lock).
-    *
-    * `settings` is computed UNDER the lock, so derived values (e.g. a
-    * width capped from the current setting) read a stable conf. The
-    * per-key depth ledger keeps restoration exact at any
-    * interleaving: the first scope to open a key records the
-    * session's steady-state value, the last to close restores it —
-    * no scope can capture another's temporary value as "previous"
-    * and pin it. Overlapping scopes of the same key see
-    * last-set-wins for the overlap window; every knob routed through
-    * here is physical-only (AQE, shuffle width, limit scan count),
-    * so results are identical regardless. */
-  private[graft] def withConfScope[T](
-      spark: org.apache.spark.sql.SparkSession)(
-      settings: => Seq[(String, String)])(body: => T): T = {
-    val sid = System.identityHashCode(spark.conf)
-    // Appended per-key as each ledger entry opens, so a `conf.set` that
-    // throws mid-loop still unwinds exactly the keys already opened —
-    // an all-at-the-end assignment would leave their depths incremented
-    // forever (the pinned-override failure this ledger exists to stop).
-    val applied = scala.collection.mutable.ArrayBuffer.empty[String]
-    def closeApplied(): Unit = {
-      confScopeLock.lock()
-      try applied.foreach { k =>
-        val key = (sid, k)
-        scopeState.get(key) match {
-          case Some(e) if e.depth <= 1 =>
-            scopeState.remove(key)
-            e.original match {
-              case Some(v) => spark.conf.set(k, v)
-              case None    => spark.conf.unset(k)
-            }
-          case Some(e) => scopeState(key) = e.copy(depth = e.depth - 1)
-          case None    => // unbalanced close — nothing recorded, nothing to restore
-        }
-      } finally confScopeLock.unlock()
+  /** Access-ordered and bounded: a handful of gates per live session;
+    * sessions that went away age out instead of pinning their state. */
+  private val gates =
+    new java.util.LinkedHashMap[(SparkSession, Seq[(String, String)]), Gate](
+      16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[
+          (SparkSession, Seq[(String, String)]), Gate]): Boolean = size() > 32
     }
-    confScopeLock.lock()
-    try {
-      try {
-        val kvs = settings
-        kvs.foreach { case (k, v) =>
-          val key = (sid, k)
-          scopeState.get(key) match {
-            case Some(e) => scopeState(key) = e.copy(depth = e.depth + 1)
-            case None    => scopeState(key) = ScopeEntry(spark.conf.getOption(k), 1)
-          }
-          applied += k
-          spark.conf.set(k, v)
-        }
-      } finally confScopeLock.unlock()
-    } catch { case t: Throwable => closeApplied(); throw t }
-    try body
-    finally closeApplied()
-  }
 
-  /** The session's STEADY-STATE value of `key`: the ledger's recorded
-    * original when an open scope currently overrides it, the live conf
-    * otherwise. Passthrough decisions (e.g. withAqeOff's "AQE already
-    * globally off" short-circuit) must consult THIS, not the live
-    * conf — the live value can be a concurrent scope's temporary
-    * override, and a passthrough taken on it runs its body unscoped
-    * until the neighbor closes (the PlanGateSpec concurrency flake:
-    * ~1-in-3 full-suite runs observed aqe restored mid-body). Safe to
-    * call from inside a [[withConfScope]] settings block — the lock is
-    * reentrant. */
-  private[graft] def steadyConf(spark: org.apache.spark.sql.SparkSession,
-                                key: String): Option[String] = confScoped {
-    scopeState.get((System.identityHashCode(spark.conf), key)) match {
-      case Some(e) => e.original
-      case None    => spark.conf.getOption(key)
+  /** The gate session of `parent` holding `settings`. Built once and
+    * reused while `parent`'s conf is unchanged: a fresh session pays
+    * its analyzer and planner construction on first use. */
+  private def session(parent: SparkSession,
+                      settings: Seq[(String, String)]): SparkSession = {
+    val snapshot = parent.conf.getAll
+    gates.synchronized {
+      val key = (parent, settings)
+      Option(gates.get(key)).filter(_.snapshot == snapshot).map(_.session)
+        .getOrElse {
+          val s = Bridge.cloneSession(parent)
+          settings.foreach { case (k, v) => s.conf.set(k, v) }
+          gates.put(key, Gate(snapshot, s))
+          s
+        }
     }
   }
+
+  /** `df`'s plan bound to session `s` (identity when already bound). */
+  def rebind(s: SparkSession, df: DataFrame): DataFrame =
+    if (df.sparkSession eq s) df
+    else Bridge.ofRows(s, df.queryExecution.analyzed)
+
+  /** Run `body` on the gate session of `parent` holding `settings`. A
+    * DataFrame result is re-bound to `parent`, so only the actions
+    * inside the body run under the gate's settings. */
+  def withGate[T](parent: SparkSession, settings: Seq[(String, String)])(
+      body: SparkSession => T): T =
+    body(session(parent, settings)) match {
+      case df: Dataset[_] => rebind(parent, df.toDF()).asInstanceOf[T]
+      case r              => r
+    }
 
   /** Sum of the optimizer's leaf-relation size estimates — the plan's
     * read volume. `Long.MaxValue` when statistics are unavailable, so
@@ -140,26 +85,26 @@ object PlanGate {
   def leafBytes(df: DataFrame): BigInt =
     try df.queryExecution.optimizedPlan.collectLeaves()
       .map(_.stats.sizeInBytes).sum
-    catch { case _: Throwable => BigInt(Long.MaxValue) }
+    catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) }
 
-  /** Run `body` (the consuming action of `df`) with AQE off when the
-    * plan's leaf scans are small; unchanged otherwise. */
-  def withAqeOffIfSmall[T](df: DataFrame)(body: => T): T =
-    if (leafBytes(df) <= BigInt(smallPlanBytes))
-      graft.sources.VersionedCorpus.withAqeOff(df.sparkSession)(body)
-    else body
+  /** Run `body` over `df` with AQE off when the plan's leaf scans are
+    * small (`df` re-bound to the gate session); over `df` unchanged
+    * otherwise. */
+  def withAqeOffIfSmall[T](df: DataFrame)(body: DataFrame => T): T =
+    graft.sources.VersionedCorpus.withAqeOff(df.sparkSession,
+      leafBytes(df) <= BigInt(smallPlanBytes))(g => body(rebind(g, df)))
 
   /** `df.limit(maxRows).collect()` in ONE job: CollectLimit's
     * incremental partition scaling (initialNumPartitions = 1, then
     * scale-up) pays up to three jobs for a capped safety collect whose
     * cap almost never binds — the probe-collect shape every
-    * driver-bounded materialization uses. Scoping
-    * `spark.sql.limit.initialNumPartitions` high makes the one
-    * execution scan every partition, which is what the scale-up would
-    * have done anyway by the time the cap is the question. */
+    * driver-bounded materialization uses. The gate's high
+    * `spark.sql.limit.initialNumPartitions` makes the one execution
+    * scan every partition, which is what the scale-up would have done
+    * anyway by the time the cap is the question. */
   def cappedCollect(df: DataFrame,
                     maxRows: Int): Array[org.apache.spark.sql.Row] =
-    withConfScope(df.sparkSession)(
-      Seq("spark.sql.limit.initialNumPartitions" -> "1000000"))(
-      df.limit(maxRows).collect())
+    withGate(df.sparkSession,
+      Seq("spark.sql.limit.initialNumPartitions" -> "1000000"))(g =>
+      rebind(g, df).limit(maxRows).collect())
 }

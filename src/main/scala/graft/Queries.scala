@@ -896,7 +896,7 @@ object Queries
     * job-floor watch list); plans reading real volume keep runtime
     * re-planning. Purely physical — results identical either way. */
   private def collectGated(df: DataFrame): Array[org.apache.spark.sql.Row] =
-    PlanGate.withAqeOffIfSmall(df)(df.collect())
+    PlanGate.withAqeOffIfSmall(df)(_.collect())
 
   /** Plan-capture mode for `DeclaredQuery.planFrame`: while active on
     * the current thread, the first collecting tail
@@ -1265,7 +1265,7 @@ object Queries
       if (cached != null && cached._1 == fp) cached
       else {
         val df = build
-        (fp, PlanGate.withAqeOffIfSmall(df)(df.collect()).toSeq, df.schema)
+        (fp, PlanGate.withAqeOffIfSmall(df)(_.collect()).toSeq, df.schema)
       })
     s.createDataFrame(java.util.Arrays.asList(built._2: _*), built._3)
   }

@@ -351,7 +351,6 @@ object Dedup {
       BigInt(graft.PlanGate.smallPlanBytes)
     val persisted = df.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def collect() = graft.PlanGate.cappedCollect(persisted, cap + 1)
     // the ROW cap cannot bound BYTES (a fat-text batch under the cap
     // can still blow spark.driver.maxResultSize): a failed collect
     // degrades to the persisted distributed shape instead of killing
@@ -359,9 +358,9 @@ object Dedup {
     // the degrade costs no recompute
     val rows =
       try {
-        if (small)
-          graft.sources.VersionedCorpus.withAqeOff(df.sparkSession)(collect())
-        else collect()
+        graft.sources.VersionedCorpus.withAqeOff(df.sparkSession, small)(s =>
+          graft.PlanGate.cappedCollect(graft.PlanGate.rebind(s, persisted),
+            cap + 1))
       } catch {
         case _: org.apache.spark.SparkException =>
           return registerCache(persisted)
@@ -475,7 +474,7 @@ object Dedup {
         java.lang.Float.valueOf(0.0f)
       case x => x
     }
-    graft.PlanGate.withAqeOffIfSmall(ids)(ids.collect())
+    graft.PlanGate.withAqeOffIfSmall(ids)(_.collect())
       .map(r => norm(r.get(0))).distinct
   }
 
@@ -777,21 +776,18 @@ object Dedup {
                           starContraction: Boolean = false,
                           localFinishEdges: Int = 1 << 16): DataFrame =
     // a graph built from small scans runs its whole labeling (edge
-    // materialization, local-finish probe, per-round jobs) with AQE
-    // scoped off — every exchange here is dup-graph-sized, and AQE's
-    // per-exchange query-stage materialization pays a scheduler-floor
-    // job each with nothing to re-plan; at-scale graphs keep adaptive
-    // planning (skew splits on hub keys matter there)
-    if (graft.PlanGate.leafBytes(vertices) + graft.PlanGate.leafBytes(edges)
-        <= BigInt(graft.PlanGate.smallPlanBytes))
-      graft.sources.VersionedCorpus.withAqeOff(vertices.sparkSession)(
-        connectedComponentsImpl(vertices, idCol, edges, srcCol, dstCol,
-          maxIters, pointerJump, saltFactor, starContraction,
-          localFinishEdges))
-    else
-      connectedComponentsImpl(vertices, idCol, edges, srcCol, dstCol,
-        maxIters, pointerJump, saltFactor, starContraction,
-        localFinishEdges)
+    // materialization, local-finish probe, per-round jobs) with AQE off
+    // on a gate session — every exchange here is dup-graph-sized, and
+    // AQE's per-exchange query-stage materialization pays a
+    // scheduler-floor job each with nothing to re-plan; at-scale graphs
+    // keep adaptive planning (skew splits on hub keys matter there)
+    graft.sources.VersionedCorpus.withAqeOff(vertices.sparkSession,
+      graft.PlanGate.leafBytes(vertices) + graft.PlanGate.leafBytes(edges)
+        <= BigInt(graft.PlanGate.smallPlanBytes)) { s =>
+      connectedComponentsImpl(graft.PlanGate.rebind(s, vertices), idCol,
+        graft.PlanGate.rebind(s, edges), srcCol, dstCol, maxIters,
+        pointerJump, saltFactor, starContraction, localFinishEdges)
+    }
 
   private def connectedComponentsImpl(
       vertices: DataFrame, idCol: String,
@@ -1215,18 +1211,19 @@ object Dedup {
         case None        => dropDuplicatesByKey(labeled, col("component"), col(idCol))
         case Some(score) => keepBestByKey(labeled, col("component"), score, col(idCol))
       }
-      // the PERSIST must sit inside the small-plan scope, not just the
-      // count: Spark compiles a cached relation's physical plan eagerly
-      // at persist() with the session's CURRENT shuffle width, and
-      // cached-plan materialization keeps that width (no AQE
-      // coalescing), so persisting before the scope froze the label
-      // join + rep agg at full width — 32 tasks per downstream scan of
-      // the cache at fixture scale (r19 profile: the 843 ms stage in
+      // the PERSIST must run on the gate session, not just the count:
+      // Spark compiles a cached relation's physical plan eagerly at
+      // persist() with its session's shuffle width, and cached-plan
+      // materialization keeps that width (no AQE coalescing), so a
+      // persist on the caller's session froze the label join + rep agg
+      // at full width — 32 tasks per downstream scan of the cache at
+      // fixture scale (r19 profile: the 843 ms stage in
       // dedup_pipeline_lsh_fixed). Gate on `docs` (accurate parquet
       // leaves); at-scale inputs keep adaptive planning as before.
-      graft.PlanGate.withAqeOffIfSmall(docs) {
-        val out = reps.join(sizes, "component")
-          .select(docs.columns.map(col) :+ col("component") :+ col("n_docs"): _*)
+      graft.PlanGate.withAqeOffIfSmall(docs) { d =>
+        val out = graft.PlanGate.rebind(d.sparkSession,
+          reps.join(sizes, "component").select(
+            docs.columns.map(col) :+ col("component") :+ col("n_docs"): _*))
           .persist(lvl)
         out.count()
         out

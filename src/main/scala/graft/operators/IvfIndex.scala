@@ -313,7 +313,8 @@ object IvfIndex {
       // metadata-scale, so under 4 MB the ids fold into a LocalRelation
       // whose downstream broadcast builds with NO job — where the
       // distributed distinct paid a scheduler-floor job per probe over
-      // a tombstoned index. Bigger backlogs (or an unreadable file)
+      // a tombstoned index. Bigger backlogs, an unreadable file, or a
+      // non-numeric id column (which the long-typed fold would drop)
       // keep the distributed read; applyTombstonesPartitioned retires
       // them either way. Result identity: same distinct id set, and
       // the consumer joins are null-safe equi-joins.
@@ -323,6 +324,7 @@ object IvfIndex {
       val local =
         if (files.nonEmpty && totalBytes <= (4L << 20))
           graft.sources.LocalParquet.readKeys(files, idCol)
+            .filter(_.forall(_.isInstanceOf[java.lang.Number]))
         else None
       local match {
         case Some(ks) =>
@@ -365,21 +367,11 @@ object IvfIndex {
       try {
         val kept = survivors.select(col("cluster_id")).distinct()
           .collect().map(_.getInt(0)).toSet
-        // conf-scoped under the process-wide lock: unserialized, an
-        // overlapping save/set/restore on another thread could capture
-        // this scope's temporary "dynamic" as its previous value and
-        // pin it — and a pinned static overwrite later deletes whole
-        // tables instead of the touched partitions.
-        graft.PlanGate.confScoped {
-          val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-          try survivors.repartition(col("cluster_id"))
-            .write.partitionBy("cluster_id").mode("overwrite").parquet(path)
-          finally prev match {
-            case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-            case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-          }
-        }
+        // dynamic overwrite is a per-write option: a static overwrite
+        // here would delete every partition, not just the touched ones
+        survivors.repartition(col("cluster_id"))
+          .write.partitionBy("cluster_id").mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic").parquet(path)
         // a cluster whose every row was tombstoned writes no survivors,
         // so dynamic overwrite never visits its directory — drop it
         touched.filterNot(kept).foreach { c =>

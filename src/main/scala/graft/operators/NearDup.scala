@@ -866,13 +866,13 @@ object NearDup {
   def materializePairsOpt(pairs: DataFrame,
                           maxRows: Int = 1 << 20): Option[DataFrame] = {
     val spark = pairs.sparkSession
-    // candidate spines over small scans collect with AQE scoped off —
+    // candidate spines over small scans collect with AQE off —
     // the bucket-join chain's per-exchange materialization jobs are
     // pure scheduler floor at fixture scale (PlanGate's leaf gate keeps
     // at-scale runs adaptive) — and the capped collect runs as ONE job
     // (cappedCollect) instead of CollectLimit's incremental 1-3
     val rows = graft.PlanGate.withAqeOffIfSmall(pairs)(
-      graft.PlanGate.cappedCollect(pairs, maxRows + 1))
+      graft.PlanGate.cappedCollect(_, maxRows + 1))
     if (rows.length > maxRows) None
     else Some(
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), pairs.schema))

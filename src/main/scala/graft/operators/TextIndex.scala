@@ -475,7 +475,8 @@ object TextIndex {
     * anti-join (whose broadcast builds job-free), instead of a
     * broadcast built from a distributed scan that pays one
     * scheduler-floor job PER QUERY over the index. Big tombstone
-    * backlogs keep the distributed broadcast join — and [[optimize]]
+    * backlogs (and non-numeric key columns, which the long-typed fold
+    * would drop) keep the distributed broadcast join — and [[optimize]]
     * retires them entirely. Semantics identical in all three forms:
     * a row dies iff some tombstone batch LATER than its own holds its
     * key (null keys never match). */
@@ -494,6 +495,7 @@ object TextIndex {
     if (tombFiles.forall(_.nonEmpty) && totalBytes <= localTombBytes) {
       val perBatch = tombB.zip(tombFiles).map { case (b, fs) =>
         graft.sources.LocalParquet.readKeys(fs, "doc_id")
+          .filter(_.forall(_.isInstanceOf[java.lang.Number]))
           .map(ks => batchId(b) ->
             ks.collect { case n: java.lang.Number => n.longValue() })
       }

@@ -32,6 +32,12 @@ import org.apache.spark.sql.SparkSession
   * handle (its corpus swap is `@volatile`; `add` keeps the
   * read-mostly path lock-free).
   *
+  * Every request runs on the caller's session (the one `db` reads
+  * through). Maintenance actions elsewhere in the process run their
+  * gated actions on gate sessions ([[graft.PlanGate]]) and never write
+  * this session's conf, so a search always plans with the session's
+  * own settings.
+  *
   * Port 0 binds an ephemeral port (tests); [[boundPort]] reports it.
   * Binds LOOPBACK by default: `/load` points the driver at filesystem
   * paths and `/add` mutates the corpus — an unauthenticated mutation
@@ -51,26 +57,6 @@ import org.apache.spark.sql.SparkSession
 final class SearchServer(spark: SparkSession, db: graft.VectorDb,
                          port: Int = 8080, host: String = "127.0.0.1",
                          loadRoots: Seq[String] = SearchServer.envLoadRoots) {
-
-  /** Dedicated session for the READ path (`/search`, `/count`) — a
-    * `newSession()` clone sharing the SparkContext, catalog data, and
-    * cache with `spark`, but with its OWN SQLConf: maintenance actions
-    * elsewhere in the process routinely open conf scopes
-    * (PlanGate.withConfScope — AQE off, shuffle width capped) around
-    * their bodies, and a search that happened to plan inside such a
-    * window would silently pick up those physical knobs (the r17/r18
-    * verdict residual documented at PlanGate.scala). Serving plans now
-    * always see the session's steady-state conf; mutations (`/add`,
-    * `/load`) stay on the caller's session, whose handle owns the
-    * corpus swap. */
-  private[graft] val serveSession: SparkSession = spark.newSession()
-
-  /** A read-path frame re-bound to [[serveSession]] (plan unchanged —
-    * the shared CacheManager still serves the cached corpus). */
-  private def served(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.graftshim.Bridge.ofRows(
-      serveSession, df.queryExecution.logical)
 
   private val allowedRoots: Seq[java.nio.file.Path] =
     loadRoots.filter(_.nonEmpty).map { r =>
@@ -167,7 +153,7 @@ final class SearchServer(spark: SparkSession, db: graft.VectorDb,
         case ("GET", "/health") => respond(ex, 200, """{"status":"ok"}""")
         case ("GET", "/count") =>
           respond(ex, 200,
-            s"""{"count":${served(db.table).count()}}""")
+            s"""{"count":${db.table.count()}}""")
         case ("GET", "/search") =>
           val p = queryParams(ex)
           p.get("q") match {
@@ -178,7 +164,7 @@ final class SearchServer(spark: SparkSession, db: graft.VectorDb,
               if (k < 1 || k > 1000)
                 respond(ex, 400, """{"error":"k must be in [1,1000]"}""")
               else {
-                val rows = served(db.search(q, k)).collect()
+                val rows = db.search(q, k).collect()
                 val items = rows.map { r =>
                   s"""{"chunk_id":${r.getLong(0)},""" +
                     s""""chunk_text":"${jsonEscape(r.getString(1))}",""" +

@@ -80,15 +80,15 @@ object IncrementalView {
       sys.error(s"no committed generations under $srcRoot"))
     if (latest <= from) return from
     // a SMALL store (manifest-exact row bound — conservative: counts
-    // tombstone rows too) runs its whole refresh with AQE off: every
+    // tombstone rows too) runs its whole refresh with AQE off, its
+    // plans built on the gate session the body receives: every
     // shuffle in the recompute/preimage plans is kilobyte-sized, and
     // AQE's per-exchange query-stage materialization pays a
     // scheduler-floor job each with nothing to re-plan. At-scale
     // stores keep adaptive planning — the recompute scan there is the
     // real work the materialization jobs amortize against.
-    def scopedIf[T](rowBound: Long)(body: => T): T =
-      if (rowBound <= 1000000L) VersionedCorpus.withAqeOff(spark)(body)
-      else body
+    def scopedIf[T](rowBound: Long)(body: SparkSession => T): T =
+      VersionedCorpus.withAqeOff(spark, rowBound <= 1000000L)(body)
     // change-row bound for the INCREMENTAL window path only. The
     // first-build path must NOT use it: a compacted store (one large
     // base generation, history vacuumed) has a change-row sum of 0
@@ -97,7 +97,6 @@ object IncrementalView {
     // on exactly the at-scale shape the bound exists to exclude).
     val storeRows = VersionedCorpus.commits(srcRoot)
       .filterNot(c => c.base || c.kind == "optimize").map(_.rows).sum
-    def scoped[T](body: => T): T = scopedIf(storeRows)(body)
     if (from < 0L) {
       // first build: one full aggregate over the WHOLE snapshot — gate
       // on total committed rows (base generations included; counts
@@ -106,8 +105,8 @@ object IncrementalView {
       // accidentally take the small path)
       val snapshotRows =
         VersionedCorpus.commits(srcRoot).map(_.rows).sum
-      scopedIf(snapshotRows) {
-        val full = VersionedCorpus.snapshot(spark, srcRoot)
+      scopedIf(snapshotRows) { gs =>
+        val full = VersionedCorpus.snapshot(gs, srcRoot)
           .groupBy(col(groupCol)).agg(aggs.head, aggs.tail: _*)
         VersionedCorpus.upsert(full, viewRoot, groupCol)
       }
@@ -126,7 +125,9 @@ object IncrementalView {
       .filter(c => c.gen > from && c.gen <= to)
       .filterNot(c => c.base || c.kind == "optimize")
       .map(_.rows).sum
-    if (windowRows <= fuseLimit) scoped {
+    if (windowRows <= fuseLimit) scopedIf(storeRows) { gs =>
+      // the fused path's plans build on the gate session
+      val feedS = graft.PlanGate.rebind(gs, feed)
       // DRIFT GUARD (r15 advice): the fused-path decision trusts the
       // manifest row-count mirror of changesBetween's gen filter. If the
       // two filters ever diverge (a new commit kind counted by one and
@@ -151,15 +152,15 @@ object IncrementalView {
         val nums = mutated.collect { case n: java.lang.Number => n.longValue() }
         val preRows =
           if (nums.nonEmpty && nums.length == mutated.length)
-            VersionedCorpus.lookupKeyRange(spark, srcRoot,
+            VersionedCorpus.lookupKeyRange(gs, srcRoot,
               nums.min, nums.max, asOf = from)
-          else VersionedCorpus.snapshot(spark, srcRoot, from)
+          else VersionedCorpus.snapshot(gs, srcRoot, from)
         if (mutated.length <= 1000)
           preRows.filter(col(keyCol).isin(mutated.toSeq: _*))
         else {
-          val kType = feed.schema(keyCol).dataType
-          val kdf = spark.createDataFrame(
-            spark.sparkContext.parallelize(
+          val kType = feedS.schema(keyCol).dataType
+          val kdf = gs.createDataFrame(
+            gs.sparkContext.parallelize(
               mutated.toSeq.map(org.apache.spark.sql.Row(_))),
             new org.apache.spark.sql.types.StructType()
               .add(keyCol, kType))
@@ -182,7 +183,7 @@ object IncrementalView {
           .map(_.toArray)
       val (direct, preGroups): (Array[Any], Array[Any]) = memoMutated match {
         case Some(mutated) =>
-          val feedPart = feed.select(col(groupCol).as("_vc_g"),
+          val feedPart = feedS.select(col(groupCol).as("_vc_g"),
             col("_change_type").as("_vc_ct"), lit("f").as("_vc_src"))
           val plan =
             if (mutated.isEmpty) feedPart // inserts only: no preimages
@@ -199,7 +200,7 @@ object IncrementalView {
         case None =>
           // FUSED small-window path: everything up to the recompute is
           // driver arithmetic over the one collected slice.
-          val slice = feed
+          val slice = feedS
             .select(col(groupCol), col(keyCol), col("_change_type"))
             .collect()
           driftGuard(slice.length)
@@ -218,8 +219,8 @@ object IncrementalView {
                 // (ConvertToLocalRelation) into a job-free LocalTableScan.
                 // At 100 TB this deletes the only corpus-sized I/O the
                 // small-window refresh had left.
-                val kType = feed.schema(keyCol).dataType
-                val kdf = spark.createDataFrame(
+                val kType = feedS.schema(keyCol).dataType
+                val kdf = gs.createDataFrame(
                   java.util.Arrays.asList(
                     mutated.map(org.apache.spark.sql.Row(_)): _*),
                   new org.apache.spark.sql.types.StructType().add(keyCol, kType))
@@ -235,8 +236,8 @@ object IncrementalView {
           (direct0, pre)
       }
       val dirtyKeys = (direct ++ preGroups).distinct
-      applyDirty(spark, srcRoot, viewRoot, groupCol, aggs, dirtyKeys,
-        feed.schema(groupCol).dataType, to)
+      applyDirty(gs, srcRoot, viewRoot, groupCol, aggs, dirtyKeys,
+        feedS.schema(groupCol).dataType, to)
       VersionedCorpus.writeCursor(cursorFile, to)
       return to
     }

@@ -105,5 +105,5 @@ private[graft] object LocalParquet {
         } finally r.close()
       }
       Some(out.toSeq)
-    } catch { case _: Throwable => None }
+    } catch { case scala.util.control.NonFatal(_) => None }
 }

@@ -441,64 +441,36 @@ object VersionedCorpus {
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** Stage-write `df` and collect the manifest stats in the SAME job —
-    * the fused commit path: row count, key bounds for lookup-time
-    * generation pruning ([[lookupKey]]), every pinned stats column's
-    * min/max, and the pinned Bloom filter all ride the write as
-    * `Dataset.observe` metrics (CollectMetrics accumulators), so a
-    * commit pays ONE distributed pass where it used to pay the write
-    * plus a full read-back aggregate scan. The observed metrics come
-    * from exactly the rows the successful write produced (failed-task
-    * values are not counted), which is the same truth the read-back
-    * certified. */
-  /** Run `body` with adaptive query execution OFF — and the shuffle
-    * width capped at 4 — restoring both settings after. For
-    * DRIVER-BOUNDED maintenance actions (small staged commits, fused
-    * view refreshes, dup-graph labeling) where AQE's per-shuffle
-    * query-stage materialization adds a scheduler-floor job per
-    * exchange but has nothing to re-plan. The width cap is the other
-    * half of what AQE was doing for these plans: without it, a
-    * kilobyte exchange fans over every core
-    * (spark.sql.shuffle.partitions) — the r16 dual-config measurement
-    * put the whole 32-core regression of the gated rows there. Callers
-    * gate on a size bound (≤ 256 MB of leaf scans), so 4 × ~64 MB
-    * partitions bound the per-task slice; at-scale plans keep AQE and
-    * full width. Session-scoped conf: safe under the single-writer
-    * commit contract these paths already hold. */
-  // conf-scope atomicity: routed through PlanGate.withConfScope — the
-  // set and restore phases run under the process-wide scope lock (r16
-  // verdict: two unserialized overlapping scopes could each capture
-  // the other's temporary value as "previous", pinning the override),
-  // while the BODY runs outside it, so concurrent gated actions don't
-  // serialize end-to-end (r17 advice). The per-key depth ledger makes
-  // nesting exact: an inner withAqeOff inside an outer one re-sets
-  // "false" idempotently and the LAST scope to close restores the
-  // session's steady-state values. The settings thunk reads prevSp
-  // under the lock, so the cap derives from a stable conf.
-  private[graft] def withAqeOff[T](spark: SparkSession)(body: => T): T =
-    graft.PlanGate.withConfScope(spark)({
-      // Passthrough when AQE is already globally off (e.g. the
-      // SPARK_GRAFT_AQE=false bench A/B config): that configuration's
-      // whole point is to measure the session's own static settings,
-      // so gated small-plan actions must not silently re-cap the
-      // shuffle width to 4 — the r18 rewrite dropped this short-
-      // circuit and changed physical plans across the A/B comparison.
-      // The check reads the session's STEADY-STATE value through the
-      // scope ledger, never the live conf: a concurrent scope's
-      // temporary aqe=false would otherwise trip the passthrough and
-      // leave THIS body unscoped when the neighbor closes (r20 — the
-      // PlanGateSpec concurrency flake, real under parallel gated
-      // collects).
-      if (graft.PlanGate.steadyConf(spark, "spark.sql.adaptive.enabled")
-          .getOrElse("true") == "false") Nil
-      else {
-        val spKey = "spark.sql.shuffle.partitions"
-        val prevSp = graft.PlanGate.steadyConf(spark, spKey).getOrElse("200")
-        val cappedSp =
-          try math.min(prevSp.toInt, 4).toString catch { case _: Throwable => "4" }
-        Seq("spark.sql.adaptive.enabled" -> "false", spKey -> cappedSp)
-      }
-    })(body)
+  /** Run `body` on a gate session with adaptive query execution OFF
+    * and the shuffle width capped at 4 ([[graft.PlanGate.withGate]]):
+    * the caller's conf is never written. For DRIVER-BOUNDED maintenance
+    * actions (small staged commits, fused view refreshes, dup-graph
+    * labeling) where AQE's per-shuffle query-stage materialization adds
+    * a scheduler-floor job per exchange but has nothing to re-plan. The
+    * width cap is the other half of what AQE was doing for these plans:
+    * without it, a kilobyte exchange fans over every core
+    * (spark.sql.shuffle.partitions). Callers gate on a size bound
+    * (≤ 256 MB of leaf scans), so 4 × ~64 MB partitions bound the
+    * per-task slice; at-scale plans keep AQE and full width.
+    *
+    * `body` receives the session its plans must build on (or re-bind
+    * to, [[graft.PlanGate.rebind]]). It runs on `spark` itself when
+    * `when` is false (the caller's size gate failed) or AQE is already
+    * off on `spark` — the SPARK_GRAFT_AQE=false A/B config, or a nested
+    * gate: that configuration measures the session's own static
+    * settings, so gated actions must not re-cap its shuffle width. */
+  private[graft] def withAqeOff[T](spark: SparkSession, when: Boolean = true)(
+      body: SparkSession => T): T =
+    if (!when || spark.conf.getOption("spark.sql.adaptive.enabled")
+        .getOrElse("true") == "false") body(spark)
+    else {
+      val spKey = "spark.sql.shuffle.partitions"
+      val width = spark.conf.getOption(spKey).flatMap(_.toIntOption)
+        .fold(4)(math.min(_, 4))
+      graft.PlanGate.withGate(spark, Seq(
+        "spark.sql.adaptive.enabled" -> "false",
+        spKey -> width.toString))(body)
+    }
 
   /** The staged-commit write width for a SMALL input: ~16 MB of
     * estimated input per task, floor 1 — a kilobyte maintenance commit
@@ -511,12 +483,23 @@ object VersionedCorpus {
   private def smallCommitWidth(df: DataFrame): Option[Int] = {
     val est =
       try df.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case _: Throwable => BigInt(Long.MaxValue) }
+      catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) }
     if (est > BigInt(smallCommitBytes)) None
     else Some(math.max(1L, (est.toLong >> 24) + 1L).toInt)
   }
 
-  /** `collectKeys` — tombstone-writing commits (upsert/delete) set it
+  /** Stage-write `df` and collect the manifest stats in the SAME job —
+    * the fused commit path: row count, key bounds for lookup-time
+    * generation pruning ([[lookupKey]]), every pinned stats column's
+    * min/max, and the pinned Bloom filter all ride the write as
+    * `Dataset.observe` metrics (CollectMetrics accumulators), so a
+    * commit pays ONE distributed pass where it used to pay the write
+    * plus a full read-back aggregate scan. The observed metrics come
+    * from exactly the rows the successful write produced (failed-task
+    * values are not counted), which is the same truth the read-back
+    * certified.
+    *
+    * `collectKeys` — tombstone-writing commits (upsert/delete) set it
     * so the staged write's observe pass ALSO collects the gen's key
     * set (small commits only — the same size gate as the coalesce),
     * letting the committer pre-populate the tombstone-resolution memo
@@ -580,10 +563,13 @@ object VersionedCorpus {
       .zipWithIndex.map { case (c, i) => c.as(s"_m$i") }
     val obs = new org.apache.spark.sql.Observation(
       "graft_commit_" + java.util.UUID.randomUUID())
-    val dfw = width.fold(df)(df.coalesce)
-    def run(): Unit = dfw.observe(obs, aggCols.head, aggCols.tail: _*)
-      .write.mode("overwrite").parquet(staging.toString)
-    if (width.isDefined) withAqeOff(df.sparkSession)(run()) else run()
+    // the observation attaches to the frame the action runs on: a gated
+    // write re-binds first, so its metrics reach the gate session
+    def run(s: SparkSession): Unit =
+      graft.PlanGate.rebind(s, width.fold(df)(df.coalesce))
+        .observe(obs, aggCols.head, aggCols.tail: _*)
+        .write.mode("overwrite").parquet(staging.toString)
+    withAqeOff(df.sparkSession, width.isDefined)(run)
     val m = obs.get
     def optAt(i: Int): Option[Long] = m(s"_m$i") match {
       case null            => None
@@ -926,14 +912,14 @@ object VersionedCorpus {
   private def commitChangeHalves(latest: DataFrame, root: String,
                                  keyCol: String, opCol: String,
                                  seqCol: String): (Long, Long) = {
-    import org.apache.spark.sql.functions.{col, collect_set, count, lit, max, min, when, xxhash64}
+    import org.apache.spark.sql.functions.{coalesce, col, collect_set, count, lit, max, min, when, xxhash64}
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
     val dataFields = latest.schema.fields
       .filterNot(f => f.name == opCol || f.name == seqCol)
     val dataSchema = new org.apache.spark.sql.types.StructType(dataFields)
     checkOrPinSchema(root, dataSchema, evolve = false)
     checkOrPinKey(root, keyCol)
-    val isDel = col(opCol) === "D"
+    val isDel = coalesce(col(opCol) === "D", lit(false))
     val combined = latest.select(
       (dataFields.map(f =>
         (if (f.name == keyCol) col(f.name)
@@ -988,11 +974,12 @@ object VersionedCorpus {
     val staging = newStaging(root)
     val obs = new org.apache.spark.sql.Observation(
       "graft_cdc_" + java.util.UUID.randomUUID())
-    val dfw = width.fold(combined)(combined.coalesce)
-    def run(): Unit = dfw.observe(obs, aggCols.head, aggCols.tail: _*)
-      .write.partitionBy("_vc_half").mode("overwrite")
-      .parquet(staging.toString)
-    if (width.isDefined) withAqeOff(latest.sparkSession)(run()) else run()
+    def run(s: SparkSession): Unit =
+      graft.PlanGate.rebind(s, width.fold(combined)(combined.coalesce))
+        .observe(obs, aggCols.head, aggCols.tail: _*)
+        .write.partitionBy("_vc_half").mode("overwrite")
+        .parquet(staging.toString)
+    withAqeOff(latest.sparkSession, width.isDefined)(run)
     val m = obs.get
     def optAt(i: Int): Option[Long] = m(s"_m$i") match {
       case null                => None

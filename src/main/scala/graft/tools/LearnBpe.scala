@@ -38,7 +38,7 @@ object LearnBpe {
     * (left, right) pair per iteration plus the result list.
     *
     * A loop over a SMALL input (leaf stats under the PlanGate bound)
-    * runs with AQE scoped off for its whole duration: every iteration
+    * runs with AQE off for its whole duration: every iteration
     * is one pair-count exchange + a driver argmax, and AQE's
     * per-exchange query-stage materialization pays one scheduler-floor
     * job per shuffle with nothing to re-plan — at 12 merges that was
@@ -50,13 +50,12 @@ object LearnBpe {
     * invariant either way (exact counts, total-order argmax). */
   def learnDistributed(spark: SparkSession, wordFreq: DataFrame,
                        numMerges: Int): IndexedSeq[(String, String)] =
-    if (graft.PlanGate.leafBytes(wordFreq)
-        <= BigInt(graft.PlanGate.smallPlanBytes))
-      graft.sources.VersionedCorpus.withAqeOff(spark)(
-        learnDistributedImpl(spark, wordFreq, numMerges))
-    else learnDistributedImpl(spark, wordFreq, numMerges)
+    graft.sources.VersionedCorpus.withAqeOff(spark,
+      graft.PlanGate.leafBytes(wordFreq)
+        <= BigInt(graft.PlanGate.smallPlanBytes))(s =>
+      learnDistributedImpl(graft.PlanGate.rebind(s, wordFreq), numMerges))
 
-  private def learnDistributedImpl(spark: SparkSession, wordFreq: DataFrame,
+  private def learnDistributedImpl(wordFreq: DataFrame,
                                    numMerges: Int): IndexedSeq[(String, String)] = {
     // lineage truncation per generation: a LAZY LOCAL CHECKPOINT — the
     // next iteration's pair-count job materializes it, after which both

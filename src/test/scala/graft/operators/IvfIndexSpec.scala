@@ -97,6 +97,26 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(spark.read.parquet(appended).count === emb.count)
   }
 
+  test("a string-typed tombstone file is honored, not dropped by the fold") {
+    val (assignments, centroids) = built
+    val root = java.nio.file.Files.createTempDirectory("graft-ivfstrtomb").toString
+    val table = s"$root/table"
+    IvfIndex.writePartitioned(emb, "vec_id", assignments, table)
+    def probe() = IvfIndex.probePartitioned(spark, table, "vec_id",
+      "embedding", centroids, QueryVectors.q1, k = 10, nprobe = 8)
+      .select("vec_id").as[Long].collect().toSeq
+    val victims = probe().take(3)
+    // a sidecar whose id column is a STRING (a foreign writer's file):
+    // small enough for the driver-side fold, which must fall back to
+    // the distributed read instead of keeping only numeric keys
+    victims.map(_.toString).toDF("vec_id")
+      .write.parquet(s"$table/_tombstones/foreign")
+    val after = probe()
+    assert(after.length === 10)
+    assert(victims.forall(v => !after.contains(v)),
+      s"string-typed tombstones ignored: $victims in $after")
+  }
+
   test("deletePartitioned: tombstoned probes ≡ rebuilt-from-survivors index; physical apply rewrites only touched partitions") {
     val (assignments, centroids) = built
     val root = java.nio.file.Files.createTempDirectory("graft-ivfdel").toString

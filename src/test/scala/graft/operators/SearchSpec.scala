@@ -136,17 +136,24 @@ class SearchSpec extends AnyFunSuite {
       Search.topK(corpus, "embedding", "vec_id", q, k = 3).select("vec_id"))
     val sequential = frames.map(
       _.collect().map(_.getLong(0)).toIndexedSeq)
+    // count only the jobs this test submits: they carry its job group,
+    // whatever else the shared context runs meanwhile
+    val group = "search-spec-collectIdLists-" + java.util.UUID.randomUUID()
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+        if (Option(j.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val batched = Search.collectIdLists(frames)
-      // listener bus is async; give it a beat to drain before reading
-      Thread.sleep(500)
+      spark.sparkContext.setJobGroup(group, "collectIdLists")
+      val batched =
+        try Search.collectIdLists(frames)
+        finally spark.sparkContext.clearJobGroup()
+      org.apache.spark.sql.graftshim.Bridge.drainListenerBus(spark.sparkContext)
       assert(batched === sequential)
       assert(jobs.get() === 1,
         s"batched collect must submit exactly one job, got ${jobs.get()}")

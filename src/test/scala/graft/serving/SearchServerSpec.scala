@@ -77,10 +77,10 @@ class SearchServerSpec extends AnyFunSuite {
   }
 
   test("a search issued during an open conf scope sees default knobs") {
-    // the r17/r18 prescription: the serve loop's read path runs on a
-    // dedicated newSession() clone, so a maintenance action's open
-    // PlanGate conf scope (AQE off, shuffle width capped) on the main
-    // session can never shape a serving plan
+    // a maintenance action's gated body (AQE off, shuffle width capped)
+    // runs on a gate session: the serving session's conf is never
+    // written, so a search issued while the body is open plans with
+    // the session's own settings
     import spark.implicits._
     val e = graft.functions.Embedder.default
     val dir = java.nio.file.Files.createTempDirectory("srv-iso").toString + "/c"
@@ -90,25 +90,42 @@ class SearchServerSpec extends AnyFunSuite {
     ).toDF("chunk_id", "document_id", "chunk_text", "vector_embedding"), dir)
     val db = graft.VectorDb.open(spark, Some(dir))
     val srv = new SearchServer(spark, db, port = 0).start()
+    // every collect the server runs reports the session that executed it
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = if (fn == "collect") seen.add(qe)
+      override def onFailure(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          ex: Exception): Unit = ()
+    }
     try {
       val port = srv.boundPort
-      val steadyWidth = srv.serveSession.conf.get("spark.sql.shuffle.partitions")
-      val steadyAqe = srv.serveSession.conf.get("spark.sql.adaptive.enabled")
-      graft.PlanGate.withConfScope(spark)(Seq(
-        "spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.shuffle.partitions" -> "1")) {
-        // the scope is OPEN on the maintenance session…
-        assert(spark.conf.get("spark.sql.shuffle.partitions") === "1")
-        // …but the serve session's conf is untouched, and a live search
-        // through it succeeds with correct results
-        assert(srv.serveSession.conf.get("spark.sql.shuffle.partitions")
-          === steadyWidth)
-        assert(srv.serveSession.conf.get("spark.sql.adaptive.enabled")
-          === steadyAqe)
+      val steady = spark.conf.getAll
+      graft.sources.VersionedCorpus.withAqeOff(spark) { gate =>
+        // the gate is OPEN on its own session…
+        assert(gate.conf.get("spark.sql.adaptive.enabled") === "false")
+        assert(gate.conf.get("spark.sql.shuffle.partitions").toInt <= 4)
+        // …the caller's conf is untouched, and a live search succeeds
+        // with correct results on a plan built with the steady conf
+        assert(spark.conf.getAll === steady)
+        spark.listenerManager.register(listener)
         val (sc, body) = get(port, "/search?q=alpha%20beta&k=1")
         assert(sc === 200 && body.contains(""""chunk_id":1"""), body)
+        org.apache.spark.sql.graftshim.Bridge.drainListenerBus(
+          spark.sparkContext)
       }
-    } finally srv.stop()
+      assert(!seen.isEmpty, "the search's collect was not reported")
+      seen.forEach { qe =>
+        assert(qe.sparkSession eq spark)
+        assert(qe.sparkSession.conf.getAll === steady)
+      }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      srv.stop()
+    }
   }
 
   test("serving with the REAL transformer + file vocabulary: model-embedded search and add over HTTP") {

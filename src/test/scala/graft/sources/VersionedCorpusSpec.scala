@@ -352,6 +352,26 @@ class VersionedCorpusSpec extends AnyFunSuite {
       === Seq("doc_id", "text", "lang"))
   }
 
+  test("applyChanges: a NULL op upserts the change row's data") {
+    // "any other value is an insert/update" — NULL included: the row
+    // lands with its data, never as a null-data upsert or a delete
+    val root = freshRoot()
+    VersionedCorpus.append(docs(0 until 3, "v1"), root)
+    val batch = Seq[(Long, String, String, String, Int)](
+      (1L, "nullop text number 1", "de", null, 1),
+      (7L, "nullop text number 7", "fr", null, 1)
+    ).toDF("doc_id", "text", "lang", "op", "seq")
+    val (gU, gD) = VersionedCorpus.applyChanges(batch, root, "doc_id", "op", "seq")
+    assert(gU > 0L && gD === -1L)
+    val state = VersionedCorpus.snapshot(spark, root)
+      .select("doc_id", "text", "lang").as[(Long, String, String)]
+      .collect().map(r => r._1 -> r).toMap
+    assert(state.keySet === Set(0L, 1L, 2L, 7L))
+    assert(state(1L) === ((1L, "nullop text number 1", "de")))
+    assert(state(7L) === ((7L, "nullop text number 7", "fr")))
+    assert(state(0L)._2.startsWith("v1"))
+  }
+
   test("lookupKey ≡ filtered snapshot across the merge lifecycle; manifest stats prune generations") {
     val root = freshRoot()
     VersionedCorpus.append(docs(0 until 50, "a"), root)   // pre-pin: no bounds
