@@ -1,6 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftshim.Bridge
 
 /** Benchmark entrypoint. Prints machine-readable JSON result lines.
   *
@@ -23,48 +21,7 @@ import org.apache.spark.sql.graftshim.Bridge
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // v2 commit: task commits rename straight into the destination —
-      // one rename per file instead of two. The documented tradeoff
-      // (partial output visible if a job dies mid-commit) is irrelevant
-      // to these self-contained temp-dir writes, and at cluster scale
-      // the same knob is what object-store committers replace anyway.
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-    // Let maxPartitionBytes alone govern file splits (cluster-faithful:
-    // minPartitionNum defaults to core count, which shreds a kilobyte
-    // fixture file into 32 single-digit-row tasks and pays the per-task
-    // scheduler floor dozens of times per multi-job chain; at 100 TB
-    // files exceed 128 MB and the knob is inert). Rows with real CPU on
-    // few rows opt back into width via Queries.widenForCompute.
-    // SPARK_GRAFT_MINPART overrides for A/B.
-    val minPart = sys.env.getOrElse("SPARK_GRAFT_MINPART", "1")
-    val spark = b0
-      .config("spark.sql.files.minPartitionNum", minPart)
-      .config("spark.sql.leafNodeDefaultParallelism", minPart)
-      // let AQE coalesce small shuffles to the advisory byte size instead
-      // of pinning reduce width to the core count (parallelismFirst's
-      // default) — kilobyte shuffle stages otherwise run 32 tasks whose
-      // fixed per-task cost dwarfs the data; at 100 TB stages exceed the
-      // advisory size and keep full width either way
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PFIRST", "false"))
-      // SPARK_GRAFT_AQE=false replays the bench without adaptive
-      // execution for A/B: AQE materializes one JOB per shuffle stage
-      // (plus replanning between), so at fixture scale a 5-exchange
-      // chain pays the driver floor 5+ times; without it the whole
-      // chain is ONE job whose stages the DAGScheduler runs back to
-      // back. The r13 A/B (width-32 shuffles) kept AQE for its
-      // coalescing; at the driver's width-4 config that benefit is
-      // bounded by 4 tasks/stage, so the tradeoff is re-measured per
-      // round. Results are partitioning-invariant either way (oracle).
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench", fixtureSplits = true)
     // JIT/codegen/parquet-reader/file-commit warmup so per-query times
     // measure the queries, not first-touch compilation (measured: the first
     // hash-join heavy query pays 5+ s of JIT in a cold JVM, and the first
@@ -104,41 +61,16 @@ object Bench {
     }
     var calCpu = calibCpu()
     var calSpark = calibSpark()
-    // PER-QUERY JOB COUNTS (always on, archived as "jobs" in the full
-    // line): at fixture scale the driver's per-job floor (~0.1 s of
-    // analysis + AQE stage scheduling) dominates most rows, so wall ≈
-    // jobs × 0.1 s — the r13 profiling playbook. Counting in BENCH
-    // context (not TimeQuery isolation) is the whole point: shared-memo
-    // state and pass interleaving change job counts, and r13's
-    // TimeQuery-based claims did not reproduce here. The listener bus is
-    // async, so deltas are read behind a reflective waitUntilEmpty
-    // (private[spark] → public in bytecode); if the reflection ever
-    // breaks, counts degrade to ±1 attribution noise, never wrong wall
-    // times.
-    val jobCounter = new java.util.concurrent.atomic.AtomicLong(0)
-    // PER-QUERY SUMMED EXECUTOR TASK TIME (r19 verdict #2): at sf0.1 the
-    // suite is scheduler-floor-bound, so the driver's 8-vs-32-core wall
-    // ratios read ≈1 everywhere and cannot distinguish "parallelises"
-    // from "floor-bound". Summed executorRunTime per query (archived as
-    // "task_sec", same delta discipline as "jobs") makes taskTime/wall
-    // computable per row at ANY core count: a row with taskTime ≫ wall
-    // is spreading across cores; one with wall ≈ jobs × floor is not
-    // core-sensitive at this scale. Measurement-only — no timed path
-    // changes; the listener was already installed for job counts.
-    val taskMsCounter = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobCounter.incrementAndGet(); ()
-        }
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          taskMsCounter.addAndGet(sc.stageInfo.taskMetrics.executorRunTime)
-          ()
-        }
-      })
+    // PER-QUERY JOB COUNTS AND TASK TIME (archived as "jobs" and
+    // "task_sec" in the full line): at fixture scale the driver's per-job
+    // floor (~0.1 s of analysis + AQE stage scheduling) dominates most
+    // rows, so wall ≈ jobs × 0.1 s. Counting in BENCH context (not
+    // TimeQuery isolation) matters: shared-memo state and pass
+    // interleaving change job counts. Summed executor task time makes
+    // taskTime/wall computable per row at any core count: a row with
+    // taskTime ≫ wall spreads across cores; one with wall ≈ jobs × floor
+    // is not core-sensitive at this scale.
+    val meter = graft.obs.JobMeter.install(spark)
     // INTER-PASS HOOK (env SPARK_GRAFT_INTERPASS_CMD): a shell command
     // run before the first timed pass and after every pass, with
     // GRAFT_PASS=0..reps in its environment — the r13 judge's
@@ -355,9 +287,7 @@ object Bench {
         // this row's clock starts (see the warmup-loop note)
         graft.operators.PrefixSum.releaseCaches()
         graft.operators.Dedup.releaseAdmissionCaches()
-        Bridge.drainListenerBus(spark.sparkContext)
-        val j0 = jobCounter.get()
-        val tm0 = taskMsCounter.get()
+        val c0 = meter.read()
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).count(); true }
@@ -373,13 +303,11 @@ object Bench {
               false
           }
         val dt = (System.nanoTime() - t0) / 1e9
-        Bridge.drainListenerBus(spark.sparkContext)
-        val dj = jobCounter.get() - j0
-        val dTaskSec = (taskMsCounter.get() - tm0) / 1000.0
+        val d = meter.read() - c0
         if (ok) {
-          if (best.get(name).forall(dt < _)) taskSecBest(name) = dTaskSec
+          if (best.get(name).forall(dt < _)) taskSecBest(name) = d.taskSec
           best(name) = best.get(name).fold(dt)(math.min(_, dt))
-          jobsMin(name) = jobsMin.get(name).fold(dj)(math.min(_, dj))
+          jobsMin(name) = jobsMin.get(name).fold(d.jobs)(math.min(_, d.jobs))
         } else {
           if (!firstErr.contains(name)) firstErr(name) = -dt
           if (!best.contains(name)) best(name) = Double.MaxValue

@@ -87,6 +87,13 @@ object PlanGate {
       .map(_.stats.sizeInBytes).sum
     catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) }
 
+  /** The optimizer's size estimate for the whole plan (after filters and
+    * projections, unlike [[leafBytes]]). `Long.MaxValue` when statistics
+    * are unavailable, so an unknown plan never counts as small. */
+  def planBytes(df: DataFrame): BigInt =
+    try df.queryExecution.optimizedPlan.stats.sizeInBytes
+    catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) }
+
   /** Run `body` over `df` with AQE off when the plan's leaf scans are
     * small (`df` re-bound to the gate session); over `df` unchanged
     * otherwise. */

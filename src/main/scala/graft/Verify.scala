@@ -1,30 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same v2-committer rationale as Bench: single-rename task commits
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      // same small-file split policy as Bench (see Bench.scala): results
-      // must be partition-count-invariant anyway (the oracle pins them),
-      // so verify under the bench's layout to certify exactly what runs
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MINPART", "1"))
-      .config("spark.sql.leafNodeDefaultParallelism",
-        sys.env.getOrElse("SPARK_GRAFT_MINPART", "1"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PFIRST", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the bench's split policy: results are partition-count invariant
+    // (the oracle pins them), so verify certifies exactly what the bench runs
+    val spark = GraftSession.local("graft-verify", fixtureSplits = true)
     new java.io.File(outDir).mkdirs()
     // dev-loop filter: SPARK_GRAFT_VERIFY_ONLY=q1,q2 dumps just those
     // queries (the driver never sets it, so the gate always runs all)

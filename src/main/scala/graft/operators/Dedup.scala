@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Deduplication operators for the LLM-pipeline tier (SURVEY.md §2
   * B7-B9). The reference has NO dedup — `app.py:105-118` appends without
@@ -68,7 +69,7 @@ object Dedup {
       val mine = st.pop()
       mine.foreach { df =>
         try df.unpersist(blocking = false)
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
       }
     }
   }
@@ -82,7 +83,7 @@ object Dedup {
     var df = orphanCaches.poll()
     while (df != null) {
       try df.unpersist(blocking = false)
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
       df = orphanCaches.poll()
     }
   }
@@ -367,7 +368,7 @@ object Dedup {
       }
     if (rows.length <= cap) {
       try persisted.unpersist(blocking = false)
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
       df.sparkSession.createDataFrame(
         java.util.Arrays.asList(rows: _*), df.schema)
     } else registerCache(persisted)

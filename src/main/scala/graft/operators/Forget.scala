@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 import graft.sources.VersionedCorpus
 
@@ -60,7 +61,7 @@ object Forget {
       val (idsOne, nIds) = collected match {
         case Some(rows) if rows.length <= cap =>
           try persisted.unpersist(blocking = false)
-          catch { case _: Throwable => () }
+          catch { case NonFatal(_) => () }
           (spark.createDataFrame(java.util.Arrays.asList(rows: _*),
             persisted.schema), rows.length.toLong)
         case _ => (persisted, persisted.count())
@@ -103,7 +104,7 @@ object Forget {
     } finally {
       // harmless double-unpersist when the localize already released it
       try persisted.unpersist(blocking = false)
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
   }
 

@@ -138,10 +138,8 @@ object NearDup {
     * so the gate errs toward the safe shuffle. */
   private def hintIfSmall(df: DataFrame): DataFrame = {
     val thr = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val est =
-      try df.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case _: Throwable => BigInt(Long.MaxValue) }
-    if (thr > 0 && est <= BigInt(thr)) broadcast(df) else df
+    if (thr > 0 && graft.PlanGate.planBytes(df) <= BigInt(thr)) broadcast(df)
+    else df
   }
 
   /** [[hintIfSmall]] for a two-sided bucket join: hint whichever side
@@ -158,10 +156,7 @@ object NearDup {
                               b: DataFrame): (DataFrame, DataFrame) = {
     val thr = a.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     if (thr <= 0) return (a, b)
-    def est(df: DataFrame): BigInt =
-      try df.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case _: Throwable => BigInt(Long.MaxValue) }
-    val (ea, eb) = (est(a), est(b))
+    val (ea, eb) = (graft.PlanGate.planBytes(a), graft.PlanGate.planBytes(b))
     if (eb < ea && eb <= BigInt(thr)) (a, broadcast(b))
     else if (ea <= BigInt(thr)) (broadcast(a), b)
     else (a, b)

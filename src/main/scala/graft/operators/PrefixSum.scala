@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Two-phase distributed prefix sum (grouped running totals).
   *
@@ -108,7 +109,7 @@ object PrefixSum {
     var df = q.poll()
     while (df != null) {
       try df.unpersist(blocking = false)
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
       df = q.poll()
     }
   }
@@ -142,10 +143,7 @@ object PrefixSum {
                         value: String, out: String,
                         smallInputBytes: Long = 64L << 20): DataFrame = {
     val spark = df.sparkSession
-    val est =
-      try df.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case _: Throwable => BigInt(Long.MaxValue) }
-    if (est <= BigInt(smallInputBytes)) {
+    if (graft.PlanGate.planBytes(df) <= BigInt(smallInputBytes)) {
       val w = Window.partitionBy(col(group)).orderBy(col(order))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       return df.withColumn(out, sum(col(value)).over(w))
@@ -164,7 +162,7 @@ object PrefixSum {
     val leafSplits =
       try df.queryExecution.sparkPlan.collectLeaves()
         .map(l => math.max(1, l.execute().getNumPartitions)).sum
-      catch { case _: Throwable =>
+      catch { case NonFatal(_) =>
         spark.sessionState.conf.numShufflePartitions }
     val n = math.max(1, math.min(
       spark.sessionState.conf.numShufflePartitions, leafSplits * 4))

@@ -456,7 +456,7 @@ object VersionedCorpus {
     * `body` receives the session its plans must build on (or re-bind
     * to, [[graft.PlanGate.rebind]]). It runs on `spark` itself when
     * `when` is false (the caller's size gate failed) or AQE is already
-    * off on `spark` — the SPARK_GRAFT_AQE=false A/B config, or a nested
+    * off on `spark` — a session configured without AQE, or a nested
     * gate: that configuration measures the session's own static
     * settings, so gated actions must not re-cap its shuffle width. */
   private[graft] def withAqeOff[T](spark: SparkSession, when: Boolean = true)(
@@ -481,9 +481,7 @@ object VersionedCorpus {
     * commits keep their natural parallelism. */
   private val smallCommitBytes = 64L << 20
   private def smallCommitWidth(df: DataFrame): Option[Int] = {
-    val est =
-      try df.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) }
+    val est = graft.PlanGate.planBytes(df)
     if (est > BigInt(smallCommitBytes)) None
     else Some(math.max(1L, (est.toLong >> 24) + 1L).toInt)
   }

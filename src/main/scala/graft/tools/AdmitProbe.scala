@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.obs.JobMeter
 import graft.operators.{Dedup, SpanDedup}
 
 /** SCALE PROBE for the incremental ADMISSION loop — the flagship
@@ -59,30 +60,8 @@ object AdmitProbe {
         }))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-admit-probe")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          shuffleBytes.addAndGet(
-            s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten); ()
-        }
-      })
+    val spark = graft.GraftSession.local("graft-admit-probe")
+    val meter = JobMeter.install(spark)
 
     val batch = sys.env.getOrElse("SPARK_GRAFT_ADMIT_BATCH", "100000").toLong
     val corpusSizes = sys.env.getOrElse("SPARK_GRAFT_ADMIT_CORPUS",
@@ -160,6 +139,22 @@ object AdmitProbe {
       .getOrElse(Seq("admit", "gated", "clean", "clean_hashed",
         "clean_indexed"))
     val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+    // one JSON line per measured step: wall seconds, jobs, shuffle-write MB
+    def measured[A](kernel: String, nCorpus: Long)(f: => A)(
+        admitted: A => Long): A = {
+      val c0 = meter.read()
+      val t0 = System.nanoTime()
+      val r = f
+      val wall = (System.nanoTime() - t0) / 1e9
+      val d = meter.read() - c0
+      val line = f"""{"probe":"admit","kernel":"$kernel",""" +
+        f""""corpus":$nCorpus,"batch":$batch,"admitted":${admitted(r)},""" +
+        f""""wall_sec":$wall%.2f,"jobs":${d.jobs},""" +
+        f""""shuffle_mb":${d.shuffleMb}%.1f,"cpus":${graft.GraftSession.cpus}}"""
+      println(line)
+      lines += line
+      r
+    }
     for (nCorpus <- corpusSizes;
          kernel <- kernels) {
       val corpus = corpusOf(nCorpus)
@@ -171,27 +166,12 @@ object AdmitProbe {
         // scale point and one per-commit refresh (a batch-sized new
         // generation — the ingestion loop's steady-state maintenance
         // cost), each its own line
-        jobs.set(0); shuffleBytes.set(0)
-        val tb = System.nanoTime()
-        val path = gramIdx(nCorpus, corpus)
-        val wb = (System.nanoTime() - tb) / 1e9
-        val bLine = f"""{"probe":"admit","kernel":"idx_build",""" +
-          f""""corpus":$nCorpus,"batch":$batch,"admitted":0,""" +
-          f""""wall_sec":$wb%.2f,"jobs":${jobs.get()},""" +
-          f""""shuffle_mb":${shuffleBytes.get() / 1048576.0}%.1f,"cpus":$cpus}"""
-        println(bLine); lines += bLine
-        jobs.set(0); shuffleBytes.set(0)
-        val tr = System.nanoTime()
-        SpanDedup.refreshGramIndex(
+        val path =
+          measured("idx_build", nCorpus)(gramIdx(nCorpus, corpus))(_ => 0L)
+        measured("idx_refresh", nCorpus)(SpanDedup.refreshGramIndex(
           incomingOf(nCorpus).select(col("doc_id"),
             concat(col("text"), lit(" refreshgen")).as("text")),
-          "doc_id", "text", path)
-        val wr = (System.nanoTime() - tr) / 1e9
-        val rLine = f"""{"probe":"admit","kernel":"idx_refresh",""" +
-          f""""corpus":$nCorpus,"batch":$batch,"admitted":0,""" +
-          f""""wall_sec":$wr%.2f,"jobs":${jobs.get()},""" +
-          f""""shuffle_mb":${shuffleBytes.get() / 1048576.0}%.1f,"cpus":$cpus}"""
-        println(rLine); lines += rLine
+          "doc_id", "text", path))(_ => 0L)
         // the refreshed keys carry a ' refreshgen' suffix, so they
         // change no clean_indexed stripping decision below (grams are
         // 8-token windows of UNCHANGED text prefixes... they do add
@@ -203,16 +183,8 @@ object AdmitProbe {
         dropIdx(); gramIdx(nCorpus, corpus)
       }
       run(kernel, incoming, corpus, nCorpus) // unmeasured warm pass (codegen)
-      jobs.set(0); shuffleBytes.set(0)
-      val t0 = System.nanoTime()
-      val nAdmitted = run(kernel, incoming, corpus, nCorpus)
-      val wall = (System.nanoTime() - t0) / 1e9
-      val line = f"""{"probe":"admit","kernel":"$kernel",""" +
-        f""""corpus":$nCorpus,"batch":$batch,"admitted":$nAdmitted,""" +
-        f""""wall_sec":$wall%.2f,"jobs":${jobs.get()},""" +
-        f""""shuffle_mb":${shuffleBytes.get() / 1048576.0}%.1f,"cpus":$cpus}"""
-      println(line)
-      lines += line
+      measured(kernel, nCorpus)(
+        run(kernel, incoming, corpus, nCorpus))(identity)
     }
     dropIdx()
     spark.stop()

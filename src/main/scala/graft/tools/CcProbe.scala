@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Connected-components SCALE PROBE — the 10M-edge evidence behind the
@@ -35,24 +35,8 @@ import org.apache.spark.sql.functions._
   */
 object CcProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-cc-probe")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-
-    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      })
+    val spark = graft.GraftSession.local("graft-cc-probe")
+    val meter = graft.obs.JobMeter.install(spark)
 
     val scale = sys.env.getOrElse("SPARK_GRAFT_CC_EDGES", "10000000").toLong
 
@@ -103,8 +87,8 @@ object CcProbe {
     def run(tag: String, g: (DataFrame, DataFrame, Long), mode: String,
             maxIters: Int): Unit = {
       val (v, e, expect) = g
+      val c0 = meter.read()
       val t0 = System.nanoTime()
-      val j0 = jobs.get()
       val res =
         try {
           val labels = graft.operators.Dedup.connectedComponents(
@@ -118,7 +102,7 @@ object CcProbe {
           Right(n)
         } catch { case t: Throwable => Left(t.getMessage) }
       val dt = (System.nanoTime() - t0) / 1e9
-      val dj = jobs.get() - j0
+      val dj = (meter.read() - c0).jobs
       res match {
         case Right(n) =>
           val nEdges = e.count()

@@ -2,13 +2,17 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Queries
 
 /** Regenerates PLANS.md: `explain("formatted")` for the plan-shape-
   * critical queries, with a note on what to look for in each. Run:
-  * `sbt "runMain graft.tools.DumpPlans"` after changing any of them. */
+  * `sbt "runMain graft.tools.DumpPlans"` after changing any of them.
+  * With a fixture dir, a suffix and query names it dumps those queries'
+  * plans to files instead (see [[main]]). */
 object DumpPlans {
 
   private val watched: Seq[(String, String)] = Seq(
@@ -265,35 +269,53 @@ object DumpPlans {
       }))
   }
 
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // mirror Bench's split policy (see Bench.scala) so the dumped
-      // plans are the executed ones
-      .config("spark.sql.files.minPartitionNum", "1")
-      .config("spark.sql.leafNodeDefaultParallelism", "1")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
+  /** `explain("formatted")` without JVM identity hashes
+    * (Aggregator@1a2b3c4d), so regenerating a dump doesn't churn
+    * meaningless diffs. */
+  private def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      .replaceAll("@[0-9a-f]{6,10}", "@...")
 
+  /** `DumpPlans [sfDir]` regenerates PLANS.md (default fixture sf0.001;
+    * plan shapes are scale-independent). `DumpPlans <sfDir> <suffix>
+    * <query> [query...]` instead writes `<query>_<suffix>.txt` for each
+    * named declared query into `SPARK_GRAFT_PLANS_DIR` (default `plans`)
+    * — before/after plan evidence for exactly the rows a change touches.
+    * Both run under the bench's split policy, so the dumped plans are
+    * the executed ones. */
+  def main(args: Array[String]): Unit = {
+    require(args.length != 2, "usage: DumpPlans [sfDir [suffix query...]]")
+    val spark = graft.GraftSession.local("graft-dump-plans", fixtureSplits = true)
+    val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    if (args.length > 2) dumpQueries(spark, dir, args(1), args.drop(2).toSeq)
+    else dumpPlansMd(spark, dir)
+    spark.stop()
+  }
+
+  private def dumpQueries(spark: SparkSession, dir: String,
+                          suffix: String, names: Seq[String]): Unit = {
+    val outDir = Paths.get(sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans"))
+    Files.createDirectories(outDir)
+    names.foreach { name =>
+      val out = outDir.resolve(s"${name}_$suffix.txt")
+      try {
+        Files.writeString(out, formatted(Queries.all(name).planFrame(spark, dir)))
+        println(s"[plandump] wrote $out")
+      } catch {
+        case NonFatal(t) => System.err.println(s"[plandump] $name failed: $t")
+      }
+    }
+  }
+
+  private def dumpPlansMd(spark: SparkSession, dir: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of the shape-critical queries\n\n")
     sb.append("Generated by `graft.tools.DumpPlans` (sf0.001 inputs; plan shapes\n")
     sb.append("are scale-independent). `PlanSpec` asserts these properties in CI\n")
     sb.append("form; this file is the human-readable rendering.\n")
-    def render(name: String, note: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val formatted = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        // strip JVM identity hashes (Aggregator@1a2b3c4d) so regenerating
-        // the file doesn't churn meaningless diffs
-        .replaceAll("@[0-9a-f]{6,10}", "@...")
-      sb.append(s"\n## $name\n\n$note\n\n```\n$formatted```\n")
-    }
+    def render(name: String, note: String, df: DataFrame): Unit =
+      sb.append(s"\n## $name\n\n$note\n\n```\n${formatted(df)}```\n")
     // planFrame: rows that collect to a LocalRelation dump their lazy
     // plan-view twin (the distributed shape the collect executes)
     watched.foreach { case (name, note) =>
@@ -303,6 +325,5 @@ object DumpPlans {
     ex.foreach { case (name, note, df) => render(name, note, df) }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${watched.size + ex.size} plans)")
-    spark.stop()
   }
 }

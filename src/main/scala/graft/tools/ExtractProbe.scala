@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.obs.JobMeter.time
 
 /** Throughput probe for the binary→text extraction tier: amplify the
   * fixture corpus, encode it into each REAL container (pdf, docx, odt,
@@ -11,20 +12,11 @@ import org.apache.spark.sql.functions._
   * with executors. Results land in BASELINE.md (round 10). */
 object ExtractProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-extract-probe")
     import spark.implicits._
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val amplify = sys.env.getOrElse("SPARK_GRAFT_EXTRACT_X", "4").toInt
     val tmp = java.nio.file.Files.createTempDirectory("graft-extractprobe")
-    def time[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
     val docs = graft.Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
     val big = (0 until amplify).map(i =>

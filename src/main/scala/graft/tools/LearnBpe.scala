@@ -140,13 +140,7 @@ object LearnBpe {
     val sfDir = args(0)
     val out = args(1)
     val numMerges = if (args.length > 2) args(2).toInt else 200
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-learn-bpe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-learn-bpe")
     try {
       val wordFreq = graft.operators.TextAnalysis
         .wordFreq(graft.Tables.load(spark, sfDir, "documents"), "text")

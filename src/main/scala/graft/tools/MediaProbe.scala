@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.obs.JobMeter.time
 
 /** Scale probe for the multimodal decode tiers: generate a large
   * real-payload media table (genuine PNG + PCM WAV bytes), persist it as
@@ -21,19 +22,10 @@ import org.apache.spark.sql.functions._
   * Results land in BASELINE.md (round 10). */
 object MediaProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-media-probe")
     import spark.implicits._
     val n = sys.env.getOrElse("SPARK_GRAFT_MEDIA_N", "60000").toInt
     val tmp = java.nio.file.Files.createTempDirectory("graft-mediaprobe")
-    def time[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
     // materialize the fixture to parquet first so generation cost (PNG
     // encode) never pollutes the decode timings
     val src = s"$tmp/media"

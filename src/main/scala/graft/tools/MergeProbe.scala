@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.obs.JobMeter.time
 
 import graft.sources.VersionedCorpus
 
@@ -15,21 +16,12 @@ import graft.sources.VersionedCorpus
   * BASELINE.md (round 10). */
 object MergeProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-merge-probe")
     val tmp = java.nio.file.Files.createTempDirectory("graft-mergeprobe")
     val root = s"$tmp/corpus"
     def slice(lo: Long, hi: Long, tag: String) =
       spark.range(lo, hi).select(col("id").as("k"),
         concat(lit(tag), col("id")).as("payload"))
-    def time[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
     time("build: 10 x 100k appends") {
       VersionedCorpus.append(slice(0L, 100000L, "v1 "), root)
       VersionedCorpus.pinKey(root, "k") // gens 1..9 carry key bounds
@@ -128,34 +120,33 @@ object MergeProbe {
       VersionedCorpus.append(gslice(0L, 1000000L, "v1 "), mvRoot)
       VersionedCorpus.pinKey(mvRoot, "k")
     }
-    val t0 = System.nanoTime()
-    graft.sources.IncrementalView.refresh(
-      spark, mvRoot, viewRoot, viewCursor, "k", "grp", aggs)
-    println(f"mv first build (full aggregate): ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    time("mv first build (full aggregate)") {
+      graft.sources.IncrementalView.refresh(
+        spark, mvRoot, viewRoot, viewCursor, "k", "grp", aggs)
+    }
     // mutation wave: 15k rows across exactly 3 groups
     VersionedCorpus.upsert(
       gslice(0L, 1000000L, "v2 ").filter(col("grp").isin(7L, 63L, 150L))
         .limit(15000), mvRoot, "k")
-    val t1 = System.nanoTime()
-    graft.sources.IncrementalView.refresh(
-      spark, mvRoot, viewRoot, viewCursor, "k", "grp", aggs)
-    println(f"mv incremental refresh (3 dirty groups of 200): ${(System.nanoTime() - t1) / 1e9}%.2f s")
+    time("mv incremental refresh (3 dirty groups of 200)") {
+      graft.sources.IncrementalView.refresh(
+        spark, mvRoot, viewRoot, viewCursor, "k", "grp", aggs)
+    }
     // same wave shape again, with the group declared key-derived
     // (grp = k % 200): the preimage read vanishes into a local
     // projection — zero corpus I/O before the recompute
     VersionedCorpus.upsert(
       gslice(0L, 1000000L, "v3 ").filter(col("grp").isin(11L, 90L, 177L))
         .limit(15000), mvRoot, "k")
-    val t1b = System.nanoTime()
-    graft.sources.IncrementalView.refresh(
-      spark, mvRoot, viewRoot, viewCursor, "k", "grp", aggs,
-      groupFromKey = Some(col("k") % 200))
-    println(f"mv incremental refresh, groupFromKey (3 dirty groups): ${(System.nanoTime() - t1b) / 1e9}%.2f s")
-    val t2 = System.nanoTime()
-    val full = VersionedCorpus.snapshot(spark, mvRoot)
-      .groupBy(col("grp")).agg(aggs.head, aggs.tail: _*)
-    val fullRows = full.collect()
-    println(f"full re-aggregate for comparison: ${(System.nanoTime() - t2) / 1e9}%.2f s")
+    time("mv incremental refresh, groupFromKey (3 dirty groups)") {
+      graft.sources.IncrementalView.refresh(
+        spark, mvRoot, viewRoot, viewCursor, "k", "grp", aggs,
+        groupFromKey = Some(col("k") % 200))
+    }
+    val fullRows = time("full re-aggregate for comparison") {
+      VersionedCorpus.snapshot(spark, mvRoot)
+        .groupBy(col("grp")).agg(aggs.head, aggs.tail: _*).collect()
+    }
     val viewRows = graft.sources.IncrementalView.read(spark, viewRoot).count()
     assert(viewRows == 200L && fullRows.length == 200,
       s"view has $viewRows groups, full has ${fullRows.length}")
@@ -186,17 +177,17 @@ object MergeProbe {
       spark, dayRoot, dayView, dayCursor, "k", "grp", aggs)
     VersionedCorpus.upsert(
       dslice(200000L, 215000L, "v2 "), dayRoot, "k") // groups 40-42
-    val t3 = System.nanoTime()
-    graft.sources.IncrementalView.refresh(
-      spark, dayRoot, dayView, dayCursor, "k", "grp", aggs)
-    println(f"mv refresh, day-shaped (3 contiguous dirty groups, pruned reads): ${(System.nanoTime() - t3) / 1e9}%.2f s")
+    time("mv refresh, day-shaped (3 contiguous dirty groups, pruned reads)") {
+      graft.sources.IncrementalView.refresh(
+        spark, dayRoot, dayView, dayCursor, "k", "grp", aggs)
+    }
     VersionedCorpus.upsert(
       dslice(600000L, 615000L, "v3 "), dayRoot, "k") // groups 120-122
-    val t4 = System.nanoTime()
-    graft.sources.IncrementalView.refresh(
-      spark, dayRoot, dayView, dayCursor, "k", "grp", aggs,
-      groupFromKey = Some((col("k") / 5000).cast("long")))
-    println(f"mv refresh, day-shaped + groupFromKey (no preimage read): ${(System.nanoTime() - t4) / 1e9}%.2f s")
+    time("mv refresh, day-shaped + groupFromKey (no preimage read)") {
+      graft.sources.IncrementalView.refresh(
+        spark, dayRoot, dayView, dayCursor, "k", "grp", aggs,
+        groupFromKey = Some((col("k") / 5000).cast("long")))
+    }
     val dayOk = graft.sources.IncrementalView.read(spark, dayRoot + "/../dayview")
     assert(dayOk.count() == 200L)
     org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)

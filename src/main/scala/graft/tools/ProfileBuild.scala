@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Wall-clock profile of the shared index builds (the bench's `_*_build`
   * infra lines) with per-phase breakdown — run against a fixture dir to
@@ -9,14 +8,7 @@ import org.apache.spark.sql.SparkSession
 object ProfileBuild {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .appName("graft-profile-build")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-profile-build")
     def t(name: String)(f: => Any): Unit = {
       val t0 = System.nanoTime()
       f

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Runnable serve-loop demo — the reference's interactive session
   * (`app.py:60-96`) end to end: build a corpus, start the HTTP serving
@@ -10,10 +9,7 @@ import org.apache.spark.sql.SparkSession
   * scripted exchange so automated drives terminate. */
 object ServeDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-serve-demo")
     import spark.implicits._
     val e = graft.functions.Embedder.default
     val dir = java.nio.file.Files.createTempDirectory("servedemo").toString + "/c"

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -45,15 +45,8 @@ object StreamProbe {
         }))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-stream-probe")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.streaming.metricsEnabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.GraftSession.cpus
+    val spark = graft.GraftSession.local("graft-stream-probe")
 
     val events = sys.env.getOrElse("SPARK_GRAFT_STREAM_EVENTS", "100000").toLong
     val perBatch = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCH", "10000").toLong

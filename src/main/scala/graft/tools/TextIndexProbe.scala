@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.obs.JobMeter.time
 
 /** Scale probe for the persisted inverted index: amplify the fixture
   * corpus 20× (1.2M docs at sf0.1), build the index once, then compare
@@ -12,19 +13,10 @@ import org.apache.spark.sql.functions._
   * BASELINE.md (round 10). */
 object TextIndexProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-textindex-probe")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val tmp = java.nio.file.Files.createTempDirectory("graft-tixprobe")
     val idx = s"$tmp/index"
-    def time[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
     val docs = graft.Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
     val big = (0 until 20).map(i =>

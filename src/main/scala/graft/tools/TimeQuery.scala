@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.obs.JobMeter
 
 /** Time individual declared queries by name — the dev-loop complement to
   * the full `graft.Bench` run (which times everything). Args: query
@@ -8,68 +8,32 @@ import org.apache.spark.sql.SparkSession
   * `SPARK_GRAFT_TQ_REPS` the rep count (default 3, min reported).
   * Shared builds warm up first so a row's line prices its steady-state
   * consumption exactly as the bench does. Not part of the declared
-  * surface; a measurement tool. */
+  * surface; a measurement tool.
+  *
+  * Each TIME line carries the best rep's jobs, stages and summed task
+  * time: jobs = scheduler-floor multiplier, taskTime = real distributed
+  * work — a row whose wall time is mostly (jobs × floor) needs fusion,
+  * one whose taskTime dominates needs a faster kernel.
+  * `SPARK_GRAFT_TQ_JOBS=2` also lists every stage of the measured reps. */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: TimeQuery <queryName> [more names...]")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_TQ_REPS", "3").toInt)
-    val b0 = SparkSession.builder()
-      .appName("graft-time-query")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val spark = {
-      // match Bench's small-file split policy by default (see Bench.scala);
-      // SPARK_GRAFT_MINPART=32 replays the old core-count splitting
-      val n = sys.env.getOrElse("SPARK_GRAFT_MINPART", "1")
-      b0.config("spark.sql.files.minPartitionNum", n)
-        .config("spark.sql.leafNodeDefaultParallelism", n)
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-          sys.env.getOrElse("SPARK_GRAFT_PFIRST", "false"))
-        .config("spark.sql.adaptive.enabled",
-          sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-    }
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_TQ_JOBS=1 adds a per-query job/stage/task-time profile
-    // (the round-12 playbook's "per-rep SparkListener job counts", now a
-    // standing tool): jobs = scheduler-floor multiplier, taskTime = real
-    // distributed work — a row whose wall time is mostly (jobs × floor)
-    // needs fusion, one whose taskTime dominates needs a faster kernel
-    val profile = sys.env.get("SPARK_GRAFT_TQ_JOBS")
-      .exists(v => v == "1" || v == "2")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val stages = new java.util.concurrent.atomic.AtomicInteger
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
+    val spark = graft.GraftSession.local("graft-time-query", fixtureSplits = true)
     val stageDetail = sys.env.get("SPARK_GRAFT_TQ_JOBS").contains("2")
     // stage detail only prints during MEASURED reps — the unmeasured warm
     // pass runs shared builds whose stages would swamp the row's own
     val measuring = new java.util.concurrent.atomic.AtomicBoolean(false)
-    if (profile) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          stages.incrementAndGet()
-          taskMs.addAndGet(s.stageInfo.taskMetrics.executorRunTime)
-          if (stageDetail && measuring.get()) {
-            // under AQE the stage NAME is an opaque future callsite; the
-            // first graft frame in `details` names the operator instead
-            val site = s.stageInfo.details.linesIterator
-              .find(l => l.contains("graft.") && !l.contains("TimeQuery"))
-              .map(_.trim).getOrElse(
-                s.stageInfo.name.takeWhile(_ != '\n').take(80))
-            println(f"  STAGE ${s.stageInfo.stageId}%4d tasks=${
-              s.stageInfo.numTasks}%3d run=${
-              s.stageInfo.taskMetrics.executorRunTime}%6d ms  ${site.take(110)}")
-          }
-        }
+    val meter = JobMeter.install(spark, onStage = s =>
+      if (stageDetail && measuring.get()) {
+        // under AQE the stage NAME is an opaque future callsite; the
+        // first graft frame in `details` names the operator instead
+        val site = s.details.linesIterator
+          .find(l => l.contains("graft.") && !l.contains("TimeQuery"))
+          .map(_.trim).getOrElse(s.name.takeWhile(_ != '\n').take(80))
+        println(f"  STAGE ${s.stageId}%4d tasks=${s.numTasks}%3d run=${
+          s.taskMetrics.executorRunTime}%6d ms  ${site.take(110)}")
       })
     args.foreach { name =>
       val fn = graft.SparkEntry.queries.getOrElse(name,
@@ -77,12 +41,8 @@ object TimeQuery {
       // one unmeasured warm pass (codegen + shared builds), then reps
       fn(spark, dir).count()
       graft.operators.PrefixSum.releaseCaches()
-      var best = Double.MaxValue
-      var bestJobs = 0
-      var bestStages = 0
-      var bestTaskMs = 0L
-      for (_ <- 0 until reps) {
-        jobs.set(0); stages.set(0); taskMs.set(0)
+      val runs = (0 until reps).map { _ =>
+        val c0 = meter.read()
         measuring.set(true)
         val t0 = System.nanoTime()
         fn(spark, dir).count()
@@ -90,19 +50,13 @@ object TimeQuery {
         // same per-rep release discipline as Bench: min-of-reps must
         // time real rebuilds, not another rep's warm operator cache
         graft.operators.PrefixSum.releaseCaches()
-        if (profile) { Thread.sleep(150); measuring.set(false) }
-        // listener events are async; give the bus a beat to drain (the
-        // public API has no flush — 150 ms is far above its latency)
-        if (profile) Thread.sleep(150)
-        if (dt < best) {
-          best = dt; bestJobs = jobs.get(); bestStages = stages.get()
-          bestTaskMs = taskMs.get()
-        }
+        val d = meter.read() - c0
+        measuring.set(false)
+        (dt, d)
       }
-      if (profile)
-        println(f"TIME $name%-28s $best%8.3f s (min of $reps)  " +
-          f"jobs=$bestJobs%3d stages=$bestStages%3d taskTime=${bestTaskMs / 1000.0}%7.2f s")
-      else println(f"TIME $name%-28s $best%8.3f s (min of $reps)")
+      val (best, c) = runs.minBy(_._1)
+      println(f"TIME $name%-28s $best%8.3f s (min of $reps)  " +
+        f"jobs=${c.jobs}%3d stages=${c.stages}%3d taskTime=${c.taskSec}%7.2f s")
     }
     spark.stop()
   }

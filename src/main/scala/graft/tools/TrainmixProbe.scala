@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, PrefixSum, TextAnalysis}
@@ -29,30 +29,8 @@ import graft.operators.{Dedup, PrefixSum, TextAnalysis}
   * probe prices the pipeline's shuffles, not parquet IO. */
 object TrainmixProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-trainmix-probe")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          shuffleBytes.addAndGet(
-            s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten); ()
-        }
-      })
+    val spark = graft.GraftSession.local("graft-trainmix-probe")
+    val meter = graft.obs.JobMeter.install(spark)
 
     val n = sys.env.getOrElse("SPARK_GRAFT_TRAINMIX_DOCS", "1000000").toLong
 
@@ -103,13 +81,14 @@ object TrainmixProbe {
 
     // one unmeasured warm pass (codegen), then the measured run
     run()
-    jobs.set(0); shuffleBytes.set(0)
+    val c0 = meter.read()
     val t0 = System.nanoTime()
     val seqRows = run()
     val wall = (System.nanoTime() - t0) / 1e9
+    val d = meter.read() - c0
     println(f"""{"probe":"trainmix_e2e","docs":$n,"seq_rows":$seqRows,""" +
-      f""""wall_sec":$wall%.2f,"jobs":${jobs.get()},""" +
-      f""""shuffle_mb":${shuffleBytes.get() / 1048576.0}%.1f,"cpus":$cpus}""")
+      f""""wall_sec":$wall%.2f,"jobs":${d.jobs},""" +
+      f""""shuffle_mb":${d.shuffleMb}%.1f,"cpus":${graft.GraftSession.cpus}}""")
     spark.stop()
   }
 }

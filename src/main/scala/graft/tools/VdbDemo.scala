@@ -1,11 +1,7 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object VdbDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-vdb-demo")
     // consumer flow: build a corpus CSV, open, search, append, re-search
     import spark.implicits._
     val e = graft.functions.Embedder.default

@@ -172,6 +172,32 @@ class TextIndexSpec extends AnyFunSuite {
     check(surv2.filter(col("doc_id") >= 10), "post-pack delete")
   }
 
+  test("a string-typed tombstone file is honored, not dropped by the fold") {
+    val dir = freshDir()
+    val terms = Seq("data", "query")
+    val corpus = docs.filter(col("doc_id") < 200)
+    TextIndex.build(corpus, "doc_id", "text", dir, shards = 8)
+    val victims = scores(TextIndex.bm25(spark, dir, terms)).map(_._1).take(3)
+    assert(victims.length === 3)
+    assert(TextIndex.delete(spark, dir, victims.toDF("doc_id")) === 3L)
+    // replace the tombstone batch's key file with one whose id column is
+    // a STRING (a foreign writer's file): small enough for the
+    // driver-side fold, which must fall back to the distributed read
+    // instead of keeping only numeric keys
+    val tombBatch = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("batch="))
+      .maxBy(_.getName.stripPrefix("batch=").toLong)
+    val deletes = new java.io.File(tombBatch, "deletes")
+    org.apache.commons.io.FileUtils.deleteDirectory(deletes)
+    victims.map(_.toString).toDF("doc_id").coalesce(1)
+      .write.parquet(deletes.toString)
+    val after = scores(TextIndex.bm25(spark, dir, terms))
+    assert(!after.exists(r => victims.contains(r._1)),
+      s"string-typed tombstones ignored: ${after.filter(r => victims.contains(r._1))}")
+    assert(after === scores(TextAnalysis.bm25(
+      corpus.filter(!col("doc_id").isin(victims: _*)), "doc_id", "text", terms)))
+  }
+
   test("model-based fuzz: random append/replay/optimize/vacuum interleavings ≡ scan-based bm25 over the committed corpus") {
     val pool = docs.limit(400).collect()
       .map(r => (r.getLong(0), r.getString(1)))

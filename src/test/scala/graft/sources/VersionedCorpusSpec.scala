@@ -1002,6 +1002,109 @@ class VersionedCorpusSpec extends AnyFunSuite {
     }
   }
 
+  test("multiple tombstone generations and an upsert of a deleted key between two view refreshes ≡ a driver-side model: snapshots, lookups, feed, view, forget") {
+    // model of the merge-on-read rule: a row of generation g is live at
+    // asOf iff g <= asOf and no tombstone of its key committed in
+    // (g, asOf]; upserts are a tombstone plus rows in one generation
+    final case class MRow(gen: Long, id: Long, bucket: Long, text: String)
+    var rows = Vector.empty[MRow]
+    var tombs = Vector.empty[(Long, Set[Long])]
+    // the change feed the log implies: (gen, type, id, text or null)
+    var feed = Vector.empty[(Long, String, Long, String)]
+    def live(asOf: Long): Vector[(Long, Long, String)] = rows
+      .filter(r => r.gen <= asOf && !tombs.exists { case (tg, ks) =>
+        tg > r.gen && tg <= asOf && ks(r.id) })
+      .map(r => (r.id, r.bucket, r.text)).sorted
+    def batch(rs: Seq[(Long, Long, String)]) = rs.toDF("doc_id", "bucket", "text")
+    def commitRows(g: Long, kind: String, rs: Seq[(Long, Long, String)]): Unit = {
+      if (kind == "upsert") tombs :+= ((g, rs.map(_._1).toSet))
+      rows ++= rs.map { case (i, b, t) => MRow(g, i, b, t) }
+      feed ++= rs.map { case (i, _, t) => (g, kind, i, t) }
+    }
+    def commitDelete(g: Long, ks: Set[Long]): Unit = {
+      tombs :+= ((g, ks))
+      feed ++= ks.toSeq.map(k => (g, "delete", k, null: String))
+    }
+
+    val tmp = Files.createTempDirectory("graft-vcmultitomb")
+    val root = s"$tmp/src"; val view = s"$tmp/view"
+    val cursor = s"$tmp/cursor.txt"
+    val aggs = Seq(count(lit(1)).as("n"),
+      sum(length(col("text")).cast("long")).as("chars"))
+    def refresh() = IncrementalView.refresh(spark, root, view, cursor,
+      "doc_id", "bucket", aggs)
+    def checkView(tag: String): Unit = {
+      val want = live(Long.MaxValue).groupBy(_._2).toSeq
+        .map { case (b, rs) => (b, rs.size.toLong, rs.map(_._3.length.toLong).sum) }
+        .sorted
+      val got = IncrementalView.read(spark, view)
+        .as[(Long, Long, Long)].collect().sorted.toSeq
+      assert(got === want, s"view after $tag")
+    }
+
+    val init = (0L until 30L).map(i => (i, i % 5, s"a text $i"))
+    val g0 = VersionedCorpus.append(batch(init), root)
+    VersionedCorpus.pinKey(root, "doc_id")
+    commitRows(g0, "insert", init)
+    refresh()
+    checkView("first build")
+
+    // between the two refreshes: two delete generations, an upsert that
+    // moves a key across buckets, an upsert of a deleted key
+    // (resurrection), and a plain append
+    val g1 = VersionedCorpus.delete(Seq(2L, 7L, 12L).toDF("doc_id"), root, "doc_id")
+    commitDelete(g1, Set(2L, 7L, 12L))
+    val up1 = Seq((3L, 3L, "b revised 3"), (4L, 1L, "b moved 4 to bucket 1"))
+    val g2 = VersionedCorpus.upsert(batch(up1), root, "doc_id")
+    commitRows(g2, "upsert", up1)
+    val g3 = VersionedCorpus.delete(Seq(3L, 20L, 21L).toDF("doc_id"), root, "doc_id")
+    commitDelete(g3, Set(3L, 20L, 21L))
+    val up2 = Seq((2L, 2L, "c back 2"), (20L, 4L, "c back 20 elsewhere"))
+    val g4 = VersionedCorpus.upsert(batch(up2), root, "doc_id")
+    commitRows(g4, "upsert", up2)
+    val app = (40L until 43L).map(i => (i, i % 5, s"d text $i"))
+    val g5 = VersionedCorpus.append(batch(app), root)
+    commitRows(g5, "insert", app)
+
+    def snap(asOf: Long) = VersionedCorpus.snapshot(spark, root, asOf)
+      .select("doc_id", "bucket", "text").as[(Long, Long, String)]
+      .collect().sorted.toVector
+    for (g <- Seq(g0, g1, g2, g3, g4, g5))
+      assert(snap(g) === live(g), s"snapshot asOf $g")
+    val keys = Seq(0L, 2L, 3L, 4L, 7L, 12L, 20L, 21L, 41L, 99L)
+    def lookups(asOf: Long): Unit = keys.foreach { k =>
+      val got = VersionedCorpus.lookupKey(spark, root, k, asOf)
+        .select("doc_id", "bucket", "text").as[(Long, Long, String)]
+        .collect().toVector
+      assert(got === live(asOf).filter(_._1 == k), s"lookupKey $k asOf $asOf")
+    }
+    lookups(g3)
+    lookups(Long.MaxValue)
+
+    def feedRows(from: Long) = VersionedCorpus.changesBetween(spark, root, from)
+      .select("_commit_gen", "_change_type", "doc_id", "text")
+      .as[(Long, String, Long, String)].collect().toSet
+    assert(feedRows(g0) === feed.filter(_._1 > g0).toSet, "feed after g0")
+    assert(feedRows(-1L) === feed.toSet, "full feed")
+
+    refresh()
+    checkView("second refresh")
+
+    // forget one resurrected key: one more tombstone generation
+    val removed = graft.operators.Forget.forget(spark,
+      Seq(20L).toDF("doc_id"), corpusRoot = Some(root))
+    assert(removed === Map("corpus" -> 1L))
+    val g6 = VersionedCorpus.latest(root).get
+    assert(g6 === g5 + 1)
+    commitDelete(g6, Set(20L))
+    assert(snap(g6) === live(g6), "snapshot after forget")
+    assert(snap(g5) === live(g5), "time travel before the forget")
+    lookups(Long.MaxValue)
+    assert(feedRows(g5) === feed.filter(_._1 > g5).toSet, "forget feed")
+    refresh()
+    checkView("refresh after forget")
+  }
+
   test("durable admission replay is idempotent: re-admitting a committed batch appends nothing") {
     val root = freshRoot()
     VersionedCorpus.append(docs(0 until 20, "corpus"), root)
