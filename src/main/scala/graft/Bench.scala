@@ -287,9 +287,7 @@ object Bench {
         // this row's clock starts (see the warmup-loop note)
         graft.operators.PrefixSum.releaseCaches()
         graft.operators.Dedup.releaseAdmissionCaches()
-        val c0 = meter.read()
-        val t0 = System.nanoTime()
-        val ok =
+        val (ok, dt, d) = meter.measure {
           try { fn(spark, sfDir).count(); true }
           catch {
             case t: Throwable =>
@@ -302,8 +300,7 @@ object Bench {
                 flaky(name) = msg // reclassified below if no pass succeeds
               false
           }
-        val dt = (System.nanoTime() - t0) / 1e9
-        val d = meter.read() - c0
+        }
         if (ok) {
           if (best.get(name).forall(dt < _)) taskSecBest(name) = d.taskSec
           best(name) = best.get(name).fold(dt)(math.min(_, dt))
@@ -347,10 +344,16 @@ object Bench {
     val taskSecJson = taskSecBest
       .map { case (k, v) => s"\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
+    // task seconds per wall second of the pass that set the row's best:
+    // well below 1 on a floor-bound row (the wall goes to scheduling),
+    // about 1 on a serial row, up to the core count on a parallel one
+    val coresJson = taskSecBest
+      .map { case (k, v) => s"\"" + k + "\":" + r3(v / best(k)) }
+      .mkString("{", ",", "}")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,""" +
         s""""queries":$qs,"infra":$infraJson,"jobs":$jobsJson,""" +
-        s""""task_sec":$taskSecJson,""" +
+        s""""task_sec":$taskSecJson,"effective_cores":$coresJson,""" +
         s""""calibration":{"cpu_st":${r3(calCpu)},""" +
         s""""spark_job":${r3(calSpark)},""" +
         s""""cpu_st_per_pass":${

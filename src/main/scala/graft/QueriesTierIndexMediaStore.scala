@@ -86,10 +86,11 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // (load-count asserted in EmbedderSpec). Rows-only per the A3
       // contract: float model inference has no SQL analog.
       // Corpus sliced to doc_id % 4 = 0: the forward pass is REAL model
-      // inference (~1.3 ms/doc measured), and the row certifies the
-      // seam + lifecycle, not bulk throughput — the slice keeps the
-      // bench line proportionate while still running >1k true
-      // multi-layer forward passes per rep.
+      // inference (0.7–0.9 ms/doc on one thread in batches of 32, JDK 17
+      // on a 4-core x86 VM), and the row certifies the seam + lifecycle,
+      // not bulk throughput — the slice keeps the bench line
+      // proportionate while still running >1k true multi-layer forward
+      // passes per rep.
       (s, dir) => {
         val e = new TransformerEmbedder(transformerArtifactPath, dim = 64)
         val qvec = e.embed("table scan fast query").map(_.toDouble).toSeq

@@ -28,8 +28,10 @@ package graft.functions
   *     path: ONE load per (executor JVM, model), first-call races
   *     collapse via computeIfAbsent (spec-visible load counter);
   *   - `embedAll` is the batch seam [[Embedder.embedPartitions]] calls —
-  *     one session resolution per batch, row-wise ≡ batched by
-  *     contract (asserted in EmbedderSpec).
+  *     one session resolution per batch and one feature-major
+  *     [[TransformerEmbedder.Session.forwardAll]] per chunk of
+  *     documents, row-wise ≡ batched to the bit by contract (asserted
+  *     in EmbedderSpec).
   *
   * Artifact layout (little-endian): magic "GTFE", int32 vocab, dModel,
   * nLayers, nHeads, dFf, dimOut; then float32 blocks in order:
@@ -56,7 +58,26 @@ final class TransformerEmbedder(val modelPath: String, val dim: Int,
     val sess = TransformerEmbedder.sessionFor(modelPath)
     require(sess.dimOut == dim,
       s"model at $modelPath emits ${sess.dimOut}-dim, embedder declared $dim")
-    texts.map { t => sess.forward(tokenIds(t, sess)) }
+    // one forwardAll per chunk of at most ChunkPositions token positions
+    // (a document always fits in one): per-call memory stays a few MB
+    // whatever the input length, and documents are independent, so the
+    // chunking cannot change a result
+    val out = Vector.newBuilder[Array[Float]]
+    val chunk = Vector.newBuilder[Array[Int]]
+    var positions = 0
+    texts.foreach { t =>
+      val ids = tokenIds(t, sess)
+      if (positions > 0 &&
+          positions + ids.length > TransformerEmbedder.ChunkPositions) {
+        out ++= sess.forwardAll(chunk.result())
+        chunk.clear()
+        positions = 0
+      }
+      chunk += ids
+      positions += ids.length
+    }
+    if (positions > 0) out ++= sess.forwardAll(chunk.result())
+    out.result()
   }
 
   /** Whitespace tokens → ids. With a vocab section in the artifact,
@@ -98,6 +119,9 @@ final class TransformerEmbedder(val modelPath: String, val dim: Int,
 }
 
 object TransformerEmbedder {
+
+  /** Token positions per [[Session.forwardAll]] call from `embedAll`. */
+  private[graft] val ChunkPositions = 4096
 
   /** Per-layer weight block. Matrices are row-major (out × in). */
   final case class Layer(wq: Array[Float], bq: Array[Float],
@@ -153,52 +177,144 @@ object TransformerEmbedder {
       }
     }
 
-    /** One forward pass: ids → pooled `dimOut` vector. All buffers are
-      * call-local (the session is shared across threads — local mode
-      * runs 32 tasks in one JVM). */
-    def forward(ids: Array[Int]): Array[Float] = {
-      val t = ids.length
+    /** One document's forward pass: ids → pooled `dimOut` vector. */
+    def forward(ids: Array[Int]): Array[Float] = forwardAll(Vector(ids)).head
+
+    /** Forward pass over a batch of documents: each document's ids → its
+      * pooled `dimOut` vector.
+      *
+      * Activations are FEATURE-MAJOR: feature i of every position of every
+      * document in the batch is one `Array[Float]` of R = Σ tᵢ rows, so
+      * the position-wise steps (linear layers, residual adds, LayerNorm,
+      * GELU) run one inner loop over R per (feature, weight). Attention
+      * runs per document and head on scratch arrays indexed from 0. The
+      * rule that makes the inner loops vectorize: every array in a hot
+      * loop is read and written at the SAME index expression (`a(r) +=
+      * w * b(r)`); two different base offsets (`a(ob + r) += w * b(xb +
+      * r)`) defeat C2's superword pass.
+      *
+      * Bit-identity contract: every output element is the straight loop's
+      * float operation sequence — a linear output starts at its bias and
+      * adds `w·x` over inputs in ascending order, LayerNorm sums over
+      * features in ascending order, softmax takes the max, `math.exp` in
+      * double, sums z in position order and divides, the value mix and
+      * the pool add over positions in ascending order. Only the loop
+      * nesting changed, so a document's embedding does not depend on the
+      * batch it rides in (asserted against a naive reference and a golden
+      * fingerprint in EmbedderSpec). All buffers are call-local: the
+      * session is shared by every task thread. */
+    def forwardAll(docs: IndexedSeq[Array[Int]]): IndexedSeq[Array[Float]] = {
+      val n = docs.length
       val d = dModel
+      // document j owns rows start(j) until start(j + 1)
+      val start = new Array[Int](n + 1)
+      var maxT = 0
+      var j = 0
+      while (j < n) {
+        val t = docs(j).length
+        start(j + 1) = start(j) + t
+        if (t > maxT) maxT = t
+        j += 1
+      }
+      val rows = start(n)
       // token embedding + sinusoidal position encoding (precomputed table)
-      val pt = posTableFor(t)
-      var x = new Array[Float](t * d)
-      var p = 0
-      while (p < t) {
-        val base = ids(p) * d
-        val xb = p * d
-        var i = 0
-        while (i < d) {
-          x(xb + i) = tokenEmb(base + i) + pt(xb + i)
-          i += 1
+      val pt = posTableFor(maxT)
+      var x = Array.fill(d)(new Array[Float](rows))
+      j = 0
+      while (j < n) {
+        val ids = docs(j)
+        var p = 0
+        while (p < ids.length) {
+          val r = start(j) + p
+          val base = ids(p) * d
+          var i = 0
+          while (i < d) {
+            x(i)(r) = tokenEmb(base + i) + pt(p * d + i)
+            i += 1
+          }
+          p += 1
         }
-        p += 1
+        j += 1
       }
       var li = 0
       while (li < nLayers) {
         val l = layers(li)
         // ---- multi-head self-attention ----
-        val q = linear(x, t, l.wq, l.bq, d, d)
-        val k = linear(x, t, l.wk, l.bk, d, d)
-        val v = linear(x, t, l.wv, l.bv, d, d)
-        val ctx = new Array[Float](t * d)
-        val scores = new Array[Float](t)
-        val scale = (1.0 / math.sqrt(dHead.toDouble)).toFloat
+        val ctx = attention(linear(x, rows, l.wq, l.bq, d, d),
+          linear(x, rows, l.wk, l.bk, d, d),
+          linear(x, rows, l.wv, l.bv, d, d), start, maxT)
+        val attnOut = linear(ctx, rows, l.wo, l.bo, d, d)
+        addInPlace(attnOut, x)
+        val x1 = layerNorm(attnOut, rows, l.ln1g, l.ln1b)
+        // ---- position-wise FFN (GELU) ----
+        val hid = linear(x1, rows, l.w1, l.b1, d, dFf)
+        geluInPlace(hid)
+        val ff = linear(hid, rows, l.w2, l.b2, dFf, d)
+        addInPlace(ff, x1)
+        x = layerNorm(ff, rows, l.ln2g, l.ln2b)
+        li += 1
+      }
+      // mean-pool each document's positions (app.py:33-37 — unnormalized),
+      // then the output projection with the documents as its rows
+      val pooled = Array.fill(d)(new Array[Float](n))
+      var i = 0
+      while (i < d) {
+        j = 0
+        while (j < n) {
+          var acc = 0.0f
+          var r = start(j)
+          while (r < start(j + 1)) { acc += x(i)(r); r += 1 }
+          pooled(i)(j) = acc / (start(j + 1) - start(j))
+          j += 1
+        }
+        i += 1
+      }
+      val y = linear(pooled, n, wOut, bOut, d, dimOut)
+      IndexedSeq.tabulate(n)(j => Array.tabulate(dimOut)(o => y(o)(j)))
+    }
+
+    /** Scaled dot-product attention of every document in the batch,
+      * head by head: the document's `dHead` columns of k are copied into
+      * scratch indexed from 0, the weights of query position ti
+      * over key positions s are stored transposed (`at(s)(ti)`), and the
+      * value mix adds `at(s)(ti) · v(s)` over s in ascending order. */
+    private def attention(q: Array[Array[Float]], k: Array[Array[Float]],
+                          v: Array[Array[Float]], start: Array[Int],
+                          maxT: Int): Array[Array[Float]] = {
+      val ctx = Array.fill(dModel)(new Array[Float](start.last))
+      val kh = Array.fill(dHead)(new Array[Float](maxT))
+      val mix = new Array[Float](maxT)
+      val at = Array.fill(maxT)(new Array[Float](maxT))
+      val scores = new Array[Float](maxT)
+      val scale = (1.0 / math.sqrt(dHead.toDouble)).toFloat
+      var j = 0
+      while (j + 1 < start.length) {
+        val s0 = start(j)
+        val t = start(j + 1) - s0
         var h = 0
         while (h < nHeads) {
           val off = h * dHead
+          var i = 0
+          while (i < dHead) {
+            System.arraycopy(k(off + i), s0, kh(i), 0, t)
+            i += 1
+          }
           var ti = 0
           while (ti < t) {
             // scaled dot scores against every position, softmax row
-            var s = 0
+            java.util.Arrays.fill(scores, 0, t, 0.0f)
+            i = 0
+            while (i < dHead) {
+              val qv = q(off + i)(s0 + ti)
+              val ki = kh(i)
+              var s = 0
+              while (s < t) { scores(s) += qv * ki(s); s += 1 }
+              i += 1
+            }
             var maxS = Float.NegativeInfinity
+            var s = 0
             while (s < t) {
-              var acc = 0.0f
-              var i = 0
-              while (i < dHead) {
-                acc += q(ti * d + off + i) * k(s * d + off + i)
-                i += 1
-              }
-              val sc = acc * scale
+              val sc = scores(s) * scale
               scores(s) = sc
               if (sc > maxS) maxS = sc
               s += 1
@@ -211,134 +327,120 @@ object TransformerEmbedder {
               z += e
               s += 1
             }
-            // attention-weighted value mix
             s = 0
+            while (s < t) { at(s)(ti) = scores(s) / z; s += 1 }
+            ti += 1
+          }
+          // attention-weighted value mix
+          i = 0
+          while (i < dHead) {
+            java.util.Arrays.fill(mix, 0, t, 0.0f)
+            val vi = v(off + i)
+            var s = 0
             while (s < t) {
-              val a = scores(s) / z
-              var i = 0
-              while (i < dHead) {
-                ctx(ti * d + off + i) += a * v(s * d + off + i)
-                i += 1
-              }
+              val a = at(s)
+              val vs = vi(s0 + s)
+              var r = 0
+              while (r < t) { mix(r) += a(r) * vs; r += 1 }
               s += 1
             }
-            ti += 1
+            System.arraycopy(mix, 0, ctx(off + i), s0, t)
+            i += 1
           }
           h += 1
         }
-        val attnOut = linear(ctx, t, l.wo, l.bo, d, d)
-        addInPlace(attnOut, x)
-        val x1 = layerNorm(attnOut, t, l.ln1g, l.ln1b, d)
-        // ---- position-wise FFN (GELU) ----
-        val hid = linear(x1, t, l.w1, l.b1, d, dFf)
-        geluInPlace(hid)
-        val ff = linear(hid, t, l.w2, l.b2, dFf, d)
-        addInPlace(ff, x1)
-        x = layerNorm(ff, t, l.ln2g, l.ln2b, d)
-        li += 1
+        j += 1
       }
-      // mean-pool over positions (app.py:33-37 — unnormalized), then
-      // the output projection to the engine's embedding dim
-      val pooled = new Array[Float](d)
-      p = 0
-      while (p < t) {
+      ctx
+    }
+
+    /** Feature-major `x` (dIn arrays of `rows`) through W[dOut×dIn] + b →
+      * dOut arrays of `rows`. */
+    private def linear(x: Array[Array[Float]], rows: Int, w: Array[Float],
+                       b: Array[Float], dIn: Int,
+                       dOut: Int): Array[Array[Float]] =
+      Array.tabulate(dOut) { o =>
+        val out = new Array[Float](rows)
+        java.util.Arrays.fill(out, b(o))
         var i = 0
-        while (i < d) { pooled(i) += x(p * d + i); i += 1 }
-        p += 1
-      }
-      var i = 0
-      while (i < d) { pooled(i) /= t; i += 1 }
-      linear(pooled, 1, wOut, bOut, d, dimOut)
-    }
-
-    /** rows×dIn through W[dOut×dIn]+b → rows×dOut.
-      *
-      * Unrolled 4-wide over OUTPUTS: a single `acc += w·x` loop is one
-      * serial float-add dependency chain (~4-cycle latency per add caps
-      * it at ~0.25 MAC/cycle); four outputs give four INDEPENDENT chains
-      * sharing one streamed read of the x row. Each output's own
-      * accumulation order over i is unchanged, so results are
-      * byte-identical to the straight loop (asserted in EmbedderSpec). */
-    private def linear(x: Array[Float], rows: Int, w: Array[Float],
-                       b: Array[Float], dIn: Int, dOut: Int): Array[Float] = {
-      val out = new Array[Float](rows * dOut)
-      var r = 0
-      while (r < rows) {
-        val xb = r * dIn
-        val ob = r * dOut
-        var o = 0
-        while (o + 4 <= dOut) {
-          var a0 = b(o); var a1 = b(o + 1); var a2 = b(o + 2); var a3 = b(o + 3)
-          val w0 = o * dIn; val w1 = w0 + dIn; val w2 = w1 + dIn; val w3 = w2 + dIn
-          var i = 0
-          while (i < dIn) {
-            val xv = x(xb + i)
-            a0 += w(w0 + i) * xv
-            a1 += w(w1 + i) * xv
-            a2 += w(w2 + i) * xv
-            a3 += w(w3 + i) * xv
-            i += 1
-          }
-          out(ob + o) = a0; out(ob + o + 1) = a1
-          out(ob + o + 2) = a2; out(ob + o + 3) = a3
-          o += 4
-        }
-        while (o < dOut) {
-          var acc = b(o)
-          val wb = o * dIn
-          var i = 0
-          while (i < dIn) { acc += w(wb + i) * x(xb + i); i += 1 }
-          out(ob + o) = acc
-          o += 1
-        }
-        r += 1
-      }
-      out
-    }
-
-    private def addInPlace(a: Array[Float], b: Array[Float]): Unit = {
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-    }
-
-    private def layerNorm(x: Array[Float], rows: Int, g: Array[Float],
-                          b: Array[Float], d: Int): Array[Float] = {
-      val out = new Array[Float](rows * d)
-      var r = 0
-      while (r < rows) {
-        val base = r * d
-        var mean = 0.0f
-        var i = 0
-        while (i < d) { mean += x(base + i); i += 1 }
-        mean /= d
-        var va = 0.0f
-        i = 0
-        while (i < d) {
-          val dv = x(base + i) - mean
-          va += dv * dv
+        while (i < dIn) {
+          val wv = w(o * dIn + i)
+          val xi = x(i)
+          var r = 0
+          while (r < rows) { out(r) += wv * xi(r); r += 1 }
           i += 1
         }
-        val inv = (1.0 / math.sqrt(va / d + 1e-5)).toFloat
-        i = 0
-        while (i < d) {
-          out(base + i) = (x(base + i) - mean) * inv * g(i) + b(i)
-          i += 1
-        }
-        r += 1
+        out
       }
-      out
-    }
 
-    /** tanh-approximation GELU (the BERT-family activation). */
-    private def geluInPlace(x: Array[Float]): Unit = {
+    private def addInPlace(a: Array[Array[Float]],
+                           b: Array[Array[Float]]): Unit = {
       var i = 0
-      while (i < x.length) {
-        val v = x(i).toDouble
-        x(i) = (0.5 * v * (1.0 + math.tanh(
-          0.7978845608028654 * (v + 0.044715 * v * v * v)))).toFloat
+      while (i < a.length) {
+        val ai = a(i)
+        val bi = b(i)
+        var r = 0
+        while (r < ai.length) { ai(r) += bi(r); r += 1 }
         i += 1
       }
     }
+
+    private def layerNorm(x: Array[Array[Float]], rows: Int, g: Array[Float],
+                          b: Array[Float]): Array[Array[Float]] = {
+      val d = x.length
+      val mean = new Array[Float](rows)
+      var i = 0
+      while (i < d) {
+        val xi = x(i)
+        var r = 0
+        while (r < rows) { mean(r) += xi(r); r += 1 }
+        i += 1
+      }
+      var r = 0
+      while (r < rows) { mean(r) /= d; r += 1 }
+      val va = new Array[Float](rows)
+      i = 0
+      while (i < d) {
+        val xi = x(i)
+        r = 0
+        while (r < rows) {
+          val dv = xi(r) - mean(r)
+          va(r) += dv * dv
+          r += 1
+        }
+        i += 1
+      }
+      val inv = new Array[Float](rows)
+      r = 0
+      while (r < rows) {
+        inv(r) = (1.0 / math.sqrt(va(r) / d + 1e-5)).toFloat
+        r += 1
+      }
+      Array.tabulate(d) { i =>
+        val xi = x(i)
+        val gi = g(i)
+        val bi = b(i)
+        val out = new Array[Float](rows)
+        var r = 0
+        while (r < rows) {
+          out(r) = (xi(r) - mean(r)) * inv(r) * gi + bi
+          r += 1
+        }
+        out
+      }
+    }
+
+    /** tanh-approximation GELU (the BERT-family activation). */
+    private def geluInPlace(x: Array[Array[Float]]): Unit =
+      x.foreach { a =>
+        var r = 0
+        while (r < a.length) {
+          val v = a(r).toDouble
+          a(r) = (0.5 * v * (1.0 + math.tanh(
+            0.7978845608028654 * (v + 0.044715 * v * v * v)))).toFloat
+          r += 1
+        }
+      }
 
     private def posEnc(pos: Int, i: Int, d: Int): Float = {
       val freq = math.pow(10000.0, -((i / 2) * 2).toDouble / d)

@@ -39,6 +39,15 @@ final class JobMeter private (spark: SparkSession, onStage: StageInfo => Unit)
     Bridge.drainListenerBus(spark.sparkContext)
     JobMeter.Counts(jobs.get(), stages.get(), taskMs.get(), shuffleBytes.get())
   }
+
+  /** Evaluate `f`; its result, wall seconds and the counts it added. */
+  def measure[A](f: => A): (A, Double, JobMeter.Counts) = {
+    val c0 = read()
+    val t0 = System.nanoTime()
+    val r = f
+    val sec = (System.nanoTime() - t0) / 1e9
+    (r, sec, read() - c0)
+  }
 }
 
 object JobMeter {

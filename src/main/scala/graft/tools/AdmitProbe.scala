@@ -142,11 +142,7 @@ object AdmitProbe {
     // one JSON line per measured step: wall seconds, jobs, shuffle-write MB
     def measured[A](kernel: String, nCorpus: Long)(f: => A)(
         admitted: A => Long): A = {
-      val c0 = meter.read()
-      val t0 = System.nanoTime()
-      val r = f
-      val wall = (System.nanoTime() - t0) / 1e9
-      val d = meter.read() - c0
+      val (r, wall, d) = meter.measure(f)
       val line = f"""{"probe":"admit","kernel":"$kernel",""" +
         f""""corpus":$nCorpus,"batch":$batch,"admitted":${admitted(r)},""" +
         f""""wall_sec":$wall%.2f,"jobs":${d.jobs},""" +

@@ -87,9 +87,7 @@ object CcProbe {
     def run(tag: String, g: (DataFrame, DataFrame, Long), mode: String,
             maxIters: Int): Unit = {
       val (v, e, expect) = g
-      val c0 = meter.read()
-      val t0 = System.nanoTime()
-      val res =
+      val (res, dt, d) = meter.measure {
         try {
           val labels = graft.operators.Dedup.connectedComponents(
             v, "v", e, "src", "dst",
@@ -101,19 +99,18 @@ object CcProbe {
           labels.unpersist()
           Right(n)
         } catch { case t: Throwable => Left(t.getMessage) }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val dj = (meter.read() - c0).jobs
+      }
       res match {
         case Right(n) =>
           val nEdges = e.count()
           println(f"""{"graph":"$tag","mode":"$mode","edges":$nEdges,""" +
-            f""""wall_sec":$dt%.1f,"jobs":$dj,"components":$n,""" +
+            f""""wall_sec":$dt%.1f,"jobs":${d.jobs},"components":$n,""" +
             s""""expected":$expect,"ok":${n == expect}}""")
         case Left(msg) =>
           val m = String.valueOf(msg).take(120)
             .replaceAll("[\\x00-\\x1F\"\\\\]", " ")
           println(f"""{"graph":"$tag","mode":"$mode","wall_sec":$dt%.1f,""" +
-            s""""jobs":$dj,"error":"$m"}""")
+            s""""jobs":${d.jobs},"error":"$m"}""")
       }
     }
 

@@ -1,18 +1,21 @@
 package graft.tools
 
+import graft.obs.JobMeter
 
-/** Wall-clock profile of the shared index builds (the bench's `_*_build`
-  * infra lines) with per-phase breakdown — run against a fixture dir to
-  * see WHERE a build's seconds go before optimizing it. Not part of the
-  * declared surface; a measurement tool. */
+/** Profile of the shared index builds (the bench's `_*_build` infra
+  * lines) with per-phase breakdown — run against a fixture dir to see
+  * WHERE a build's seconds go before optimizing it. Every phase prints
+  * its wall time, Spark jobs and summed task seconds ([[JobMeter]]). Not
+  * part of the declared surface; a measurement tool. */
 object ProfileBuild {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.GraftSession.local("graft-profile-build")
+    val meter = JobMeter.install(spark)
     def t(name: String)(f: => Any): Unit = {
-      val t0 = System.nanoTime()
-      f
-      println(f"PROFILE $name%-24s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
+      val (_, sec, d) = meter.measure(f)
+      println(f"PROFILE $name%-24s $sec%8.3f s  jobs=${d.jobs}%3d" +
+        f"  task_sec=${d.taskSec}%.3f")
     }
     t("warmup_count") { graft.Tables.load(spark, dir, "embeddings").count() }
     // phase-by-phase replica of sharedIvfIndex
@@ -225,15 +228,15 @@ object ProfileBuild {
       val n = codes.count()
       println(s"PROFILE scan_kernel_rows        $n")
       val q = graft.QueryVectors.q1
-      def time(name: String)(c: org.apache.spark.sql.Column): Unit = {
-        codes.select(c.as("s")).agg(max(col("s"))).head() // warm
-        val t0 = System.nanoTime()
-        codes.select(c.as("s")).agg(max(col("s"))).head()
-        println(f"PROFILE $name%-24s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
+      // one warm evaluation of the kernel over `df`, then the timed one
+      def time(df: org.apache.spark.sql.DataFrame, name: String)(
+          c: org.apache.spark.sql.Column): Unit = {
+        df.select(c.as("s")).agg(max(col("s"))).head()
+        t(name) { df.select(c.as("s")).agg(max(col("s"))).head() }
       }
-      time("sq_native") {
+      time(codes, "sq_native") {
         graft.operators.SqIndex.sqScore(col("codes"), q, p) }
-      time("sq_hof") {
+      time(codes, "sq_hof") {
         graft.operators.SqIndex.sqScoreHof(col("codes"), q, p) }
       val seeds = emb.orderBy("vec_id").limit(16)
         .select(transform(col("embedding"), _.cast("double")).as("v"))
@@ -246,15 +249,9 @@ object ProfileBuild {
         .repartition(32)
         .write.mode("overwrite").parquet(s"$tmp/pqcodes")
       val pqCodes = spark.read.parquet(s"$tmp/pqcodes")
-      def timeP(name: String)(c: org.apache.spark.sql.Column): Unit = {
-        pqCodes.select(c.as("s")).agg(max(col("s"))).head()
-        val t0 = System.nanoTime()
-        pqCodes.select(c.as("s")).agg(max(col("s"))).head()
-        println(f"PROFILE $name%-24s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-      }
-      timeP("pq_native") {
+      time(pqCodes, "pq_native") {
         graft.operators.PqIndex.adcScore(col("codes"), q, cb) }
-      timeP("pq_hof") {
+      time(pqCodes, "pq_hof") {
         graft.operators.PqIndex.adcScoreHof(col("codes"), q, cb) }
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }

@@ -81,11 +81,7 @@ object TrainmixProbe {
 
     // one unmeasured warm pass (codegen), then the measured run
     run()
-    val c0 = meter.read()
-    val t0 = System.nanoTime()
-    val seqRows = run()
-    val wall = (System.nanoTime() - t0) / 1e9
-    val d = meter.read() - c0
+    val (seqRows, wall, d) = meter.measure(run())
     println(f"""{"probe":"trainmix_e2e","docs":$n,"seq_rows":$seqRows,""" +
       f""""wall_sec":$wall%.2f,"jobs":${d.jobs},""" +
       f""""shuffle_mb":${d.shuffleMb}%.1f,"cpus":${graft.GraftSession.cpus}}""")

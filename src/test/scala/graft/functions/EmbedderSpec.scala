@@ -155,10 +155,11 @@ class EmbedderSpec extends AnyFunSuite {
   }
 
   test("TransformerEmbedder: optimized forward ≡ naive straight-loop reference, byte-for-byte") {
-    // Guards the hot-path optimizations (4-wide output-unrolled linear,
-    // precomputed position table): each output element's float
+    // Guards the hot-path optimizations (batched feature-major forward
+    // pass, precomputed position table): each output element's float
     // accumulation ORDER must stay exactly the straight loop's, so the
-    // optimized session must reproduce this naive reference to the bit.
+    // optimized session must reproduce this naive reference to the bit,
+    // alone or in any batch.
     val path = writeTransformer()
     val s = TransformerEmbedder.sessionFor(path)
     val d = s.dModel; val dH = d / s.nHeads
@@ -239,13 +240,58 @@ class EmbedderSpec extends AnyFunSuite {
       for (i <- 0 until d) pooled(i) /= t
       lin(pooled, 1, s.wOut, s.bOut, d, s.dimOut)
     }
-    for (ids <- Seq(Array(0), Array(1, 2, 3), Array.tabulate(37)(i => (i * 97) % s.vocab),
-        Array.tabulate(128)(i => (i * 31 + 7) % s.vocab))) {
-      val got = s.forward(ids)
-      val want = reference(ids)
-      assert(got.toSeq === want.toSeq,
+    val batch = Vector(Array(0), Array(1, 2, 3),
+      Array.tabulate(37)(i => (i * 97) % s.vocab),
+      Array.tabulate(128)(i => (i * 31 + 7) % s.vocab))
+    val want = batch.map(ids => reference(ids).toSeq)
+    for (ids <- batch)
+      assert(s.forward(ids).toSeq === reference(ids).toSeq,
         s"forward diverged from straight-loop reference at t=${ids.length}")
+    // one mixed-length batch, in both orders: every row is its document's
+    // reference, whatever its neighbours and its offset in the batch
+    for (order <- Seq(batch.indices, batch.indices.reverse)) {
+      val got = s.forwardAll(order.map(batch))
+      assert(got.size === batch.size)
+      order.zip(got).foreach { case (j, row) =>
+        assert(row.toSeq === want(j),
+          s"forwardAll diverged from the reference at t=${batch(j).length}")
+      }
     }
+    // embedAll over more positions than one forwardAll chunk holds ≡
+    // per-text embed (chunk boundaries cannot change a result)
+    val m = new TransformerEmbedder(path, dim = 64)
+    val texts = (0 until 200).map { n =>
+      if (n % 17 == 5) null
+      else (0 until 20 + n % 61).map(w => s"w${(n * 7 + w * 13) % 97}")
+        .mkString(" ")
+    }
+    assert(texts.map(t => if (t == null) 1 else t.split(' ').length).sum >
+      2 * TransformerEmbedder.ChunkPositions)
+    assert(m.embedAll(texts).map(_.toSeq) === texts.map(t => m.embed(t).toSeq))
+  }
+
+  test("TransformerEmbedder: golden fingerprint of the sf0.001 documents under the default artifact") {
+    // Pins tokenizer + writeRandom artifact + forward pass together,
+    // including the math.exp / math.tanh calls the in-test reference
+    // shares: SHA-256 over the little-endian float bytes of embedAll on
+    // every document text in doc_id order. The expected digest was
+    // computed before the batched forward pass replaced the per-document
+    // one; any drift in the produced bits changes it.
+    val spark = graft.TestSpark.spark
+    val texts = graft.Tables.load(spark, graft.TestSpark.sf0001, "documents")
+      .select("doc_id", "text").orderBy("doc_id").collect()
+      .map(r => if (r.isNullAt(1)) null else r.getString(1)).toSeq
+    val m = new TransformerEmbedder(writeTransformer(), dim = 64)
+    val embs = m.embedAll(texts)
+    assert(embs.size === texts.size)
+    val bb = java.nio.ByteBuffer.allocate(embs.size * 64 * 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    embs.foreach(_.foreach(f => bb.putFloat(f)))
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(bb.array()).map(b => f"$b%02x").mkString
+    assert(digest ===
+      "59ed6959b6a9fac688024b1fbd88c66d0d848cf4612e64d459851fe79df1b5b1",
+      s"${texts.size} documents")
   }
 
   test("TransformerEmbedder: one session load per JVM across a distributed run, batched ≡ row-wise") {
