@@ -414,7 +414,7 @@ object TextIndex {
     // parquet min/max pruning when ids cluster. A maintenance op pays
     // it once; queries never do. The negative-stats aggregate rides
     // the tombstone write as `Dataset.observe` metrics (the fused
-    // commit discipline of VersionedCorpus.writeStagedWithStats), so
+    // commit discipline of VersionedCorpus.stageWrite), so
     // the whole delete is one doclens pass + one 1-row stats write —
     // no persist, no separate read-back aggregate.
     val dls = liveDoclens(spark, live)

@@ -66,11 +66,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     key for the hash-distributed-key shape bounds can't prune);
   *     [[history]] is the log as a DataFrame.
   *
-  * Writer contract: APPENDS are multi-writer safe — every data commit
-  * stages to a writer-unique directory and claims its generation id by
-  * an atomic rename ([[claimGen]]; two claimants → one rename wins,
-  * the loser retries at the next free id), and appends commute, so any
-  * interleaving is a correct serialization (spec-pinned with racing
+  * Writer contract: every commit stages its data to a writer-unique
+  * directory, then [[publish]] — the one publish step, used by every
+  * commit site — runs these steps in this order:
+  *   1. claim rename ([[claimGen]]): the staged directory becomes
+  *      `gen=<N>`. Two claimants of one id: one rename wins, the loser
+  *      retries at the next free id. A crash before it leaves staging
+  *      garbage ([[cleanStaging]]); after it, an unpublished `gen=`
+  *      orphan no reader sees and [[nextGen]] never reuses.
+  *   2. Bloom sidecar (with [[pinBloom]]): `_manifest/<N>.bloom`. A
+  *      crash after it leaves a sidecar of an unpublished generation.
+  *      A published generation without one reads as "may contain".
+  *   3. manifest rename: `_manifest/<N>.json`, the commit point.
+  *   4. tombstone-memo population: driver memory only; a crash loses
+  *      nothing a later read cannot re-collect.
+  * The fused two-generation [[applyChanges]] publishes its upsert
+  * generation, then its delete generation: a crash between them leaves
+  * the upsert half committed, and replaying the batch converges.
+  *
+  * APPENDS are multi-writer safe: appends commute, so any interleaving
+  * of claims is a correct serialization (spec-pinned with racing
   * writer threads). KEYED mutations (upsert/delete/CDC) and
   * maintenance (compact/optimize/vacuum) use the same claim protocol —
   * so they can never share a directory with a racing append — but
@@ -81,10 +96,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object VersionedCorpus {
 
   /** One committed generation, as recorded in its manifest.
-    * `kind` ∈ append | base | upsert | delete; `base` is kept as the
-    * boolean view of `kind == "base"` (pre-merge manifests carry only
-    * the boolean and parse to append/base). `rows` is data rows for
-    * append/base/upsert and tombstoned-key count for delete. */
+    * `kind` ∈ append | base | upsert | delete | optimize; `base` is kept
+    * as the boolean view of `kind == "base"` (pre-merge manifests carry
+    * only the boolean and parse to append/base). `rows` is data rows
+    * for append/base/upsert/optimize and tombstoned-key count for
+    * delete; `rlo..rhi` is an optimize output's replaced run. */
   final case class Commit(gen: Long, rows: Long, base: Boolean,
                           kind: String = "append",
                           klo: Option[Long] = None,
@@ -93,7 +109,7 @@ object VersionedCorpus {
                           rhi: Option[Long] = None,
                           stats: Map[String, (Long, Long)] = Map.empty) {
     /** Generations whose keys kill earlier rows with the same key. */
-    def tombstones: Boolean = kind == "upsert" || kind == "delete"
+    def tombstones: Boolean = tombstoneKind(kind)
     /** EFFECTIVE MERGE POSITION: where this generation's rows sit in
       * the tombstone-resolution order. For an [[optimize]] output it is
       * the TOP of the replaced run (`rhi`) — legal because the run is
@@ -121,6 +137,8 @@ object VersionedCorpus {
         case None             => true
       }
   }
+
+  private def tombstoneKind(kind: String) = kind == "upsert" || kind == "delete"
 
   private def manifestDir(root: String) =
     java.nio.file.Paths.get(root, "_manifest")
@@ -353,23 +371,25 @@ object VersionedCorpus {
   private def bloomFile(root: String, gen: Long) =
     manifestDir(root).resolve(s"$gen.bloom")
 
-  /** Publish a just-built filter for `gen`. Runs BEFORE the manifest
-    * rename (the commit point), so a published commit either has its
-    * filter or — crash window — none; readers treat a missing filter
-    * as "may contain" and stay correct. */
+  /** Write the filter for `gen` (step 2 of [[publish]]) and drop any
+    * cached filter loaded from the same path — a store deleted and
+    * rebuilt at this root reuses its generation ids. */
   private def writeBloom(root: String, gen: Long, bytes: Array[Byte]): Unit = {
     val tmp = manifestDir(root).resolve(s".$gen.bloom.tmp")
     java.nio.file.Files.write(tmp, bytes)
     java.nio.file.Files.move(tmp, bloomFile(root, gen),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    bloomCache.remove(bloomFile(root, gen).toString)
   }
 
-  /** Published filters are immutable, so a loaded one is cached for
-    * the driver's lifetime (a filter is ~1 MB at the default sizing;
-    * the cap just bounds a pathological many-store driver). */
+  /** Loaded filters, by path, with the identity (file key, mtime, size)
+    * of the file they were read from: a filter rewritten at the same
+    * path by another process is re-read, and [[writeBloom]] evicts
+    * this process's own rewrites. A filter is ~1 MB at the default
+    * sizing; the cap just bounds a pathological many-store driver. */
   private val bloomCache =
     new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.util.sketch.BloomFilter]()
+      (String, org.apache.spark.util.sketch.BloomFilter)]()
 
   /** Driver-side probe: can generation `gen` contain `value` in the
     * pinned key? Missing filter (pre-pin commit, crash window, or the
@@ -399,11 +419,22 @@ object VersionedCorpus {
 
   private def bloomMayContainHash(root: String, gen: Long, h: Long): Boolean = {
     val f = bloomFile(root, gen)
-    if (!java.nio.file.Files.exists(f)) return true
-    if (bloomCache.size > 4096) bloomCache.clear()
-    val bf = bloomCache.computeIfAbsent(f.toString, _ =>
-      org.apache.spark.util.sketch.BloomFilter.readFrom(
-        java.nio.file.Files.readAllBytes(f)))
+    val id =
+      try {
+        val a = java.nio.file.Files.readAttributes(f,
+          classOf[java.nio.file.attribute.BasicFileAttributes])
+        s"${a.fileKey}|${a.lastModifiedTime}|${a.size}"
+      } catch { case _: java.nio.file.NoSuchFileException => return true }
+    val hit = bloomCache.get(f.toString)
+    val bf =
+      if (hit != null && hit._1 == id) hit._2
+      else {
+        if (bloomCache.size > 4096) bloomCache.clear()
+        val loaded = org.apache.spark.util.sketch.BloomFilter.readFrom(
+          java.nio.file.Files.readAllBytes(f))
+        bloomCache.put(f.toString, (id, loaded))
+        loaded
+      }
     bf.mightContainLong(h)
   }
 
@@ -486,121 +517,161 @@ object VersionedCorpus {
     else Some(math.max(1L, (est.toLong >> 24) + 1L).toInt)
   }
 
-  /** Stage-write `df` and collect the manifest stats in the SAME job —
-    * the fused commit path: row count, key bounds for lookup-time
-    * generation pruning ([[lookupKey]]), every pinned stats column's
-    * min/max, and the pinned Bloom filter all ride the write as
+  /** One staged generation: where its data waits for the claim, and the
+    * manifest stats the staged write observed for it. `bloom` is the
+    * pinned key's filter (none without a pin, or for zero rows); `keys`
+    * is a tombstone kind's key set, collected for small commits only. */
+  private final case class Staged(kind: String, dir: java.nio.file.Path,
+                                  rows: Long,
+                                  klo: Option[Long] = None,
+                                  khi: Option[Long] = None,
+                                  stats: Map[String, (Long, Long)] = Map.empty,
+                                  bloom: Option[Array[Byte]] = None,
+                                  keys: Option[Seq[Any]] = None)
+
+  /** Stage-write `df` and collect every generation's manifest stats in
+    * the SAME job — the fused commit path: row count, key bounds for
+    * lookup-time generation pruning ([[lookupKey]]), every pinned stats
+    * column's min/max, the pinned Bloom filter and, for tombstone kinds
+    * (small commits only), the key set all ride the write as
     * `Dataset.observe` metrics (CollectMetrics accumulators), so a
-    * commit pays ONE distributed pass where it used to pay the write
-    * plus a full read-back aggregate scan. The observed metrics come
+    * commit pays ONE distributed pass, not the write plus a full
+    * read-back aggregate scan. The observed metrics come
     * from exactly the rows the successful write produced (failed-task
     * values are not counted), which is the same truth the read-back
-    * certified.
+    * certified. Delete generations record no stats columns.
     *
-    * `collectKeys` — tombstone-writing commits (upsert/delete) set it
-    * so the staged write's observe pass ALSO collects the gen's key
-    * set (small commits only — the same size gate as the coalesce),
-    * letting the committer pre-populate the tombstone-resolution memo
-    * with zero extra jobs. Returned as the 6th element; `None` when
-    * not requested, not small, or the key column is absent. */
-  private def writeStagedWithStats(df: DataFrame, root: String,
-                                   staging: java.nio.file.Path,
-                                   collectKeys: Boolean = false)
-      : (Long, Option[Long], Option[Long], Map[String, (Long, Long)],
-         Option[Array[Byte]], Option[Seq[Any]]) = {
-    import org.apache.spark.sql.functions.{col, collect_set, count, lit, max, min, xxhash64}
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    * `gens` is each generation's (kind, tag). A lone generation is
+    * `df` whole, written to one staging directory (its tag is unused).
+    * More generations split `df` by its `_vc_half` column: generation i
+    * is the rows tagged with its tag, written by `partitionBy` to
+    * `_vc_half=<tag>` under a shared staging directory, and every
+    * aggregate is conditioned on the tag. Aggregates are ordered by
+    * statistic, then by generation. */
+  private def stageWrite(df: DataFrame, root: String,
+                         gens: (String, String)*): Seq[Staged] = {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{col, collect_set, count, lit, max, min, when, xxhash64}
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
     def integral(c: String) = df.schema.fieldNames.contains(c) &&
       (df.schema(c).dataType match {
         case ByteType | ShortType | IntegerType | LongType => true
         case _                                             => false
       })
-    val statKey = pinnedKey(root).filter(integral)
-    // key bounds + every pinned stats column + the pinned Bloom filter,
-    // ONE aggregate — still the single read-back job the commit already
-    // pays
-    val extras = statsCols(root).filter(c =>
-      integral(c) && !statKey.contains(c))
+    val key = pinnedKey(root).filter(df.schema.fieldNames.contains)
+    val statKey = key.filter(integral)
+    val pinnedStats = statsCols(root)
+    val extras = pinnedStats.filter(c => integral(c) && !statKey.contains(c))
     // blooms cover integral AND string keys (xxhash64 of either); the
     // min/max bounds stay integral-only — for a string key the bloom is
     // the ONLY pruning tier, which is exactly its design case
-    def bloomable(c: String) = integral(c) ||
-      (df.schema.fieldNames.contains(c) &&
-        df.schema(c).dataType == org.apache.spark.sql.types.StringType)
-    val bloomSpec = bloomParams(root).flatMap { case (items, fpp) =>
-      pinnedKey(root).filter(bloomable).map { k =>
-        val bits = org.apache.spark.util.sketch.BloomFilter
-          .optimalNumOfBits(items, fpp)
-        org.apache.spark.sql.graftshim.Bridge.column(
-          new org.apache.spark.sql.catalyst.expressions.aggregate
-            .BloomFilterAggregate(
-              org.apache.spark.sql.graftshim.Bridge
-                .expression(xxhash64(col(k))),
-              org.apache.spark.sql.catalyst.expressions.Literal(items),
-              org.apache.spark.sql.catalyst.expressions.Literal(bits))
-            .toAggregateExpression())
-      }
-    }
+    val bloomKey = key.filter(k =>
+      integral(k) || df.schema(k).dataType == StringType)
     // small commits coalesce to a size-derived width (one file per
     // ~16 MB of input, not one per core) and run with AQE off (its
     // query-stage materialization pays a scheduler-floor job per
     // exchange with nothing to re-plan at this size); estimates above
     // the bound keep full parallelism and adaptive planning
     val width = smallCommitWidth(df)
-    val keySetCol =
-      if (collectKeys && width.isDefined)
-        pinnedKey(root).filter(df.schema.fieldNames.contains)
-          .map(k => collect_set(col(k)))
-      else None
-    val aggCols = (Seq(count(lit(1))) ++
-      statKey.toSeq.flatMap(k => Seq(min(col(k).cast("long")),
-        max(col(k).cast("long")))) ++
-      extras.flatMap(c => Seq(min(col(c).cast("long")),
-        max(col(c).cast("long")))) ++
-      bloomSpec.toSeq ++ keySetCol.toSeq)
-      .zipWithIndex.map { case (c, i) => c.as(s"_m$i") }
+    val split = gens.size > 1
+    val gi = gens.indices
+    def on(i: Int, c: Column): Column =
+      if (split) when(col("_vc_half") === gens(i)._2, c) else c
+    def minMax(i: Int, c: String, lo: String, hi: String) = Seq(
+      (i, lo, min(on(i, col(c).cast("long")))),
+      (i, hi, max(on(i, col(c).cast("long")))))
+    val aggs: Seq[(Int, String, Column)] =
+      gi.map(i => (i, "rows", count(on(i, lit(1))))) ++
+        statKey.toSeq.flatMap(k => gi.flatMap(minMax(_, k, "klo", "khi"))) ++
+        gi.filter(gens(_)._1 != "delete").flatMap(i =>
+          extras.flatMap(c => minMax(i, c, "lo:" + c, "hi:" + c))) ++
+        (for {
+          (items, fpp) <- bloomParams(root).toSeq
+          k <- bloomKey.toSeq
+          i <- gi
+        } yield (i, "bloom", org.apache.spark.sql.graftshim.Bridge.column(
+          new org.apache.spark.sql.catalyst.expressions.aggregate
+            .BloomFilterAggregate(
+              org.apache.spark.sql.graftshim.Bridge
+                .expression(on(i, xxhash64(col(k)))),
+              org.apache.spark.sql.catalyst.expressions.Literal(items),
+              org.apache.spark.sql.catalyst.expressions.Literal(
+                org.apache.spark.util.sketch.BloomFilter
+                  .optimalNumOfBits(items, fpp)))
+            .toAggregateExpression()))) ++
+        (for {
+          k <- key.toSeq if width.isDefined
+          i <- gi if tombstoneKind(gens(i)._1)
+        } yield (i, "keys", collect_set(on(i, col(k)))))
+    val aggCols = aggs.zipWithIndex.map { case ((_, _, c), j) => c.as(s"_m$j") }
+    val staging = newStaging(root)
     val obs = new org.apache.spark.sql.Observation(
       "graft_commit_" + java.util.UUID.randomUUID())
     // the observation attaches to the frame the action runs on: a gated
     // write re-binds first, so its metrics reach the gate session
-    def run(s: SparkSession): Unit =
-      graft.PlanGate.rebind(s, width.fold(df)(df.coalesce))
-        .observe(obs, aggCols.head, aggCols.tail: _*)
-        .write.mode("overwrite").parquet(staging.toString)
+    def run(s: SparkSession): Unit = {
+      val w = graft.PlanGate.rebind(s, width.fold(df)(df.coalesce))
+        .observe(obs, aggCols.head, aggCols.tail: _*).write
+      (if (split) w.partitionBy("_vc_half") else w)
+        .mode("overwrite").parquet(staging.toString)
+    }
     withAqeOff(df.sparkSession, width.isDefined)(run)
     val m = obs.get
-    def optAt(i: Int): Option[Long] = m(s"_m$i") match {
-      case null            => None
-      case v: java.lang.Long => Some(v.longValue)
+    val got = aggs.zipWithIndex.map { case ((i, s, _), j) =>
+      (i, s) -> m(s"_m$j") }.toMap
+    def long(i: Int, s: String): Option[Long] = got.get((i, s)).flatMap {
       case v: java.lang.Number => Some(v.longValue)
+      case _                   => None
     }
-    val (klo, khi) =
-      if (statKey.isEmpty) (None, None) else (optAt(1), optAt(2))
-    val base = 1 + (if (statKey.isEmpty) 0 else 2)
-    val colStats = extras.zipWithIndex.flatMap { case (c, i) =>
-      (optAt(base + 2 * i), optAt(base + 2 * i + 1)) match {
-        case (Some(lo), Some(hi)) => Some(c -> (lo, hi))
-        case _                    => None
-      }
-    }.toMap ++
-      // the merge key is also a legal stats column: reuse its bounds
-      statKey.filter(statsCols(root).contains).flatMap(k =>
-        (klo, khi) match {
-          case (Some(lo), Some(hi)) => Some(k -> (lo, hi))
-          case _                    => None
+    def bounds(i: Int, lo: String, hi: String) =
+      long(i, lo).zip(long(i, hi))
+    gi.map { i =>
+      val (kind, tag) = gens(i)
+      val rows = long(i, "rows").getOrElse(0L)
+      val dir = if (split) staging.resolve(s"_vc_half=$tag") else staging
+      require(!split || rows == 0L || java.nio.file.Files.isDirectory(dir),
+        s"fused commit: observe counted $rows '$tag' rows but the " +
+          s"partitioned write produced no $dir")
+      val (klo, khi) = (long(i, "klo"), long(i, "khi"))
+      val stats =
+        if (kind == "delete") Map.empty[String, (Long, Long)]
+        else extras.flatMap(c => bounds(i, "lo:" + c, "hi:" + c).map(c -> _))
+          .toMap ++
+          // the merge key is also a legal stats column: reuse its bounds
+          statKey.filter(pinnedStats.contains)
+            .flatMap(k => bounds(i, "klo", "khi").map(k -> _))
+      Staged(kind, dir, rows, klo, khi, stats,
+        bloom = got.get((i, "bloom")).collect { case b: Array[Byte] => b },
+        keys = got.get((i, "keys")).flatMap {
+          case s: Seq[_] => Some(s.asInstanceOf[Seq[Any]])
+          case null      => Some(Seq.empty[Any]) // zero-row write
+          case _         => None
         })
-    val bloomAt = base + 2 * extras.length
-    val bloom = bloomSpec.flatMap(_ => m(s"_m$bloomAt") match {
-      case b: Array[Byte] => Some(b)
-      case _              => None // zero-row write: no filter
-    })
-    val keysAt = bloomAt + bloomSpec.size
-    val keySet = keySetCol.flatMap(_ => m(s"_m$keysAt") match {
-      case s: Seq[_] => Some(s.asInstanceOf[Seq[Any]])
-      case null      => Some(Seq.empty[Any]) // zero-row write
-      case _         => None
-    })
-    (optAt(0).getOrElse(0L), klo, khi, colStats, bloom, keySet)
+    }
+  }
+
+  /** THE PUBLISH STEP — every commit site ends here, and only here are
+    * the commit files written: claim rename → Bloom sidecar → manifest
+    * rename → tombstone-memo population, the order and crash windows
+    * of the object's writer contract. The manifest rename is
+    * `rename(2)`, which replaces; the id is unique because the claim
+    * rename won it. An empty generation is discarded (its staging
+    * deleted, -1 returned) unless it is a maintenance rewrite
+    * (base/optimize), which commits whatever it wrote. `run` is an
+    * optimize output's replaced run. */
+  private def publish(root: String, s: Staged,
+                      run: Option[(Long, Long)] = None): Long = {
+    if (s.rows == 0L && s.kind != "base" && s.kind != "optimize") {
+      org.apache.commons.io.FileUtils.deleteDirectory(s.dir.toFile)
+      return -1L
+    }
+    val gen = claimGen(root, s.dir)
+    s.bloom.foreach(writeBloom(root, gen, _))
+    writeManifest(root, Commit(gen, s.rows, base = s.kind == "base",
+      kind = s.kind, klo = s.klo, khi = s.khi, rlo = run.map(_._1),
+      rhi = run.map(_._2), stats = s.stats))
+    s.keys.foreach(memoizeTombKeys(root, gen, _))
+    gen
   }
 
   /** Append `df` as the next generation. Data is written before the
@@ -609,31 +680,23 @@ object VersionedCorpus {
     * -1 if `df` was empty. The count is one distributed pass; the
     * parquet write it gates is the real work, so this is not an extra
     * scan of anything large — and the row count lands in the manifest
-    * where snapshot readers get it for free. */
+    * where snapshot readers get it for free.
+    *
+    * OPTIMISTIC CONCURRENCY (appends only — they commute, so any
+    * interleaving of concurrent appends is a correct serialization;
+    * keyed mutations stay single-writer because THEIR order is the
+    * merge order): data is staged to a writer-unique directory, the
+    * generation id is claimed by an atomic directory rename (two
+    * claimants: exactly one rename succeeds, the loser retries at the
+    * next free id), and the manifest rename publishes the commit — it
+    * replaces, and the claim rename is what makes the id unique. A
+    * crash at any point leaves either staging garbage
+    * ([[cleanStaging]]) or an unpublished gen= orphan; never a torn
+    * commit. */
   def append(df: DataFrame, root: String,
              evolveSchema: Boolean = false): Long = {
     checkOrPinSchema(root, df.schema, evolveSchema)
-    // OPTIMISTIC CONCURRENCY (appends only — they commute, so any
-    // interleaving of concurrent appends is a correct serialization;
-    // keyed mutations stay single-writer because THEIR order is the
-    // merge order): data is staged to a writer-unique directory, the
-    // generation id is claimed by an atomic directory rename (two
-    // claimants: exactly one rename succeeds, the loser retries at the
-    // next free id), and the manifest rename — also no-replace atomic —
-    // publishes the commit. A crash at any point leaves either staging
-    // garbage ([[cleanStaging]]) or an unpublished gen= orphan; never a
-    // torn commit.
-    val staging = newStaging(root)
-    val (rows, klo, khi, cs, bloom, _) = writeStagedWithStats(df, root, staging)
-    if (rows == 0L) {
-      org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
-      return -1L
-    }
-    val gen = claimGen(root, staging)
-    bloom.foreach(writeBloom(root, gen, _))
-    writeManifest(root,
-      Commit(gen, rows, base = false, klo = klo, khi = khi, stats = cs))
-    gen
+    publish(root, stageWrite(df, root, "append" -> "").head)
   }
 
   /** A writer-unique staging directory under the store root (same
@@ -712,21 +775,7 @@ object VersionedCorpus {
              evolveSchema: Boolean = false): Long = {
     checkOrPinSchema(root, df.schema, evolveSchema)
     checkOrPinKey(root, keyCol)
-    val staging = newStaging(root)
-    val (rows, klo, khi, cs, bloom, keySet) =
-      writeStagedWithStats(df, root, staging, collectKeys = true)
-    if (rows == 0L) {
-      org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
-      return -1L
-    }
-    val gen = claimGen(root, staging)
-    bloom.foreach(writeBloom(root, gen, _))
-    writeManifest(root, Commit(gen, rows, base = false, kind = "upsert",
-      klo = klo, khi = khi, stats = cs))
-    // pre-populate the tombstone-resolution memo from the observe
-    // metric: later snapshot reads over this gen skip their collect
-    keySet.foreach(memoizeTombKeys(root, gen, _))
-    gen
+    publish(root, stageWrite(df, root, "upsert" -> "").head)
   }
 
   /** Merge-on-read DELETE: commit the distinct `keyCol` values of
@@ -748,7 +797,6 @@ object VersionedCorpus {
   def delete(keys: DataFrame, root: String, keyCol: String,
              keysDistinct: Boolean = false): Long = {
     checkOrPinKey(root, keyCol)
-    val staging = newStaging(root)
     val sel = keys.select(keys.col(keyCol))
     // DRIVER-HELD key sets commit driver-side (r20, fusing the
     // commit-latency family): a tombstone of keys the optimizer already
@@ -763,12 +811,10 @@ object VersionedCorpus {
     localDeleteKeys(sel) match {
       case Some(vals0) =>
         val vals = if (keysDistinct) vals0 else vals0.distinct
-        if (vals.isEmpty) {
-          org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
-          return -1L
-        }
+        if (vals.isEmpty) return -1L
         val string = sel.schema.head.dataType ==
           org.apache.spark.sql.types.StringType
+        val staging = newStaging(root)
         java.nio.file.Files.createDirectories(staging)
         LocalParquet.writeKeys(
           staging.resolve("part-00000-local.parquet"), keyCol, vals, string)
@@ -800,26 +846,11 @@ object VersionedCorpus {
           bf.writeTo(out)
           out.toByteArray
         }
-        val gen = claimGen(root, staging)
-        bloom.foreach(writeBloom(root, gen, _))
-        writeManifest(root, Commit(gen, vals.length.toLong, base = false,
-          kind = "delete", klo = klo, khi = khi))
-        memoizeTombKeys(root, gen, vals)
-        gen
+        publish(root, Staged("delete", staging, vals.length.toLong, klo, khi,
+          bloom = bloom, keys = Some(vals)))
       case None =>
-        val (n, klo, khi, _, bloom, keySet) = writeStagedWithStats(
-          if (keysDistinct) sel else sel.distinct(), root, staging,
-          collectKeys = true)
-        if (n == 0L) {
-          org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
-          return -1L
-        }
-        val gen = claimGen(root, staging)
-        bloom.foreach(writeBloom(root, gen, _))
-        writeManifest(root,
-          Commit(gen, n, base = false, kind = "delete", klo = klo, khi = khi))
-        keySet.foreach(memoizeTombKeys(root, gen, _))
-        gen
+        publish(root, stageWrite(if (keysDistinct) sel else sel.distinct(),
+          root, "delete" -> "").head)
     }
   }
 
@@ -872,20 +903,21 @@ object VersionedCorpus {
     *
     * Returns (upsertGen, deleteGen), -1 for an empty half.
     *
-    * Job economy (r20): both halves commit through ONE staged
-    * partitioned write ([[commitChangeHalves]]) — the upsert rows and
-    * the delete keys land in two partition directories of a single
-    * pass over the reduced batch, renamed into consecutive
-    * generations. The old sequential form paid two staged-write jobs
-    * (and a persist of the reduced batch to feed them); a CDC
-    * ingestion loop applying a batch per cycle pays the commit path
-    * half as often at ANY scale. Crash contract unchanged: the upsert
-    * generation publishes before the delete generation, exactly the
-    * sequential ordering — a death between them replays
-    * idempotently like any crashed applyChanges. */
+    * Job economy: both halves commit through ONE staged write —
+    * [[stageWrite]]'s two-generation case. The reduced batch's
+    * non-delete rows (data columns) and delete keys (key column, others
+    * null) write `partitionBy("_vc_half")` into a shared staging
+    * directory, each half's stats ride the same pass, and the two
+    * partition dirs publish as consecutive generations: one staged
+    * job per batch instead of one per half. The upsert generation
+    * publishes before the delete generation — a death between them
+    * replays idempotently like any crashed applyChanges.
+    * A delete generation's files carry the full schema with null data
+    * columns; every tombstone reader selects the key column
+    * explicitly, so the wider file is inert. */
   def applyChanges(batch: DataFrame, root: String, keyCol: String,
                    opCol: String, seqCol: String): (Long, Long) = {
-    import org.apache.spark.sql.functions.{col, desc, row_number, when, lit}
+    import org.apache.spark.sql.functions.{coalesce, col, desc, row_number, when, lit}
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(keyCol))
       .orderBy(desc(seqCol),
@@ -893,29 +925,10 @@ object VersionedCorpus {
     val latest = batch
       .withColumn("_vc_rn", row_number().over(w))
       .filter(col("_vc_rn") === 1).drop("_vc_rn")
-    commitChangeHalves(latest, root, keyCol, opCol, seqCol)
-  }
-
-  /** One staged write, two generations: the reduced batch's non-delete
-    * rows (data columns only) and delete keys (key column, others null)
-    * write `partitionBy("_vc_half")` into a shared staging directory —
-    * each half's count/bounds/Bloom/key-set rides the SAME write as a
-    * half-conditional observe metric — and the two partition dirs are
-    * claimed as consecutive generations (upsert first, matching the
-    * sequential form's order). A delete generation's files carry the
-    * full schema with null data columns; every tombstone reader selects
-    * the key column explicitly, so the wider file is inert. Empty
-    * halves write no partition dir and return -1, like the sequential
-    * form. */
-  private def commitChangeHalves(latest: DataFrame, root: String,
-                                 keyCol: String, opCol: String,
-                                 seqCol: String): (Long, Long) = {
-    import org.apache.spark.sql.functions.{coalesce, col, collect_set, count, lit, max, min, when, xxhash64}
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
     val dataFields = latest.schema.fields
       .filterNot(f => f.name == opCol || f.name == seqCol)
-    val dataSchema = new org.apache.spark.sql.types.StructType(dataFields)
-    checkOrPinSchema(root, dataSchema, evolve = false)
+    checkOrPinSchema(root,
+      new org.apache.spark.sql.types.StructType(dataFields), evolve = false)
     checkOrPinKey(root, keyCol)
     val isDel = coalesce(col(opCol) === "D", lit(false))
     val combined = latest.select(
@@ -924,126 +937,11 @@ object VersionedCorpus {
          else when(!isDel, col(f.name)).otherwise(
            lit(null).cast(f.dataType))).as(f.name)).toSeq :+
         when(isDel, lit("d")).otherwise(lit("u")).as("_vc_half")): _*)
-    def integral(t: org.apache.spark.sql.types.DataType) = t match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _                                             => false
-    }
-    val keyType = dataSchema(keyCol).dataType
-    val statKey = pinnedKey(root).filter(k =>
-      k == keyCol && integral(keyType))
-    val extras = statsCols(root).filter(c =>
-      c != keyCol && dataFields.exists(f =>
-        f.name == c && integral(f.dataType)))
-    val bloomSpec = bloomParams(root).filter(_ =>
-      pinnedKey(root).contains(keyCol) &&
-        (integral(keyType) || keyType == StringType))
-    def bloomAgg(cond: org.apache.spark.sql.Column) =
-      bloomSpec.map { case (items, fpp) =>
-        val bits = org.apache.spark.util.sketch.BloomFilter
-          .optimalNumOfBits(items, fpp)
-        org.apache.spark.sql.graftshim.Bridge.column(
-          new org.apache.spark.sql.catalyst.expressions.aggregate
-            .BloomFilterAggregate(
-              org.apache.spark.sql.graftshim.Bridge.expression(
-                when(cond, xxhash64(col(keyCol)))),
-              org.apache.spark.sql.catalyst.expressions.Literal(items),
-              org.apache.spark.sql.catalyst.expressions.Literal(bits))
-            .toAggregateExpression())
-      }
-    // the observe aggregates run over `combined`, which carries only
-    // the data columns + the half tag — condition on the tag
-    val u = col("_vc_half") === "u"
-    val d = col("_vc_half") === "d"
-    val width = smallCommitWidth(combined)
-    val keySets =
-      if (width.isDefined)
-        Seq(collect_set(when(u, col(keyCol))),
-          collect_set(when(d, col(keyCol))))
-      else Nil
-    val halfKey = (cond: org.apache.spark.sql.Column) =>
-      Seq(min(when(cond, col(keyCol).cast("long"))),
-        max(when(cond, col(keyCol).cast("long"))))
-    val aggCols = (Seq(count(when(u, lit(1))), count(when(d, lit(1)))) ++
-      statKey.toSeq.flatMap(_ => halfKey(u) ++ halfKey(d)) ++
-      extras.flatMap(c => Seq(min(when(u, col(c).cast("long"))),
-        max(when(u, col(c).cast("long"))))) ++
-      bloomAgg(u).toSeq ++ bloomAgg(d).toSeq ++ keySets)
-      .zipWithIndex.map { case (c, i) => c.as(s"_m$i") }
-    val staging = newStaging(root)
-    val obs = new org.apache.spark.sql.Observation(
-      "graft_cdc_" + java.util.UUID.randomUUID())
-    def run(s: SparkSession): Unit =
-      graft.PlanGate.rebind(s, width.fold(combined)(combined.coalesce))
-        .observe(obs, aggCols.head, aggCols.tail: _*)
-        .write.partitionBy("_vc_half").mode("overwrite")
-        .parquet(staging.toString)
-    withAqeOff(latest.sparkSession, width.isDefined)(run)
-    val m = obs.get
-    def optAt(i: Int): Option[Long] = m(s"_m$i") match {
-      case null                => None
-      case v: java.lang.Number => Some(v.longValue)
-    }
-    val (nU, nD) = (optAt(0).getOrElse(0L), optAt(1).getOrElse(0L))
-    if (nU == 0L && nD == 0L) {
-      org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
-      return (-1L, -1L)
-    }
-    val base = 2
-    val (uk, dk) =
-      if (statKey.isEmpty) ((None, None), (None, None))
-      else (((optAt(base), optAt(base + 1)), (optAt(base + 2), optAt(base + 3))))
-    val extrasBase = base + (if (statKey.isEmpty) 0 else 4)
-    val colStats = extras.zipWithIndex.flatMap { case (c, i) =>
-      (optAt(extrasBase + 2 * i), optAt(extrasBase + 2 * i + 1)) match {
-        case (Some(lo), Some(hi)) => Some(c -> (lo, hi))
-        case _                    => None
-      }
-    }.toMap ++ statKey.filter(statsCols(root).contains).flatMap(k =>
-      uk match {
-        case (Some(lo), Some(hi)) => Some(k -> (lo, hi))
-        case _                    => None
-      })
-    val bloomBase = extrasBase + 2 * extras.length
-    def bloomAt(i: Int): Option[Array[Byte]] = m(s"_m$i") match {
-      case b: Array[Byte] => Some(b)
-      case _              => None
-    }
-    val (bloomU, bloomD) =
-      if (bloomSpec.isEmpty) (None, None)
-      else (bloomAt(bloomBase), bloomAt(bloomBase + 1))
-    val keysBase = bloomBase + 2 * bloomSpec.size
-    def keysAt(i: Int): Option[Seq[Any]] =
-      if (keySets.isEmpty) None
-      else m(s"_m$i") match {
-        case s: Seq[_] => Some(s.asInstanceOf[Seq[Any]])
-        case null      => Some(Seq.empty[Any])
-        case _         => None
-      }
-    def claimHalf(half: String, rows: Long, commit: Long => Commit,
-                  bloom: Option[Array[Byte]],
-                  keys: Option[Seq[Any]]): Long = {
-      val dir = staging.resolve(s"_vc_half=$half")
-      if (rows == 0L) return -1L
-      require(java.nio.file.Files.isDirectory(dir),
-        s"fused commit: observe counted $rows '$half' rows but the " +
-          s"partitioned write produced no $dir")
-      val gen = claimGen(root, dir)
-      bloom.foreach(writeBloom(root, gen, _))
-      writeManifest(root, commit(gen))
-      keys.foreach(memoizeTombKeys(root, gen, _))
-      gen
-    }
+    val Seq(u, d) = stageWrite(combined, root, "upsert" -> "u", "delete" -> "d")
     // upsert generation FIRST — the sequential form's commit order
-    val gU = claimHalf("u", nU,
-      g => Commit(g, nU, base = false, kind = "upsert",
-        klo = uk._1, khi = uk._2, stats = colStats),
-      bloomU, keysAt(keysBase))
-    val gD = claimHalf("d", nD,
-      g => Commit(g, nD, base = false, kind = "delete",
-        klo = dk._1, khi = dk._2),
-      bloomD, keysAt(keysBase + 1))
-    org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
-    (gU, gD)
+    val gens = (publish(root, u), publish(root, d))
+    org.apache.commons.io.FileUtils.deleteDirectory(u.dir.getParent.toFile)
+    gens
   }
 
   /** Snapshot window resolution from manifests only: the newest BASE
@@ -1230,7 +1128,7 @@ object VersionedCorpus {
   private[graft] def windowMutatedKeys(root: String, from: Long,
                                        to: Long): Option[Seq[Any]] = {
     val muts = commits(root).filter(c => c.gen > from && c.gen <= to)
-      .filter(c => c.kind == "upsert" || c.kind == "delete")
+      .filter(_.tombstones)
     val sets = muts.map(c =>
       Option(tombGenKeysMemo.get(tombMemoKey(root, c.gen))))
     if (sets.exists(_.isEmpty)) None
@@ -1822,13 +1720,7 @@ object VersionedCorpus {
             s"$root — call pinKey(...) or make a keyed commit first"))
         snap0.repartitionByRange(col(key)).sortWithinPartitions(col(key))
       }
-    val staging = newStaging(root)
-    val (rows, klo, khi, cs, bloom, _) = writeStagedWithStats(snap, root, staging)
-    val gen = claimGen(root, staging)
-    bloom.foreach(writeBloom(root, gen, _))
-    writeManifest(root, Commit(gen, rows, base = true, kind = "base",
-      klo = klo, khi = khi, stats = cs))
-    gen
+    publish(root, stageWrite(snap, root, "base" -> "").head)
   }
 
   /** [[compact]] when the tail of small generations has grown past
@@ -1901,20 +1793,14 @@ object VersionedCorpus {
       val total = run.map(_.rows).sum
       val nFiles =
         math.max(1L, (total + targetFileRows - 1) / targetFileRows).toInt
-      val staging = newStaging(root)
-      val (rows, klo, khi, cs, bloom, _) = writeStagedWithStats(
+      val packed = stageWrite(
         spark.read.schema(pinned)
           .parquet(run.map(c => dataDir(root, c.gen).toString): _*)
-          .coalesce(nFiles), root, staging)
-      require(rows == total,
+          .coalesce(nFiles), root, "optimize" -> "").head
+      require(packed.rows == total,
         s"optimize rewrite under $root lost rows: run ${run.head.gen}.." +
-          s"${run.last.gen} holds $total, packed file holds $rows")
-      val gen = claimGen(root, staging)
-      bloom.foreach(writeBloom(root, gen, _))
-      writeManifest(root, Commit(gen, rows, base = false, kind = "optimize",
-        klo = klo, khi = khi, stats = cs,
-        rlo = Some(run.head.gen), rhi = Some(run.last.gen)))
-      gen
+          s"${run.last.gen} holds $total, packed file holds ${packed.rows}")
+      publish(root, packed, Some(run.head.gen -> run.last.gen))
     }
   }
 

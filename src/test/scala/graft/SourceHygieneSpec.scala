@@ -43,4 +43,22 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(found.map(_._1).distinct === Seq("graft/obs/JobMeter.scala"),
       found.mkString("\n"))
   }
+
+  test("the versioned store's commit files are written only by its publish step") {
+    val store = "graft/sources/VersionedCorpus.scala"
+    val lines = Files.readAllLines(mainRoot.resolve(store)).asScala
+    val defs = lines.zipWithIndex.collect {
+      case (l, i) if """^\s*(private\s+)?def\s""".r.findFirstIn(l).isDefined =>
+        (i + 1, l.trim)
+    }
+    for (name <- Seq("claimGen", "writeBloom", "writeManifest")) {
+      val calls = hits(s"""\\b$name\\(""".r)
+        .filterNot(_._3.contains(s"def $name("))
+      assert(calls.size === 1 && calls.head._1 === store,
+        s"$name( must be called from one place:\n" + calls.mkString("\n"))
+      val enclosing = defs.filter(_._1 < calls.head._2).last._2
+      assert(enclosing.startsWith("private def publish("),
+        s"$name( is called from `$enclosing`, not the publish step")
+    }
+  }
 }

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -1134,6 +1136,130 @@ class VersionedCorpusSpec extends AnyFunSuite {
     assert(durable === inMem)
   }
 
+  test("golden commit log: every commit site's manifest and Bloom sidecar bytes are pinned") {
+    // one fixed script through every commit site with the key, a stats
+    // column and the Bloom filter pinned: append, upsert, a driver-side
+    // and a staged delete, a two-half and a one-half applyChanges,
+    // sortByKey compaction and optimize. The SHA-256 of every commit
+    // record and sidecar is pinned, so any change to what a commit
+    // writes shows here; the memoized tombstone key sets are compared
+    // as sets.
+    val root = Files.createTempDirectory("graft-golden").toString + "/store"
+    def rows(ids: Seq[Long], tag: String) =
+      ids.map(i => (i, s"$tag-$i", i % 7L)).toDF("id", "t", "score")
+    def changes(cs: (Long, String, Int)*) =
+      cs.map { case (i, op, seq) => (i, s"c-$i", i % 5L, op, seq) }
+        .toDF("id", "t", "score", "op", "seq")
+    assert(VersionedCorpus.append(rows(0L until 20L, "a"), root) === 0L)
+    VersionedCorpus.pinKey(root, "id")
+    VersionedCorpus.pinStats(root, Seq("score", "id"))
+    VersionedCorpus.pinBloom(root, expectedItems = 256L, fpp = 0.02)
+    assert(VersionedCorpus.append(rows(20L until 40L, "b"), root) === 1L)
+    assert(VersionedCorpus.upsert(rows(Seq(3L, 25L, 41L), "u"), root,
+      "id") === 2L)
+    // a LocalRelation key set: the driver-side delete
+    assert(VersionedCorpus.delete(Seq(4L, 26L).toDF("id"), root, "id") === 3L)
+    // a parquet-backed key set: the staged delete
+    val kdir = Files.createTempDirectory("graft-golden-keys").toString + "/k"
+    Seq(5L, 27L, 99L, 5L).toDF("id").write.parquet(kdir)
+    assert(VersionedCorpus.delete(spark.read.parquet(kdir), root, "id") === 4L)
+    assert(VersionedCorpus.applyChanges(
+      changes((6L, "U", 1), (7L, "D", 1), (28L, "U", 2), (28L, "D", 1),
+        (29L, "D", 1), (50L, "U", 1)),
+      root, "id", "op", "seq") === ((5L, 6L)))
+    assert(VersionedCorpus.applyChanges(
+      changes((8L, "D", 1), (30L, "D", 1)), root, "id", "op", "seq")
+      === ((-1L, 7L)))
+    assert(VersionedCorpus.compact(spark, root, sortByKey = true) === 8L)
+    assert(VersionedCorpus.append(rows(60L until 64L, "c"), root) === 9L)
+    assert(VersionedCorpus.append(rows(64L until 70L, "d"), root) === 10L)
+    assert(VersionedCorpus.optimize(spark, root) === Seq(11L))
+    val dir = java.nio.file.Paths.get(root, "_manifest")
+    val stream = Files.list(dir)
+    val digests = try stream.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.matches("\\d+\\.(json|bloom)")).toSeq.sorted.map { n =>
+        n -> java.security.MessageDigest.getInstance("SHA-256")
+          .digest(Files.readAllBytes(dir.resolve(n)))
+          .map("%02x".format(_)).mkString
+      }.toMap
+    finally stream.close()
+    val golden = Map[String, String](
+      "0.json" -> "2202dea61c7e6281474be23679b6881adb22bfd0cdba1b9524653e9d20b1001f",
+      "1.json" -> "95592e4ea69f2783805206f6d4d3a5ad53c9ee4777ab69494e54605788ffa73a",
+      "1.bloom" -> "377376f2ac9282972063407dff9305efa34618f7e1bcbc7115044fd170e194b2",
+      "2.json" -> "8b85ab9ff761dcc29e35336099f661a87082ab186e9ebbad59638f564b74c4f5",
+      "2.bloom" -> "c01789ce2be672c62d44d8e2e609e2e51cedd2d6f31bd657423dd4ef37ec3ae0",
+      "3.json" -> "da96443327627906863b0c0762dc2c9263514525969e92971c02e52faf8b2088",
+      "3.bloom" -> "00e5643fe013a2848724f81e35ceeaf760fbfc8d57929216ffdb5f2bb60b2c44",
+      "4.json" -> "205d178249311ff56f528fb421b8c6fe375066db45c7250fadebad315dce0062",
+      "4.bloom" -> "cbee7ad112a7b882d0dc15c32e230e3231dad342db879651e865d39a79d6cb70",
+      "5.json" -> "68d7e5ba55ec6b06c62aa9a25119944c2b075b2631a7b0167a0d238918141140",
+      "5.bloom" -> "e91c02bb1cdca7cc33ac094a75e9ae5fb654469e52dcb30d8cea6d1ed739f2ec",
+      "6.json" -> "9a12c7e3a2ac29ab876b506d5084f7afc72eb2bfd65d520abc298a3c06c47fad",
+      "6.bloom" -> "e6592cb8832d58349f3d34b40a8311485996c310c4f6e136c88146050796c1bd",
+      "7.json" -> "5294a9f0fda0e7ecf8b5e0910ef824bf2864dda3759f1ab2b48711b315dc6e98",
+      "7.bloom" -> "d9c91a3c7ba9f813cf5fddb9468093c78c4cf24e7d4902d59b6bcf5ddab3f8c8",
+      "8.json" -> "d43134a32f18de13217785a2bd6ded9757563d88a346fe558ee63f14900434a5",
+      "8.bloom" -> "df9497c2720eba551c993883997c359b10be1c7c005f07a6b443b2359db5b685",
+      "9.json" -> "57eb34ee23a0878e0578e50e9fbf3e9c76a4c9854e8a33606abe5d7791db0d5a",
+      "9.bloom" -> "32c74037c6b7ac29ef527f4a91e7e52f64c8c6076802137638165faef7083c61",
+      "10.json" -> "2bb595787be6c10938e9a8a54d611a2310754a10b5d9daa7d7058ef5505a92f0",
+      "10.bloom" -> "810cb5ced589c6f16429a3fbe806fe10c77464f0907e5446b6f3c9b4a3803a28",
+      "11.json" -> "a7541b08997dc6d8174f8bcd95879972e70bf58e7928814fe2bcc8a67736830c",
+      "11.bloom" -> "293c04dc23c0706757f8d68351ca55e292c59e60307c87af824f2936596ec839")
+    assert(digests === golden, digests.toSeq.sorted.map { case (n, d) =>
+      s"\"$n\" -> \"$d\"" }.mkString(",\n"))
+    def memo(g: Long): Option[Set[Long]] =
+      VersionedCorpus.windowMutatedKeys(root, g - 1L, g)
+        .map(_.map(_.asInstanceOf[Number].longValue()).toSet)
+    assert(memo(2L) === Some(Set(3L, 25L, 41L)))
+    assert(memo(3L) === Some(Set(4L, 26L)))
+    assert(memo(4L) === Some(Set(5L, 27L, 99L)))
+    assert(memo(5L) === Some(Set(6L, 28L, 50L)))
+    assert(memo(6L) === Some(Set(7L, 29L)))
+    assert(memo(7L) === Some(Set(8L, 30L)))
+  }
+
+  test("crash inside the fused CDC commit: the upsert half alone is visible, replay converges") {
+    // applyChanges publishes its upsert generation, then claims and
+    // publishes its delete generation; a crash after the delete claim
+    // and before its manifest rename is simulated by removing that
+    // manifest. Readers must see exactly the upsert half; replaying the
+    // batch must converge to the full model, and replaying it again
+    // must change nothing.
+    val root = freshRoot()
+    VersionedCorpus.append(docs(0 until 10, "v1"), root)
+    VersionedCorpus.pinKey(root, "doc_id")
+    VersionedCorpus.pinBloom(root, expectedItems = 64L)
+    val ups = Seq(0L, 1L, 2L, 20L)
+    val dels = Seq(5L, 6L, 7L)
+    val batch = (ups.map(i => (i, s"u text number $i", "en", "U", 1)) ++
+      dels.map(i => (i, "", "en", "D", 1)))
+      .toDF("doc_id", "text", "lang", "op", "seq")
+    val (gU, gD) = VersionedCorpus.applyChanges(batch, root, "doc_id", "op", "seq")
+    assert(gU >= 0L && gD === gU + 1L)
+    Files.delete(java.nio.file.Paths.get(root, "_manifest", s"$gD.json"))
+    val base = (0L until 10L).map(i => i -> s"v1 text number $i").toMap
+    val upserted = base ++ ups.map(i => i -> s"u text number $i")
+    val full = upserted -- dels
+    def check(model: Map[Long, String], what: String): Unit = {
+      val snap = VersionedCorpus.snapshot(spark, root)
+        .select("doc_id", "text").as[(Long, String)].collect()
+      assert(snap.toMap === model && snap.length === model.size, what)
+      for (k <- Seq(0L, 3L, 5L, 6L, 9L, 20L, 21L)) {
+        val got = VersionedCorpus.lookupKey(spark, root, k)
+          .select("doc_id", "text").as[(Long, String)].collect().toSeq
+        assert(got === model.get(k).map(k -> _).toSeq, s"$what: key $k")
+      }
+    }
+    check(upserted, "after the crash")
+    val (rU, rD) = VersionedCorpus.applyChanges(batch, root, "doc_id", "op", "seq")
+    assert(rU > gD && rD === rU + 1L, "replay must not reuse the claimed id")
+    check(full, "after the replay")
+    VersionedCorpus.applyChanges(batch, root, "doc_id", "op", "seq")
+    check(full, "after a second replay")
+  }
+
   test("store rebuilt at the SAME path: snapshots reflect the new store, never the dead one's tombstones") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
@@ -1162,5 +1288,37 @@ class VersionedCorpusSpec extends AnyFunSuite {
       .select("id").as[Long].collect().sorted
     assert(s2 === (0L until 30L).toArray,
       "snapshot served the dead store's tombstone resolution")
+    // the same scenario for the per-generation Bloom filters: a lookup
+    // of the dead store loads its upsert generation's filter, and the
+    // rebuilt store's lookups must probe the NEW filter — a stale one
+    // says "absent" for the new keys and prunes the upsert generation,
+    // serving the superseded row
+    for (str <- Seq(false, true)) {
+      val at = java.nio.file.Files.createTempDirectory("graft-rebuild-bloom")
+        .toString + "/store"
+      def keyOf(i: Long): Any = if (str) s"k$i" else i
+      def frame(rows: Seq[(Long, String)]) =
+        if (str) rows.map { case (i, t) => (s"k$i", t) }.toDF("id", "t")
+        else rows.toDF("id", "t")
+      def bloomed(lo: Long): Unit = {
+        val ids = (lo until lo + 20L).map(_ * 7919L)
+        VersionedCorpus.append(frame(ids.map(i => (i, s"t-${i / 7919L}"))), at)
+        VersionedCorpus.pinKey(at, "id")
+        VersionedCorpus.pinBloom(at, expectedItems = 64L)
+        VersionedCorpus.upsert(frame(ids.take(5).map(i => (i, "new"))), at, "id")
+        for (i <- ids.take(8)) {
+          val got = (if (str) VersionedCorpus.lookupKeyStr(spark, at, s"k$i")
+                     else VersionedCorpus.lookupKey(spark, at, i))
+            .select("id", "t").collect().map(_.toString).toSeq
+          val want = VersionedCorpus.snapshot(spark, at)
+            .filter(col("id") === keyOf(i))
+            .select("id", "t").collect().map(_.toString).toSeq
+          assert(got === want, s"lookup of ${keyOf(i)} (string key: $str)")
+        }
+      }
+      bloomed(0L)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(at))
+      bloomed(1000L)
+    }
   }
 }
