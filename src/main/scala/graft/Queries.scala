@@ -661,19 +661,6 @@ object Queries
   private[graft] lazy val jlPsimSql: String =
     s"round(list_dot_product(${jlListSql(jlQ1)}, $jlProjSql), 4)"
 
-  /** The `near_dup_embed_lsh` oracle — the whole SCALE-path LSH chain
-    * replayed by DuckDB, including the occupancy-constant banding
-    * formula: nbits = max(6, ⌈log2(n/4)⌉) computed FROM THE TABLE (so
-    * the oracle tracks the corpus size exactly as the operator does),
-    * 16 statically-generated exact-decimal plane literals of which the
-    * first nbits are active (plane components depend only on (dim,
-    * plane) — never on nbits), and the 1-bit multiprobe candidate rule
-    * expressed as hamming(bucket_a, bucket_b) ≤ 1 (equivalent to the
-    * probe-set formulation since buckets only set active bits). The
-    * replay join is deliberately quadratic in candidate GENERATION
-    * (n² bucket comparisons — fine at fixture scale); the operator's
-    * claim is that its bucket join yields the SAME pairs without ever
-    * forming n². */
   /** The sign-LSH bucket fold as SQL: 16 statically-generated
     * exact-decimal plane literals, of which the first `nbits` (a column
     * from a CROSS JOINed meta CTE) are active. Plane components depend
@@ -691,6 +678,19 @@ object Queries
     }.mkString("\n      + ")
   }
 
+  /** The `near_dup_embed_lsh` oracle — the whole SCALE-path LSH chain
+    * replayed by DuckDB, including the occupancy-constant banding
+    * formula: nbits = max(6, ⌈log2(n/4)⌉) computed FROM THE TABLE (so
+    * the oracle tracks the corpus size exactly as the operator does),
+    * 16 statically-generated exact-decimal plane literals of which the
+    * first nbits are active (plane components depend only on (dim,
+    * plane) — never on nbits), and the 1-bit multiprobe candidate rule
+    * expressed as hamming(bucket_a, bucket_b) ≤ 1 (equivalent to the
+    * probe-set formulation since buckets only set active bits). The
+    * replay join is deliberately quadratic in candidate GENERATION
+    * (n² bucket comparisons — fine at fixture scale); the operator's
+    * claim is that its bucket join yields the SAME pairs without ever
+    * forming n². */
   private[graft] lazy val nearDupEmbedLshOracleSql: String = {
     val bucket = lshBucketCaseSql
     s"""WITH meta AS (
@@ -828,18 +828,6 @@ object Queries
        |FROM probed p FULL OUTER JOIN exact x USING (vec_id)
        |ORDER BY p.sim DESC, vec_id""".stripMargin
 
-  /** The `q_bpe_budget` oracle, GENERATED from the checked-in merges
-    * table ([[graft.functions.BpeTokenizer.default]]): per word, build a
-    * \u0001-separated symbol string ("␁c␁h␁a␁r</w>␁" — the end-of-word
-    * marker fused onto the final char exactly like `encodeWord`), fold
-    * the 93 merges as boundary-aware `replace` calls in rank order, and
-    * count pieces as separators − 1. `replace` is left-to-right
-    * non-overlapping — the same scan as one encoder merge pass — and
-    * rank-order sequencing reproduces the best-first loop because no
-    * compound in the learned table has two derivations (empirically
-    * exhaustive on both fixtures; see the q_bpe_budget comment).
-    * Docs with no words LEFT-JOIN back in with n_bpe = 0, mirroring
-    * `size(graft_bpe(text)) == 0`. */
   /** Shared per-doc BPE-count CTE block (w → p → wc): whitespace words,
     * the merges-table replace chain per word, summed piece counts per
     * doc. Consumed by BOTH bpe oracle replays. */
@@ -866,6 +854,18 @@ object Queries
        |)""".stripMargin
   }
 
+  /** The `q_bpe_budget` oracle, GENERATED from the checked-in merges
+    * table ([[graft.functions.BpeTokenizer.default]]): per word, build a
+    * \u0001-separated symbol string ("␁c␁h␁a␁r</w>␁" — the end-of-word
+    * marker fused onto the final char exactly like `encodeWord`), fold
+    * the 93 merges as boundary-aware `replace` calls in rank order, and
+    * count pieces as separators − 1. `replace` is left-to-right
+    * non-overlapping — the same scan as one encoder merge pass — and
+    * rank-order sequencing reproduces the best-first loop because no
+    * compound in the learned table has two derivations (empirically
+    * exhaustive on both fixtures; see the q_bpe_budget comment).
+    * Docs with no words LEFT-JOIN back in with n_bpe = 0, mirroring
+    * `size(graft_bpe(text)) == 0`. */
   private[graft] lazy val bpeBudgetOracleSql: String =
     s"""WITH $bpePerDocCtes, d AS (
        |  SELECT doc_id, lang, COALESCE(wc.n_bpe, 0) AS n_bpe
@@ -921,21 +921,6 @@ object Queries
       java.util.Arrays.asList(collectGated(df): _*), df.schema)
   }
 
-  /** [[localFrame]] with the ORDER applied driver-side: the pattern
-    * `localFrame(tiny.orderBy(k…))` pays a distributed global sort — a
-    * range-partitioner boundary-SAMPLING pass plus a shuffle+sort stage
-    * — for a result the driver is about to collect anyway (r14
-    * job-count profile: ~2 pure-overhead jobs on every verify/rollup
-    * row ending this way). Collect unsorted, sort locally by the same
-    * keys (ascending, nulls first — Spark's `asc` default), identical
-    * rows in identical order. Only for driver-bounded results, which
-    * every localFrame call already is by contract. Keys must be ATOMIC
-    * orderable types (string/numeric/date/…): strings compare by CODE
-    * POINT (= UTF-8 byte order, Spark's UTF8String.binary collation —
-    * Java's compareTo orders by UTF-16 code UNIT, which diverges for
-    * supplementary characters vs U+E000..U+FFFF; QueriesHelperSpec pins
-    * the parity), and a non-Comparable key (array/struct) fails loudly
-    * instead of casting blind. */
   /** Code-point (= UTF-8 byte / UTF8String.binary) string comparison —
     * Java's `compareTo` is UTF-16 code-unit order, which ranks
     * supplementary planes (surrogate pairs, 0xD800-prefixed) BELOW
@@ -955,6 +940,21 @@ object Queries
     Integer.compare(la - i, lb - j)
   }
 
+  /** [[localFrame]] with the ORDER applied driver-side: the pattern
+    * `localFrame(tiny.orderBy(k…))` pays a distributed global sort — a
+    * range-partitioner boundary-SAMPLING pass plus a shuffle+sort stage
+    * — for a result the driver is about to collect anyway (r14
+    * job-count profile: ~2 pure-overhead jobs on every verify/rollup
+    * row ending this way). Collect unsorted, sort locally by the same
+    * keys (ascending, nulls first — Spark's `asc` default), identical
+    * rows in identical order. Only for driver-bounded results, which
+    * every localFrame call already is by contract. Keys must be ATOMIC
+    * orderable types (string/numeric/date/…): strings compare by CODE
+    * POINT (= UTF-8 byte order, Spark's UTF8String.binary collation —
+    * Java's compareTo orders by UTF-16 code UNIT, which diverges for
+    * supplementary characters vs U+E000..U+FFFF; QueriesHelperSpec pins
+    * the parity), and a non-Comparable key (array/struct) fails loudly
+    * instead of casting blind. */
   private[graft] def localFrameOrdered(df: DataFrame,
                                        keys: String*): DataFrame = {
     if (PlanCapture.active.get) throw PlanCapture.Captured(df)

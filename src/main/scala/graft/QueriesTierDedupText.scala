@@ -167,22 +167,22 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
     "incr_near_dup_fixed" -> DeclaredQuery(
       // incr_near_dup's ORACLE TWIN (r15 verdict #2): the same cross-set
       // candidates + Jaccard-verify chain with the seeded hash swapped
-      // for the closed-form polynomial hash
-      // (NearDup.minHashPolyCrossCandidates), putting the
-      // ingestion-side candidate logic itself behind the hash gate —
-      // banded cross join, shingle sets, verify threshold, all replayed
-      // as static DuckDB SQL.
+      // for the closed-form polynomial hash (NearDup.minHashPolyBanded),
+      // putting the ingestion-side candidate logic itself behind the
+      // hash gate — banded cross join, shingle sets, verify threshold,
+      // all replayed as static DuckDB SQL.
       (s, dir) => {
         val slice = T(s, dir, "documents").filter(col("doc_id") < 2000)
         // the incoming/corpus split applies ON the maintained banded
         // relation (signatures are per-doc, so splitting the memo ≡
         // splitting the docs — the operator's own shape); the cross
-        // join closer is the same one the operator uses
+        // join closer is the one minHashCrossCandidates runs
         val banded = sharedPolyMinhashBanded(s, dir)
         val cands = NearDup.materializePairs(
-          NearDup.minHashPolyCrossPairs(
+          NearDup.bucketPairs(
             banded.filter(col("_id") >= 250),
-            banded.filter(col("_id") < 250))
+            banded.filter(col("_id") < 250),
+            NearDup.PairRule.AnyKey, cross = true)
             .select(col("id_new").as("id_a"), col("id_old").as("id_b")))
         localFrameOrdered(
           NearDup.jaccardVerify(slice, "doc_id", "text", cands)
@@ -199,10 +199,11 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       (s, dir) => {
         val banded = sharedPolySimhashBanded(s, dir)
         localFrameOrdered(
-          NearDup.simHashPolyCrossPairs(
+          NearDup.bucketPairs(
             banded.filter(col("_id") >= 250),
             banded.filter(col("_id") < 250),
-            maxHamming = 2), "id_new", "id_old")
+            NearDup.PairRule.Hamming(2, bigint = true), cross = true),
+          "id_new", "id_old")
       },
       Some(incrSimhashFixedOracleSql),
       "incremental SimHash near-dup under the closed-form hash: cross-set banded candidates + Hamming verify, full DuckDB replay"),
@@ -214,10 +215,10 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       (s, dir) => {
         val fps = sharedPolyWinnowFps(s, dir)
         localFrameOrdered(
-          NearDup.winnowPolyCrossPairs(
+          NearDup.bucketPairs(
             fps.filter(col("_id") >= 250),
             fps.filter(col("_id") < 250),
-            minShared = 2), "id_new", "id_old")
+            NearDup.PairRule.MinShared(2), cross = true), "id_new", "id_old")
       },
       Some(incrWinnowFixedOracleSql),
       "incremental winnowing near-dup under the closed-form hash: cross-set fingerprint buckets, full DuckDB replay"),
@@ -249,10 +250,11 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
           corpus, Dedup.tokenFingerprint(col("text"))))
         val banded = sharedPolyMinhashBanded(s, dir)
         val cands = NearDup.materializePairs(
-          NearDup.minHashPolyCrossPairs(
+          NearDup.bucketPairs(
             banded.join(exactKept.select(col("doc_id").as("_id")),
               Seq("_id"), "left_semi"),
-            banded.filter(col("_id") < 250))
+            banded.filter(col("_id") < 250),
+            NearDup.PairRule.AnyKey, cross = true)
             .select(col("id_new").as("id_a"), col("id_old").as("id_b")))
         val rejected = NearDup.jaccardVerify(docs, "doc_id", "text", cands)
           .filter(col("jaccard") >= 0.8)
@@ -287,10 +289,11 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
           corpus, Dedup.tokenFingerprint(col("text"))))
         val banded = sharedPolyMinhashBanded(s, dir)
         val cands = NearDup.materializePairs(
-          NearDup.minHashPolyCrossPairs(
+          NearDup.bucketPairs(
             banded.join(exactKept.select(col("doc_id").as("_id")),
               Seq("_id"), "left_semi"),
-            banded.filter(col("_id") < 250))
+            banded.filter(col("_id") < 250),
+            NearDup.PairRule.AnyKey, cross = true)
             .select(col("id_new").as("id_a"), col("id_old").as("id_b")))
         val rejected = NearDup.jaccardVerify(docs, "doc_id", "text", cands)
           .filter(col("jaccard") >= 0.8)
@@ -335,11 +338,12 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
             Dedup.tokenFingerprint(col("text")),
             corpusDf, Dedup.tokenFingerprint(col("text"))))
           val cands = NearDup.materializePairs(
-            NearDup.minHashPolyCrossPairs(
+            NearDup.bucketPairs(
               banded.join(exactKept.select(col("doc_id").as("_id")),
                 Seq("_id"), "left_semi"),
               banded.join(corpusDf.select(col("doc_id").as("_id")),
-                Seq("_id"), "left_semi"))
+                Seq("_id"), "left_semi"),
+              NearDup.PairRule.AnyKey, cross = true)
               .select(col("id_new").as("id_a"), col("id_old").as("id_b")))
           val rejected = NearDup.jaccardVerify(docs, "doc_id", "text", cands)
             .filter(col("jaccard") >= 0.8)
@@ -394,10 +398,11 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
             val rel = corpus.select(col("doc_id"), col("text")).union(cleaned)
             val banded = NearDup.minHashPolyBanded(rel, "doc_id", "text")
             val cands = NearDup.materializePairs(
-              NearDup.minHashPolyCrossPairs(
+              NearDup.bucketPairs(
                 banded.join(exactKept.select(col("doc_id").as("_id")),
                   Seq("_id"), "left_semi"),
-                banded.filter(col("_id") < 250))
+                banded.filter(col("_id") < 250),
+                NearDup.PairRule.AnyKey, cross = true)
                 .select(col("id_new").as("id_a"), col("id_old").as("id_b")))
             val rejected = NearDup.jaccardVerify(rel, "doc_id", "text", cands)
               .filter(col("jaccard") >= 0.8)
@@ -453,10 +458,11 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
           val rel = corpus.select(col("doc_id"), col("text")).union(cleaned)
           val banded = NearDup.minHashPolyBanded(rel, "doc_id", "text")
           val cands = NearDup.materializePairs(
-            NearDup.minHashPolyCrossPairs(
+            NearDup.bucketPairs(
               banded.join(exactKept.select(col("doc_id").as("_id")),
                 Seq("_id"), "left_semi"),
-              banded.filter(col("_id") < 250))
+              banded.filter(col("_id") < 250),
+              NearDup.PairRule.AnyKey, cross = true)
               .select(col("id_new").as("id_a"), col("id_old").as("id_b")))
           val rejected = NearDup.jaccardVerify(rel, "doc_id", "text", cands)
             .filter(col("jaccard") >= 0.8)

@@ -1709,9 +1709,11 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // prices the build) through the SAME join closer the operator
       // uses — the chain stays end-to-end certified, the signature
       // pass runs once per set pass instead of once per row
-      (s, dir) => localFrameOrdered(
-        NearDup.minHashPolyPairs(sharedPolyMinhashBanded(s, dir)),
-        "id_a", "id_b"),
+      (s, dir) => {
+        val banded = sharedPolyMinhashBanded(s, dir)
+        localFrameOrdered(NearDup.bucketPairs(banded, banded,
+          NearDup.PairRule.AnyKey, cross = false), "id_a", "id_b")
+      },
       Some(minhashFixedOracleSql),
       "MinHash-LSH candidates under the closed-form hash: full DuckDB replay of shingle/minima/banding"),
 
@@ -1725,10 +1727,12 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // bucket join, bit_count verify, all certified byte-exact. With
       // 3 bands, hamming ≤ 2 candidates are exhaustively recalled, so
       // the output is banding-loss-free by construction.
-      (s, dir) => localFrameOrdered(
-        NearDup.simHashPolyPairs(sharedPolySimhashBanded(s, dir),
-          maxHamming = 2),
-        "id_a", "id_b"),
+      (s, dir) => {
+        val banded = sharedPolySimhashBanded(s, dir)
+        localFrameOrdered(NearDup.bucketPairs(banded, banded,
+          NearDup.PairRule.Hamming(2, bigint = true), cross = false),
+          "id_a", "id_b")
+      },
       Some(simhashFixedOracleSql),
       "SimHash banded candidates under the closed-form hash: full DuckDB replay of the signature/banding/Hamming chain"),
 
@@ -1739,10 +1743,11 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // bucket-join chain replayed as static SQL. The fingerprint SET
       // is tie-rule-independent (equal window minima select the same
       // value), which is what makes the twin exactly replayable.
-      (s, dir) => localFrameOrdered(
-        NearDup.winnowPolyPairs(sharedPolyWinnowFps(s, dir),
-          minShared = 2),
-        "id_a", "id_b"),
+      (s, dir) => {
+        val fps = sharedPolyWinnowFps(s, dir)
+        localFrameOrdered(NearDup.bucketPairs(fps, fps,
+          NearDup.PairRule.MinShared(2), cross = false), "id_a", "id_b")
+      },
       Some(winnowFixedOracleSql),
       "winnowing fingerprint candidates under the closed-form hash: full DuckDB replay of gram-hash/window-min/bucket-join"),
 

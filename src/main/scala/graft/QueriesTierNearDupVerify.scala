@@ -262,9 +262,11 @@ private[graft] trait QueriesTierNearDupVerify { this: Queries.type =>
         // a LocalRelation instead of re-executing the verify subtree
         // per orientation (the shared-subtree double-execution trap);
         // components + representative run live
+        val banded = sharedPolyMinhashBanded(s, dir)
         val edges = NearDup.materializePairs(
           NearDup.jaccardVerify(slice, "doc_id", "text",
-              NearDup.minHashPolyPairs(sharedPolyMinhashBanded(s, dir)))
+              NearDup.bucketPairs(banded, banded, NearDup.PairRule.AnyKey,
+                cross = false))
             .filter(col("jaccard") >= 0.8)
             .select(col("id_a"), col("id_b")))
         val out = Dedup.dedupFromEdges(

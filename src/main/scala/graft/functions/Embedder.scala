@@ -21,6 +21,49 @@ import org.apache.spark.sql.functions.udf
   * Instances must be Serializable: they are closed over by executor-side
   * UDFs and shipped with the task closure — cheap, stateless objects, not
   * per-row allocations.
+  *
+  * ==Heavy-model variant (ONNX design sketch; the session LIFECYCLE it
+  * describes is implemented and tested by [[LinearModelEmbedder]] —
+  * only the ONNX runtime itself is not a dependency of this build)==
+  *
+  * The reference embeds with DistilBERT (`app.py:16-37`). On Spark the
+  * equivalent is an ONNX-exported encoder behind this same trait, with
+  * the session held as a PER-EXECUTOR lazy singleton — the JVM-wide
+  * mirror of the reference's `@st.cache_resource` (`app.py:13-14`) —
+  * so the model loads once per executor, never per task or per row:
+  *
+  * {{{
+  * final class OnnxEmbedder(modelPath: String, val dim: Int)
+  *     extends Embedder {
+  *   // The instance itself is a cheap Serializable handle; the session
+  *   // lives in a companion-object cache keyed by modelPath, created on
+  *   // first use ON THE EXECUTOR. modelPath points at a cluster-visible
+  *   // file (distributed via `SparkContext.addFile` or a shared store);
+  *   // what ships in the task closure is the STRING, never the weights.
+  *   def embed(text: String): Array[Float] = {
+  *     val (env, session, tokenizer) = OnnxEmbedder.sessionFor(modelPath)
+  *     val ids = tokenizer.encode(text, maxLen = 512)   // app.py:29
+  *     val out = session.run(Map("input_ids" -> ids))   // one forward pass
+  *     meanPool(out, ids.attentionMask)                 // app.py:33-37
+  *   }
+  * }
+  * object OnnxEmbedder {
+  *   // one entry per (executor JVM, model) — concurrent first-call races
+  *   // collapse via computeIfAbsent; sessions are never serialized
+  *   private val cache =
+  *     new java.util.concurrent.ConcurrentHashMap[String, SessionBundle]
+  *   private def sessionFor(path: String) =
+  *     cache.computeIfAbsent(path, p => loadOnnxSession(p))
+  * }
+  * }}}
+  *
+  * Throughput shape: wrap with [[Embedder.asUdf]] for row-at-a-time, or
+  * batch via `mapPartitions` grouping `batchSize` rows per forward pass
+  * (the same per-partition-init pattern as
+  * `graft.operators.Multimodal.decodeAll`) — batching is what keeps an
+  * accelerator-backed session busy. Everything downstream (scoring,
+  * top-k, IVF/LSH indexing) is embedder-agnostic: swapping this in
+  * changes no plan shape, which is the point of the trait.
   */
 trait Embedder extends Serializable {
   def dim: Int
@@ -174,50 +217,6 @@ object Embedder {
   /** Default engine embedder: 64-dim to match the `embeddings.parquet`
     * fixture dimension (FIXTURES.md §2). */
   val default: Embedder = new HashingEmbedder(64)
-
-  /** ==Heavy-model variant (ONNX design sketch; the session LIFECYCLE it
-    * describes is implemented and tested by [[LinearModelEmbedder]] —
-    * only the ONNX runtime itself is absent from this environment)==
-    *
-    * The reference embeds with DistilBERT (`app.py:16-37`). On Spark the
-    * equivalent is an ONNX-exported encoder behind this same trait, with
-    * the session held as a PER-EXECUTOR lazy singleton — the JVM-wide
-    * mirror of the reference's `@st.cache_resource` (`app.py:13-14`) —
-    * so the model loads once per executor, never per task or per row:
-    *
-    * {{{
-    * final class OnnxEmbedder(modelPath: String, val dim: Int)
-    *     extends Embedder {
-    *   // The instance itself is a cheap Serializable handle; the session
-    *   // lives in a companion-object cache keyed by modelPath, created on
-    *   // first use ON THE EXECUTOR. modelPath points at a cluster-visible
-    *   // file (distributed via `SparkContext.addFile` or a shared store);
-    *   // what ships in the task closure is the STRING, never the weights.
-    *   def embed(text: String): Array[Float] = {
-    *     val (env, session, tokenizer) = OnnxEmbedder.sessionFor(modelPath)
-    *     val ids = tokenizer.encode(text, maxLen = 512)   // app.py:29
-    *     val out = session.run(Map("input_ids" -> ids))   // one forward pass
-    *     meanPool(out, ids.attentionMask)                 // app.py:33-37
-    *   }
-    * }
-    * object OnnxEmbedder {
-    *   // one entry per (executor JVM, model) — concurrent first-call races
-    *   // collapse via computeIfAbsent; sessions are never serialized
-    *   private val cache =
-    *     new java.util.concurrent.ConcurrentHashMap[String, SessionBundle]
-    *   private def sessionFor(path: String) =
-    *     cache.computeIfAbsent(path, p => loadOnnxSession(p))
-    * }
-    * }}}
-    *
-    * Throughput shape: wrap with [[Embedder.asUdf]] for row-at-a-time, or
-    * batch via `mapPartitions` grouping `batchSize` rows per forward pass
-    * (the same per-partition-init pattern as
-    * `graft.operators.Multimodal.decodeAll`) — batching is what keeps an
-    * accelerator-backed session busy. Everything downstream (scoring,
-    * top-k, IVF/LSH indexing) is embedder-agnostic: swapping this in
-    * changes no plan shape, which is the point of the trait.
-    */
 
   /** Scala UDF wrapping an embedder. The embedder is serialized into the
     * closure once per task, not per row. */

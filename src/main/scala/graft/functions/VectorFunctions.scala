@@ -67,8 +67,6 @@ object VectorFunctions {
     transform(a, x => x.cast("double") / n)
   }
 
-  /** A fixed query vector as a typed array-literal Column. Constant, so
-    * Catalyst constant-folds all arithmetic against it. */
   /** A query/centroid vector as ONE array literal. `typedlit` packs the
     * whole vector into a single Catalyst Literal — the earlier
     * `array(lit, lit, …)` form carried one expression node per element,

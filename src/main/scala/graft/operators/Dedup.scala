@@ -229,28 +229,6 @@ object Dedup {
     definitelyNew.unionAll(confirmed)
   }
 
-  /** The incremental ingestion ADMISSION decision, both tiers chained —
-    * the kernel the declared `incr_admit` query and the streaming mirror
-    * (`Streams.incrementalAdmission`) share, so batch ≡ stream is the
-    * same code path, not two implementations:
-    *
-    *   1. exact tier: [[incrementalExact]] on the token fingerprint —
-    *      the corpus contributes only its distinct-key projection to a
-    *      left-anti join;
-    *   2. near-dup tier: [[NearDup.minHashCrossCandidates]] (incoming
-    *      meets corpus only inside shared band buckets — corpus-internal
-    *      pairs are never regenerated) + cross-set exact-Jaccard verify
-    *      ≥ `minJaccard` ([[NearDup.jaccardVerifyCross]] — each side's
-    *      text is fetched from its OWN relation, so an incoming id that
-    *      collides with a corpus id cannot mix texts);
-    *   3. admit what survives both tiers.
-    *
-    * Returns the admitted INCOMING rows with all their columns. Incoming
-    * rows are only ever compared against the corpus, never against each
-    * other — which is exactly what makes the micro-batched streaming
-    * replay equal the one-shot batch run regardless of how the incoming
-    * set is split (asserted in StreamsSpec). `incoming` and `corpus`
-    * must both carry `idCol` and `textCol`. */
   /** CLEAN-THEN-ADMIT — the full ingestion kernel a pretraining pipeline
     * runs per batch, composing the substring tier with the admission
     * decision: (1) every token run an incoming doc copies from the
@@ -389,7 +367,30 @@ object Dedup {
       incoming.filter(TextAnalysis.gopherPass(col(textCol))),
       corpus, idCol, textCol, minJaccard)
 
-  /** NOTE ON LAZINESS: unlike most operators here, this one EXECUTES the
+  /** The incremental ingestion ADMISSION decision, both tiers chained —
+    * the kernel the declared `incr_admit` query and the streaming mirror
+    * (`Streams.incrementalAdmission`) share, so batch ≡ stream is the
+    * same code path, not two implementations:
+    *
+    *   1. exact tier: [[incrementalExact]] on the token fingerprint —
+    *      the corpus contributes only its distinct-key projection to a
+    *      left-anti join;
+    *   2. near-dup tier: [[NearDup.minHashCrossCandidates]] (incoming
+    *      meets corpus only inside shared band buckets — corpus-internal
+    *      pairs are never regenerated) + cross-set exact-Jaccard verify
+    *      ≥ `minJaccard` ([[NearDup.jaccardVerifyCross]] — each side's
+    *      text is fetched from its OWN relation, so an incoming id that
+    *      collides with a corpus id cannot mix texts);
+    *   3. admit what survives both tiers.
+    *
+    * Returns the admitted INCOMING rows with all their columns. Incoming
+    * rows are only ever compared against the corpus, never against each
+    * other — which is exactly what makes the micro-batched streaming
+    * replay equal the one-shot batch run regardless of how the incoming
+    * set is split (asserted in StreamsSpec). `incoming` and `corpus`
+    * must both carry `idCol` and `textCol`.
+    *
+    * NOTE ON LAZINESS: unlike most operators here, this one EXECUTES the
     * candidate+verify pipeline at CALL time (the candidate spine is
     * collected to the driver so the verify joins broadcast a
     * LocalRelation — the fused small-batch shape). Callers see a cheap
@@ -504,23 +505,6 @@ object Dedup {
     }
   }
 
-  /** The VECTOR-TIER incremental admission decision — [[admitIncoming]]
-    * for an embedding-indexed corpus: incoming vectors meet existing
-    * corpus vectors only inside shared sign-LSH buckets
-    * ([[NearDup.embeddingCrossCandidates]] — multiprobe exploded on the
-    * small incoming side), candidates are verified by exact cosine
-    * ([[NearDup.cosineVerifyCross]]), and an incoming row whose cosine
-    * against ANY corpus vector reaches `minCosine` is rejected. No
-    * separate exact tier: a byte-identical vector has cosine 1.0 and
-    * shares its duplicate's bucket by construction, so the LSH tier
-    * subsumes it.
-    *
-    * Same cross-set contract as the text kernel: incoming rows are
-    * compared only against the corpus, never each other — micro-batch
-    * splits of the incoming set accumulate to the one-shot batch result
-    * (asserted in StreamsSpec), and the corpus contributes only its
-    * bucket projection plus candidate-touched vectors, never a
-    * corpus-sized shuffle. */
   /** [[admitIncoming]] with a GUARANTEED-EXACT near-dup tier: the
     * MinHash candidate stage (probabilistic — the calibrated banding
     * still loses ~1 % of true dups, `minhash_recall`) is replaced by
@@ -606,7 +590,25 @@ object Dedup {
     incoming.join(drops, Seq(idCol), "left_anti")
   }
 
-  /** Same call-time-execution + graceful-overflow contract as
+  /** The VECTOR-TIER incremental admission decision — [[admitIncoming]]
+    * for an embedding-indexed corpus: incoming vectors meet existing
+    * corpus vectors only inside shared sign-LSH buckets
+    * ([[NearDup.embeddingCrossCandidates]] — multiprobe exploded on the
+    * small incoming side), candidates are verified by exact cosine
+    * ([[NearDup.cosineVerifyCross]]), and an incoming row whose cosine
+    * against ANY corpus vector reaches `minCosine` is rejected. No
+    * separate exact tier: a byte-identical vector has cosine 1.0 and
+    * shares its duplicate's bucket by construction, so the LSH tier
+    * subsumes it.
+    *
+    * Same cross-set contract as the text kernel: incoming rows are
+    * compared only against the corpus, never each other — micro-batch
+    * splits of the incoming set accumulate to the one-shot batch result
+    * (asserted in StreamsSpec), and the corpus contributes only its
+    * bucket projection plus candidate-touched vectors, never a
+    * corpus-sized shuffle.
+    *
+    * Same call-time-execution + graceful-overflow contract as
     * [[admitIncoming]] (see its laziness note). */
   def admitIncomingVectors(incoming: DataFrame, corpus: DataFrame,
                            idCol: String, vecCol: String,
@@ -641,76 +643,6 @@ object Dedup {
     }
   }
 
-  /** Connected components over a near-dup pair graph — the CLUSTERING
-    * stage between candidate generation (MinHash/SimHash/winnow/embedding
-    * buckets) and representative selection: near-duplication is not
-    * transitive, so "keep one doc per pair" under-deletes (A~B, B~C keeps
-    * A and C even though the cluster is {A,B,C}); the standard pipeline
-    * groups pairs into components first and keeps one representative per
-    * component.
-    *
-    * Iterative min-label propagation as pure DataFrame ops: every vertex
-    * starts labeled with its own id; each round every vertex takes the
-    * min of its own and its neighbors' labels (a shuffle join edges ⋈
-    * labels + one partial-aggregatable min per vertex — 2 exchanges per
-    * round over (id, label) longs, never document bodies); converged when
-    * a round changes no label. Rounds needed = the largest component's
-    * diameter — near-dup clusters are dense and shallow (dup groups,
-    * mirror families), so the default converges in a handful of rounds.
-    * For graphs with genuinely deep chains, `pointerJump = true` adds a
-    * pointer-jumping step per round (label := label of my label — one
-    * extra self-join shuffle), which halves remaining tree height each
-    * round and makes the round count logarithmic in the diameter; it
-    * costs one extra job + cache generation per round, so leave it off
-    * for shallow graphs. `starContraction = true` swaps the whole loop
-    * for alternating large-star/small-star edge contraction
-    * ([[starContractionLabels]]) — round count polylog in component
-    * SIZE, the variant for adversarially deep chains (pointerJump and
-    * saltFactor are propagation knobs, ignored with it).
-    * `saltFactor > 1` spreads hub-degree keys in the
-    * per-round edges ⋈ labels join over that many tasks (see
-    * [[propagateRound]]) — for graphs with dense dup cliques or mirror
-    * hubs where one join key would otherwise carry the component's whole
-    * edge fan-in.
-    *
-    * `vertices` rows with no incident edge keep their own id as the
-    * component (singletons) — and they never enter the loop: propagation
-    * runs over the DISTINCT edge endpoints only (dup-graph-sized, not
-    * corpus-sized; at web scale the near-dup graph touches a small
-    * fraction of documents, so per-round shuffle volume is bounded by
-    * the dup families, not the corpus), with untouched vertices unioned
-    * back in the final materializing job. Edges touching ids NOT in
-    * `vertices` are ignored (semi-join pruned up front), so a foreign id
-    * can neither appear as an output row nor leak in as a component
-    * label. Returns
-    * (idCol, component) with component = min vertex id reachable —
-    * deterministic, SQL-expressible (recursive CTE), so the declared
-    * `dedup_clusters` query is oracle-checked.
-    *
-    * The returned frame is PERSISTED and materialized (vertex-sized —
-    * release with `unpersist()` when done, same contract as
-    * `IvfIndex.build`).
-    *
-    * TWO-PHASE execution (`localFinishEdges`): every distributed round
-    * costs the scheduler's per-job floor regardless of data volume, so
-    * a dup graph (or a contracted generation of one — see the
-    * star-contraction loop) that fits the driver bound is finished by
-    * ONE capped collect + union-find, result-identical to the
-    * distributed modes (union-to-smaller-root makes each root the
-    * component minimum; property-pinned in DedupSpec). The default
-    * bound (2^16 edges ≈ 1 MB) is the `materializePairs` driver class;
-    * 0 disables the fast path — the specs that pin the distributed
-    * loop machinery itself do that.
-    *
-    * Each label generation's lineage is truncated (re-framed over its
-    * own RDD, then persisted): the round plan references its predecessor
-    * TWICE (own-label union + neighbor join), so without truncation the
-    * logical plan doubles per round — 2^rounds plan nodes, a driver OOM
-    * by round ~25. The re-frame bounds the plan at one generation while
-    * keeping every generation an ordinary persisted frame that is
-    * DETERMINISTICALLY released as soon as it is superseded (including
-    * on the non-convergence failure path) — no reliance on context-
-    * cleaner GC timing. */
   /** Lineage-truncated persisted generation for iterative loops:
     * re-framing over the plan's own RDD bounds the LOGICAL PLAN at one
     * generation (persist alone does NOT truncate the plan), stays lazy
@@ -769,6 +701,74 @@ object Dedup {
         org.apache.spark.sql.types.LongType, nullable = false))))
   }
 
+  /** Connected components over a near-dup pair graph — the CLUSTERING
+    * stage between candidate generation (MinHash/SimHash/winnow/embedding
+    * buckets) and representative selection: near-duplication is not
+    * transitive, so "keep one doc per pair" under-deletes (A~B, B~C keeps
+    * A and C even though the cluster is {A,B,C}); the standard pipeline
+    * groups pairs into components first and keeps one representative per
+    * component.
+    *
+    * Iterative min-label propagation as pure DataFrame ops: every vertex
+    * starts labeled with its own id; each round every vertex takes the
+    * min of its own and its neighbors' labels (a shuffle join edges ⋈
+    * labels + one partial-aggregatable min per vertex — 2 exchanges per
+    * round over (id, label) longs, never document bodies); converged when
+    * a round changes no label. Rounds needed = the largest component's
+    * diameter — near-dup clusters are dense and shallow (dup groups,
+    * mirror families), so the default converges in a handful of rounds.
+    * For graphs with genuinely deep chains, `pointerJump = true` adds a
+    * pointer-jumping step per round (label := label of my label — one
+    * extra self-join shuffle), which halves remaining tree height each
+    * round and makes the round count logarithmic in the diameter; it
+    * costs one extra job + cache generation per round, so leave it off
+    * for shallow graphs. `starContraction = true` swaps the whole loop
+    * for alternating large-star/small-star edge contraction
+    * ([[starContractionLabels]]) — round count polylog in component
+    * SIZE, the variant for adversarially deep chains (pointerJump and
+    * saltFactor are propagation knobs, ignored with it).
+    * `saltFactor > 1` spreads hub-degree keys in the per-round edges ⋈
+    * labels join over that many tasks (see [[propagateRound]]) — for
+    * graphs with dense dup cliques or mirror hubs where one join key
+    * would otherwise carry the component's whole edge fan-in.
+    *
+    * `vertices` rows with no incident edge keep their own id as the
+    * component (singletons) — and they never enter the loop: propagation
+    * runs over the DISTINCT edge endpoints only (dup-graph-sized, not
+    * corpus-sized; at web scale the near-dup graph touches a small
+    * fraction of documents, so per-round shuffle volume is bounded by
+    * the dup families, not the corpus), with untouched vertices unioned
+    * back in the final materializing job. Edges touching ids NOT in
+    * `vertices` are ignored (semi-join pruned up front), so a foreign id
+    * can neither appear as an output row nor leak in as a component
+    * label. Returns (idCol, component) with component = min vertex id
+    * reachable — deterministic, SQL-expressible (recursive CTE), so the
+    * declared `dedup_clusters` query is oracle-checked.
+    *
+    * The returned frame is PERSISTED and materialized (vertex-sized —
+    * release with `unpersist()` when done, same contract as
+    * `IvfIndex.build`).
+    *
+    * TWO-PHASE execution (`localFinishEdges`): every distributed round
+    * costs the scheduler's per-job floor regardless of data volume, so
+    * a dup graph (or a contracted generation of one — see the
+    * star-contraction loop) that fits the driver bound is finished by
+    * ONE capped collect + union-find, result-identical to the
+    * distributed modes (union-to-smaller-root makes each root the
+    * component minimum; property-pinned in DedupSpec). The default
+    * bound (2^16 edges ≈ 1 MB) is the `materializePairs` driver class;
+    * 0 disables the fast path — the specs that pin the distributed
+    * loop machinery itself do that.
+    *
+    * Each label generation's lineage is truncated (re-framed over its
+    * own RDD, then persisted): the round plan references its predecessor
+    * TWICE (own-label union + neighbor join), so without truncation the
+    * logical plan doubles per round — 2^rounds plan nodes, a driver OOM
+    * by round ~25. The re-frame bounds the plan at one generation while
+    * keeping every generation an ordinary persisted frame that is
+    * DETERMINISTICALLY released as soon as it is superseded (including
+    * on the non-convergence failure path) — no reliance on context-
+    * cleaner GC timing. */
   def connectedComponents(vertices: DataFrame, idCol: String,
                           edges: DataFrame, srcCol: String, dstCol: String,
                           maxIters: Int = 25,
@@ -1131,12 +1131,6 @@ object Dedup {
       saltFactor = saltFactor, localFinishEdges = localFinishEdges)
   }
 
-  /** Stages 3-4 of [[lshDedupPipeline]] over PRECOMPUTED similarity
-    * edges — for callers that already hold (or memoize) the verified
-    * candidate set (several declared queries over one fixture share it;
-    * at cluster scale the edge relation is typically a persisted table
-    * produced by the candidate+verify job). Same return/persist contract
-    * as [[lshDedupPipeline]]. */
   /** SEMANTIC dedup within pre-computed clusters — the SemDeDup recipe
     * (Abbas et al. 2023, public): embeddings are first partitioned into
     * clusters (k-means cells — e.g. the shared IVF assignment — or any
@@ -1181,6 +1175,12 @@ object Dedup {
     emb.join(drops, Seq(idCol), "left_anti")
   }
 
+  /** Stages 3-4 of [[lshDedupPipeline]] over PRECOMPUTED similarity
+    * edges — for callers that already hold (or memoize) the verified
+    * candidate set (several declared queries over one fixture share it;
+    * at cluster scale the edge relation is typically a persisted table
+    * produced by the candidate+verify job). Same return/persist contract
+    * as [[lshDedupPipeline]]. */
   def dedupFromEdges(docs: DataFrame, idCol: String, edges: DataFrame,
                      pointerJump: Boolean = false,
                      saltFactor: Int = 1,

@@ -108,8 +108,10 @@ object NearDup {
     * is gone for good. Same 32-hash signature cost either way.
     */
   def minHashCandidates(docs: DataFrame, idCol: String, textCol: String,
-                        numHashes: Int = 32, bands: Int = 8): DataFrame =
-    bucketSelfJoin(minHashBuckets(docs, idCol, textCol, numHashes, bands))
+                        numHashes: Int = 32, bands: Int = 8): DataFrame = {
+    val buckets = minHashBuckets(docs, idCol, textCol, numHashes, bands)
+    bucketPairs(buckets, buckets, PairRule.AnyKey, cross = false)
+  }
 
   /** The (doc, band, bucket) relation the LSH self-join runs over. */
   def minHashBuckets(docs: DataFrame, idCol: String, textCol: String,
@@ -124,12 +126,13 @@ object NearDup {
   }
 
   /** Broadcast hint GATED on Catalyst's size estimate (r14 advice): the
-    * four cross-candidate operators hint their incoming/micro-batch side
-    * so fixture-scale runs skip the two shuffle-map stages AQE's runtime
-    * conversion still pays — but these are PUBLIC operators, and an
-    * unconditional hint forces a driver collect AQE cannot undo, so a
-    * caller passing a corpus-sized "incoming" would OOM the driver
-    * instead of degrading to a shuffle. Below the session's
+    * cross-set candidate joins ([[bucketPairs]]) and the verify spines
+    * hint their small side so fixture-scale runs skip the two
+    * shuffle-map stages AQE's runtime conversion still pays — but these
+    * are PUBLIC operators, and an unconditional hint forces a driver
+    * collect AQE cannot undo, so a caller passing a corpus-sized
+    * "incoming" would OOM the driver instead of degrading to a
+    * shuffle. Below the session's
     * autoBroadcastJoinThreshold (the same bar Catalyst's own planner
     * uses) the hint applies; above it — or with auto-broadcast disabled
     * — the join is left unhinted and AQE's runtime size measurement
@@ -160,6 +163,85 @@ object NearDup {
     if (eb < ea && eb <= BigInt(thr)) (a, broadcast(b))
     else if (ea <= BigInt(thr)) (broadcast(a), b)
     else (a, b)
+  }
+
+  /** How [[bucketPairs]] turns documents sharing a bucket key into
+    * pairs. With the per-doc bucket relation, the only thing that
+    * differs between candidate families and hashes. */
+  private[graft] sealed trait PairRule
+  private[graft] object PairRule {
+    /** Any shared key: distinct (id, id) — MinHash bands, embedding
+      * sign buckets. */
+    case object AnyKey extends PairRule
+    /** A shared band, then full Hamming distance ≤ `max` between the
+      * relations' signature columns: distinct (id, id, hamming) —
+      * SimHash, any 64-bit signature. `bigint` types `hamming` BIGINT
+      * (the closed-form twins' type), else INT. */
+    final case class Hamming(max: Int, bigint: Boolean) extends PairRule
+    /** At least `n` shared keys: (id, id, n_shared) — winnowing. */
+    final case class MinShared(n: Int) extends PairRule
+  }
+
+  /** The one bucket-join closer of every near-dup candidate family:
+    * documents meet ONLY inside a shared bucket. `a` and `b` are per-doc
+    * bucket relations of one shape — the id first, then (under
+    * [[PairRule.Hamming]]) the signature, then the bucket-key columns;
+    * `b`'s columns are matched to `a`'s by position.
+    *
+    * Self mode (`cross = false`; both sides drawn from one relation,
+    * `b` possibly `a`'s multiprobe explode) emits `id_a < id_b`. Cross
+    * mode emits (`id_new` from `a`, `id_old` from `b`) — incoming never
+    * meets incoming, corpus never re-meets corpus — with the smaller
+    * side broadcast under [[hintSmallerSide]]: at 100 TB the corpus
+    * bucket relation streams map-side past the micro-batch and never
+    * enters an exchange, and at fixture scale the hint skips the two
+    * shuffle-map stages AQE's runtime broadcast conversion still
+    * pays. */
+  private[graft] def bucketPairs(a: DataFrame, b: DataFrame, rule: PairRule,
+                                 cross: Boolean): DataFrame = {
+    val (ia, ib, sa, sb) =
+      if (cross) ("id_new", "id_old", "sh_new", "sh_old")
+      else ("id_a", "id_b", "sh_a", "sh_b")
+    val withSig = rule.isInstanceOf[PairRule.Hamming]
+    val keys = a.columns.toSeq.drop(if (withSig) 2 else 1)
+    def named(df: DataFrame, id: String, sig: String) =
+      df.toDF((id +: (if (withSig) Seq(sig) else Nil)) ++ keys: _*)
+    val (l, r) = (named(a, ia, sa), named(b, ib, sb))
+    val joined =
+      if (cross) { val (hl, hr) = hintSmallerSide(l, r); hl.join(hr, keys) }
+      else l.join(r, keys).filter(col(ia) < col(ib))
+    rule match {
+      case PairRule.AnyKey => joined.select(col(ia), col(ib)).distinct()
+      case PairRule.Hamming(max, bigint) =>
+        val h = hamming(col(sa), col(sb))
+        joined.select(col(ia), col(ib),
+            (if (bigint) h.cast("long") else h).as("hamming"))
+          // filter BEFORE distinct: hamming is a function of the pair,
+          // so the result is identical and the distinct's exchange
+          // carries only surviving pairs
+          .filter(col("hamming") <= max)
+          .distinct()
+      case PairRule.MinShared(n) =>
+        joined.groupBy(col(ia), col(ib))
+          .agg(count(lit(1)).as("n_shared"))
+          .filter(col("n_shared") >= n)
+    }
+  }
+
+  /** [[materializePairs]] of the self-mode [[bucketPairs]] over `rel`,
+    * with `rel` persisted across the self-join so its pass over the
+    * corpus runs ONCE (a lazy self-join executes its identical build
+    * and probe subtrees independently), then released. This
+    * persist-across-the-self-join is also the cluster shape; the local
+    * collect at the end is what a table write replaces there. */
+  private def materializedSelfPairs(rel: DataFrame, rule: PairRule,
+                                    maxRows: Int): DataFrame = {
+    val cached = rel.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // populate the cache BEFORE the self-join: its two subtrees execute
+    // concurrently, and a cold cache would be missed by both
+    cached.count()
+    try materializePairs(bucketPairs(cached, cached, rule, cross = false), maxRows)
+    finally cached.unpersist()
   }
 
   /** Closed-form polynomial string hash — the determinizable hash the
@@ -204,61 +286,16 @@ object NearDup {
     * for the oracle to disagree with). Returns distinct
     * (id_a, id_b, hamming), id_a < id_b. */
   def simHashPolyCandidates(docs: DataFrame, idCol: String, textCol: String,
-                            maxHamming: Int = 2): DataFrame =
-    simHashPolyPairs(simHashPolyBanded(docs, idCol, textCol), maxHamming)
-
-  /** The banded-self-join closer of [[simHashPolyCandidates]], split out
-    * so a MAINTAINED banded-signature relation (the at-scale shape — a
-    * per-doc signature table updated per ingestion batch, here the
-    * per-dir shared build) can be joined without re-running the
-    * signature pass. */
-  def simHashPolyPairs(banded: DataFrame, maxHamming: Int = 2): DataFrame = {
-    val a = banded.select(col("_id").as("id_a"), col("_sig").as("_siga"),
-      col("_band"), col("_key"))
-    val b = banded.select(col("_id").as("id_b"), col("_sig").as("_sigb"),
-      col("_band"), col("_key"))
-    a.join(b, Seq("_band", "_key"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("_siga").bitwiseXOR(col("_sigb"))).cast("long")
-          .as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
-
-  /** Cross-set closer over two banded-signature relations — see
-    * [[simHashPolyPairs]]. */
-  def simHashPolyCrossPairs(bandedNew: DataFrame, bandedOld: DataFrame,
                             maxHamming: Int = 2): DataFrame = {
-    val a = bandedNew.select(col("_id").as("id_new"), col("_sig").as("_siga"),
-      col("_band"), col("_key"))
-    val b = bandedOld.select(col("_id").as("id_old"), col("_sig").as("_sigb"),
-      col("_band"), col("_key"))
-    val (ha, hb) = hintSmallerSide(a, b)
-    ha.join(hb, Seq("_band", "_key"))
-      .select(col("id_new"), col("id_old"),
-        bit_count(col("_siga").bitwiseXOR(col("_sigb"))).cast("long")
-          .as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
+    val banded = simHashPolyBanded(docs, idCol, textCol)
+    bucketPairs(banded, banded, PairRule.Hamming(maxHamming, bigint = true),
+      cross = false)
   }
 
-  /** CROSS-SET [[simHashPolyCandidates]] — the fixed-hash oracle twin of
-    * [[simHashCrossCandidates]]: incoming docs meet EXISTING corpus docs
-    * only inside a shared band bucket (no incoming×corpus cross join,
-    * no corpus-internal pairs), under the closed-form hash so the whole
-    * ingestion-side candidate chain replays as static SQL. Returns
-    * distinct (id_new, id_old, hamming). */
-  def simHashPolyCrossCandidates(incoming: DataFrame, corpus: DataFrame,
-                                 idCol: String, textCol: String,
-                                 maxHamming: Int = 2): DataFrame =
-    simHashPolyCrossPairs(
-      simHashPolyBanded(incoming, idCol, textCol),
-      simHashPolyBanded(corpus, idCol, textCol), maxHamming)
-
-  /** The per-doc banded 24-bit SimHash relation under [[polyHash]] —
-    * shared by the self and cross fixed-twin generators: one vote per
-    * token occurrence per bit (ties to 0), 3 bands × 8 bits. */
+  /** The per-doc banded 24-bit SimHash relation under [[polyHash]]
+    * (`_id`, `_sig`, `_band`, `_key`): one vote per token occurrence
+    * per bit (ties to 0), 3 bands × 8 bits. The closed-form twins join
+    * it through [[bucketPairs]], self and cross. */
   private[graft] def simHashPolyBanded(docs: DataFrame, idCol: String,
                                        textCol: String): DataFrame = {
     val bits = 24
@@ -297,49 +334,14 @@ object NearDup {
     * distinct (id_a, id_b), id_a < id_b — a pure function of the
     * corpus, replayable as static SQL. */
   def minHashPolyCandidates(docs: DataFrame, idCol: String, textCol: String,
-                            numHashes: Int = 8, bands: Int = 4): DataFrame =
-    minHashPolyPairs(minHashPolyBanded(docs, idCol, textCol, numHashes, bands))
-
-  /** The banded-self-join closer of [[minHashPolyCandidates]] — see
-    * [[simHashPolyPairs]]'s maintained-relation rationale. */
-  def minHashPolyPairs(banded: DataFrame): DataFrame = {
-    val a = banded.select(col("_id").as("id_a"), col("_band"), col("_ks"))
-    val b = banded.select(col("_id").as("id_b"), col("_band"), col("_ks"))
-    a.join(b, Seq("_band", "_ks"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
+                            numHashes: Int = 8, bands: Int = 4): DataFrame = {
+    val banded = minHashPolyBanded(docs, idCol, textCol, numHashes, bands)
+    bucketPairs(banded, banded, PairRule.AnyKey, cross = false)
   }
 
-  /** Cross-set closer over two banded MinHash signature relations. */
-  def minHashPolyCrossPairs(bandedNew: DataFrame,
-                            bandedOld: DataFrame): DataFrame = {
-    val a = bandedNew.select(col("_id").as("id_new"), col("_band"), col("_ks"))
-    val b = bandedOld.select(col("_id").as("id_old"), col("_band"), col("_ks"))
-    val (ha, hb) = hintSmallerSide(a, b)
-    ha.join(hb, Seq("_band", "_ks"))
-      .select(col("id_new"), col("id_old"))
-      .distinct()
-  }
-
-  /** CROSS-SET [[minHashPolyCandidates]] — the fixed-hash oracle twin of
-    * [[minHashCrossCandidates]]: incoming meets the corpus only inside
-    * a shared (band, row-key) bucket, never all-pairs, never
-    * corpus-internal — the ingestion-side candidate logic itself under
-    * the closed-form hash. Returns distinct (id_new, id_old). */
-  def minHashPolyCrossCandidates(incoming: DataFrame, corpus: DataFrame,
-                                 idCol: String, textCol: String,
-                                 numHashes: Int = 8,
-                                 bands: Int = 4): DataFrame =
-    // the incoming side is the micro-batch: size-gated hint inside the
-    // closer, same 100 TB rationale as minHashCrossCandidates (corpus
-    // buckets never shuffle)
-    minHashPolyCrossPairs(
-      minHashPolyBanded(incoming, idCol, textCol, numHashes, bands),
-      minHashPolyBanded(corpus, idCol, textCol, numHashes, bands))
-
-  /** The per-doc banded MinHash signature relation under [[polyHash]] —
-    * shared by the self and cross fixed-twin generators. */
+  /** The per-doc banded MinHash signature relation under [[polyHash]]
+    * (`_id`, `_band`, `_ks`). The closed-form twins join it through
+    * [[bucketPairs]], self and cross. */
   private[graft] def minHashPolyBanded(docs: DataFrame, idCol: String,
                                        textCol: String, numHashes: Int = 8,
                                        bands: Int = 4): DataFrame = {
@@ -374,48 +376,15 @@ object NearDup {
     * select the same VALUE whichever position wins. Returns
     * (id_a, id_b, n_shared), id_a < id_b. */
   def winnowPolyCandidates(docs: DataFrame, idCol: String, textCol: String,
-                           minShared: Int = 2): DataFrame =
-    winnowPolyPairs(winnowPolyFps(docs, idCol, textCol), minShared)
-
-  /** The fingerprint-bucket self-join closer of
-    * [[winnowPolyCandidates]] — see [[simHashPolyPairs]]'s
-    * maintained-relation rationale. */
-  def winnowPolyPairs(fps: DataFrame, minShared: Int = 2): DataFrame = {
-    val a = fps.select(col("_id").as("id_a"), col("_fp"))
-    val b = fps.select(col("_id").as("id_b"), col("_fp"))
-    a.join(b, "_fp")
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-  }
-
-  /** Cross-set closer over two fingerprint relations. */
-  def winnowPolyCrossPairs(fpsNew: DataFrame, fpsOld: DataFrame,
                            minShared: Int = 2): DataFrame = {
-    val a = fpsNew.select(col("_id").as("id_new"), col("_fp"))
-    val b = fpsOld.select(col("_id").as("id_old"), col("_fp"))
-    val (ha, hb) = hintSmallerSide(a, b)
-    ha.join(hb, "_fp")
-      .groupBy(col("id_new"), col("id_old"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
+    val fps = winnowPolyFps(docs, idCol, textCol)
+    bucketPairs(fps, fps, PairRule.MinShared(minShared), cross = false)
   }
-
-  /** CROSS-SET [[winnowPolyCandidates]] — the fixed-hash oracle twin of
-    * [[winnowCrossCandidates]]: incoming docs meet the corpus only
-    * inside a shared fingerprint bucket, under the closed-form hash.
-    * Returns (id_new, id_old, n_shared ≥ `minShared`). */
-  def winnowPolyCrossCandidates(incoming: DataFrame, corpus: DataFrame,
-                                idCol: String, textCol: String,
-                                minShared: Int = 2): DataFrame =
-    winnowPolyCrossPairs(
-      winnowPolyFps(incoming, idCol, textCol),
-      winnowPolyFps(corpus, idCol, textCol), minShared)
 
   /** The per-doc distinct winnowing-fingerprint relation under
-    * [[polyHash]] — shared by the self and cross fixed-twin generators:
-    * window-4 minima over FULL windows only. */
+    * [[polyHash]] (`_id`, `_fp`): window-4 minima over FULL windows
+    * only. The closed-form twins join it through [[bucketPairs]], self
+    * and cross. */
   private[graft] def winnowPolyFps(docs: DataFrame, idCol: String,
                                    textCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -444,23 +413,10 @@ object NearDup {
     * in a two-relation join). */
   def minHashCrossCandidates(incoming: DataFrame, corpus: DataFrame,
                              idCol: String, textCol: String,
-                             numHashes: Int = 32, bands: Int = 8): DataFrame = {
-    val a = minHashBuckets(incoming, idCol, textCol, numHashes, bands)
-      .toDF("id_new", "band_id", "band_hash")
-    val b = minHashBuckets(corpus, idCol, textCol, numHashes, bands)
-      .toDF("id_old", "band_id", "band_hash")
-    // the INCOMING side is the micro-batch (bands × batch rows —
-    // kilobytes against a corpus of any size): hinted when its size
-    // estimate clears the broadcast bar (see hintIfSmall), so the
-    // corpus side's bucket projection streams map-side past it with NO
-    // shuffle of either side — at 100 TB the corpus never enters an
-    // exchange here, and at fixture scale the hint skips the two
-    // shuffle-map stages AQE's runtime broadcast conversion still pays
-    val (ha, hb) = hintSmallerSide(a, b)
-    ha.join(hb, Seq("band_id", "band_hash"))
-      .select(col("id_new"), col("id_old"))
-      .distinct()
-  }
+                             numHashes: Int = 32, bands: Int = 8): DataFrame =
+    bucketPairs(minHashBuckets(incoming, idCol, textCol, numHashes, bands),
+      minHashBuckets(corpus, idCol, textCol, numHashes, bands),
+      PairRule.AnyKey, cross = true)
 
   /** CROSS-SET SimHash candidates — [[minHashCrossCandidates]]'s SimHash
     * twin for incremental ingestion: incoming docs meet EXISTING corpus
@@ -471,22 +427,10 @@ object NearDup {
     * union restricted to cross pairs (property-tested in NearDupSpec). */
   def simHashCrossCandidates(incoming: DataFrame, corpus: DataFrame,
                              idCol: String, textCol: String,
-                             maxHamming: Int = 8): DataFrame = {
-    val a = simHashBuckets(incoming, idCol, textCol)
-      .toDF("id_new", "sh_new", "band_id", "band_key")
-    val b = simHashBuckets(corpus, idCol, textCol)
-      .toDF("id_old", "sh_old", "band_id", "band_key")
-    // incoming = the micro-batch: size-gated hint, same contract (and
-    // same 100 TB rationale) as minHashCrossCandidates
-    val (ha, hb) = hintSmallerSide(a, b)
-    ha.join(hb, Seq("band_id", "band_key"))
-      .select(col("id_new"), col("id_old"),
-        hamming(col("sh_new"), col("sh_old")).as("hamming"))
-      // same discipline as the self-join: filter BEFORE distinct so the
-      // exchange carries only surviving pairs
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
+                             maxHamming: Int = 8): DataFrame =
+    bucketPairs(simHashBuckets(incoming, idCol, textCol),
+      simHashBuckets(corpus, idCol, textCol),
+      PairRule.Hamming(maxHamming, bigint = false), cross = true)
 
   /** CROSS-SET winnowing candidates — [[minHashCrossCandidates]]'s
     * fingerprint twin: incoming docs meet EXISTING corpus docs only
@@ -497,37 +441,15 @@ object NearDup {
     * (property-tested in NearDupSpec). */
   def winnowCrossCandidates(incoming: DataFrame, corpus: DataFrame,
                             idCol: String, textCol: String,
-                            window: Int = 4, minShared: Int = 2): DataFrame = {
-    val a = winnowBuckets(incoming, idCol, textCol, window)
-      .toDF("id_new", "_fp")
-    val b = winnowBuckets(corpus, idCol, textCol, window)
-      .toDF("id_old", "_fp")
-    // incoming = the micro-batch: size-gated hint, same contract (and
-    // same 100 TB rationale) as minHashCrossCandidates
-    val (ha, hb) = hintSmallerSide(a, b)
-    ha.join(hb, "_fp")
-      .groupBy(col("id_new"), col("id_old"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-  }
-
-  private def bucketSelfJoin(buckets: DataFrame): DataFrame = {
-    val a = buckets.toDF("id_a", "band_id", "band_hash")
-    val b = buckets.toDF("id_b", "band_id", "band_hash")
-    a.join(b, Seq("band_id", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-  }
+                            window: Int = 4, minShared: Int = 2): DataFrame =
+    bucketPairs(winnowBuckets(incoming, idCol, textCol, window),
+      winnowBuckets(corpus, idCol, textCol, window),
+      PairRule.MinShared(minShared), cross = true)
 
   /** Eager variant of [[minHashCandidates]] returning a
-    * [[materializePairs]]-style local frame: the bucket relation is
-    * persisted for the duration of the self-join so the signature pass
-    * over the corpus runs ONCE (a lazy self-join executes its (identical)
-    * build and probe subtrees independently — two full signature scans),
-    * then released. This persist-across-the-self-join is also the shape
-    * you want on a cluster; the local collect at the end is what you'd
-    * replace with a table write there.
+    * [[materializePairs]]-style local frame ([[materializedSelfPairs]]:
+    * the bucket relation is persisted across the self-join, so the
+    * signature pass over the corpus runs once).
     *
     * Cap interaction with banding: the recall-first b=8/r=4 default
     * (see [[minHashCandidates]]) widens the candidate set vs the old
@@ -539,16 +461,10 @@ object NearDup {
   def minHashCandidatesMaterialized(docs: DataFrame, idCol: String,
                                     textCol: String, numHashes: Int = 32,
                                     bands: Int = 8,
-                                    maxRows: Int = 1 << 20): DataFrame = {
-    val buckets = minHashBuckets(docs, idCol, textCol, numHashes, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // populate the cache BEFORE the self-join: its two subtrees execute
-    // concurrently, and a cold cache would be missed by both — the
-    // signature pass would still run twice
-    buckets.count()
-    try materializePairs(bucketSelfJoin(buckets), maxRows)
-    finally buckets.unpersist()
-  }
+                                    maxRows: Int = 1 << 20): DataFrame =
+    materializedSelfPairs(
+      minHashBuckets(docs, idCol, textCol, numHashes, bands),
+      PairRule.AnyKey, maxRows)
 
   /** Winnowing document fingerprint (rolling-hash local-minima sampling):
     * hash every token 3-gram (same long-mixing scheme as
@@ -598,8 +514,10 @@ object NearDup {
     * long-enough run of text collide on at least one fingerprint, so
     * `minShared` is the noise floor against single-hash accidents. */
   def winnowCandidates(docs: DataFrame, idCol: String, textCol: String,
-                       window: Int = 4, minShared: Int = 2): DataFrame =
-    winnowBucketJoin(winnowBuckets(docs, idCol, textCol, window), minShared)
+                       window: Int = 4, minShared: Int = 2): DataFrame = {
+    val fps = winnowBuckets(docs, idCol, textCol, window)
+    bucketPairs(fps, fps, PairRule.MinShared(minShared), cross = false)
+  }
 
   /** The exploded (doc, fingerprint) relation the self-join runs over. */
   def winnowBuckets(docs: DataFrame, idCol: String, textCol: String,
@@ -607,32 +525,14 @@ object NearDup {
     docs.select(col(idCol).as("_id"),
       explode(winnowFingerprint(col(textCol), window)).as("_fp"))
 
-  private def winnowBucketJoin(fps: DataFrame, minShared: Int): DataFrame = {
-    val a = fps.toDF("id_a", "_fp")
-    val b = fps.toDF("id_b", "_fp")
-    a.join(b, "_fp")
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-  }
-
-  /** Eager variant of [[winnowCandidates]] mirroring
-    * [[minHashCandidatesMaterialized]]: the exploded fingerprint relation
-    * is persisted across the self-join so the corpus-wide fingerprint
-    * pass runs ONCE, then released. */
+  /** Eager variant of [[winnowCandidates]]: the fingerprint pass runs
+    * once ([[materializedSelfPairs]]). */
   def winnowCandidatesMaterialized(docs: DataFrame, idCol: String,
                                    textCol: String, window: Int = 4,
                                    minShared: Int = 2,
-                                   maxRows: Int = 1 << 20): DataFrame = {
-    val fps = winnowBuckets(docs, idCol, textCol, window)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // populate the cache BEFORE the self-join (concurrent subtrees would
-    // both miss a cold cache — same reasoning as the minhash variant)
-    fps.count()
-    try materializePairs(winnowBucketJoin(fps, minShared), maxRows)
-    finally fps.unpersist()
-  }
+                                   maxRows: Int = 1 << 20): DataFrame =
+    materializedSelfPairs(winnowBuckets(docs, idCol, textCol, window),
+      PairRule.MinShared(minShared), maxRows)
 
   /** 64-bit SimHash of the token bag — native codegen'd expression
     * ([[graft.expressions.SimHash64]]); one static call per row, no
@@ -673,8 +573,11 @@ object NearDup {
     * docs sharing any 16-bit band are candidates, verified by full
     * Hamming distance ≤ maxHamming. */
   def simHashCandidates(docs: DataFrame, idCol: String, textCol: String,
-                        maxHamming: Int = 8): DataFrame =
-    simHashBucketJoin(simHashBuckets(docs, idCol, textCol), maxHamming)
+                        maxHamming: Int = 8): DataFrame = {
+    val banded = simHashBuckets(docs, idCol, textCol)
+    bucketPairs(banded, banded, PairRule.Hamming(maxHamming, bigint = false),
+      cross = false)
+  }
 
   /** The (doc, simhash, band, bucket) relation the banded self-join runs
     * over. */
@@ -725,13 +628,17 @@ object NearDup {
         countDistinct(col("_sh")).as("nd")).head()
       stats.getLong(1) >= math.ceil(stats.getLong(0) * 0.9).toLong
     }
-    if (effectivelyDistinct)
-      return simHashBucketJoin(bandSignature64(sigs), maxHamming)
+    val rule = PairRule.Hamming(maxHamming, bigint = false)
+    if (effectivelyDistinct) {
+      val banded = bandSignature64(sigs)
+      return bucketPairs(banded, banded, rule, cross = false)
+    }
     // banded join over distinct signature VALUES (id := the signature
     // itself — the join only needs a label, and sig-as-id makes the
     // output directly (sh_a, sh_b, hamming))
-    val sigPairs = simHashBucketJoin(bandSignature64(
-      sigs.select(col("_sh").as("_id"), col("_sh")).distinct()), maxHamming)
+    val sigBanded = bandSignature64(
+      sigs.select(col("_sh").as("_id"), col("_sh")).distinct())
+    val sigPairs = bucketPairs(sigBanded, sigBanded, rule, cross = false)
     // equal-signature members: every pair qualifies at Hamming 0
     val memA = sigs.select(col("_sh"), col("_id").as("_ma"))
     val memB = sigs.select(col("_sh"), col("_id").as("_mb"))
@@ -769,17 +676,10 @@ object NearDup {
         countDistinct(col("_sh")).as("nd")).head()
       stats.getLong(1) >= math.ceil(stats.getLong(0) * 0.9).toLong
     }
-    if (effectivelyDistinct) {
-      val a = bandSignature64(inc)
-        .toDF("id_new", "sh_new", "band_id", "band_key")
-      val b = bandSignature64(cor)
-        .toDF("id_old", "sh_old", "band_id", "band_key")
-      return a.join(b, Seq("band_id", "band_key"))
-        .select(col("id_new"), col("id_old"),
-          hamming(col("sh_new"), col("sh_old")).as("hamming"))
-        .filter(col("hamming") <= maxHamming)
-        .distinct()
-    }
+    val rule = PairRule.Hamming(maxHamming, bigint = false)
+    if (effectivelyDistinct)
+      return bucketPairs(bandSignature64(inc), bandSignature64(cor), rule,
+        cross = true)
     // same exact-signature collapse as [[signatureCandidates]], cross-set
     // form: the banded join runs once over the distinct signature values
     // of each side; equal signatures across sides meet by 8-byte equi-
@@ -788,13 +688,8 @@ object NearDup {
       .select(col("_sh").as("_id"), col("_sh"))
     val bSig = cor.select(col("_sh")).distinct()
       .select(col("_sh").as("_id"), col("_sh"))
-    val aB = bandSignature64(aSig).toDF("sh_new", "_d1", "band_id", "band_key")
-    val bB = bandSignature64(bSig).toDF("sh_old", "_d2", "band_id", "band_key")
-    val sigPairs = aB.join(bB, Seq("band_id", "band_key"))
-      .select(col("sh_new"), col("sh_old"),
-        hamming(col("sh_new"), col("sh_old")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
+    val sigPairs = bucketPairs(bandSignature64(aSig), bandSignature64(bSig),
+      rule, cross = true).toDF("sh_new", "sh_old", "hamming")
     sigPairs
       .join(inc.select(col("_sh").as("sh_new"), col("_id").as("id_new")),
         "sh_new")
@@ -803,37 +698,13 @@ object NearDup {
       .select(col("id_new"), col("id_old"), col("hamming"))
   }
 
-  private def simHashBucketJoin(banded: DataFrame, maxHamming: Int): DataFrame = {
-    val a = banded.toDF("id_a", "sh_a", "band_id", "band_key")
-    val b = banded.toDF("id_b", "sh_b", "band_id", "band_key")
-    a.join(b, Seq("band_id", "band_key"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        hamming(col("sh_a"), col("sh_b")).as("hamming"))
-      // Hamming-filter BEFORE distinct: hamming is functionally
-      // determined by (id_a, id_b), so the result set is identical, but
-      // the distinct's exchange now carries only surviving pairs
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
-
-  /** Eager variant of [[simHashCandidates]] mirroring
-    * [[minHashCandidatesMaterialized]]: the banded signature relation is
-    * persisted across the self-join so the corpus-wide SimHash pass runs
-    * ONCE instead of once per join side (a lazy self-join executes its
-    * identical build and probe subtrees independently), then released. */
+  /** Eager variant of [[simHashCandidates]]: the SimHash pass runs once
+    * ([[materializedSelfPairs]]). */
   def simHashCandidatesMaterialized(docs: DataFrame, idCol: String,
                                     textCol: String, maxHamming: Int = 8,
-                                    maxRows: Int = 1 << 20): DataFrame = {
-    val banded = simHashBuckets(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // populate the cache BEFORE the self-join: its two subtrees execute
-    // concurrently, and a cold cache would be missed by both — the
-    // signature pass would still run twice
-    banded.count()
-    try materializePairs(simHashBucketJoin(banded, maxHamming), maxRows)
-    finally banded.unpersist()
-  }
+                                    maxRows: Int = 1 << 20): DataFrame =
+    materializedSelfPairs(simHashBuckets(docs, idCol, textCol),
+      PairRule.Hamming(maxHamming, bigint = false), maxRows)
 
   /** Materialize a small candidate-pair set into a [[LocalRelation]]-backed
     * DataFrame. [[jaccardVerify]] references `pairs` three times (two id
@@ -905,10 +776,6 @@ object NearDup {
   private def inIds(c: Column, ids: Array[Long]): Column =
     if (ids.isEmpty) lit(false) else c.isin(ids.map(Long.box).toIndexedSeq: _*)
 
-  /** Exact n-gram Jaccard similarity for given candidate pairs — the
-    * verification stage after LSH (B8→B9), and independently
-    * SQL-expressible for the oracle gate. `pairs` has (id_a, id_b).
-    * Jaccard is computed on DISTINCT shingles. */
   /** EXACT set-similarity self-join via prefix filtering — the
     * AllPairs/PPJoin candidate bound (Bayardo et al. 2007; Xiao et al.
     * 2008), the standard way to get EXACT Jaccard ≥ τ pairs without an
@@ -1150,6 +1017,10 @@ object NearDup {
   def jaccardHof(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
 
+  /** Exact n-gram Jaccard similarity for given candidate pairs — the
+    * verification stage after LSH (B8→B9), and independently
+    * SQL-expressible for the oracle gate. `pairs` has (id_a, id_b).
+    * Jaccard is computed on DISTINCT shingles. */
   def jaccardVerify(docs: DataFrame, idCol: String, textCol: String,
                     pairs: DataFrame, shingleSize: Int = 3): DataFrame = {
     // only shingle the docs that actually appear in a candidate pair —
@@ -1231,9 +1102,11 @@ object NearDup {
     * a 10^9-row corpus wants ~24-28 bits (the bucket id stays one long
     * up to 63 planes). */
   def embeddingCandidates(emb: DataFrame, idCol: String, vecCol: String,
-                          nBits: Int = 8, dim: Int = -1): DataFrame =
-    embeddingBucketJoin(
-      embeddingBuckets(emb, idCol, vecCol, nBits, dim), nBits)
+                          nBits: Int = 8, dim: Int = -1): DataFrame = {
+    val bucketed = embeddingBuckets(emb, idCol, vecCol, nBits, dim)
+    bucketPairs(bucketed, multiprobe(bucketed, nBits), PairRule.AnyKey,
+      cross = false)
+  }
 
   /** The (id, sign-bucket) relation the LSH self-join runs over. `dim`
     * < 0 infers the dimension with a 1-row scan. */
@@ -1244,6 +1117,15 @@ object NearDup {
     emb.select(col(idCol).as("_id"),
       HyperplaneLsh.bucketCol(col(vecCol), ps).as("_bucket"))
   }
+
+  /** A (`_id`, `_bucket`) relation with every row exploded into its own
+    * bucket plus every single-bit flip — the multiprobe side of the
+    * embedding bucket join. */
+  private def multiprobe(bucketed: DataFrame, nBits: Int): DataFrame =
+    bucketed.select(col("_id"),
+      explode(array((col("_bucket") +:
+        (0 until nBits).map(i => col("_bucket").bitwiseXOR(lit(1L << i)))): _*))
+        .as("_bucket"))
 
   /** CROSS-SET embedding candidates — the vector twin of
     * [[minHashCrossCandidates]]: incoming vectors meet EXISTING corpus
@@ -1257,64 +1139,25 @@ object NearDup {
                                nBits: Int = 8, dim: Int = -1): DataFrame = {
     val d = if (dim > 0) dim
       else corpus.select(size(col(vecCol))).first().getInt(0)
-    val a = embeddingBuckets(incoming, idCol, vecCol, nBits, d)
-      .select(col("_id").as("id_new"),
-        explode(array((col("_bucket") +:
-          (0 until nBits).map(i => col("_bucket").bitwiseXOR(lit(1L << i)))): _*))
-          .as("bucket"))
-    val b = embeddingBuckets(corpus, idCol, vecCol, nBits, d)
-      .select(col("_id").as("id_old"), col("_bucket").as("bucket"))
-    // incoming = the micro-batch ((nBits+1) × batch rows of two longs):
-    // size-gated hint, same contract (and same 100 TB rationale) as
-    // minHashCrossCandidates — the corpus bucket projection never
-    // enters an exchange
-    val (ha, hb) = hintSmallerSide(a, b)
-    ha.join(hb, "bucket")
-      .select(col("id_new"), col("id_old"))
-      .distinct()
+    // multiprobe on the INCOMING side: (nBits+1) × batch rows of two
+    // longs, while the corpus bucket relation stays one row per vector
+    bucketPairs(multiprobe(embeddingBuckets(incoming, idCol, vecCol, nBits, d), nBits),
+      embeddingBuckets(corpus, idCol, vecCol, nBits, d),
+      PairRule.AnyKey, cross = true)
   }
 
-  private def embeddingBucketJoin(bucketed: DataFrame, nBits: Int): DataFrame = {
-    val a = bucketed.toDF("id_a", "bucket")
-    val b = bucketed.select(col("_id").as("id_b"),
-      explode(array((col("_bucket") +:
-        (0 until nBits).map(i => col("_bucket").bitwiseXOR(lit(1L << i)))): _*))
-        .as("bucket"))
-    a.join(b, "bucket")
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-  }
-
-  /** Eager variant of [[embeddingCandidates]] mirroring
-    * [[minHashCandidatesMaterialized]]: the bucket projection (full
-    * corpus scan + nBits×dim dot products per vector) is persisted
-    * across the self-join so it runs ONCE instead of once per join
-    * side, then released. */
-  def embeddingCandidatesMaterialized(emb: DataFrame, idCol: String,
-                                      vecCol: String, nBits: Int = 8,
-                                      dim: Int = -1,
-                                      maxRows: Int = 1 << 20): DataFrame = {
-    val bucketed = embeddingBuckets(emb, idCol, vecCol, nBits, dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // populate the cache before the self-join (concurrent subtrees would
-    // both miss a cold cache — same reasoning as the minhash variant)
-    bucketed.count()
-    try materializePairs(embeddingBucketJoin(bucketed, nBits), maxRows)
-    finally bucketed.unpersist()
-  }
-
-  /** [[embeddingCandidatesMaterialized]] over a CALLER-MANAGED bucket
-    * relation — for callers that fold the bucket projection into a larger
-    * cached working set (the declared `near_dup_embed_lsh` query persists
-    * one (id, vec) base frame whose materializing job doubles as the
-    * (count, dim) metadata fetch, then derives buckets from it; a
-    * separate persist here would duplicate the vectors in cache). The
-    * caller is responsible for `bucketed` being cheap to evaluate twice
-    * (cached, or a projection over a cached base). */
+  /** [[embeddingCandidates]], materialized, over a CALLER-MANAGED
+    * (`_id`, `_bucket`) relation — for callers that fold the bucket
+    * projection into a larger cached working set (the declared
+    * `near_dup_embed_lsh` query persists one (id, vec) base frame and
+    * derives buckets from it; a separate persist here would duplicate
+    * the vectors in cache). The caller is responsible for `bucketed`
+    * being cheap to evaluate twice (cached, or a projection over a
+    * cached base). */
   def embeddingCandidatesFromBuckets(bucketed: DataFrame, nBits: Int,
                                      maxRows: Int = 1 << 20): DataFrame =
-    materializePairs(embeddingBucketJoin(bucketed, nBits), maxRows)
+    materializePairs(bucketPairs(bucketed, multiprobe(bucketed, nBits),
+      PairRule.AnyKey, cross = false), maxRows)
 
   /** Exact-cosine verification for candidate pairs — the embedding twin
     * of [[jaccardVerify]]: vectors and norms are fetched only for

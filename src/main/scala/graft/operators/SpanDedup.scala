@@ -375,17 +375,6 @@ object SpanDedup {
     nNew
   }
 
-  /** [[crossStripSpans]] against a PRE-BUILT gram index instead of the
-    * corpus — the per-batch side of the amortized shape: incoming gram
-    * positions probe the index's Bloom as a codegen'd PLAN LITERAL
-    * (a Bloom "no" is definite — the position touches no corpus gram
-    * and never enters the join), and only the might-contain sliver
-    * pays the semi-join against the artifact's key table. EXACT, not
-    * approximate: false positives only route a position into the
-    * confirming join, never mark it. Row-identical to
-    * `crossStripSpans(incoming, corpus, …, hashGrams = true)` on the
-    * corpus the index was built from (asserted in SpanDedupSpec);
-    * the corpus contributes ZERO per-batch work. */
   /** Ceiling on the serialized Bloom a probe may embed as a plan
     * `Literal`: past this the filter ships with EVERY task binary and
     * sits in the driver's plan — at the 10⁹-gram design point (a
@@ -404,6 +393,17 @@ object SpanDedup {
     (String, Long, Long),
     org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]]()
 
+  /** [[crossStripSpans]] against a PRE-BUILT gram index instead of the
+    * corpus — the per-batch side of the amortized shape: incoming gram
+    * positions probe the index's Bloom as a codegen'd PLAN LITERAL
+    * (a Bloom "no" is definite — the position touches no corpus gram
+    * and never enters the join), and only the might-contain sliver
+    * pays the semi-join against the artifact's key table. EXACT, not
+    * approximate: false positives only route a position into the
+    * confirming join, never mark it. Row-identical to
+    * `crossStripSpans(incoming, corpus, …, hashGrams = true)` on the
+    * corpus the index was built from (asserted in SpanDedupSpec);
+    * the corpus contributes ZERO per-batch work. */
   def crossStripSpansIndexed(incoming: DataFrame, idCol: String,
                              textCol: String, indexPath: String,
                              k: Int = 8): DataFrame =

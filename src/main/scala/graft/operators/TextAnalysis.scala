@@ -142,19 +142,6 @@ object TextAnalysis {
       round(folded.getField("best").cast("double") / size(grams), 4))
   }
 
-  /** Gopher-style document quality rules (Rae et al. 2021 §A1.1,
-    * public): word-count bounds, mean-word-length bounds, a minimum
-    * stopword count, and a most-common-word frequency cap — each rule a
-    * per-doc boolean plus the conjunctive verdict. Defaults are
-    * calibrated to the fixture corpus so every rule measurably bites;
-    * production thresholds are the paper's.
-    *
-    * Everything is ONE row-local projection over the token array —
-    * no explode, no join, no shuffle: even the most-common-word count
-    * folds in place (`array_max` over per-distinct-token counts), so
-    * the whole gate runs at scan speed and composes with any admission
-    * chain for free. Docs with zero tokens get null ratios and fail
-    * every ratio rule (the conservative default). */
   /** The four Gopher-rule stat/predicate columns over a text column —
     * shared by [[gopherRules]] (the per-doc report) and [[gopherPass]]
     * (the row-local admission filter). */
@@ -257,6 +244,19 @@ object TextAnalysis {
     coalesce(rWc && rMl && rSt && rTp, lit(false))
   }
 
+  /** Gopher-style document quality rules (Rae et al. 2021 §A1.1,
+    * public): word-count bounds, mean-word-length bounds, a minimum
+    * stopword count, and a most-common-word frequency cap — each rule a
+    * per-doc boolean plus the conjunctive verdict. Defaults are
+    * calibrated to the fixture corpus so every rule measurably bites;
+    * production thresholds are the paper's.
+    *
+    * Everything is ONE row-local projection over the token array —
+    * no explode, no join, no shuffle: even the most-common-word count
+    * folds in place (`array_max` over per-distinct-token counts), so
+    * the whole gate runs at scan speed and composes with any admission
+    * chain for free. Docs with zero tokens get null ratios and fail
+    * every ratio rule (the conservative default). */
   def gopherRules(docs: DataFrame, idCol: String, textCol: String,
                   minWords: Int = 20, maxWords: Int = 80,
                   minMeanLen: Double = 3.9, maxMeanLen: Double = 5.0,
@@ -394,10 +394,6 @@ object TextAnalysis {
         col("lm_bits"))
   }
 
-  /** tf-idf per (doc, word) (B12): tf from one agg, df from a second agg
-    * over the same exploded relation, idf = ln(N/df). The doc-count N is
-    * a 1-row aggregate broadcast into the join — no driver-side
-    * `collect`. Output column `tfidf` rounded to 4 decimals. */
   /** Okapi BM25 relevance of every document against a bag of query
     * terms — the keyword-ranking half of hybrid (keyword + vector)
     * search, and the standard lexical baseline a vector store is
@@ -532,6 +528,10 @@ object TextAnalysis {
         col("_hit._1").as("bm25"), (col("_pos") + 1).cast("long").as("rank"))
   }
 
+  /** tf-idf per (doc, word) (B12): tf from one agg, df from a second agg
+    * over the same exploded relation, idf = ln(N/df). The doc-count N is
+    * a 1-row aggregate broadcast into the join — no driver-side
+    * `collect`. Output column `tfidf` rounded to 4 decimals. */
   def tfIdf(docs: DataFrame, idCol: String, textCol: String,
             corpusN: Option[Double] = None): DataFrame = {
     val tok = docs.select(col(idCol).as("doc_id"),

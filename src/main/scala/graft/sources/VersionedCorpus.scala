@@ -73,9 +73,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      `gen=<N>`. Two claimants of one id: one rename wins, the loser
   *      retries at the next free id. A crash before it leaves staging
   *      garbage ([[cleanStaging]]); after it, an unpublished `gen=`
-  *      orphan no reader sees and [[nextGen]] never reuses.
+  *      orphan no reader sees and [[nextGen]] never reuses; once a
+  *      newer base is committed, [[vacuum]] reclaims it.
   *   2. Bloom sidecar (with [[pinBloom]]): `_manifest/<N>.bloom`. A
-  *      crash after it leaves a sidecar of an unpublished generation.
+  *      crash after it leaves a sidecar of an unpublished generation
+  *      ([[vacuum]] reclaims it with the orphan).
   *      A published generation without one reads as "may contain".
   *   3. manifest rename: `_manifest/<N>.json`, the commit point.
   *   4. tombstone-memo population: driver memory only; a crash loses
@@ -191,25 +193,21 @@ object VersionedCorpus {
   /** Next safe generation id: past every COMMITTED id and every on-disk
     * `gen=` directory, so an orphan directory from a crashed append is
     * never written into again. */
-  private def nextGen(root: String): Long = {
-    val committed = latest(root).getOrElse(-1L)
+  private def nextGen(root: String): Long =
+    math.max(latest(root).getOrElse(-1L),
+      (-1L +: onDiskGens(root)).max) + 1L
+
+  /** Ids of every `gen=` directory under `root`, committed or not. */
+  private def onDiskGens(root: String): Seq[Long] = {
     val rootPath = java.nio.file.Paths.get(root)
-    val onDisk =
-      if (!java.nio.file.Files.isDirectory(rootPath)) -1L
-      else {
-        val stream = java.nio.file.Files.list(rootPath)
-        try {
-          var mx = -1L
-          stream.forEach { p =>
-            val n = p.getFileName.toString
-            if (n.startsWith("gen="))
-              scala.util.Try(n.stripPrefix("gen=").toLong)
-                .foreach(g => mx = math.max(mx, g))
-          }
-          mx
-        } finally stream.close()
-      }
-    math.max(committed, onDisk) + 1L
+    if (!java.nio.file.Files.isDirectory(rootPath)) return Seq.empty
+    import scala.jdk.CollectionConverters._
+    val stream = java.nio.file.Files.list(rootPath)
+    try stream.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("gen="))
+      .flatMap(n => scala.util.Try(n.stripPrefix("gen=").toLong).toOption)
+      .toList
+    finally stream.close()
   }
 
   /** The store's schema contract, pinned at the first commit: every
@@ -1135,12 +1133,13 @@ object VersionedCorpus {
     else Some(sets.flatMap(_.get).distinct)
   }
 
-  /** [[tombMax]] for a MANIFEST-BOUNDED-small tombstone window, read
-    * UNFILTERED from the window's gen dirs (a pred-pruned caller gets
-    * extra never-matching keys — harmless under the equi-join). Gens
-    * already in the per-gen memo (a prior read, or their own commit)
-    * cost nothing; the uncached remainder reads as ONE union job and
-    * back-fills the memo, so a mutation lifecycle that reads the same
+  /** Each key's newest tombstone generation, as a LocalRelation, for a
+    * MANIFEST-BOUNDED-small tombstone window, read UNFILTERED from the
+    * window's gen dirs (a pred-pruned caller gets extra never-matching
+    * keys — harmless under the equi-join). Gens already in the per-gen
+    * memo (a prior read, or their own commit) cost nothing; the
+    * uncached remainder reads as ONE union job and back-fills the
+    * memo, so a mutation lifecycle that reads the same
     * resolution window several times (preimage asOf = the previous
     * refresh's recompute asOf, replica catch-ups, repeated snapshot
     * reads) pays the collect once — or never, when the committer
@@ -1815,26 +1814,30 @@ object VersionedCorpus {
       .flatMap(o => o.rlo.zip(o.rhi))
     all.filter(c => c.kind != "optimize" && packedRanges.exists {
       case (lo, hi) => c.gen >= lo && c.gen <= hi
-    }).foreach { c =>
-      val p = dataDir(root, c.gen)
-      if (java.nio.file.Files.isDirectory(p))
-        org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
-    }
+    }).foreach(c => reclaim(root, c.gen))
   }
 
   /** Delete generation data superseded by the NEWEST base generation
-    * (everything older than it). After vacuum, [[snapshot]] with
-    * `asOf` before that base fails explicitly. Manifests are kept, so
-    * the log still records what existed; only data is reclaimed. No-op
-    * when no base generation exists. */
+    * (everything older than it), with the Bloom sidecars of those
+    * generations. A manifest-less `gen=` directory below that base —
+    * a crashed commit's orphan — goes too: no snapshot reads it, even
+    * if its manifest were published later. After vacuum, [[snapshot]]
+    * with `asOf` before that base fails explicitly. Manifests are kept,
+    * so the log still records what existed. No-op when no base
+    * generation exists. */
   def vacuum(root: String): Unit = {
     val all = commits(root)
     all.filter(_.base).lastOption.foreach { b =>
-      all.filter(_.gen < b.gen).foreach { c =>
-        val p = dataDir(root, c.gen)
-        if (java.nio.file.Files.isDirectory(p))
-          org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
-      }
+      (all.map(_.gen) ++ onDiskGens(root)).distinct
+        .filter(_ < b.gen).foreach(reclaim(root, _))
     }
+  }
+
+  /** Delete generation `gen`'s data directory and Bloom sidecar. */
+  private def reclaim(root: String, gen: Long): Unit = {
+    val p = dataDir(root, gen)
+    if (java.nio.file.Files.isDirectory(p))
+      org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
+    java.nio.file.Files.deleteIfExists(bloomFile(root, gen))
   }
 }

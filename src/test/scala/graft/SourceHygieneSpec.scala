@@ -6,31 +6,44 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps the mains on the one session factory and the one listener:
-  * scans the main sources (reads files only, starts no session) for
-  * session builders outside `GraftSession.scala` and Spark listeners
-  * outside `obs/JobMeter.scala`. Comment lines are skipped. */
+/** Source rules over the main sources (reads files only, starts no
+  * session): session builders only in `GraftSession.scala`, Spark
+  * listeners only in `obs/JobMeter.scala`, one call site each for the
+  * versioned store's commit-file writers and the near-dup closer's
+  * broadcast hint, and no orphaned scaladoc. [[hits]] skips comment
+  * lines. */
 class SourceHygieneSpec extends AnyFunSuite {
   private val mainRoot = Paths.get("src", "main", "scala")
 
   /** (file relative to the main root, line number, line) of every code
     * line matching `pattern`. */
-  private def hits(pattern: scala.util.matching.Regex): Seq[(String, Int, String)] = {
-    assert(Files.isDirectory(mainRoot), s"no main sources at ${mainRoot.toAbsolutePath}")
-    val walk = Files.walk(mainRoot)
-    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-    finally walk.close()
+  private def hits(pattern: scala.util.matching.Regex): Seq[(String, Int, String)] =
     for {
-      f <- files.sortBy(_.toString)
+      f <- mainFiles
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
       t = line.trim
       if !t.startsWith("//") && !t.startsWith("*") && !t.startsWith("/*")
       if pattern.findFirstIn(line).isDefined
     } yield (rel(f), i + 1, t)
+
+  private def mainFiles: List[Path] = {
+    assert(Files.isDirectory(mainRoot), s"no main sources at ${mainRoot.toAbsolutePath}")
+    val walk = Files.walk(mainRoot)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .toList.sortBy(_.toString)
+    finally walk.close()
   }
 
   private def rel(f: Path): String =
     mainRoot.relativize(f).toString.replace('\\', '/')
+
+  /** The member def (of a top-level object) enclosing line `lineNo`
+    * (1-based) of main source `file`. */
+  private def enclosingDef(file: String, lineNo: Int): String =
+    Files.readAllLines(mainRoot.resolve(file)).asScala.zipWithIndex
+      .collect { case (l, i) if i + 1 < lineNo &&
+        """^  (private(\[\w+\])?\s+)?def\s""".r.findFirstIn(l).isDefined => l.trim }
+      .last
 
   test("SparkSession.builder appears only in GraftSession") {
     val found = hits("""SparkSession\s*\.\s*builder""".r)
@@ -46,19 +59,39 @@ class SourceHygieneSpec extends AnyFunSuite {
 
   test("the versioned store's commit files are written only by its publish step") {
     val store = "graft/sources/VersionedCorpus.scala"
-    val lines = Files.readAllLines(mainRoot.resolve(store)).asScala
-    val defs = lines.zipWithIndex.collect {
-      case (l, i) if """^\s*(private\s+)?def\s""".r.findFirstIn(l).isDefined =>
-        (i + 1, l.trim)
-    }
     for (name <- Seq("claimGen", "writeBloom", "writeManifest")) {
       val calls = hits(s"""\\b$name\\(""".r)
         .filterNot(_._3.contains(s"def $name("))
       assert(calls.size === 1 && calls.head._1 === store,
         s"$name( must be called from one place:\n" + calls.mkString("\n"))
-      val enclosing = defs.filter(_._1 < calls.head._2).last._2
+      val enclosing = enclosingDef(store, calls.head._2)
       assert(enclosing.startsWith("private def publish("),
         s"$name( is called from `$enclosing`, not the publish step")
     }
+  }
+
+  test("every near-dup bucket join closes through NearDup.bucketPairs") {
+    val calls = hits("""\bhintSmallerSide\(""".r)
+      .filterNot(_._3.contains("def hintSmallerSide("))
+    assert(calls.size === 1 && calls.head._1 === "graft/operators/NearDup.scala",
+      "hintSmallerSide( must be called from one place:\n" + calls.mkString("\n"))
+    val enclosing = enclosingDef(calls.head._1, calls.head._2)
+    assert(enclosing.startsWith("private[graft] def bucketPairs("),
+      s"hintSmallerSide( is called from `$enclosing`, not the shared closer")
+  }
+
+  test("no scaladoc block is directly followed by another one") {
+    // Scaladoc attaches only the LAST of two stacked blocks; the first
+    // is silently orphaned
+    val orphans = for {
+      f <- mainFiles
+      lines = Files.readAllLines(f).asScala.map(_.trim).toIndexedSeq
+      (l, i) <- lines.zipWithIndex
+      if l.startsWith("/**")
+      end = lines.indexWhere(_.contains("*/"), i)
+      next = lines.indexWhere(_.nonEmpty, end + 1)
+      if end >= 0 && next >= 0 && lines(next).startsWith("/**")
+    } yield s"${rel(f)}:${i + 1}"
+    assert(orphans.isEmpty, "orphaned scaladoc blocks:\n" + orphans.mkString("\n"))
   }
 }

@@ -293,6 +293,52 @@ class NearDupSpec extends AnyFunSuite {
     assert(cross.nonEmpty, "fixture must produce at least one cross pair")
   }
 
+  test("cross ≡ self restricted to cross pairs: {MinHash, SimHash, winnow} × {xxhash, poly}") {
+    import org.apache.spark.sql.DataFrame
+    val fixture = graft.Tables.load(spark, graft.TestSpark.sf0001, "documents")
+      .select($"doc_id", $"text")
+    val split = 250L
+    // the closed-form twins' cross form: their per-doc relation on each
+    // side, joined by the shared closer
+    def polyCross(rel: DataFrame => DataFrame, rule: NearDup.PairRule)(
+        i: DataFrame, c: DataFrame): DataFrame =
+      NearDup.bucketPairs(rel(i), rel(c), rule, cross = true)
+    // (family/hash, self generator, cross generator over id-disjoint sides)
+    val cases: Seq[(String, DataFrame => DataFrame,
+        (DataFrame, DataFrame) => DataFrame)] = Seq(
+      ("minhash/xxhash", NearDup.minHashCandidates(_, "doc_id", "text"),
+        NearDup.minHashCrossCandidates(_, _, "doc_id", "text")),
+      ("simhash/xxhash",
+        NearDup.simHashCandidates(_, "doc_id", "text", maxHamming = 12),
+        NearDup.simHashCrossCandidates(_, _, "doc_id", "text", maxHamming = 12)),
+      ("winnow/xxhash", NearDup.winnowCandidates(_, "doc_id", "text"),
+        NearDup.winnowCrossCandidates(_, _, "doc_id", "text")),
+      ("minhash/poly", NearDup.minHashPolyCandidates(_, "doc_id", "text"),
+        polyCross(NearDup.minHashPolyBanded(_, "doc_id", "text"),
+          NearDup.PairRule.AnyKey)),
+      ("simhash/poly", NearDup.simHashPolyCandidates(_, "doc_id", "text"),
+        polyCross(NearDup.simHashPolyBanded(_, "doc_id", "text"),
+          NearDup.PairRule.Hamming(2, bigint = true))),
+      ("winnow/poly", NearDup.winnowPolyCandidates(_, "doc_id", "text"),
+        polyCross(NearDup.winnowPolyFps(_, "doc_id", "text"),
+          NearDup.PairRule.MinShared(2))))
+    for ((name, self, cross) <- cases) {
+      val full = self(fixture)
+      val x = cross(fixture.filter($"doc_id" >= split),
+        fixture.filter($"doc_id" < split))
+      // same payload columns and types (hamming INT vs BIGINT per hash)
+      assert(x.schema.map(_.dataType) === full.schema.map(_.dataType), name)
+      val got = x.collect().map(_.toSeq).toSet
+      assert(got.forall(r => r(0).asInstanceOf[Long] >= split &&
+        r(1).asInstanceOf[Long] < split), s"$name: cross-set only")
+      // self pairs carry id_a < id_b: a straddling pair is (old, new, …)
+      val want = full.collect().map(_.toSeq).toSet.filter(r =>
+        (r(0).asInstanceOf[Long] < split) != (r(1).asInstanceOf[Long] < split))
+      assert(got.map(r => r(1) +: r(0) +: r.drop(2)) === want, name)
+      assert(got.nonEmpty, s"$name: fixture must produce a cross pair")
+    }
+  }
+
   test("embeddingCrossCandidates: identical cross vector collides; cross-set only") {
     val v = Array.tabulate(16)(i => math.sin(i + 1).toFloat)
     val w = Array.tabulate(16)(i => math.cos(3 * i + 2).toFloat)

@@ -1220,13 +1220,12 @@ class VersionedCorpusSpec extends AnyFunSuite {
     assert(memo(7L) === Some(Set(8L, 30L)))
   }
 
-  test("crash inside the fused CDC commit: the upsert half alone is visible, replay converges") {
-    // applyChanges publishes its upsert generation, then claims and
-    // publishes its delete generation; a crash after the delete claim
-    // and before its manifest rename is simulated by removing that
-    // manifest. Readers must see exactly the upsert half; replaying the
-    // batch must converge to the full model, and replaying it again
-    // must change nothing.
+  /** A Bloom-pinned store crashed inside the fused CDC commit: the
+    * batch's delete generation was claimed (and got its sidecar) but
+    * its manifest rename never happened — simulated by removing that
+    * manifest. Returns (root, batch, delete gen, upsert-half model,
+    * full-batch model). */
+  private def crashedCdcStore() = {
     val root = freshRoot()
     VersionedCorpus.append(docs(0 until 10, "v1"), root)
     VersionedCorpus.pinKey(root, "doc_id")
@@ -1241,23 +1240,66 @@ class VersionedCorpusSpec extends AnyFunSuite {
     Files.delete(java.nio.file.Paths.get(root, "_manifest", s"$gD.json"))
     val base = (0L until 10L).map(i => i -> s"v1 text number $i").toMap
     val upserted = base ++ ups.map(i => i -> s"u text number $i")
-    val full = upserted -- dels
-    def check(model: Map[Long, String], what: String): Unit = {
-      val snap = VersionedCorpus.snapshot(spark, root)
-        .select("doc_id", "text").as[(Long, String)].collect()
-      assert(snap.toMap === model && snap.length === model.size, what)
-      for (k <- Seq(0L, 3L, 5L, 6L, 9L, 20L, 21L)) {
-        val got = VersionedCorpus.lookupKey(spark, root, k)
-          .select("doc_id", "text").as[(Long, String)].collect().toSeq
-        assert(got === model.get(k).map(k -> _).toSeq, s"$what: key $k")
-      }
+    (root, batch, gD, upserted, upserted -- dels)
+  }
+
+  /** `snapshot` and pruned `lookupKey` reads of `root` equal `model`. */
+  private def checkModel(root: String, model: Map[Long, String],
+                         what: String): Unit = {
+    val snap = VersionedCorpus.snapshot(spark, root)
+      .select("doc_id", "text").as[(Long, String)].collect()
+    assert(snap.toMap === model && snap.length === model.size, what)
+    for (k <- Seq(0L, 3L, 5L, 6L, 9L, 20L, 21L, 30L, 41L)) {
+      val got = VersionedCorpus.lookupKey(spark, root, k)
+        .select("doc_id", "text").as[(Long, String)].collect().toSeq
+      assert(got === model.get(k).map(k -> _).toSeq, s"$what: key $k")
     }
-    check(upserted, "after the crash")
+  }
+
+  test("crash inside the fused CDC commit: the upsert half alone is visible, replay converges") {
+    // readers must see exactly the upsert half; replaying the batch must
+    // converge to the full model, and replaying it again must change
+    // nothing
+    val (root, batch, gD, upserted, full) = crashedCdcStore()
+    checkModel(root, upserted, "after the crash")
     val (rU, rD) = VersionedCorpus.applyChanges(batch, root, "doc_id", "op", "seq")
     assert(rU > gD && rD === rU + 1L, "replay must not reuse the claimed id")
-    check(full, "after the replay")
+    checkModel(root, full, "after the replay")
     VersionedCorpus.applyChanges(batch, root, "doc_id", "op", "seq")
-    check(full, "after a second replay")
+    checkModel(root, full, "after a second replay")
+  }
+
+  test("vacuum reclaims crash orphans and the Bloom sidecars of every generation it deletes") {
+    // the crash window above (gen=gD is a manifest-less orphan with a
+    // sidecar), then replay → compact → vacuum; then optimize →
+    // vacuumPacked over a tail of small appends
+    val (root, batch, gD, _, full) = crashedCdcStore()
+    val mdir = java.nio.file.Paths.get(root, "_manifest")
+    assert(Files.exists(mdir.resolve(s"$gD.bloom")), "the orphan has a sidecar")
+    VersionedCorpus.applyChanges(batch, root, "doc_id", "op", "seq")
+    val base = VersionedCorpus.compact(spark, root)
+    VersionedCorpus.vacuum(root)
+    def names(dir: java.nio.file.Path): Set[String] = {
+      val st = Files.list(dir)
+      try st.iterator().asScala.map(_.getFileName.toString).toSet
+      finally st.close()
+    }
+    val dataGens = names(java.nio.file.Paths.get(root))
+      .filter(_.startsWith("gen=")).map(_.stripPrefix("gen=").toLong)
+    assert(dataGens === Set(base), s"vacuum left data dirs $dataGens")
+    val sidecars = names(mdir).filter(_.endsWith(".bloom"))
+      .map(_.stripSuffix(".bloom").toLong)
+    assert(sidecars.forall(_ >= base), s"vacuum left sidecars $sidecars")
+    checkModel(root, full, "after vacuum")
+    val run = Seq(30 until 35, 35 until 40, 40 until 42).map(r =>
+      VersionedCorpus.append(docs(r, "t"), root))
+    assert(VersionedCorpus.optimize(spark, root).size === 1)
+    VersionedCorpus.vacuumPacked(root)
+    val left = names(mdir)
+    assert(run.forall(g => !left.contains(s"$g.bloom")),
+      s"vacuumPacked left sidecars ${left.toSeq.sorted}")
+    checkModel(root, full ++ (30L until 42L).map(i => i -> s"t text number $i"),
+      "after vacuumPacked")
   }
 
   test("store rebuilt at the SAME path: snapshots reflect the new store, never the dead one's tombstones") {
