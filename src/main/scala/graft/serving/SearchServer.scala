@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * (reference `app.py:60-96`: a Streamlit loop holding a cached corpus,
   * answering search queries and accepting appends) re-expressed as a
   * serve loop over the engine: one [[graft.VectorDb]] held for the
-  * process lifetime (the `@st.cache_resource` analog — corpus cached
+  * process lifetime (the `@st.cache_resource` analog — corpus loaded
   * once, reused by every request, `app.py:13-14`), fronted by the
   * JDK's built-in HTTP server (zero dependencies).
   *
@@ -23,20 +23,16 @@ import org.apache.spark.sql.SparkSession
   *     document content into access logs. Query params are still
   *     accepted for curl-friendliness, body fields win on conflict.
   *
-  * Architecture note for a cluster: this loop is the DRIVER-side front
-  * of a long-lived SparkSession — each request is one Spark action over
-  * the cached corpus (broadcast-sized probe against a distributed
-  * table). The same seam is where a Spark Connect client would attach;
-  * the HTTP layer is deliberately thin so swapping the transport
-  * changes no engine code. Mutations serialize through the VectorDb
-  * handle (its corpus swap is `@volatile`; `add` keeps the
-  * read-mostly path lock-free).
+  * Requests are answered on the driver from the VectorDb's resident
+  * snapshot: `/search`, `/add` and `/count` run no Spark job; only
+  * `/load` reads through Spark. Writers serialize on the VectorDb's own
+  * lock; readers never block. The HTTP layer is deliberately thin, so
+  * swapping the transport changes no engine code.
   *
-  * Every request runs on the caller's session (the one `db` reads
-  * through). Maintenance actions elsewhere in the process run their
-  * gated actions on gate sessions ([[graft.PlanGate]]) and never write
-  * this session's conf, so a search always plans with the session's
-  * own settings.
+  * Replies leave with TCP_NODELAY (`sun.net.httpserver.nodelay`, set in
+  * [[start]] unless already set): the JDK server writes a reply's
+  * headers and body as two segments, and under Nagle the body waits for
+  * the client's delayed ACK, about 40 ms per reply.
   *
   * Port 0 binds an ephemeral port (tests); [[boundPort]] reports it.
   * Binds LOOPBACK by default: `/load` points the driver at filesystem
@@ -152,8 +148,7 @@ final class SearchServer(spark: SparkSession, db: graft.VectorDb,
       (ex.getRequestMethod, path) match {
         case ("GET", "/health") => respond(ex, 200, """{"status":"ok"}""")
         case ("GET", "/count") =>
-          respond(ex, 200,
-            s"""{"count":${db.table.count()}}""")
+          respond(ex, 200, s"""{"count":${db.count}}""")
         case ("GET", "/search") =>
           val p = queryParams(ex)
           p.get("q") match {
@@ -164,12 +159,11 @@ final class SearchServer(spark: SparkSession, db: graft.VectorDb,
               if (k < 1 || k > 1000)
                 respond(ex, 400, """{"error":"k must be in [1,1000]"}""")
               else {
-                val rows = db.search(q, k).collect()
-                val items = rows.map { r =>
-                  s"""{"chunk_id":${r.getLong(0)},""" +
-                    s""""chunk_text":"${jsonEscape(r.getString(1))}",""" +
+                val items = db.hits(q, k).map { h =>
+                  s"""{"chunk_id":${h.chunkId},""" +
+                    s""""chunk_text":"${jsonEscape(h.text)}",""" +
                     s""""similarity":${"%.4f".formatLocal(
-                      java.util.Locale.ROOT, r.getDouble(2))}}"""
+                      java.util.Locale.ROOT, h.sim)}}"""
                 }.mkString("[", ",", "]")
                 respond(ex, 200,
                   s"""{"query":"${jsonEscape(q)}","results":$items}""")
@@ -179,9 +173,7 @@ final class SearchServer(spark: SparkSession, db: graft.VectorDb,
           withBody(ex) { p =>
             (p.get("id").flatMap(_.toLongOption), p.get("text")) match {
               case (Some(id), Some(text)) if text.nonEmpty =>
-                // serialize writers; readers stay lock-free on the
-                // volatile corpus handle
-                db.synchronized { db.add(id, text) }
+                db.add(id, text)
                 respond(ex, 200, s"""{"count":${db.count}}""")
               case _ =>
                 respond(ex, 400,
@@ -192,7 +184,7 @@ final class SearchServer(spark: SparkSession, db: graft.VectorDb,
           // the reference UI's whole-table replace verb (app.py:145-152,
           // the uploader path): swap the served corpus for the file at
           // `path` (the A7 semantics, VectorDb.load). Searches in flight
-          // keep reading the old volatile handle; the swap is atomic.
+          // keep reading the old snapshot; the swap is atomic.
           withBody(ex) { p =>
             p.get("path").filter(_.nonEmpty) match {
               case None =>
@@ -201,7 +193,7 @@ final class SearchServer(spark: SparkSession, db: graft.VectorDb,
                 respond(ex, 403,
                   """{"error":"path outside the configured load roots"}""")
               case Some(path) =>
-                scala.util.Try(db.synchronized { db.load(path) }) match {
+                scala.util.Try(db.load(path)) match {
                   case scala.util.Success(_) =>
                     respond(ex, 200, s"""{"count":${db.count}}""")
                   case scala.util.Failure(e) =>
@@ -221,14 +213,17 @@ final class SearchServer(spark: SparkSession, db: graft.VectorDb,
   /** Bind and start serving. Non-blocking — the JDK server runs on its
     * own executor; call [[stop]] (or let the JVM exit) to end it. */
   def start(): this.type = {
+    // the JDK reads this once per JVM, when the first server is created
+    // (sun.net.httpserver.ServerConfig), so it is set before `create`;
+    // an explicit setting of the deployment is kept
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
     server = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress(host, port), 0)
     server.createContext("/", (ex: com.sun.net.httpserver.HttpExchange) =>
       handle(ex))
-    // small fixed pool: each request is a driver-side Spark action, and
-    // local-mode actions already parallelize across the executor
-    // threads — request concurrency beyond a few just queues in Spark's
-    // scheduler anyway
+    // small fixed pool: a search already spreads its scoring over the
+    // cores, so more request threads would only contend for them
     server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
     server.start()
     this

@@ -121,6 +121,31 @@ class SearchSpec extends AnyFunSuite {
     assert(joined.count === 4)
   }
 
+  test("topK orders a NaN score first and NULL scores (null, ragged vectors) last") {
+    // the ordering the served corpus must reproduce: round(NaN) is NaN,
+    // which Spark sorts above every number, while a NULL vector or a
+    // length mismatch scores NULL and desc() puts NULL after all numbers,
+    // ties (NULLs included) broken on the id
+    val odd = Seq[(Long, Array[Float])](
+      (1L, Array(1.0f, 0.0f)),
+      (2L, Array(0.0f, 1.0f)),
+      (3L, null),
+      (4L, Array(1.0f, 0.0f, 0.0f)),
+      (5L, Array(Float.NaN, 0.0f)),
+      (6L, Array(2.0f, 0.0f)),
+      (7L, Array(0.5f, 0.0f))
+    ).toDF("vec_id", "embedding")
+    val got = Search.topK(odd, "embedding", "vec_id", Seq(1.0, 0.0), k = 7)
+      .select($"vec_id", $"sim".cast("string")).as[(Long, String)]
+      .collect().toSeq
+    assert(got === Seq((5L, "NaN"), (6L, "2.0"), (1L, "1.0"), (7L, "0.5"),
+      (2L, "0.0"), (3L, null), (4L, null)))
+    // with fewer scorable rows than k, NULL-scored rows fill the tail
+    assert(Search.topK(odd.filter($"vec_id" >= 3), "embedding", "vec_id",
+      Seq(1.0, 0.0), k = 5).select("vec_id").as[Long].collect().toSeq
+      === Seq(5L, 6L, 7L, 3L, 4L))
+  }
+
   test("scored does not mutate the input relation (fix of app.py:45)") {
     val before = corpus.columns.toSeq
     Search.scored(corpus, "embedding", Seq(1.0, 0.0)).collect()

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class SearchServerSpec extends AnyFunSuite {
   private lazy val spark = graft.TestSpark.spark
 
-  private def get(port: Int, pathAndQuery: String): (Int, String) = {
-    val client = java.net.http.HttpClient.newHttpClient()
+  private def get(port: Int, pathAndQuery: String,
+                  client: java.net.http.HttpClient =
+                    java.net.http.HttpClient.newHttpClient()): (Int, String) = {
     val req = java.net.http.HttpRequest.newBuilder()
       .uri(java.net.URI.create(s"http://127.0.0.1:$port$pathAndQuery"))
       .GET().build()
@@ -79,8 +80,8 @@ class SearchServerSpec extends AnyFunSuite {
   test("a search issued during an open conf scope sees default knobs") {
     // a maintenance action's gated body (AQE off, shuffle width capped)
     // runs on a gate session: the serving session's conf is never
-    // written, so a search issued while the body is open plans with
-    // the session's own settings
+    // written. A search issued while the body is open answers from the
+    // driver-resident corpus, so it runs no query and no job at all
     import spark.implicits._
     val e = graft.functions.Embedder.default
     val dir = java.nio.file.Files.createTempDirectory("srv-iso").toString + "/c"
@@ -90,42 +91,119 @@ class SearchServerSpec extends AnyFunSuite {
     ).toDF("chunk_id", "document_id", "chunk_text", "vector_embedding"), dir)
     val db = graft.VectorDb.open(spark, Some(dir))
     val srv = new SearchServer(spark, db, port = 0).start()
-    // every collect the server runs reports the session that executed it
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.execution.QueryExecution]()
+    // every query execution reported on the caller session
+    val executions = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(fn: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit = if (fn == "collect") seen.add(qe)
+          ns: Long): Unit = executions.incrementAndGet()
       override def onFailure(fn: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
-          ex: Exception): Unit = ()
+          ex: Exception): Unit = executions.incrementAndGet()
     }
+    val meter = graft.obs.JobMeter.install(spark)
     try {
       val port = srv.boundPort
       val steady = spark.conf.getAll
-      graft.sources.VersionedCorpus.withAqeOff(spark) { gate =>
+      val jobs = graft.sources.VersionedCorpus.withAqeOff(spark) { gate =>
         // the gate is OPEN on its own session…
         assert(gate.conf.get("spark.sql.adaptive.enabled") === "false")
         assert(gate.conf.get("spark.sql.shuffle.partitions").toInt <= 4)
         // …the caller's conf is untouched, and a live search succeeds
-        // with correct results on a plan built with the steady conf
+        // with correct results
         assert(spark.conf.getAll === steady)
         spark.listenerManager.register(listener)
-        val (sc, body) = get(port, "/search?q=alpha%20beta&k=1")
-        assert(sc === 200 && body.contains(""""chunk_id":1"""), body)
-        org.apache.spark.sql.graftshim.Bridge.drainListenerBus(
-          spark.sparkContext)
+        val (_, _, counts) = meter.measure {
+          val (sc, body) = get(port, "/search?q=alpha%20beta&k=1")
+          assert(sc === 200 && body.contains(""""chunk_id":1"""), body)
+        }
+        counts.jobs
       }
-      assert(!seen.isEmpty, "the search's collect was not reported")
-      seen.forEach { qe =>
-        assert(qe.sparkSession eq spark)
-        assert(qe.sparkSession.conf.getAll === steady)
-      }
+      assert(executions.get === 0, "the search ran a query execution")
+      assert(jobs === 0, "the search ran a Spark job")
+      assert(spark.conf.getAll === steady)
     } finally {
       spark.listenerManager.unregister(listener)
+      spark.sparkContext.removeSparkListener(meter)
       srv.stop()
     }
+  }
+
+  test("/search skips unscorable rows: a NULL or ragged vector is never a hit") {
+    // the Search.topK ordering puts NULL scores last, so with fewer
+    // scorable rows than k they reached the reply and broke its render
+    val dir = java.nio.file.Files.createTempDirectory("srv-null").toString
+    val e = graft.functions.Embedder.default
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(dir, "part-00000.csv"),
+      ("chunk_id,document_id,chunk_text,vector_embedding\n" +
+        s"1,d1,alpha beta,\"${e.embed("alpha beta").mkString(",")}\"\n" +
+        "2,d1,no vector,\n" +
+        "3,d1,ragged,\"0.5,0.5\"\n").getBytes("UTF-8"))
+    val db = graft.VectorDb.open(spark, Some(dir))
+    val srv = new SearchServer(spark, db, port = 0).start()
+    try {
+      val port = srv.boundPort
+      assert(get(port, "/count") === ((200, """{"count":3}""")))
+      val (sc, body) = get(port, "/search?q=alpha%20beta&k=5")
+      assert(sc === 200, body)
+      assert(body.contains(""""chunk_id":1,"""), body)
+      assert(!body.contains(""""chunk_id":2,""") &&
+        !body.contains(""""chunk_id":3,"""), body)
+      assert(db.search("alpha beta", 5).count() === 1)
+    } finally srv.stop()
+  }
+
+  test("after load, /search, /add, /count and /health run no Spark job") {
+    import spark.implicits._
+    val e = graft.functions.Embedder.default
+    val dir = java.nio.file.Files.createTempDirectory("srv-nojob").toString + "/c"
+    graft.sources.EmbeddingCsv.write(Seq(
+      (1L, "d1", "distributed query engine", e.embed("distributed query engine")),
+      (2L, "d1", "garden flowers bloom", e.embed("garden flowers bloom")),
+      (3L, "d2", "columnar storage scan", e.embed("columnar storage scan"))
+    ).toDF("chunk_id", "document_id", "chunk_text", "vector_embedding"), dir)
+    val db = graft.VectorDb.open(spark, Some(dir))
+    val srv = new SearchServer(spark, db, port = 0).start()
+    val meter = graft.obs.JobMeter.install(spark)
+    try {
+      val port = srv.boundPort
+      val (_, _, counts) = meter.measure {
+        (0 until 100).foreach { i =>
+          val (sc, body) = i % 4 match {
+            case 0 => get(port, s"/search?q=query%20engine%20$i&k=3")
+            case 1 => post(port, "/add", s"id=${100 + i}&text=added%20doc%20$i")
+            case 2 => get(port, "/count")
+            case _ => get(port, "/health")
+          }
+          assert(sc === 200, body)
+        }
+      }
+      assert(counts.jobs === 0, s"$counts")
+      assert(get(port, "/count") === ((200, """{"count":28}""")))
+    } finally {
+      spark.sparkContext.removeSparkListener(meter)
+      srv.stop()
+    }
+  }
+
+  test("replies are not held back by Nagle: 50 keep-alive /health in under 1 s") {
+    // the JDK server writes the headers and the body as two segments;
+    // with Nagle on, the body waits for the client's delayed ACK (about
+    // 40 ms a reply, about 2 s for 50)
+    val db = new graft.VectorDb(spark)
+    val srv = new SearchServer(spark, db, port = 0).start()
+    try {
+      val port = srv.boundPort
+      val keepAlive = java.net.http.HttpClient.newBuilder()
+        .version(java.net.http.HttpClient.Version.HTTP_1_1).build()
+      def health() = assert(get(port, "/health", keepAlive)._1 === 200)
+      (0 until 5).foreach(_ => health())
+      val t0 = System.nanoTime()
+      (0 until 50).foreach(_ => health())
+      val s = (System.nanoTime() - t0) / 1e9
+      assert(s < 1.0, f"50 keep-alive requests took $s%.2f s")
+    } finally srv.stop()
   }
 
   test("serving with the REAL transformer + file vocabulary: model-embedded search and add over HTTP") {
