@@ -1270,7 +1270,7 @@ object Queries
     s.createDataFrame(java.util.Arrays.asList(built._2: _*), built._3)
   }
 
-  private def fixedSlice(s: SparkSession, dir: String): DataFrame =
+  private[graft] def fixedSlice(s: SparkSession, dir: String): DataFrame =
     T(s, dir, "documents").filter(col("doc_id") < 2000)
 
   private[graft] def sharedPolyMinhashBanded(s: SparkSession,

@@ -224,259 +224,56 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       "incremental winnowing near-dup under the closed-form hash: cross-set fingerprint buckets, full DuckDB replay"),
 
     "incr_admit_fixed" -> DeclaredQuery(
-      // incr_admit's ORACLE TWIN — the FULL admission VERDICT under the
-      // closed-form hash: the same two-tier chain as Dedup.admitIncoming
-      // (exact-fingerprint anti-join, cross-set banded candidates over
-      // the exact-tier survivors, 3-gram Jaccard verify ≥ 0.8, final
-      // anti-join, per-lang rollup) with the seeded MinHash swapped for
-      // the polynomial hash, so the admit/reject decision itself — not
-      // just the candidate tier (incr_near_dup_fixed) — is replayed
-      // byte-exactly by one static DuckDB query. The banded relation is
-      // the shared maintained memo; restricting it to the exact-tier
-      // survivors ≡ banding the survivors (signatures are per-doc).
-      (s, dir) => {
-        val docs = T(s, dir, "documents").filter(col("doc_id") < 2000)
-        val incoming = docs.filter(col("doc_id") >= 250)
-        val corpus = docs.filter(col("doc_id") < 250)
-        // the exact-tier survivors land driver-side ONCE (batch-bounded
-        // by the twin's fixture slice; localizeBatch's persist fallback
-        // covers anything bigger): every downstream reference — the
-        // banded semi-join against the LocalRelation memo, the reject
-        // anti-join, the rollup — then rides LocalRelations, whose
-        // broadcast builds submit NO job (LocalTableScan.executeCollect
-        // is driver-side), cutting the row's scheduler-floor jobs
-        val exactKept = Dedup.localizeBatch(Dedup.incrementalExact(incoming,
-          Dedup.tokenFingerprint(col("text")),
-          corpus, Dedup.tokenFingerprint(col("text"))))
-        val banded = sharedPolyMinhashBanded(s, dir)
-        val cands = NearDup.materializePairs(
-          NearDup.bucketPairs(
-            banded.join(exactKept.select(col("doc_id").as("_id")),
-              Seq("_id"), "left_semi"),
-            banded.filter(col("_id") < 250),
-            NearDup.PairRule.AnyKey, cross = true)
-            .select(col("id_new").as("id_a"), col("id_old").as("id_b")))
-        val rejected = NearDup.jaccardVerify(docs, "doc_id", "text", cands)
-          .filter(col("jaccard") >= 0.8)
-          .select(col("id_a").as("doc_id"))
-        // candidate-bounded reject set -> literal NOT-IN filter (zero
-        // broadcast-build jobs), same as the production kernel's tail
-        localFrameOrdered(
-          Dedup.antiByLocalIds(exactKept, rejected, "doc_id")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n_admitted"),
-              min(col("doc_id")).as("first_id")), "lang")
-      },
+      // incr_admit's ORACLE TWIN — the full admission verdict, replayed
+      // byte-exactly by one static DuckDB query: the production kernel
+      // under the closed-form hash (the shared poly-banded memo)
+      (s, dir) => admitRow(fixedSlice(s, dir), polyMemoBuckets(s, dir)),
       Some(incrAdmitFixedOracleSql),
       "two-tier admission verdict under the closed-form hash: exact tier + banded cross candidates + Jaccard verify + anti-join, full DuckDB replay"),
 
     "incr_gated_admit_fixed" -> DeclaredQuery(
-      // incr_gated_admit's ORACLE TWIN — Dedup.gateAndAdmit's verdict
-      // under the closed-form hash: the row-local Gopher gate runs
-      // FIRST (quality rejects never pay the dedup tiers — the same
-      // ingestion order as the production row), then the incr_admit
-      // chain above on the survivors. With the gate's arithmetic
-      // already oracle-certified row-local (q_gopher_rules), this row
-      // certifies the GATED COMPOSITION end-to-end.
+      // incr_gated_admit's ORACLE TWIN — Dedup.gateAndAdmit under the
+      // closed-form hash (the shared poly-banded memo). With the gate's
+      // arithmetic already oracle-certified row-local (q_gopher_rules),
+      // this row certifies the GATED COMPOSITION end-to-end.
       (s, dir) => {
-        val docs = T(s, dir, "documents").filter(col("doc_id") < 2000)
-        val incoming = docs.filter(col("doc_id") >= 250)
-          .filter(TextAnalysis.gopherPass(col("text")))
-        val corpus = docs.filter(col("doc_id") < 250)
-        // exact-tier survivors driver-local (see incr_admit_fixed)
-        val exactKept = Dedup.localizeBatch(Dedup.incrementalExact(incoming,
-          Dedup.tokenFingerprint(col("text")),
-          corpus, Dedup.tokenFingerprint(col("text"))))
-        val banded = sharedPolyMinhashBanded(s, dir)
-        val cands = NearDup.materializePairs(
-          NearDup.bucketPairs(
-            banded.join(exactKept.select(col("doc_id").as("_id")),
-              Seq("_id"), "left_semi"),
-            banded.filter(col("_id") < 250),
-            NearDup.PairRule.AnyKey, cross = true)
-            .select(col("id_new").as("id_a"), col("id_old").as("id_b")))
-        val rejected = NearDup.jaccardVerify(docs, "doc_id", "text", cands)
-          .filter(col("jaccard") >= 0.8)
-          .select(col("id_a").as("doc_id"))
-        // candidate-bounded reject set -> literal NOT-IN filter (zero
-        // broadcast-build jobs), same as the production kernel's tail
-        localFrameOrdered(
-          Dedup.antiByLocalIds(exactKept, rejected, "doc_id")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n_admitted"),
-              min(col("doc_id")).as("first_id")), "lang")
+        val docs = fixedSlice(s, dir)
+        Dedup.withAdmissionScope(admittedPerLang(Dedup.gateAndAdmit(
+          docs.filter(col("doc_id") >= 250), docs.filter(col("doc_id") < 250),
+          "doc_id", "text", buckets = polyMemoBuckets(s, dir))))
       },
       Some(incrGatedAdmitFixedOracleSql),
       "quality-gated admission verdict under the closed-form hash: Gopher gate + two-tier admission, full DuckDB replay"),
 
     "incr_admit_seq_fixed" -> DeclaredQuery(
-      // incr_admit_seq's ORACLE TWIN — the TWO-DAY evolving admission
-      // under the closed-form hash: day 1 (250 ≤ id < 375) admits
-      // against the corpus (< 250); day 2 (id ≥ 375) admits against
-      // corpus ∪ DAY-1 ADMISSIONS, so a day-2 doc duplicating a day-1
-      // admission is rejected even though neither is in the original
-      // corpus. Day-1's verdict feeds day-2's exact-fingerprint set
-      // AND its banded candidate side — in DuckDB that corpus is just
-      // a CTE over day-1's result, so the whole evolving sequence
-      // replays as ONE static query. The banded memo restricted by id
-      // set ≡ banding the subset (signatures are per-doc, texts
-      // unchanged by admission). Day-1 admissions persist before day 2
-      // references them (three consumers), mirroring incr_admit_seq.
-      (s, dir) => {
-        val docs = T(s, dir, "documents").filter(col("doc_id") < 2000)
-        val corpus = docs.filter(col("doc_id") < 250)
-        val banded = sharedPolyMinhashBanded(s, dir)
-        def admitDay(day: DataFrame, corpusDf: DataFrame): DataFrame = {
-          // exact-tier survivors driver-local (see incr_admit_fixed):
-          // each day's downstream chain — banded semi-join, reject
-          // anti-join, the day-2 corpus union, the final rollup — then
-          // rides LocalRelations whose broadcast builds are job-free,
-          // and the day-1 commit needs no persist+count (the localize
-          // IS the commit; the persisted-frame fallback past the cap
-          // remains the at-scale shape)
-          val exactKept = Dedup.localizeBatch(Dedup.incrementalExact(day,
-            Dedup.tokenFingerprint(col("text")),
-            corpusDf, Dedup.tokenFingerprint(col("text"))))
-          val cands = NearDup.materializePairs(
-            NearDup.bucketPairs(
-              banded.join(exactKept.select(col("doc_id").as("_id")),
-                Seq("_id"), "left_semi"),
-              banded.join(corpusDf.select(col("doc_id").as("_id")),
-                Seq("_id"), "left_semi"),
-              NearDup.PairRule.AnyKey, cross = true)
-              .select(col("id_new").as("id_a"), col("id_old").as("id_b")))
-          val rejected = NearDup.jaccardVerify(docs, "doc_id", "text", cands)
-            .filter(col("jaccard") >= 0.8)
-            .select(col("id_a").as("doc_id"))
-          Dedup.antiByLocalIds(exactKept, rejected, "doc_id")
-        }
-        Dedup.withAdmissionScope {
-          val adm1 = admitDay(
-            docs.filter(col("doc_id") >= 250 && col("doc_id") < 375), corpus)
-          val adm2 = admitDay(docs.filter(col("doc_id") >= 375),
-            corpus.select(col("doc_id"), col("text"), col("lang"))
-              .union(adm1.select(col("doc_id"), col("text"), col("lang"))))
-          localFrameOrdered(
-            adm1.select(col("doc_id"), col("lang"), lit(1L).as("day"))
-              .union(adm2.select(col("doc_id"), col("lang"),
-                lit(2L).as("day")))
-              .groupBy(col("day"), col("lang"))
-              .agg(count(lit(1)).as("n_admitted"),
-                min(col("doc_id")).as("first_id")), "day", "lang")
-        }
-      },
+      // incr_admit_seq's ORACLE TWIN — the two-day evolving admission
+      // under the closed-form hash (the shared poly-banded memo); in
+      // DuckDB day 2's corpus is a CTE over day 1's result, so the
+      // whole sequence replays as ONE static query
+      (s, dir) => admitSeqRow(fixedSlice(s, dir), polyMemoBuckets(s, dir)),
       Some(incrAdmitSeqFixedOracleSql),
       "two-day evolving admission under the closed-form hash: day-2 verdict against corpus ∪ day-1 admissions, full DuckDB replay"),
 
     "incr_clean_admit_fixed" -> DeclaredQuery(
-      // incr_clean_admit's ORACLE TWIN — Dedup.cleanAndAdmit's verdict
-      // under the closed-form hash: the span-strip tier (oracle-green
-      // as incr_span_strip) rewrites each incoming doc with
-      // corpus-copied token runs removed, docs with nothing novel left
-      // drop, then the two-tier admission runs over the CLEANED text.
-      // The shared banded memo does NOT apply here — stripping changes
-      // the text, so the poly minhash chain runs over corpus originals
-      // ∪ cleaned incoming (both sides fresh), exactly what the
-      // oracle's parameterized `d` CTE replays. `cleaned` persists for
-      // the scope: it feeds the exact tier, the banding, and the
-      // verify relation.
-      (s, dir) => {
-        val docs = T(s, dir, "documents").filter(col("doc_id") < 2000)
-        val corpus = docs.filter(col("doc_id") < 250)
-        Dedup.withAdmissionScope {
-          val cleaned = SpanDedup.crossStripSpans(
-              docs.filter(col("doc_id") >= 250), corpus,
-              "doc_id", "text", k = 8)
-            .filter(col("kept_tokens") >= 1)
-            .select(col("_id").as("doc_id"), col("cleaned_text").as("text"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            // exact-tier survivors driver-local (see incr_admit_fixed)
-            val exactKept = Dedup.localizeBatch(Dedup.incrementalExact(cleaned,
-              Dedup.tokenFingerprint(col("text")),
-              corpus, Dedup.tokenFingerprint(col("text"))))
-            val rel = corpus.select(col("doc_id"), col("text")).union(cleaned)
-            val banded = NearDup.minHashPolyBanded(rel, "doc_id", "text")
-            val cands = NearDup.materializePairs(
-              NearDup.bucketPairs(
-                banded.join(exactKept.select(col("doc_id").as("_id")),
-                  Seq("_id"), "left_semi"),
-                banded.filter(col("_id") < 250),
-                NearDup.PairRule.AnyKey, cross = true)
-                .select(col("id_new").as("id_a"), col("id_old").as("id_b")))
-            val rejected = NearDup.jaccardVerify(rel, "doc_id", "text", cands)
-              .filter(col("jaccard") >= 0.8)
-              .select(col("id_a").as("doc_id"))
-            localFrameOrdered(
-              Dedup.antiByLocalIds(exactKept, rejected, "doc_id")
-                .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-                .groupBy(col("lang"))
-                .agg(count(lit(1)).as("n_admitted"),
-                  sum(size(TextAnalysis.tokens(col("text"))).cast("long"))
-                    .as("kept_tokens"),
-                  min(col("doc_id")).as("first_id")), "lang")
-          } finally cleaned.unpersist()
-        }
-      },
+      // incr_clean_admit's ORACLE TWIN — Dedup.cleanAndAdmit under the
+      // closed-form hash, banded fresh (NearDup.minHashPolyBanded): the
+      // strip changes the text, so the shared memo does not apply
+      (s, dir) => cleanAdmitRow(fixedSlice(s, dir),
+        NearDup.minHashPolyBanded(_, _, _)),
       Some(incrCleanAdmitFixedOracleSql),
       "clean-then-admit verdict under the closed-form hash: span strip + two-tier admission on the cleaned text, full DuckDB replay"),
 
     "incr_clean_admit_indexed" -> DeclaredQuery(
       // incr_clean_admit_fixed with the strip tier through the
-      // MAINTAINED gram-key artifact (r19 — the AdmitProbe-mandated
-      // composition now in the production kernel,
-      // Dedup.cleanAndAdmit(gramIndexPath) / the streaming mirror):
-      // incoming gram positions probe the pre-built Bloom router +
-      // key table, the corpus is NEVER re-processed by the strip,
-      // and the admission verdict replays under the closed-form hash
-      // — so the SAME full-chain oracle that replays the direct twin
-      // replays this one (indexed strip is row-identical: the Bloom
-      // routes, never decides; hashed gram keys are the spec-pinned
-      // decision-identical shape). The index build is the
-      // `_gramidx_build` infra line.
-      (s, dir) => {
-        val docs = T(s, dir, "documents").filter(col("doc_id") < 2000)
-        val corpus = docs.filter(col("doc_id") < 250)
-        Dedup.withAdmissionScope {
-          // committed as a LocalRelation (capped collect, persist
-          // fallback — Dedup.localizeBatch): the indexed strip's
-          // confirm join carries a join-product size estimate that
-          // would fail every downstream small-plan gate open (r19
-          // profile: 23 jobs / 13 s task time with a lazy persist
-          // here vs the direct twin's 12 / 0.7 — the gates, not the
-          // strip, were the cost)
-          val cleaned = Dedup.localizeBatch(
-            SpanDedup.crossStripSpansIndexed(
-              docs.filter(col("doc_id") >= 250),
-              "doc_id", "text", sharedGramIndexPath(s, dir), k = 8)
-            .filter(col("kept_tokens") >= 1)
-            .select(col("_id").as("doc_id"), col("cleaned_text").as("text")))
-          // exact-tier survivors driver-local (see incr_admit_fixed)
-          val exactKept = Dedup.localizeBatch(Dedup.incrementalExact(cleaned,
-            Dedup.tokenFingerprint(col("text")),
-            corpus, Dedup.tokenFingerprint(col("text"))))
-          val rel = corpus.select(col("doc_id"), col("text")).union(cleaned)
-          val banded = NearDup.minHashPolyBanded(rel, "doc_id", "text")
-          val cands = NearDup.materializePairs(
-            NearDup.bucketPairs(
-              banded.join(exactKept.select(col("doc_id").as("_id")),
-                Seq("_id"), "left_semi"),
-              banded.filter(col("_id") < 250),
-              NearDup.PairRule.AnyKey, cross = true)
-              .select(col("id_new").as("id_a"), col("id_old").as("id_b")))
-          val rejected = NearDup.jaccardVerify(rel, "doc_id", "text", cands)
-            .filter(col("jaccard") >= 0.8)
-            .select(col("id_a").as("doc_id"))
-          localFrameOrdered(
-            Dedup.antiByLocalIds(exactKept, rejected, "doc_id")
-              .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-              .groupBy(col("lang"))
-              .agg(count(lit(1)).as("n_admitted"),
-                sum(size(TextAnalysis.tokens(col("text"))).cast("long"))
-                  .as("kept_tokens"),
-                min(col("doc_id")).as("first_id")), "lang")
-        }
-      },
+      // MAINTAINED gram-key artifact (Dedup.cleanAndAdmit(gramIndexPath),
+      // the streaming mirror's composition): the corpus is never
+      // re-processed by the strip, and the indexed strip is
+      // row-identical to the direct one (the Bloom routes, never
+      // decides), so the direct twin's oracle replays this row too.
+      // Closed-form hash banded fresh (NearDup.minHashPolyBanded); the
+      // index build is the `_gramidx_build` infra line.
+      (s, dir) => cleanAdmitRow(fixedSlice(s, dir),
+        NearDup.minHashPolyBanded(_, _, _), Some(sharedGramIndexPath(s, dir))),
       Some(incrCleanAdmitFixedOracleSql),
       "clean-then-admit verdict with the strip tier through the maintained gram-key index: Bloom-routed probe, corpus untouched per batch, full DuckDB replay"),
 
@@ -640,17 +437,8 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // mirror runs per micro-batch (Streams.incrementalAdmission), so
       // this row and the stream are one code path (stream ≡ batch
       // asserted in StreamsSpec)
-      (s, dir) => {
-        val docs = T(s, dir, "documents")
-        Dedup.withAdmissionScope(
-          localFrameOrdered(Dedup.admitIncoming(
-              docs.filter(col("doc_id") >= 250),
-              docs.filter(col("doc_id") < 250),
-              "doc_id", "text")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n_admitted"),
-              min(col("doc_id")).as("first_id")), "lang"))
-      },
+      (s, dir) => admitRow(T(s, dir, "documents"),
+        NearDup.minHashBuckets(_, _, _)),
       None,
       "incremental admission e2e: exact anti-join tier + cross-set near-dup tier → admitted per lang"),
 
@@ -661,80 +449,27 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // (doc_id < 250); day 2 (doc_id ≥ 375) is admitted against
       // corpus ∪ DAY-1 ADMISSIONS, so a day-2 document duplicating a
       // day-1 admission is rejected even though neither is in the
-      // original corpus. Day-1 admissions are persisted before day 2
-      // references them (the kernel reads its corpus side three times —
-      // distinct-fingerprint projection, band buckets, verify side; at
-      // scale this persist is the write to the corpus table itself).
-      // Seeded-hash near-dup tier → rows-only per the contract; the
-      // evolving semantics are pinned deterministically in StreamsSpec.
-      (s, dir) => {
-        val docs = T(s, dir, "documents")
-        val corpus = docs.filter(col("doc_id") < 250)
-        val day1 = docs.filter(col("doc_id") >= 250 && col("doc_id") < 375)
-        val day2 = docs.filter(col("doc_id") >= 375)
-        Dedup.withAdmissionScope {
-          val adm1 = Dedup.admitIncoming(day1, corpus, "doc_id", "text")
-            .select(col("doc_id"), col("text"), col("lang"))
-          // day-1's admitted batch is the day's corpus COMMIT — at
-          // scale a table append, here a driver-bounded LocalRelation
-          // (capped collect, persisted-frame fallback past the cap):
-          // day 2's three corpus-side reads and the final rollup then
-          // reference driver rows instead of a cached frame. Beyond
-          // skipping the cache-populate job, this keeps the day-2
-          // chain's SMALL-PLAN gates honest — an InMemoryRelation leaf
-          // reports MaxValue stats, so every gated collect inside
-          // day-2's kernel failed open to AQE and paid per-shuffle
-          // query-stage jobs (the r17 lesson; jobs 16 → fused, r19).
-          val cap = 1 << 18
-          val rows = graft.PlanGate.cappedCollect(adm1, cap + 1)
-          if (rows.length <= cap) {
-            val local = s.createDataFrame(
-              java.util.Arrays.asList(rows: _*), adm1.schema)
-            val corpus2 = corpus.select(col("doc_id"), col("text"))
-              .union(local.select(col("doc_id"), col("text")))
-            val adm2 = Dedup.admitIncoming(day2, corpus2, "doc_id", "text")
-            localFrameOrdered(
-              local.select(col("doc_id"), col("lang"), lit(1L).as("day"))
-                .union(adm2.select(col("doc_id"), col("lang"), lit(2L).as("day")))
-                .groupBy(col("day"), col("lang"))
-                .agg(count(lit(1)).as("n_admitted"),
-                  min(col("doc_id")).as("first_id")), "day", "lang")
-          } else {
-            // commit bigger than the driver cap: the distributed shape
-            // (persisted day-1 admissions), decision-identical
-            val adm1p = adm1
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              adm1p.count()
-              val corpus2 = corpus.select(col("doc_id"), col("text"))
-                .union(adm1p.select(col("doc_id"), col("text")))
-              val adm2 = Dedup.admitIncoming(day2, corpus2, "doc_id", "text")
-              localFrameOrdered(
-                adm1p.select(col("doc_id"), col("lang"), lit(1L).as("day"))
-                  .union(adm2.select(col("doc_id"), col("lang"),
-                    lit(2L).as("day")))
-                  .groupBy(col("day"), col("lang"))
-                  .agg(count(lit(1)).as("n_admitted"),
-                    min(col("doc_id")).as("first_id")), "day", "lang")
-            } finally adm1p.unpersist()
-          }
-        }
-      },
+      // original corpus. Seeded-hash near-dup tier → rows-only per the
+      // contract; the evolving semantics are pinned deterministically
+      // in StreamsSpec.
+      (s, dir) => admitSeqRow(T(s, dir, "documents"),
+        NearDup.minHashBuckets(_, _, _)),
       None,
       "sequential ingestion e2e: day-2 admission runs against corpus ∪ day-1 admissions (evolving-corpus batch twin)"),
 
     "incr_admit_durable" -> DeclaredQuery(
       // the incr_admit_seq replay with the evolving corpus held in a
-      // VersionedCorpus DIRECTORY instead of a persisted in-memory
-      // frame — the batch twin of Streams.incrementalAdmissionDurable
-      // (the restart-safe ingestion loop). Day-1 admissions COMMIT as a
+      // VersionedCorpus DIRECTORY instead of a driver-held frame — the
+      // batch twin of Streams.incrementalAdmissionDurable (the
+      // restart-safe ingestion loop). Day-1 admissions COMMIT as a
       // generation before day 2 snapshots the store, which is exactly
-      // the corpus-table append incr_admit_seq's persist simulates; the
-      // day's admitted rows are then READ BACK from their committed
-      // generation (read-your-commit), so the aggregate reflects what
-      // the store durably holds, not a recomputation. Row-identical to
-      // incr_admit_seq (asserted in VersionedCorpusSpec); seeded-hash
-      // near-dup tier → rows-only per the contract.
+      // the corpus-table append incr_admit_seq's day-1 commit
+      // simulates; the day's admitted rows are then READ BACK from
+      // their committed generation (read-your-commit), so the
+      // aggregate reflects what the store durably holds, not a
+      // recomputation. Row-identical to incr_admit_seq (asserted in
+      // VersionedCorpusSpec); seeded-hash near-dup tier → rows-only
+      // per the contract.
       (s, dir) => {
         val tmpRoot = java.nio.file.Files.createTempDirectory("graft-vcadmit")
         try Dedup.withAdmissionScope {
@@ -1628,27 +1363,8 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // micro-batch (stream ≡ batch in StreamsSpec). Per-lang admit
       // counts + surviving token mass. Seeded-hash admission tier →
       // rows-only per the contract.
-      (s, dir) => {
-        val docs = T(s, dir, "documents")
-        // eager + scoped (r17): the rollup collects inside the admission
-        // scope, so the kernel's batch persists release deterministically
-        // instead of waiting for the loop-boundary orphan sweep
-        Dedup.withAdmissionScope {
-          val admitted = Dedup.cleanAndAdmit(
-            docs.filter(col("doc_id") >= 250),
-            docs.filter(col("doc_id") < 250),
-            "doc_id", "text")
-          localFrameOrdered(admitted
-            .select(col("doc_id"),
-              size(TextAnalysis.tokens(col("text"))).cast("long")
-                .as("kept_tokens"))
-            .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n_admitted"),
-              sum(col("kept_tokens")).as("kept_tokens"),
-              min(col("doc_id")).as("first_id")), "lang")
-        }
-      },
+      (s, dir) => cleanAdmitRow(T(s, dir, "documents"),
+        NearDup.minHashBuckets(_, _, _)),
       None,
       "clean-then-admit e2e: span strip + two-tier admission on the cleaned text, per-lang rollup"),
 
@@ -2234,4 +1950,75 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
          |ORDER BY lang, source""".stripMargin),
       "B13+B25: language/source distribution via ROLLUP")
   )
+
+  /** The closed-form twins' bucket relation for texts the admission
+    * leaves unchanged: the shared poly-banded memo restricted to the
+    * side's ids (signatures are per-doc, so this equals banding the
+    * side). */
+  private def polyMemoBuckets(s: SparkSession, dir: String): Dedup.Buckets = {
+    val banded = sharedPolyMinhashBanded(s, dir)
+    (df, idCol, _) =>
+      banded.join(df.select(col(idCol).as("_id")), Seq("_id"), "left_semi")
+  }
+
+  /** Admitted rows per lang: count and first id. */
+  private def admittedPerLang(admitted: DataFrame): DataFrame =
+    localFrameOrdered(admitted.groupBy(col("lang"))
+      .agg(count(lit(1)).as("n_admitted"),
+        min(col("doc_id")).as("first_id")), "lang")
+
+  /** `incr_admit` and its twin: ids ≥ 250 admitted against ids < 250. */
+  private def admitRow(docs: DataFrame, buckets: Dedup.Buckets): DataFrame =
+    Dedup.withAdmissionScope(admittedPerLang(Dedup.admitIncoming(
+      docs.filter(col("doc_id") >= 250), docs.filter(col("doc_id") < 250),
+      "doc_id", "text", buckets = buckets)))
+
+  /** `incr_admit_seq` and its twin: day 1 (250 ≤ id < 375) admitted
+    * against ids < 250, day 2 (id ≥ 375) against that corpus ∪ day 1's
+    * admissions; admitted per (day, lang). */
+  private def admitSeqRow(docs: DataFrame, buckets: Dedup.Buckets): DataFrame = {
+    val corpus = docs.filter(col("doc_id") < 250)
+    def admit(day: DataFrame, against: DataFrame) =
+      Dedup.admitIncoming(day, against, "doc_id", "text", buckets = buckets)
+        .select(col("doc_id"), col("text"), col("lang"))
+    Dedup.withAdmissionScope {
+      // day 1's admissions are the day's corpus COMMIT — at scale a
+      // table append, here a LocalRelation (persisted fallback past the
+      // cap): day 2's corpus-side reads and the rollup then reference
+      // driver rows with accurate stats, so day 2's small-plan gates
+      // stay closed (a cached leaf reports MaxValue stats and would
+      // fail every gated collect open to AQE)
+      val adm1 = Dedup.localizeBatch(admit(
+        docs.filter(col("doc_id") >= 250 && col("doc_id") < 375), corpus))
+      val adm2 = admit(docs.filter(col("doc_id") >= 375),
+        corpus.select(col("doc_id"), col("text"))
+          .union(adm1.select(col("doc_id"), col("text"))))
+      localFrameOrdered(
+        adm1.select(col("doc_id"), col("lang"), lit(1L).as("day"))
+          .union(adm2.select(col("doc_id"), col("lang"), lit(2L).as("day")))
+          .groupBy(col("day"), col("lang"))
+          .agg(count(lit(1)).as("n_admitted"),
+            min(col("doc_id")).as("first_id")), "day", "lang")
+    }
+  }
+
+  /** `incr_clean_admit` and its twins: `Dedup.cleanAndAdmit` of ids ≥ 250
+    * against ids < 250; admitted count, surviving token mass and first
+    * id per lang. */
+  private def cleanAdmitRow(docs: DataFrame, buckets: Dedup.Buckets,
+                            gramIndexPath: Option[String] = None): DataFrame =
+    Dedup.withAdmissionScope {
+      val admitted = Dedup.cleanAndAdmit(
+        docs.filter(col("doc_id") >= 250), docs.filter(col("doc_id") < 250),
+        "doc_id", "text", gramIndexPath = gramIndexPath, buckets = buckets)
+      localFrameOrdered(admitted
+        .select(col("doc_id"),
+          size(TextAnalysis.tokens(col("text"))).cast("long")
+            .as("kept_tokens"))
+        .join(docs.select(col("doc_id"), col("lang")), "doc_id")
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_admitted"),
+          sum(col("kept_tokens")).as("kept_tokens"),
+          min(col("doc_id")).as("first_id")), "lang")
+    }
 }

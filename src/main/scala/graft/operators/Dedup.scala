@@ -88,6 +88,11 @@ object Dedup {
     }
   }
 
+  /** A side's per-doc (`_id`, band, key) bucket relation, from
+    * (docs, idCol, textCol) — the near-dup tier's one varying part
+    * (see [[admitIncoming]]). */
+  type Buckets = (DataFrame, String, String) => DataFrame
+
   /** Canonical text fingerprint: the sorted token multiset. Catches
     * reordered-but-identical word-soup documents, not just byte-equal
     * ones. */
@@ -132,8 +137,8 @@ object Dedup {
     * `key` already exists in the corpus — the daily-batch shape: the
     * (100 TB) corpus contributes only its DISTINCT key projection to a
     * left-anti join, the (small) incoming batch is what flows; nothing
-    * is recomputed over already-ingested data. Pair with
-    * [[NearDup.minHashCrossCandidates]] for the near-dup tier. */
+    * is recomputed over already-ingested data. [[admitIncoming]] chains
+    * it with the near-dup tier. */
   def incrementalExact(incoming: DataFrame, key: Column,
                        corpus: DataFrame, corpusKey: Column): DataFrame = {
     // collision-proof internal alias: `existing("__graft_fp")` is
@@ -242,13 +247,16 @@ object Dedup {
     * underlying kernels: incoming rows never meet each other, so
     * micro-batch splits accumulate to the one-shot result
     * (the streaming mirror is [[graft.streaming.Streams
-    * .incrementalCleanAdmission]]; stream ≡ batch in StreamsSpec). */
+    * .incrementalCleanAdmission]]; stream ≡ batch in StreamsSpec).
+    * `buckets` is handed to [[admitIncoming]]. */
   def cleanAndAdmit(incoming: DataFrame, corpus: DataFrame,
                     idCol: String, textCol: String, k: Int = 8,
                     minKeptTokens: Int = 1,
                     minJaccard: Double = 0.8,
                     hashGrams: Boolean = false,
-                    gramIndexPath: Option[String] = None): DataFrame = {
+                    gramIndexPath: Option[String] = None,
+                    buckets: Buckets =
+                      NearDup.minHashBuckets(_, _, _)): DataFrame = {
     // hashGrams — the 100 TB shape for the strip tier's gram semi-join:
     // 8-byte xxhash64 keys instead of ~50-byte k-gram strings (AdmitProbe
     // r18: 1.1 GB → ~180 MB of shuffle at a 1M-doc corpus). Decision-
@@ -294,21 +302,23 @@ object Dedup {
     val committed =
       if (gramIndexPath.isDefined) localizeBatch(cleaned, cap = 1 << 16)
       else cleaned
-    admitIncoming(committed, corpus, idCol, textCol, minJaccard)
+    admitIncoming(committed, corpus, idCol, textCol, minJaccard,
+      buckets = buckets)
   }
 
   /** Commit a driver-boundable batch relation as a LocalRelation —
-    * the capped-collect-with-persist-fallback discipline of
-    * `incr_admit_seq`'s day-1 commit, shared so every admission kernel
-    * that stacks a stats-opaque subtree (the indexed strip tier's
-    * confirm join is estimated at the JOIN-PRODUCT of its children —
-    * ~8 GB for a 1.7k-row result on the r19 fixture) can hand its
-    * consumers a relation with ACCURATE statistics. Without it, every
-    * downstream small-plan gate (candidate collect, reject-set
-    * collect, final rollup) reads the inflated estimate, fails open to
-    * wide AQE execution, and pays ~2× the jobs and ~10× the task time
-    * at fixture scale (the r19 incr_clean_admit_indexed profile:
-    * 23 jobs / 13 s task time vs the direct twin's 12 / 0.7).
+    * capped collect, persist fallback. It is the one commit step of
+    * `incr_admit_seq`'s day-1 admissions and of [[cleanAndAdmit]]'s
+    * indexed strip: a caller that stacks a stats-opaque subtree (the
+    * indexed strip tier's confirm join is estimated at the
+    * JOIN-PRODUCT of its children — ~8 GB for a 1.7k-row result on the
+    * r19 fixture) hands its consumers a relation with ACCURATE
+    * statistics. Without it, every downstream small-plan gate
+    * (candidate collect, reject-set collect, final rollup) reads the
+    * inflated estimate, fails open to wide AQE execution, and pays ~2×
+    * the jobs and ~10× the task time at fixture scale (the r19
+    * incr_clean_admit_indexed profile: 23 jobs / 13 s task time vs the
+    * direct twin's 12 / 0.7).
     *
     * Persist-FIRST, then one capped collect through the cache (scans
     * every partition — `cappedCollect`'s high initial-partition scope
@@ -359,28 +369,37 @@ object Dedup {
     * cross-set dedup tiers of [[admitIncoming]]. Same kernel-sharing
     * contract as [[cleanAndAdmit]]: the streaming mirror
     * ([[graft.streaming.Streams.incrementalGatedAdmission]]) runs THIS
-    * method per micro-batch, so stream ≡ batch by construction. */
+    * method per micro-batch, so stream ≡ batch by construction.
+    * `buckets` is handed to [[admitIncoming]]. */
   def gateAndAdmit(incoming: DataFrame, corpus: DataFrame,
                    idCol: String, textCol: String,
-                   minJaccard: Double = 0.8): DataFrame =
+                   minJaccard: Double = 0.8,
+                   buckets: Buckets =
+                     NearDup.minHashBuckets(_, _, _)): DataFrame =
     admitIncoming(
       incoming.filter(TextAnalysis.gopherPass(col(textCol))),
-      corpus, idCol, textCol, minJaccard)
+      corpus, idCol, textCol, minJaccard, buckets = buckets)
 
   /** The incremental ingestion ADMISSION decision, both tiers chained —
-    * the kernel the declared `incr_admit` query and the streaming mirror
-    * (`Streams.incrementalAdmission`) share, so batch ≡ stream is the
-    * same code path, not two implementations:
+    * the kernel the declared `incr_admit` query, its closed-form oracle
+    * twin `incr_admit_fixed` and the streaming mirror
+    * (`Streams.incrementalAdmission`) share, so batch ≡ stream ≡ oracle
+    * twin is the same code path, not three implementations:
     *
     *   1. exact tier: [[incrementalExact]] on the token fingerprint —
     *      the corpus contributes only its distinct-key projection to a
     *      left-anti join;
-    *   2. near-dup tier: [[NearDup.minHashCrossCandidates]] (incoming
-    *      meets corpus only inside shared band buckets — corpus-internal
-    *      pairs are never regenerated) + cross-set exact-Jaccard verify
-    *      ≥ `minJaccard` ([[NearDup.jaccardVerifyCross]] — each side's
-    *      text is fetched from its OWN relation, so an incoming id that
-    *      collides with a corpus id cannot mix texts);
+    *   2. near-dup tier: `buckets` gives each side's per-doc (`_id`,
+    *      band, key) relation, and [[NearDup.bucketPairs]] in cross mode
+    *      lets incoming meet corpus only inside a shared band bucket
+    *      (corpus-internal pairs are never regenerated). The default is
+    *      the seeded [[NearDup.minHashBuckets]], i.e.
+    *      [[NearDup.minHashCrossCandidates]]; the closed-form oracle
+    *      twins pass the [[NearDup.minHashPolyBanded]] relation. Then
+    *      a cross-set exact-Jaccard verify ≥ `minJaccard`
+    *      ([[NearDup.jaccardVerifyCross]] — each side's text is fetched
+    *      from its OWN relation, so an incoming id that collides with a
+    *      corpus id cannot mix texts);
     *   3. admit what survives both tiers.
     *
     * Returns the admitted INCOMING rows with all their columns. Incoming
@@ -403,7 +422,9 @@ object Dedup {
   def admitIncoming(incoming: DataFrame, corpus: DataFrame,
                     idCol: String, textCol: String,
                     minJaccard: Double = 0.8,
-                    maxCandidates: Int = 1 << 20): DataFrame = {
+                    maxCandidates: Int = 1 << 20,
+                    buckets: Buckets =
+                      NearDup.minHashBuckets(_, _, _)): DataFrame = {
     // exactKept feeds THREE consumers (the candidate collect below, the
     // Jaccard verify, and the final anti-join), and its subtree carries
     // whatever the caller stacked under `incoming` — cleanAndAdmit puts
@@ -419,8 +440,8 @@ object Dedup {
     val exactKept = registerCache(incrementalExact(incoming,
       tokenFingerprint(col(textCol)), corpus, tokenFingerprint(col(textCol)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val candLineage =
-      NearDup.minHashCrossCandidates(exactKept, corpus, idCol, textCol)
+    val candLineage = NearDup.bucketPairs(buckets(exactKept, idCol, textCol),
+      buckets(corpus, idCol, textCol), NearDup.PairRule.AnyKey, cross = true)
     NearDup.materializePairsOpt(candLineage, maxCandidates) match {
       case Some(cands) =>
         // the verified reject set is bounded by `cands` — ALREADY

@@ -125,6 +125,10 @@ final class SearchServer(spark: SparkSession, db: graft.VectorDb,
                       (f: Map[String, String] => Unit): Unit =
     scala.util.Try(bodyParams(ex)) match {
       case scala.util.Failure(e: SearchServer.BodyTooLarge) =>
+        // the rest of the body stays unread, so the server drops the
+        // connection after this reply: say so, or a keep-alive client
+        // sends its next request on the dead socket
+        ex.getResponseHeaders.set("Connection", "close")
         respond(ex, 413, s"""{"error":"${jsonEscape(e.getMessage)}"}""")
       case scala.util.Failure(e: IllegalArgumentException) =>
         respond(ex, 400, s"""{"error":"malformed form body: ${

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source rules over the main sources (reads files only, starts no
   * session): session builders only in `GraftSession.scala`, Spark
   * listeners only in `obs/JobMeter.scala`, one call site each for the
-  * versioned store's commit-file writers and the near-dup closer's
-  * broadcast hint, and no orphaned scaladoc. [[hits]] skips comment
+  * versioned store's commit-file writers, the near-dup closer's
+  * broadcast hint and the text and vector admission kernels' reject
+  * anti-join, and no orphaned scaladoc. [[hits]] skips comment
   * lines. */
 class SourceHygieneSpec extends AnyFunSuite {
   private val mainRoot = Paths.get("src", "main", "scala")
@@ -78,6 +79,20 @@ class SourceHygieneSpec extends AnyFunSuite {
     val enclosing = enclosingDef(calls.head._1, calls.head._2)
     assert(enclosing.startsWith("private[graft] def bucketPairs("),
       s"hintSmallerSide( is called from `$enclosing`, not the shared closer")
+  }
+
+  test("admission reject sets are applied only inside the admission kernels") {
+    // one verdict chain per semantic: a caller that composes the text
+    // admission by hand (its own anti-join of the verified rejects)
+    // instead of calling Dedup.admitIncoming shows up here
+    val calls = hits("""\bantiByLocalIds\(""".r)
+      .filterNot(_._3.contains("def antiByLocalIds("))
+    val dedup = "graft/operators/Dedup.scala"
+    assert(calls.map(_._1).distinct === Seq(dedup),
+      "antiByLocalIds( called outside Dedup:\n" + calls.mkString("\n"))
+    assert(calls.map(c => enclosingDef(dedup, c._2).takeWhile(_ != '(')) ===
+      Seq("def admitIncoming", "def admitIncomingVectors"),
+      "antiByLocalIds( call sites:\n" + calls.mkString("\n"))
   }
 
   test("no scaladoc block is directly followed by another one") {

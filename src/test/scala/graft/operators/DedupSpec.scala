@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -472,16 +473,88 @@ class DedupSpec extends AnyFunSuite {
     val docsT = graft.Tables.load(spark, graft.TestSpark.sf0001, "documents")
     val corpus = docsT.filter($"doc_id" < 250)
     val incoming = docsT.filter($"doc_id" >= 250)
-    val fused = Dedup.admitIncoming(incoming, corpus, "doc_id", "text")
-      .select("doc_id").as[Long].collect().toSet
-    // maxCandidates = 0 trips the cap on ANY non-empty candidate set —
-    // the graceful-degrade path must reproduce the fused decisions
-    val degraded = Dedup.admitIncoming(incoming, corpus, "doc_id", "text",
-        maxCandidates = 0)
-      .select("doc_id").as[Long].collect().toSet
-    assert(degraded === fused && fused.nonEmpty)
-    // and the fixture really exercises both branches: some rows rejected
-    assert(fused.size < incoming.count())
+    for ((name, buckets) <- bucketFns) withClue(s"$name buckets: ") {
+      val fused = Dedup.admitIncoming(incoming, corpus, "doc_id", "text",
+          buckets = buckets)
+        .select("doc_id").as[Long].collect().toSet
+      // maxCandidates = 0 trips the cap on ANY non-empty candidate set —
+      // the graceful-degrade path must reproduce the fused decisions
+      val degraded = Dedup.admitIncoming(incoming, corpus, "doc_id", "text",
+          maxCandidates = 0, buckets = buckets)
+        .select("doc_id").as[Long].collect().toSet
+      assert(degraded === fused && fused.nonEmpty)
+      // and the fixture really exercises both branches: some rows rejected
+      assert(fused.size < incoming.count())
+    }
+  }
+
+  /** The two bucket relations the admission kernels run under: the
+    * seeded default and the closed-form hash of the oracle twins. */
+  private val bucketFns: Seq[(String, Dedup.Buckets)] =
+    Seq("seeded" -> (NearDup.minHashBuckets(_, _, _)),
+      "poly" -> (NearDup.minHashPolyBanded(_, _, _)))
+
+  /** The closed-form admission verdict composed by hand, in the shape
+    * the DuckDB oracle replays: exact tier, cross candidates from the
+    * poly-banded UNION relation restricted to each side, Jaccard verify
+    * ≥ 0.8 over the union, anti-join. The reference the kernels are
+    * held to under poly buckets. */
+  private def handAdmit(incoming: DataFrame, corpus: DataFrame): DataFrame = {
+    val exactKept = Dedup.localizeBatch(Dedup.incrementalExact(incoming,
+      Dedup.tokenFingerprint($"text"), corpus, Dedup.tokenFingerprint($"text")))
+    val rel = corpus.select($"doc_id", $"text")
+      .union(exactKept.select($"doc_id", $"text"))
+    val banded = NearDup.minHashPolyBanded(rel, "doc_id", "text")
+    def side(df: DataFrame) =
+      banded.join(df.select($"doc_id".as("_id")), Seq("_id"), "left_semi")
+    val cands = NearDup.materializePairs(
+      NearDup.bucketPairs(side(exactKept), side(corpus),
+        NearDup.PairRule.AnyKey, cross = true)
+        .select($"id_new".as("id_a"), $"id_old".as("id_b")))
+    val rejected = NearDup.jaccardVerify(rel, "doc_id", "text", cands)
+      .filter($"jaccard" >= 0.8).select($"id_a".as("doc_id"))
+    exactKept.join(rejected, Seq("doc_id"), "left_anti")
+  }
+
+  test("admission kernels under poly buckets ≡ the hand-composed twin chain") {
+    val fixture = graft.Tables.load(spark, TestSpark.sf0001, "documents")
+      .select($"doc_id", $"text")
+    val incoming = fixture.filter($"doc_id" >= 250)
+    val corpus = fixture.filter($"doc_id" < 250)
+    val poly: Dedup.Buckets = NearDup.minHashPolyBanded(_, _, _)
+    def rows(df: => DataFrame) = Dedup.withAdmissionScope {
+      df.select($"doc_id", $"text").as[(Long, String)].collect().toSet
+    }
+    def cleaned(strip: DataFrame) = strip.filter($"kept_tokens" >= 1)
+      .select($"_id".as("doc_id"), $"cleaned_text".as("text"))
+
+    val admitted = rows(Dedup.admitIncoming(incoming, corpus, "doc_id",
+      "text", buckets = poly))
+    assert(admitted === rows(handAdmit(incoming, corpus)))
+    assert(admitted.size < incoming.count(), "nothing rejected — vacuous")
+
+    assert(rows(Dedup.gateAndAdmit(incoming, corpus, "doc_id", "text",
+        buckets = poly)) ===
+      rows(handAdmit(incoming.filter(TextAnalysis.gopherPass($"text")),
+        corpus)))
+
+    val direct = rows(Dedup.cleanAndAdmit(incoming, corpus, "doc_id", "text",
+      buckets = poly))
+    assert(direct === rows(handAdmit(cleaned(
+      SpanDedup.crossStripSpans(incoming, corpus, "doc_id", "text", k = 8)),
+      corpus)))
+    val original = incoming.as[(Long, String)].collect().toMap
+    assert(direct.exists { case (id, t) => original(id) != t },
+      "no text was stripped — vacuous")
+
+    val tmp = java.nio.file.Files.createTempDirectory("graft-caa-poly")
+    try {
+      SpanDedup.buildGramIndex(corpus, "doc_id", "text", tmp.toString, k = 8)
+      assert(rows(Dedup.cleanAndAdmit(incoming, corpus, "doc_id", "text",
+          gramIndexPath = Some(tmp.toString), buckets = poly)) ===
+        rows(handAdmit(cleaned(SpanDedup.crossStripSpansIndexed(
+          incoming, "doc_id", "text", tmp.toString, k = 8)), corpus)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
 
   test("admitIncomingVectors: forced overflow degrades decision-identically") {

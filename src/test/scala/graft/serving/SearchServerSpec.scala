@@ -19,16 +19,21 @@ class SearchServerSpec extends AnyFunSuite {
     (resp.statusCode(), resp.body())
   }
 
-  private def post(port: Int, pathAndQuery: String, body: String = "")
-      : (Int, String) = {
-    val client = java.net.http.HttpClient.newHttpClient()
+  private def post(port: Int, pathAndQuery: String, body: String = "",
+                   client: java.net.http.HttpClient =
+                     java.net.http.HttpClient.newHttpClient()): (Int, String) = {
+    val resp = postResponse(port, pathAndQuery, body, client)
+    (resp.statusCode(), resp.body())
+  }
+
+  private def postResponse(port: Int, pathAndQuery: String, body: String,
+                           client: java.net.http.HttpClient)
+      : java.net.http.HttpResponse[String] = {
     val req = java.net.http.HttpRequest.newBuilder()
       .uri(java.net.URI.create(s"http://127.0.0.1:$port$pathAndQuery"))
       .header("Content-Type", "application/x-www-form-urlencoded")
       .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build()
-    val resp = client.send(req,
-      java.net.http.HttpResponse.BodyHandlers.ofString())
-    (resp.statusCode(), resp.body())
+    client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
   }
 
   test("serve loop: health, count, search, add, re-search over real HTTP") {
@@ -355,13 +360,22 @@ class SearchServerSpec extends AnyFunSuite {
       // (a char-count check would silently truncate this mid-stream)
       val twoByte = "é" // é → 2 UTF-8 bytes
       val body = "id=5&text=" + twoByte * (600 * 1024)
-      assert(post(port, "/add", body)._1 === 413)
+      // one keep-alive client for the whole sequence: the 413 leaves the
+      // body unread and closes the connection, so its reply must say
+      // `Connection: close` or the next request may ride the dead socket
+      // (whether it does is a race, hence the header check)
+      val keepAlive = java.net.http.HttpClient.newBuilder()
+        .version(java.net.http.HttpClient.Version.HTTP_1_1).build()
+      val tooLarge = postResponse(port, "/add", body, keepAlive)
+      assert(tooLarge.statusCode() === 413)
+      assert(tooLarge.headers().firstValue("Connection").orElse("")
+        .equalsIgnoreCase("close"))
       // a SMALL but malformed body (bad percent-encoding) is a client
       // error, not "payload too large"
-      assert(post(port, "/add", "id=5&text=%zz")._1 === 400)
-      assert(post(port, "/load", "path=%")._1 === 400)
+      assert(post(port, "/add", "id=5&text=%zz", keepAlive)._1 === 400)
+      assert(post(port, "/load", "path=%", keepAlive)._1 === 400)
       // and the server still serves normally afterwards
-      assert(get(port, "/count") === ((200, """{"count":1}""")))
+      assert(get(port, "/count", keepAlive) === ((200, """{"count":1}""")))
     } finally srv.stop()
   }
 
