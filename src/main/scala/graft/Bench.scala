@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 
 /** Benchmark entrypoint. Prints machine-readable JSON result lines.
   *
@@ -121,7 +122,7 @@ object Bench {
               "> duck_auto_pass$GRAFT_PASS.json")
           }
         }
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     val interCmd = sys.env.get("SPARK_GRAFT_INTERPASS_CMD") match {
       case Some(c) if c.trim.nonEmpty => Some(c)
       case Some(_)                    => None // explicitly disabled
@@ -137,7 +138,7 @@ object Bench {
         val rc = pb.start().waitFor()
         if (rc != 0) System.err.println(s"interpass pass=$passIdx rc=$rc")
       } catch {
-        case t: Throwable => System.err.println(s"interpass failed: $t")
+        case NonFatal(t) => System.err.println(s"interpass failed: $t")
       }
       interSecs += (System.nanoTime() - t0) / 1e9
     }
@@ -149,7 +150,7 @@ object Bench {
     }
     SparkEntry.queries.keys.foreach { q =>
       try SparkEntry.queries(q)(spark, warmDir).count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
       // per-call operator caches (PrefixSum's pid-frozen slice) are
       // released between queries so no row ever times another row's —
       // or another rep's — warm entry (r14 advice: min-of-reps was
@@ -234,7 +235,7 @@ object Bench {
       if (pass > 0) Queries.clearSharedBuildCaches(sfDir)
       infraBuilds.foreach { case (name, f) =>
         val t0 = System.nanoTime()
-        val ok = try { f(); true } catch { case _: Throwable => false }
+        val ok = try { f(); true } catch { case NonFatal(_) => false }
         val dt = (System.nanoTime() - t0) / 1e9
         val prev = infra.get(name)
         // a failed pass never overwrites a measured success; a line is
@@ -290,7 +291,7 @@ object Bench {
         val (ok, dt, d) = meter.measure {
           try { fn(spark, sfDir).count(); true }
           catch {
-            case t: Throwable =>
+            case NonFatal(t) =>
               // strip quotes/backslashes AND all raw control chars — any
               // char < 0x20 inside a JSON string invalidates the line
               val msg = (t.getClass.getSimpleName + ": " +
@@ -379,7 +380,7 @@ object Bench {
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         (line + "\n").getBytes("UTF-8"))
     } catch {
-      case t: Throwable =>
+      case NonFatal(t) =>
         System.err.println(s"bench_out write failed ($outPath): $t")
     }
     // Also archive the FULL per-query map as BENCH_FULL_r{N}.json next to
@@ -413,7 +414,7 @@ object Bench {
         .get
       java.nio.file.Files.write(target, bytes)
     } catch {
-      case t: Throwable =>
+      case NonFatal(t) =>
         System.err.println(s"BENCH_FULL archive write failed: $t")
     }
     // shutdown sweep for thread-keyed operator caches: drains every

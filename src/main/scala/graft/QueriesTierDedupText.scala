@@ -321,8 +321,8 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // exact cosine, incoming rows at ≥ minCosine against ANY corpus
       // vector rejected. The chain is Dedup.admitIncomingVectors — the
       // SAME kernel the streaming mirrors run per micro-batch
-      // (Streams.incrementalVectorAdmission / ...Evolving; stream ≡
-      // batch asserted in StreamsSpec). minCosine = 0.3 so the
+      // (Streams.incrementalVectorAdmission / admissionLoop over
+      // CorpusState.Evolving; stream ≡ batch asserted in StreamsSpec). minCosine = 0.3 so the
       // near-uniform fixture produces real rejections (driver-visible
       // evidence the tier bites, not an everything-admitted no-op).
       // Float cosine + seeded LSH → rows-only per the contract.

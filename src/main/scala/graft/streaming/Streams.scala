@@ -1,8 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
+
+import graft.operators.{Dedup, IvfIndex}
+import graft.sources.VersionedCorpus
 
 /** Structured Streaming tier (SURVEY.md §2 B33-B37) over the `events`
   * schema. The reference has no streaming at all — this is north-star
@@ -58,246 +64,297 @@ object Streams {
       .dropDuplicates("_fp")
       .drop("_fp")
 
-  /** Streaming INCREMENTAL ADMISSION — the LLM-ingestion composition
-    * behind `readStream` (the production shape of the reference's append
-    * path, `app.py:105-118`, upgraded to continuous ingestion): each
-    * micro-batch of incoming documents runs the full two-tier admission
-    * kernel [[graft.operators.Dedup.admitIncoming]] (exact-fingerprint
-    * anti-join vs the corpus + cross-set MinHash-LSH near-dup scan +
-    * Jaccard verify) and `sink` receives the ADMITTED rows of that batch.
-    *
-    * `corpus` is the static persisted corpus the stream is admitted
-    * against — at scale a parquet table maintained by the ingestion job;
-    * the per-batch work is batch-sized on the incoming side (the corpus
-    * contributes only distinct-key / bucket projections, exactly like
-    * the batch `incr_admit` query). Incoming rows are compared ONLY
-    * against the corpus, never each other, so the accumulated admissions
-    * are independent of the micro-batch split and equal the one-shot
-    * batch kernel on the same rows (asserted in StreamsSpec). A
-    * deployment where each batch's admissions should join the corpus for
-    * LATER batches would persist the admitted rows back to the corpus
-    * table inside `sink` and re-read it here — the kernel itself is
-    * unchanged.
-    *
-    * Returns the unstarted writer — attach a trigger/checkpoint and
-    * `.start()` to run. */
+  /** Where an admission loop's corpus lives between micro-batches — with
+    * the kernel, the one thing that varies across [[admissionLoop]]'s
+    * instances. Every state shares the kernels' cross-set contract:
+    * incoming rows are compared only against the corpus, never each
+    * other, so the rows WITHIN one micro-batch are admitted as a set and
+    * micro-batch boundaries define the comparison granularity (a
+    * deployment wanting intra-batch near-dup collapse runs
+    * `Dedup.lshDedupPipeline` on the batch before admission). */
+  sealed trait CorpusState
+
+  object CorpusState {
+    /** A fixed corpus frame — at scale a parquet table maintained by the
+      * ingestion job. The per-batch work is batch-sized on the incoming
+      * side (the corpus contributes only distinct-key / bucket
+      * projections, exactly like the batch `incr_admit` query), and
+      * because the corpus never changes, the accumulated admissions are
+      * independent of the micro-batch split and equal the one-shot batch
+      * kernel on the same rows (asserted in StreamsSpec for every
+      * kernel). `sink` receives the admitted frame unmaterialized and
+      * must consume it synchronously: the kernel's batch-scoped persists
+      * are released when the callback returns. Nothing is committed. */
+    final case class Static(corpus: DataFrame) extends CorpusState
+
+    /** Continuous ingestion in memory: each micro-batch is admitted
+      * against the corpus AS OF that batch (`initial` ∪ every earlier
+      * batch's admissions, as the `cols` projection the kernel consumes),
+      * so a document duplicating something admitted two batches ago is
+      * rejected. The commit is the next corpus generation (see
+      * [[Generation]]); `sink` gets the admitted rows persisted and
+      * counted, before it.
+      *
+      * Lifecycle: the generation lives in this process's memory, not in
+      * the stream checkpoint. Batch 0 of a (re)started query resets to
+      * `initial`; a micro-batch with batchId > 0 and no generation — a
+      * fresh writer recovered from a checkpoint — fails with an
+      * IllegalStateException instead of silently re-admitting every
+      * earlier admission against `initial`. The final generation stays
+      * cached until that reset or process end; a restartable or
+      * deterministically released loop uses [[Durable]]. */
+    final case class Evolving(initial: DataFrame, cols: Seq[String])
+        extends CorpusState
+
+    /** Continuous ingestion on disk — the restart-safe production loop.
+      * The corpus IS a [[graft.sources.VersionedCorpus]] directory: each
+      * micro-batch is admitted against the current snapshot's `cols`
+      * projection and its admissions (ALL incoming columns, so the store
+      * doubles as the corpus table downstream jobs read) are appended as
+      * the next committed generation, so a restarted — or entirely new —
+      * query over `root` continues from exactly the corpus the last
+      * committed batch left behind. Seed `root` with the initial corpus
+      * (`VersionedCorpus.append`) before starting.
+      *
+      * Failure replay is idempotent by construction: a re-run micro-batch
+      * whose admissions already committed admits zero rows (each is
+      * byte- or cosine-1.0-identical to its committed copy; earlier
+      * rejects stay rejected, the corpus only grew), and `append` commits
+      * nothing on an empty frame — so an [[IvfAppend]] gated on the
+      * commit never double-appends. The one crash window, corpus
+      * committed but index append not yet run, is repaired by
+      * [[graft.operators.IvfIndex.reconcilePartitioned]] on recovery.
+      *
+      * `compactEvery` > 0 folds the generation tail into one base
+      * generation whenever that many commits accumulate since the last
+      * base (`VersionedCorpus.maybeCompact`, `vacuumAfter` reclaiming the
+      * superseded tail): the content-neutral file-count valve a
+      * long-lived stream needs. `sink` gets the admitted rows after the
+      * commit, still persisted. */
+    final case class Durable(root: String, cols: Seq[String],
+                             compactEvery: Int = 0,
+                             vacuumAfter: Boolean = false)
+        extends CorpusState
+
+    /** The partitioned IVF index table at `path` is the corpus: each
+      * micro-batch is admitted against the table's `cols` projection AS
+      * CURRENTLY ON DISK, so with an [[IvfAppend]] to the same path the
+      * vectors admitted by earlier batches reject later duplicates
+      * (read-your-appends) and a restart resumes from what was durably
+      * appended; re-processing an appended batch is the one hazard.
+      *
+      * The admitted rows are held by an EAGER local checkpoint, not a
+      * persist: the append writes to the very path the kernel read, and
+      * Spark's by-path cache refresh would invalidate a merely persisted
+      * frame and RECOMPUTE it against the post-append table, where the
+      * batch's own rows now live: every admission would vanish from the
+      * sink's view (observed). The checkpoint has no file lineage. */
+    final case class IvfTable(path: String, cols: Seq[String])
+        extends CorpusState
+  }
+
+  /** [[admissionLoop]]'s one after-commit step: the committed admissions
+    * are assigned to the index's EXISTING centroids and appended to its
+    * partitioned table at `path` ([[graft.operators.IvfIndex.assignTo]] +
+    * `appendPartitioned` — zero-shuffle argmin over the batch, only the
+    * touched cluster partitions gain files); centroid refresh on quality
+    * decay is the batch `IvfIndex.build` rerun. */
+  final case class IvfAppend(path: String, idCol: String, vecCol: String,
+                             centroids: DataFrame)
+
+  /** The streaming ADMISSION loop — every admission or ingestion writer
+    * is this one `foreachBatch` body: each micro-batch runs the kernel
+    * `admit(batch, corpus)` inside [[Dedup.withAdmissionScope]] against
+    * the corpus `state` holds, commits the admitted rows the way that
+    * state does, appends them to `index` when rows were committed, and
+    * hands them to `sink`. The kernel is a [[graft.operators.Dedup]]
+    * admission kernel — the batch row's own code, so stream ≡ batch holds
+    * by construction. The commit gate is a result the state already has
+    * (the count it took, or `append`'s generation), never a new job; a
+    * [[CorpusState.Static]] corpus commits nothing, so it takes no
+    * `index`. Returns the unstarted writer. */
+  def admissionLoop(stream: DataFrame, state: CorpusState,
+                    admit: (DataFrame, DataFrame) => DataFrame,
+                    index: Option[IvfAppend] = None)
+                   (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
+    import CorpusState._
+    require(index.isEmpty || !state.isInstanceOf[Static],
+      "a Static corpus commits nothing, so it has no index to append to")
+    val lvl = StorageLevel.MEMORY_AND_DISK
+    val corpusGen = new Generation("Evolving admission corpus")
+    def afterCommit(admitted: DataFrame, committed: Boolean): Unit =
+      if (committed) index.foreach { ix =>
+        IvfIndex.appendPartitioned(admitted, ix.idCol,
+          IvfIndex.assignTo(admitted, ix.idCol, ix.vecCol, ix.centroids),
+          ix.path)
+      }
+    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      val spark = batch.sparkSession
+      // the scope spans the kernel and every consumer of its result
+      // (commit, index append, sink, next generation): the kernel's
+      // batch-scoped persists are released when the batch body returns
+      Dedup.withAdmissionScope[Unit] {
+        state match {
+          case Static(corpus) => sink(admit(batch, corpus), batchId)
+          case Evolving(initial, cols) =>
+            val corpus = corpusGen.at(batchId,
+              initial.select(cols.map(col): _*).persist(lvl))
+            val admitted = admit(batch, corpus).persist(lvl)
+            try {
+              afterCommit(admitted, admitted.count() > 0L)
+              sink(admitted, batchId)
+              corpusGen.swap(corpus.union(admitted.select(cols.map(col): _*)))
+            } finally admitted.unpersist()
+          case Durable(root, cols, compactEvery, vacuumAfter) =>
+            val admitted = admit(batch,
+                VersionedCorpus.snapshot(spark, root).select(cols.map(col): _*))
+              .persist(lvl)
+            try {
+              val gen = VersionedCorpus.append(admitted, root)
+              VersionedCorpus.maybeCompact(spark, root, compactEvery, vacuumAfter)
+              afterCommit(admitted, gen >= 0L)
+              sink(admitted, batchId)
+            } finally admitted.unpersist()
+          case IvfTable(path, cols) =>
+            val admitted = admit(batch,
+                spark.read.parquet(path).select(cols.map(col): _*))
+              .localCheckpoint(true)
+            try {
+              afterCommit(admitted, admitted.count() > 0L)
+              sink(admitted, batchId)
+            } finally release(admitted)
+        }
+      }
+    }
+  }
+
+  /** One in-memory state generation of a streaming loop — the
+    * [[CorpusState.Evolving]] corpus and the sketch loops' running
+    * states. [[swap]] cuts each new generation's lineage with a lazy
+    * LOCAL CHECKPOINT and materializes it before the predecessor is
+    * released: the union chain would otherwise deepen the plan AND the
+    * RDD graph by one per batch (the LearnBpe lesson: plain re-framing
+    * overflows the task deserializer after enough generations).
+    * foreachBatch runs micro-batches strictly sequentially, so the swap
+    * needs no synchronization. The generation lives in this process's
+    * memory: [[at]] resets it at batch 0 and refuses to guess at a
+    * resumed batch (see [[CorpusState.Evolving]]'s lifecycle). */
+  private final class Generation(what: String) {
+    private var cur: DataFrame = null
+    /** The generation micro-batch `batchId` reads: batch 0 of a
+      * (re)started query releases the previous run's generation and
+      * starts from `init` (null for an empty state). */
+    def at(batchId: Long, init: => DataFrame): DataFrame = {
+      if (batchId == 0L) { release(cur); cur = init }
+      else if (cur == null) throw new IllegalStateException(
+        s"$what: micro-batch $batchId arrived with no in-memory generation " +
+          "(a writer resumed from a stream checkpoint): it lives in process " +
+          "memory, so resuming would silently start over from the initial " +
+          "state — keep it on disk (Streams.CorpusState.Durable)")
+      cur
+    }
+
+    def swap(next: DataFrame): DataFrame = {
+      val n = next.localCheckpoint(false)
+      n.count() // materialize before releasing the predecessor
+      release(cur)
+      cur = n
+      n
+    }
+  }
+
+  /** Unpersist `df` and, when it is a local checkpoint, the checkpointed
+    * RDD under it — `Dataset.unpersist` alone only drops cache-manager
+    * entries, leaving checkpoint blocks to garbage collection. */
+  private def release(df: DataFrame): Unit = if (df != null) {
+    df.unpersist()
+    Some(df.queryExecution.logical).collect {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false) }
+  }
+
+  /** Text admission ([[graft.operators.Dedup.admitIncoming]]: exact
+    * fingerprint anti-join + cross-set MinHash-LSH near-dup scan +
+    * Jaccard verify) against a [[CorpusState.Static]] corpus. */
   def incrementalAdmission(docStream: DataFrame, corpus: DataFrame,
                            idCol: String, textCol: String,
                            minJaccard: Double = 0.8)
-                          (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      // scope = kernel call + sink's synchronous consumption: the
-      // kernel's batch-scoped persists are unpersisted when the
-      // callback returns (r16 advice — CacheManager holds them forever
-      // otherwise, one leaked entry per micro-batch)
-      graft.operators.Dedup.withAdmissionScope {
-        sink(graft.operators.Dedup.admitIncoming(
-          batch, corpus, idCol, textCol, minJaccard), batchId)
-      }
-    }
+                          (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    admissionLoop(docStream, CorpusState.Static(corpus),
+      Dedup.admitIncoming(_, _, idCol, textCol, minJaccard))(sink)
 
-  /** Streaming CLEAN-THEN-ADMIT — [[incrementalAdmission]] with the
-    * substring tier in front: each micro-batch is stripped of every
-    * token run it copies from the corpus, emptied docs are dropped, and
-    * the surviving CLEANED text runs the two-tier admission kernel
-    * (one shared kernel, [[graft.operators.Dedup.cleanAndAdmit]]).
-    * `sink` receives (idCol, textCol-cleaned) admitted rows. Same
-    * static-corpus/cross-set contract as [[incrementalAdmission]], so
-    * the accumulated admissions equal the one-shot batch kernel on the
-    * same rows (asserted in StreamsSpec). */
+  /** Clean-then-admit ([[graft.operators.Dedup.cleanAndAdmit]]: token
+    * runs copied from the corpus are stripped, emptied docs dropped, the
+    * cleaned text admitted) against a [[CorpusState.Static]] corpus.
+    * `gramIndexPath` is the corpus's maintained gram-key artifact, probed
+    * per micro-batch instead of re-shuffling the corpus's grams and
+    * refreshed by the ingestion job (SpanDedup.refreshGramIndex) on
+    * commit; staleness between commits is its safe-degrade window. */
   def incrementalCleanAdmission(docStream: DataFrame, corpus: DataFrame,
                                 idCol: String, textCol: String, k: Int = 8,
                                 minKeptTokens: Int = 1,
                                 minJaccard: Double = 0.8,
                                 gramIndexPath: Option[String] = None)
-                               (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    // gramIndexPath — the amortized per-batch strip (the corpus's
-    // maintained gram-key artifact; see Dedup.cleanAndAdmit): the
-    // production streaming loop probes the artifact each micro-batch
-    // instead of re-shuffling the corpus's grams, and the ingestion
-    // job refreshes it (SpanDedup.refreshGramIndex) when admitted
-    // batches commit to the corpus store — staleness between commits
-    // is the artifact's documented safe-degrade window.
-    docStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      graft.operators.Dedup.withAdmissionScope {
-        sink(graft.operators.Dedup.cleanAndAdmit(
-          batch, corpus, idCol, textCol, k, minKeptTokens, minJaccard,
-          hashGrams = false, gramIndexPath = gramIndexPath), batchId)
-      }
-    }
+                               (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    admissionLoop(docStream, CorpusState.Static(corpus),
+      Dedup.cleanAndAdmit(_, _, idCol, textCol, k, minKeptTokens, minJaccard,
+        hashGrams = false, gramIndexPath = gramIndexPath))(sink)
 
-  /** Streaming mirror of [[graft.operators.Dedup.gateAndAdmit]] — the
-    * quality-gated ingestion loop: each micro-batch passes the row-local
-    * Gopher gate first (quality rejects never pay the dedup tiers), then
-    * the two-tier admission kernel. SAME kernel as the batch row, so
-    * stream ≡ batch under any micro-batching (asserted in StreamsSpec —
-    * the gate is row-local and admission is cross-set-only, so batch
-    * splits cannot change any decision against a static corpus). */
+  /** Quality-gated admission ([[graft.operators.Dedup.gateAndAdmit]]:
+    * the row-local Gopher gate first, so quality rejects never pay the
+    * dedup tiers) against a [[CorpusState.Static]] corpus. */
   def incrementalGatedAdmission(docStream: DataFrame, corpus: DataFrame,
                                 idCol: String, textCol: String,
                                 minJaccard: Double = 0.8)
-                               (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      graft.operators.Dedup.withAdmissionScope {
-        sink(graft.operators.Dedup.gateAndAdmit(
-          batch, corpus, idCol, textCol, minJaccard), batchId)
-      }
-    }
+                               (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    admissionLoop(docStream, CorpusState.Static(corpus),
+      Dedup.gateAndAdmit(_, _, idCol, textCol, minJaccard))(sink)
 
-  /** The shared EVOLVING-CORPUS foreachBatch loop behind
-    * [[incrementalAdmissionEvolving]] and its vector twin
-    * [[incrementalVectorAdmissionEvolving]]: each micro-batch is admitted
-    * (via `admit`) against the corpus AS OF that batch (initial corpus ∪
-    * every earlier batch's admissions), `sink` receives the admitted
-    * rows, and the admissions' `cols` projection joins the corpus for
-    * later batches.
-    *
-    * Corpus generations hold only the `cols` projection the admission
-    * kernel consumes. Each generation is a lazy LOCAL CHECKPOINT
-    * materialized before its predecessor is released — the union chain
-    * would otherwise deepen the plan AND the RDD graph by one per batch
-    * (the LearnBpe lesson: plain re-framing overflows the task
-    * deserializer after enough generations). foreachBatch runs
-    * micro-batches strictly sequentially, so the generation swap needs
-    * no synchronization.
-    *
-    * Lifecycle contract: the corpus generation lives in THIS process's
-    * memory, not in the stream checkpoint — so the writer is
-    * SINGLE-START/NON-RECOVERABLE (a checkpoint-recovered query resuming
-    * at batchId > 0 would see the initial corpus, not the evolved one).
-    * Starting the writer (or a fresh one from the same call) again DOES
-    * reset cleanly: batchId == 0 re-initializes the corpus from
-    * `initialCorpus` and releases the previous run's last generation.
-    * The final generation stays cached until that reset or process end —
-    * a deployment needing deterministic release persists admissions to
-    * the corpus TABLE inside `sink` and re-reads it instead (the
-    * static-corpus form). */
-  private def evolvingAdmission(docStream: DataFrame,
-                                initialCorpus: DataFrame,
-                                cols: Seq[String],
-                                admit: (DataFrame, DataFrame) => DataFrame)
-                               (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val init = initialCorpus.select(cols.map(col): _*)
-    var corpus: DataFrame = null
-    docStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      // batch 0 of a (re)started query begins from the INITIAL corpus —
-      // without this, a second .start() of the returned writer would
-      // silently resume from the previous run's in-memory generations
-      if (batchId == 0L || corpus == null) {
-        if (corpus != null) corpus.unpersist()
-        corpus = init.persist(lvl)
-      }
-      // admission scope: the kernel's internal persists are released
-      // when the batch body completes — everything (sink, the next
-      // generation's checkpoint) consumes `admitted` inside it
-      graft.operators.Dedup.withAdmissionScope {
-        val admitted = admit(batch, corpus).persist(lvl)
-        admitted.count()
-        try {
-          sink(admitted, batchId)
-          // next generation: corpus ∪ this batch's admissions, lineage cut
-          // and materialized BEFORE the inputs it reads from are released
-          val next = corpus.union(admitted.select(cols.map(col): _*))
-            .localCheckpoint(false)
-          next.count()
-          corpus.unpersist()
-          corpus = next
-        } finally admitted.unpersist()
-      }
-    }
-  }
-
-  /** [[incrementalAdmission]]'s EVOLVING-CORPUS form — continuous
-    * ingestion proper: each micro-batch is admitted against the corpus
-    * AS OF that batch, so a document that duplicates something admitted
-    * two batches ago is rejected, not re-admitted. This is the
-    * production ingestion loop: `sink` persists the admitted rows (at
-    * scale, an append to the corpus table), and the in-memory corpus
-    * generation mirrors what that table would re-read.
-    *
-    * Semantics note shared with the static form: rows WITHIN one
-    * micro-batch are admitted as a set (only compared against the
-    * corpus, not each other) — micro-batch boundaries define the
-    * comparison granularity. A deployment wanting intra-batch near-dup
-    * collapse runs `Dedup.lshDedupPipeline` on the batch before
-    * admission; the cross-batch guarantee here is unaffected.
-    *
-    * `sink` must consume `admitted` synchronously (it is unpersisted
-    * when the callback returns). Single-start/non-recoverable — see
-    * [[evolvingAdmission]]'s lifecycle contract. */
+  /** [[incrementalAdmission]] against a [[CorpusState.Evolving]] corpus
+    * of (idCol, textCol). */
   def incrementalAdmissionEvolving(docStream: DataFrame,
                                    initialCorpus: DataFrame,
                                    idCol: String, textCol: String,
                                    minJaccard: Double = 0.8)
-                                  (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    evolvingAdmission(docStream, initialCorpus, Seq(idCol, textCol),
-      (batch, corpus) => graft.operators.Dedup.admitIncoming(
-        batch, corpus, idCol, textCol, minJaccard))(sink)
+                                  (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    admissionLoop(docStream,
+      CorpusState.Evolving(initialCorpus, Seq(idCol, textCol)),
+      Dedup.admitIncoming(_, _, idCol, textCol, minJaccard))(sink)
 
-  /** [[incrementalAdmissionEvolving]] with the corpus state ON DISK — the
-    * restart-safe production loop. The evolving form's corpus generation
-    * lives in this process's memory, which makes it single-start (a
-    * checkpoint-recovered query would silently see the initial corpus);
-    * here the corpus IS a [[graft.sources.VersionedCorpus]] directory:
-    * each micro-batch is admitted against the current on-disk snapshot
-    * and its admissions (all columns) are appended as the next committed
-    * generation, so a restarted — or entirely new — query over the same
-    * `root` continues from exactly the corpus the last committed batch
-    * left behind.
-    *
-    * Failure-replay is IDEMPOTENT by construction, no transaction log
-    * dance: if the engine re-runs a micro-batch whose admissions already
-    * committed, the exact-fingerprint tier now rejects every one of them
-    * (byte-identical text is in the snapshot) and previously-rejected
-    * rows stay rejected (the corpus only grew) — zero rows survive, and
-    * [[graft.sources.VersionedCorpus.append]] commits nothing on an
-    * empty frame. Replay cost is one admission pass, the same work a
-    * transactional commit would have to re-verify anyway.
-    *
-    * Seed `root` with the initial corpus
-    * (`VersionedCorpus.append(corpus, root)`) before starting; the
-    * appended admissions keep ALL incoming columns, so the store doubles
-    * as the corpus table downstream jobs read. `sink` (optional) gets
-    * the admitted rows after the commit, still materialized.
-    *
-    * `compactEvery` > 0 folds the generation tail into one base
-    * generation whenever that many commits accumulate since the last
-    * base (`VersionedCorpus.maybeCompact`, with `vacuumAfter` to
-    * reclaim the superseded tail) — the file-count valve a long-lived
-    * stream needs: without it every micro-batch leaves one small
-    * parquet directory behind and the snapshot read fans out over
-    * thousands of tiny files. Compaction is content-neutral, so the
-    * admission semantics are untouched. */
+  /** [[incrementalAdmission]] against a [[CorpusState.Durable]] corpus
+    * store at `root`. */
   def incrementalAdmissionDurable(docStream: DataFrame, root: String,
                                   idCol: String, textCol: String,
                                   minJaccard: Double = 0.8,
                                   compactEvery: Int = 0,
                                   vacuumAfter: Boolean = false)
                                  (sink: (DataFrame, Long) => Unit = (_, _) => ())
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      graft.operators.Dedup.withAdmissionScope {
-        val admitted = graft.operators.Dedup.admitIncoming(
-            batch,
-            graft.sources.VersionedCorpus.snapshot(spark, root)
-              .select(col(idCol), col(textCol)),
-            idCol, textCol, minJaccard)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          graft.sources.VersionedCorpus.append(admitted, root)
-          graft.sources.VersionedCorpus.maybeCompact(
-            spark, root, compactEvery, vacuumAfter)
-          sink(admitted, batchId)
-        } finally admitted.unpersist()
-      }
-    }
+      : DataStreamWriter[Row] =
+    admissionLoop(docStream,
+      CorpusState.Durable(root, Seq(idCol, textCol), compactEvery, vacuumAfter),
+      Dedup.admitIncoming(_, _, idCol, textCol, minJaccard))(sink)
+
+  /** Vector admission ([[graft.operators.Dedup.admitIncomingVectors]]:
+    * cross-set sign-LSH buckets + exact-cosine verify ≥ `minCosine`)
+    * against a [[CorpusState.Static]] embedding corpus. */
+  def incrementalVectorAdmission(vecStream: DataFrame, corpus: DataFrame,
+                                 idCol: String, vecCol: String,
+                                 minCosine: Double = 0.9, nBits: Int = 8)
+                                (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    admissionLoop(vecStream, CorpusState.Static(corpus),
+      Dedup.admitIncomingVectors(_, _, idCol, vecCol, minCosine, nBits))(sink)
+
+  /** Cell-partitioned semantic admission
+    * ([[graft.operators.Dedup.admitIncomingSemantic]]: incoming vectors
+    * meet only corpus vectors in their assigned cell) against a
+    * [[CorpusState.Static]] indexed corpus — the partitioned index
+    * relation (idCol, vecCol, cluster_id) + its frozen centroids. */
+  def incrementalSemanticAdmission(vecStream: DataFrame, corpusIdx: DataFrame,
+                                   idCol: String, vecCol: String,
+                                   centroids: DataFrame,
+                                   minCosine: Double = 0.9)
+                                  (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    admissionLoop(vecStream, CorpusState.Static(corpusIdx),
+      Dedup.admitIncomingSemantic(_, _, idCol, vecCol, centroids, minCosine))(sink)
 
   /** INVERTED-INDEX ingestion loop — keep a persisted
     * [[graft.operators.TextIndex]] current as documents stream in:
@@ -320,7 +377,7 @@ object Streams {
                                     idCol: String, textCol: String,
                                     shards: Int = 64, optimizeEvery: Int = 0)
                                    (sink: (Long, Boolean) => Unit = (_, _) => ())
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      : DataStreamWriter[Row] =
     docStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val committed = graft.operators.TextIndex.appendOnce(
         batch, idCol, textCol, indexDir, token = s"stream-$batchId", shards)
@@ -351,7 +408,7 @@ object Streams {
   def incrementalMediaIngestion(mediaStream: DataFrame, corpusRoot: String,
                                 indexRoot: String, maxHamming: Int = 3)
                                (sink: (Long, Long) => Unit = (_, _) => ())
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      : DataStreamWriter[Row] =
     mediaStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
       import spark.implicits._
@@ -397,7 +454,7 @@ object Streams {
                         vectorIdCol: String = "vec_id",
                         extraStores: Seq[(String, String)] = Nil)
                        (sink: (Long, Map[String, Long]) => Unit = (_, _) => ())
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      : DataStreamWriter[Row] =
     idStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val removed = graft.operators.Forget.forget(batch.sparkSession,
         batch, corpusRoot, corpusKeyCol, textIndexDir,
@@ -425,12 +482,10 @@ object Streams {
                             compactEvery: Int = 0,
                             vacuumAfter: Boolean = false)
                            (sink: (Long, Long, Long) => Unit = (_, _, _) => ())
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      : DataStreamWriter[Row] =
     changeStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val (gU, gD) = graft.sources.VersionedCorpus.applyChanges(
-        batch, root, keyCol, opCol, seqCol)
-      graft.sources.VersionedCorpus.maybeCompact(
-        batch.sparkSession, root, compactEvery, vacuumAfter)
+      val (gU, gD) = VersionedCorpus.applyChanges(batch, root, keyCol, opCol, seqCol)
+      VersionedCorpus.maybeCompact(batch.sparkSession, root, compactEvery, vacuumAfter)
       sink(batchId, gU, gD)
     }
 
@@ -453,205 +508,14 @@ object Streams {
                              groupCol: String, aggs: Seq[Column],
                              compactEvery: Int = 0)
                             (sink: (Long, Long) => Unit = (_, _) => ())
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      : DataStreamWriter[Row] =
     changeStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
-      graft.sources.VersionedCorpus.applyChanges(
-        batch, root, keyCol, opCol, seqCol)
+      VersionedCorpus.applyChanges(batch, root, keyCol, opCol, seqCol)
       val cur = graft.sources.IncrementalView.refresh(
         spark, root, viewRoot, viewCursor, keyCol, groupCol, aggs)
-      graft.sources.VersionedCorpus.maybeCompact(spark, root, compactEvery)
+      VersionedCorpus.maybeCompact(spark, root, compactEvery)
       sink(batchId, cur)
-    }
-
-  /** VECTOR-TIER streaming admission against a STATIC embedding-indexed
-    * corpus — [[incrementalAdmission]]'s embedding twin: each micro-batch
-    * of incoming (id, vector) rows runs the batch kernel
-    * [[graft.operators.Dedup.admitIncomingVectors]] (cross-set sign-LSH
-    * buckets + exact-cosine verify ≥ `minCosine`) and `sink` receives the
-    * admitted rows. Incoming rows are compared only against the corpus,
-    * never each other, so the accumulated admissions equal the one-shot
-    * batch kernel on the same rows regardless of the micro-batch split
-    * (asserted in StreamsSpec). */
-  def incrementalVectorAdmission(vecStream: DataFrame, corpus: DataFrame,
-                                 idCol: String, vecCol: String,
-                                 minCosine: Double = 0.9, nBits: Int = 8)
-                                (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      graft.operators.Dedup.withAdmissionScope {
-        sink(graft.operators.Dedup.admitIncomingVectors(
-          batch, corpus, idCol, vecCol, minCosine, nBits), batchId)
-      }
-    }
-
-  /** CELL-PARTITIONED streaming semantic admission —
-    * [[incrementalVectorAdmission]]'s IVF-celled twin, running
-    * [[graft.operators.Dedup.admitIncomingSemantic]] per micro-batch
-    * against a static indexed corpus (the partitioned index relation +
-    * its frozen centroids): incoming vectors meet only corpus vectors
-    * in their assigned cell. Same cross-set contract, so accumulated
-    * admissions ≡ the one-shot batch kernel under any micro-batch split
-    * (asserted in StreamsSpec). */
-  def incrementalSemanticAdmission(vecStream: DataFrame, corpusIdx: DataFrame,
-                                   idCol: String, vecCol: String,
-                                   centroids: DataFrame,
-                                   minCosine: Double = 0.9)
-                                  (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      sink(graft.operators.Dedup.admitIncomingSemantic(
-        batch, corpusIdx, idCol, vecCol, centroids, minCosine), batchId)
-    }
-
-  /** The SEMANTIC ingestion loop — [[incrementalVectorIngestion]]'s
-    * cell-partitioned twin, and the form where the EVOLVING corpus is
-    * the durable INDEX TABLE itself rather than an in-memory
-    * generation: each micro-batch is admitted by
-    * [[graft.operators.Dedup.admitIncomingSemantic]] against the
-    * partitioned index AS CURRENTLY ON DISK (so vectors admitted by
-    * earlier batches reject later duplicates — read-your-appends), and
-    * the admitted rows are assigned to the frozen centroids and
-    * appended to the table. Because the evolving state lives in the
-    * table, a restart resumes from whatever was durably appended — no
-    * single-start caveat; re-processing an already-appended batch is
-    * the one hazard (same as any at-least-once file sink; pair with a
-    * checkpoint + idempotent batch ids in production).
-    *
-    * The admitted frame is persisted and fully materialized BEFORE the
-    * append touches the same path — the read of the current index
-    * completes while the plan still sees the pre-append file set. */
-  def incrementalSemanticIngestion(vecStream: DataFrame,
-                                   idCol: String, vecCol: String,
-                                   centroids: DataFrame, indexPath: String,
-                                   minCosine: Double = 0.9)
-                                  (afterBatch: (DataFrame, Long) => Unit =
-                                     (_, _) => ())
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      val idx = spark.read.parquet(indexPath)
-        .select(col(idCol), col(vecCol), col("cluster_id"))
-      // LOCAL CHECKPOINT, not persist: the append below writes to the
-      // very path this plan reads, and Spark's by-path cache refresh
-      // would invalidate a merely-persisted frame and RECOMPUTE it
-      // against the post-append table — where the batch's own rows now
-      // live, so every admission would vanish from the sink's view
-      // (observed). The eager checkpoint pins the admitted rows as a
-      // materialized RDD with no file lineage to refresh.
-      val admitted = graft.operators.Dedup.admitIncomingSemantic(
-          batch, idx, idCol, vecCol, centroids, minCosine)
-        .localCheckpoint(true)
-      try {
-        if (admitted.count() > 0L)
-          graft.operators.IvfIndex.appendPartitioned(admitted, idCol,
-            graft.operators.IvfIndex.assignTo(admitted, idCol, vecCol,
-              centroids), indexPath)
-        afterBatch(admitted, batchId)
-      } finally admitted.unpersist()
-    }
-
-  /** [[incrementalVectorAdmission]]'s EVOLVING-CORPUS form — the
-    * continuous-ingestion loop for an embedding-indexed corpus: each
-    * batch's admitted vectors join the corpus for later batches, so a
-    * vector that near-duplicates (cosine ≥ `minCosine`) something
-    * admitted two batches ago is rejected, not re-admitted. Generations
-    * hold only the (idCol, vecCol) projection. Single-start/
-    * non-recoverable — see [[evolvingAdmission]]'s lifecycle contract. */
-  def incrementalVectorAdmissionEvolving(vecStream: DataFrame,
-                                         initialCorpus: DataFrame,
-                                         idCol: String, vecCol: String,
-                                         minCosine: Double = 0.9,
-                                         nBits: Int = 8)
-                                        (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    evolvingAdmission(vecStream, initialCorpus, Seq(idCol, vecCol),
-      (batch, corpus) => graft.operators.Dedup.admitIncomingVectors(
-        batch, corpus, idCol, vecCol, minCosine, nBits))(sink)
-
-  /** The COMPLETE vector-corpus ingestion loop — admission and INDEX
-    * MAINTENANCE composed per micro-batch, the production shape the
-    * pieces exist for: each batch is admitted against the evolving
-    * (id, vector) corpus ([[graft.operators.Dedup.admitIncomingVectors]]
-    * — cross-set sign-LSH + exact-cosine verify, earlier admissions
-    * reject later dups), and the ADMITTED rows are assigned to the
-    * index's EXISTING centroids and appended to its partitioned table
-    * ([[graft.operators.IvfIndex.assignTo]] + `appendPartitioned` —
-    * zero-shuffle argmin over the batch, only touched cluster
-    * partitions gain files). The searchable index therefore tracks the
-    * deduped corpus continuously; centroid refresh on quality decay is
-    * the batch `IvfIndex.build` rerun, per its maintenance contract.
-    *
-    * `afterBatch` (optional) observes each batch's admitted rows after
-    * the index append, synchronously. Single-start/non-recoverable —
-    * see [[evolvingAdmission]]'s lifecycle contract; the INDEX TABLE,
-    * unlike the in-memory corpus generation, is durable, so a restart
-    * that re-processes batch 0 should point at a fresh index path (or
-    * rebuild) to avoid double-appending. */
-  def incrementalVectorIngestion(vecStream: DataFrame,
-                                 initialCorpus: DataFrame,
-                                 idCol: String, vecCol: String,
-                                 centroids: DataFrame, indexPath: String,
-                                 minCosine: Double = 0.9, nBits: Int = 8)
-                                (afterBatch: (DataFrame, Long) => Unit =
-                                   (_, _) => ())
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    evolvingAdmission(vecStream, initialCorpus, Seq(idCol, vecCol),
-      (batch, corpus) => graft.operators.Dedup.admitIncomingVectors(
-        batch, corpus, idCol, vecCol, minCosine, nBits)) { (admitted, batchId) =>
-      // admitted is persisted + materialized by the evolving loop, so
-      // the emptiness probe and the append read it from cache
-      if (!admitted.isEmpty)
-        graft.operators.IvfIndex.appendPartitioned(admitted, idCol,
-          graft.operators.IvfIndex.assignTo(admitted, idCol, vecCol, centroids),
-          indexPath)
-      afterBatch(admitted, batchId)
-    }
-
-  /** [[incrementalVectorIngestion]] with BOTH states on disk — the
-    * restart-safe vector-corpus loop, [[incrementalAdmissionDurable]]'s
-    * embedding twin: the deduped (id, vector) corpus lives in a
-    * [[graft.sources.VersionedCorpus]] directory and the searchable IVF
-    * table at `indexPath`; each micro-batch is admitted against the
-    * on-disk snapshot, commits as the next corpus generation, and the
-    * committed admissions are assigned to the EXISTING centroids and
-    * appended to the index — so a new query over the same root resumes
-    * exactly where the last committed batch left off, index included.
-    *
-    * Ordering contract: the corpus commit is the source of truth and
-    * GATES the index append. A replayed micro-batch admits zero rows
-    * (every admission is cosine-1.0-identical to its committed copy),
-    * commits nothing, and therefore never double-appends the index. The
-    * one crash window — corpus committed, index append not yet run — is
-    * repaired by [[graft.operators.IvfIndex.reconcilePartitioned]]
-    * (id-only anti-join, idempotent); run it once on recovery before
-    * restarting the stream. */
-  def incrementalVectorIngestionDurable(vecStream: DataFrame, root: String,
-                                        idCol: String, vecCol: String,
-                                        centroids: DataFrame,
-                                        indexPath: String,
-                                        minCosine: Double = 0.9,
-                                        nBits: Int = 8)
-                                       (afterBatch: (DataFrame, Long) => Unit =
-                                          (_, _) => ())
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      graft.operators.Dedup.withAdmissionScope {
-        val admitted = graft.operators.Dedup.admitIncomingVectors(
-            batch,
-            graft.sources.VersionedCorpus.snapshot(batch.sparkSession, root)
-              .select(col(idCol), col(vecCol)),
-            idCol, vecCol, minCosine, nBits)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (graft.sources.VersionedCorpus.append(admitted, root) >= 0L)
-            graft.operators.IvfIndex.appendPartitioned(admitted, idCol,
-              graft.operators.IvfIndex.assignTo(
-                admitted, idCol, vecCol, centroids),
-              indexPath)
-          afterBatch(admitted, batchId)
-        } finally admitted.unpersist()
-      }
     }
 
   /** Streaming SKETCH MAINTENANCE — [[graft.operators.Sketch]]'s
@@ -664,29 +528,22 @@ object Streams {
     * rescan. The union is associative and order-independent, so the
     * state after the last batch equals the one-shot batch sketch over
     * all streamed rows regardless of how the stream was micro-batched
-    * (asserted in StreamsSpec). Generations are localCheckpointed and
-    * the predecessor released each batch, mirroring
-    * [[evolvingAdmission]]'s lifecycle: single-start/non-recoverable,
-    * batch-0 restart resets to empty state (a durable deployment
-    * persists the (lang, sketch) rows in `sink` and re-merges on
-    * recovery — sketches are bytes columns, parquet-friendly). */
+    * (asserted in StreamsSpec). The state has [[CorpusState.Evolving]]'s
+    * lifecycle (batch 0 resets it to empty); a durable deployment
+    * persists the (lang, sketch) rows in `sink` and re-merges them on
+    * recovery. */
   def runningVocabSketch(docStream: DataFrame, langCol: String,
                          textCol: String, lgK: Int = 12)
-                        (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+                        (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     import graft.operators.Sketch
-    var state: DataFrame = null // (langCol, sketch), one row per language
+    val state = new Generation("runningVocabSketch") // (langCol, sketch)
     docStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      if (batchId == 0L) { if (state != null) state.unpersist(); state = null }
+      val prev = state.at(batchId, null)
       val bs = Sketch.vocabSketches(batch, langCol, textCol, lit(0), lgK)
         .select(col(langCol), col("sketch"))
-      val merged = Sketch.mergeSketches(
-          if (state == null) bs else state.unionAll(bs), Seq(col(langCol)))
-        .localCheckpoint(false)
-      merged.count() // materialize before releasing the previous generation
-      if (state != null) state.unpersist()
-      state = merged
-      sink(state.select(col(langCol),
+      val merged = state.swap(Sketch.mergeSketches(
+        if (prev == null) bs else prev.unionAll(bs), Seq(col(langCol))))
+      sink(merged.select(col(langCol),
         Sketch.estimate(col("sketch")).as("vocab_est")), batchId)
     }
   }
@@ -703,34 +560,28 @@ object Streams {
     * the last batch answers IDENTICALLY to the batch
     * [[graft.operators.Sketch.heavyHitters]] run with the same batch
     * assignment (asserted in StreamsSpec) — stream ≡ batch to the byte,
-    * not within sketch error. Same lifecycle as [[runningVocabSketch]]:
-    * single-start, batch-0 reset; a durable deployment persists the
-    * (lang, cms) + candidate rows in `sink` (both parquet-friendly). */
+    * not within sketch error. Same lifecycle as [[runningVocabSketch]];
+    * a durable deployment persists the (lang, cms) + candidate rows in
+    * `sink` (both parquet-friendly). */
   def runningHeavyHitters(docStream: DataFrame, langCol: String,
                           textCol: String, k: Int = 10,
                           candidatesPerBatch: Int = 30,
                           eps: Double = 0.001, confidence: Double = 0.99,
                           seed: Int = 42)
-                         (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+                         (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     import graft.operators.Sketch
-    var cms: DataFrame = null   // (langCol, cms) — one grid per language
-    var cands: DataFrame = null // (langCol, tok) — accumulated candidates
+    val cmsState = new Generation("runningHeavyHitters sketch") // (langCol, cms)
+    val candState = new Generation("runningHeavyHitters candidates") // (langCol, tok)
     docStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      if (batchId == 0L) {
-        if (cms != null) cms.unpersist()
-        if (cands != null) cands.unpersist()
-        cms = null; cands = null
-      }
+      val prevCms = cmsState.at(batchId, null)
+      val prevCands = candState.at(batchId, null)
       val toks = batch.select(col(langCol),
         explode(graft.operators.TextAnalysis.tokens(col(textCol))).as("tok"))
       val bs = Sketch.freqSketches(toks, col("tok"), lit(0),
           Seq(col(langCol)), eps, confidence, seed)
         .select(col(langCol), col("cms"))
-      val mergedNext = Sketch.mergeFreqSketches(
-          if (cms == null) bs else cms.unionAll(bs), Seq(col(langCol)))
-        .localCheckpoint(false)
-      mergedNext.count() // materialize before releasing the predecessor
+      val cms = cmsState.swap(Sketch.mergeFreqSketches(
+        if (prevCms == null) bs else prevCms.unionAll(bs), Seq(col(langCol))))
       val perLangBatch = org.apache.spark.sql.expressions.Window
         .partitionBy(col(langCol)).orderBy(col("c").desc, col("tok").asc)
       val bc = toks.groupBy(col(langCol), col("tok"))
@@ -738,12 +589,8 @@ object Streams {
         .withColumn("__rn", row_number().over(perLangBatch))
         .filter(col("__rn") <= candidatesPerBatch)
         .select(col(langCol), col("tok"))
-      val candsNext = (if (cands == null) bc else cands.unionAll(bc))
-        .distinct().localCheckpoint(false)
-      candsNext.count()
-      if (cms != null) cms.unpersist()
-      if (cands != null) cands.unpersist()
-      cms = mergedNext; cands = candsNext
+      val cands = candState.swap(
+        (if (prevCands == null) bc else prevCands.unionAll(bc)).distinct())
       val perLang = org.apache.spark.sql.expressions.Window
         .partitionBy(col(langCol)).orderBy(col("est").desc, col("tok").asc)
       sink(cands.join(broadcast(cms), langCol)

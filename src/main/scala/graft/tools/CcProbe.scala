@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Connected-components SCALE PROBE — the 10M-edge evidence behind the
   * polylog-rounds claim every dedup-cluster operator inherits from
@@ -98,7 +99,7 @@ object CcProbe {
           val n = labels.select(col("component")).distinct().count()
           labels.unpersist()
           Right(n)
-        } catch { case t: Throwable => Left(t.getMessage) }
+        } catch { case NonFatal(t) => Left(t.getMessage) }
       }
       res match {
         case Right(n) =>

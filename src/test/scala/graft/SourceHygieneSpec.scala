@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * listeners only in `obs/JobMeter.scala`, one call site each for the
   * versioned store's commit-file writers, the near-dup closer's
   * broadcast hint and the text and vector admission kernels' reject
-  * anti-join, and no orphaned scaladoc. [[hits]] skips comment
-  * lines. */
+  * anti-join, one streaming admission loop, no swallowed `Throwable`,
+  * and no orphaned scaladoc. [[hits]] skips comment lines. */
 class SourceHygieneSpec extends AnyFunSuite {
   private val mainRoot = Paths.get("src", "main", "scala")
 
@@ -22,10 +22,14 @@ class SourceHygieneSpec extends AnyFunSuite {
     for {
       f <- mainFiles
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      t = line.trim
-      if !t.startsWith("//") && !t.startsWith("*") && !t.startsWith("/*")
+      if !isComment(line)
       if pattern.findFirstIn(line).isDefined
-    } yield (rel(f), i + 1, t)
+    } yield (rel(f), i + 1, line.trim)
+
+  private def isComment(line: String): Boolean = {
+    val t = line.trim
+    t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+  }
 
   private def mainFiles: List[Path] = {
     assert(Files.isDirectory(mainRoot), s"no main sources at ${mainRoot.toAbsolutePath}")
@@ -93,6 +97,56 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(calls.map(c => enclosingDef(dedup, c._2).takeWhile(_ != '(')) ===
       Seq("def admitIncoming", "def admitIncomingVectors"),
       "antiByLocalIds( call sites:\n" + calls.mkString("\n"))
+  }
+
+  test("every streaming admission runs in the one admissionLoop body") {
+    // a loop that re-codes foreachBatch + scope + commit for one kernel
+    // and corpus state, instead of passing them to admissionLoop, shows
+    // up as a second scope or as a kernel call in another foreachBatch
+    val streams = "graft/streaming/Streams.scala"
+    val scopes = hits("""\bwithAdmissionScope\b""".r)
+      .filter(_._1.startsWith("graft/streaming/"))
+    assert(scopes.size === 1 && scopes.head._1 === streams,
+      "withAdmissionScope under streaming/:\n" + scopes.mkString("\n"))
+    assert(enclosingDef(streams, scopes.head._2).startsWith("def admissionLoop("),
+      s"the admission scope is opened outside admissionLoop: ${scopes.head}")
+    // the object's members, each from one 2-space-indented code line to
+    // the next
+    val kernel = """\bDedup\.(admitIncoming\w*|cleanAndAdmit|gateAndAdmit)\b""".r
+    val lines = Files.readAllLines(mainRoot.resolve(streams)).asScala
+      .toIndexedSeq.filterNot(isComment)
+    val starts = lines.indices.filter(i => lines(i).matches("""^  \S.*"""))
+    val offenders = starts.zip(starts.drop(1) :+ lines.size).collect {
+      case (a, b) if !lines(a).trim.startsWith("def admissionLoop(") &&
+        lines.slice(a, b).exists(_.contains("foreachBatch")) &&
+        lines.slice(a, b).exists(kernel.findFirstIn(_).isDefined) => lines(a).trim
+    }
+    assert(offenders.isEmpty,
+      "foreachBatch bodies calling an admission kernel outside admissionLoop:\n" +
+        offenders.mkString("\n"))
+  }
+
+  test("a Throwable is caught only to be rethrown") {
+    // catching Throwable also swallows fatal errors (OutOfMemoryError,
+    // StackOverflowError, interrupts); code that recovers catches NonFatal
+    val throwable = """case\s+(\w+|_)\s*:\s*Throwable\s*=>""".r
+    val swallowed = for {
+      f <- mainFiles
+      lines = Files.readAllLines(f).asScala.toIndexedSeq
+      (l, i) <- lines.zipWithIndex
+      if !isComment(l)
+      m <- throwable.findFirstMatchIn(l)
+      rest = l.substring(m.end)
+      // the handler: up to the brace closing a one-line catch, else the
+      // following lines up to the next case or closing brace
+      body = if (rest.contains("}")) rest.takeWhile(_ != '}')
+        else (rest +: lines.drop(i + 1).takeWhile { n =>
+          val t = n.trim; !t.startsWith("case ") && !t.startsWith("}")
+        }).mkString("\n")
+      if """\bthrow\b""".r.findFirstIn(body).isEmpty
+    } yield s"${rel(f)}:${i + 1}: ${l.trim}"
+    assert(swallowed.isEmpty,
+      "Throwable caught without a rethrow (catch NonFatal):\n" + swallowed.mkString("\n"))
   }
 
   test("no scaladoc block is directly followed by another one") {

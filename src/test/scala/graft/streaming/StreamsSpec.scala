@@ -549,9 +549,12 @@ class StreamsSpec extends AnyFunSuite {
         Seq((3L, Seq(0.71f, -0.69f)), (4L, Seq(-0.9f, 1.0f))))
       val mem = MemoryStream[(Long, Seq[Float])]
       val admitted = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val q = Streams.incrementalSemanticIngestion(
+      val q = Streams.admissionLoop(
         mem.toDF().toDF("vec_id", "embedding"),
-        "vec_id", "embedding", centroids, path, minCosine = 0.9) {
+        Streams.CorpusState.IvfTable(path, Seq("vec_id", "embedding", "cluster_id")),
+        graft.operators.Dedup.admitIncomingSemantic(_, _, "vec_id", "embedding",
+          centroids, minCosine = 0.9),
+        Some(Streams.IvfAppend(path, "vec_id", "embedding", centroids))) {
           (adm, _) =>
             val ids = adm.select("vec_id").as[Long].collect()
             admitted.synchronized { admitted ++= ids }
@@ -595,8 +598,9 @@ class StreamsSpec extends AnyFunSuite {
         admitted.synchronized { admitted ++= ids }; ()
       }
       val q = (if (evolving)
-        Streams.incrementalVectorAdmissionEvolving(
-          vecs, corpus, "vec_id", "embedding")(sink)
+        Streams.admissionLoop(vecs,
+          Streams.CorpusState.Evolving(corpus, Seq("vec_id", "embedding")),
+          graft.operators.Dedup.admitIncomingVectors(_, _, "vec_id", "embedding"))(sink)
       else
         Streams.incrementalVectorAdmission(
           vecs, corpus, "vec_id", "embedding")(sink))
@@ -638,9 +642,11 @@ class StreamsSpec extends AnyFunSuite {
           (22L, Seq(0.0, 0.5, 0.5, 0.0))))
       val admitted = scala.collection.mutable.ArrayBuffer.empty[Long]
       val mem = MemoryStream[(Long, Seq[Double])]
-      val q = Streams.incrementalVectorIngestion(
-        mem.toDF().toDF("vec_id", "embedding"), corpus,
-        "vec_id", "embedding", cents, path) { (adm, _) =>
+      val q = Streams.admissionLoop(
+        mem.toDF().toDF("vec_id", "embedding"),
+        Streams.CorpusState.Evolving(corpus, Seq("vec_id", "embedding")),
+        graft.operators.Dedup.admitIncomingVectors(_, _, "vec_id", "embedding"),
+        Some(Streams.IvfAppend(path, "vec_id", "embedding", cents))) { (adm, _) =>
           val ids = adm.select("vec_id").as[Long].collect()
           admitted.synchronized { admitted ++= ids }
         }.start()
@@ -693,9 +699,11 @@ class StreamsSpec extends AnyFunSuite {
       val admitted = scala.collection.mutable.ArrayBuffer.empty[Long]
       def runWriter(batch: Seq[(Long, Seq[Double])]): Unit = {
         val mem = MemoryStream[(Long, Seq[Double])]
-        val q = Streams.incrementalVectorIngestionDurable(
-          mem.toDF().toDF("vec_id", "embedding"), root,
-          "vec_id", "embedding", cents, path) { (adm, _) =>
+        val q = Streams.admissionLoop(
+          mem.toDF().toDF("vec_id", "embedding"),
+          Streams.CorpusState.Durable(root, Seq("vec_id", "embedding")),
+          graft.operators.Dedup.admitIncomingVectors(_, _, "vec_id", "embedding"),
+          Some(Streams.IvfAppend(path, "vec_id", "embedding", cents))) { (adm, _) =>
             val ids = adm.select("vec_id").as[Long].collect()
             admitted.synchronized { admitted ++= ids }; ()
           }.start()
@@ -758,6 +766,118 @@ class StreamsSpec extends AnyFunSuite {
       q.processAllAvailable(); q.stop()
     }
     assert(writerRuns.forall(_ === Set(10L)) && writerRuns.size >= 2)
+  }
+
+  test("a fresh evolving writer resumed from a checkpoint fails instead of re-admitting") {
+    // the evolving corpus lives in process memory, not the checkpoint: a
+    // NEW writer resuming at batchId > 0 has no generation, and admitting
+    // against the initial corpus would re-admit doc 30, a byte-copy of
+    // doc 11 that the first writer already admitted
+    val tmpRoot = java.nio.file.Files.createTempDirectory("graft-evockpt")
+    val srcDir = tmpRoot.toString + "/incoming"
+    val cpDir = tmpRoot.toString + "/checkpoint"
+    val corpus = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
+      .toDF("doc_id", "text")
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("doc_id", org.apache.spark.sql.types.LongType)
+      .add("text", org.apache.spark.sql.types.StringType)
+    def drop(rows: Seq[(Long, String)]): Unit =
+      rows.toDF("doc_id", "text").coalesce(1)
+        .write.mode("append").parquet(srcDir)
+    val admitted = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def startQ() = Streams.incrementalAdmissionEvolving(
+        spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", 1).parquet(srcDir),
+        corpus, "doc_id", "text") { (adm, _) =>
+          val ids = adm.select("doc_id").as[Long].collect()
+          admitted.synchronized { admitted ++= ids }; ()
+        }
+      .option("checkpointLocation", cpDir)
+      .start()
+    try {
+      drop(Seq((10L, "r s t r s t"), (11L, "one two three four five six")))
+      val q1 = startQ(); q1.processAllAvailable(); q1.stop()
+      assert(admitted.sorted.toSeq === Seq(10L, 11L))
+      drop(Seq((30L, "one two three four five six"),
+        (31L, "brand new words appearing only now in this stream")))
+      val q2 = startQ()
+      val err = try intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q2.processAllAvailable()
+      } finally q2.stop()
+      val cause = Iterator.iterate[Throwable](err)(_.getCause)
+        .takeWhile(_ != null).collectFirst { case e: IllegalStateException => e }
+      assert(cause.exists(_.getMessage.contains("CorpusState.Durable")), err.toString)
+      assert(admitted.sorted.toSeq === Seq(10L, 11L))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot.toFile)
+  }
+
+  test("every corpus state releases its batch caches once the query stops") {
+    implicit val sql = spark.sqlContext
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import Streams.CorpusState._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-loopcache")
+    val corpus = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
+      .toDF("doc_id", "text")
+    val root = s"$tmp/corpus"
+    graft.sources.VersionedCorpus.append(corpus, root)
+    val textBatches = Seq(
+      Seq((10L, "r s t r s t"), (11L, "one two three four five six")),
+      Seq((20L, "r s t r s t r s t"),
+        (22L, "completely fresh vocabulary nothing overlaps here at all")),
+      Seq((30L, "one two three four five six"),
+        (31L, "brand new words appearing only now in this stream")))
+    val centroids = spark.createDataFrame(
+      java.util.Arrays.asList(Row(0, Seq(1.0, 0.0)), Row(1, Seq(0.0, 1.0))),
+      StructType(Seq(
+        StructField("cluster_id", IntegerType, nullable = false),
+        StructField("centroid", ArrayType(DoubleType), nullable = false))))
+    val path = s"$tmp/idx"
+    val seed = Seq((100L, Seq(1.0f, 0.0f))).toDF("vec_id", "embedding")
+    graft.operators.IvfIndex.appendPartitioned(seed, "vec_id",
+      graft.operators.IvfIndex.assignTo(seed, "vec_id", "embedding", centroids),
+      path)
+    val vecBatches = Seq(
+      Seq((1L, Seq(1.0f, 0.01f)), (2L, Seq(0.7f, -0.7f))),
+      Seq((3L, Seq(0.71f, -0.69f)), (4L, Seq(-0.9f, 1.0f))),
+      Seq((5L, Seq(0.0f, 1.0f))))
+    val textAdmit = (b: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.DataFrame) =>
+      graft.operators.Dedup.admitIncoming(b, c, "doc_id", "text")
+    // RDDs still persisted after 3 micro-batches and a stop, beyond
+    // those persisted before the query started
+    def run[T](state: Streams.CorpusState,
+               admit: (org.apache.spark.sql.DataFrame,
+                 org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame,
+               mem: MemoryStream[T], cols: Seq[String], batches: Seq[Seq[T]],
+               index: Option[Streams.IvfAppend] = None): Set[Int] = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val q = Streams.admissionLoop(mem.toDF().toDF(cols: _*), state, admit, index) {
+        (adm, _) => adm.count(); ()
+      }.start()
+      batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+      q.stop()
+      (spark.sparkContext.getPersistentRDDs.keySet -- before).toSet
+    }
+    try {
+      val textCols = Seq("doc_id", "text")
+      val left = Seq(
+        "Static" -> run(Static(corpus), textAdmit,
+          MemoryStream[(Long, String)], textCols, textBatches),
+        "Evolving" -> run(Evolving(corpus, textCols), textAdmit,
+          MemoryStream[(Long, String)], textCols, textBatches),
+        "Durable" -> run(Durable(root, textCols), textAdmit,
+          MemoryStream[(Long, String)], textCols, textBatches),
+        "IvfTable" -> run(IvfTable(path, Seq("vec_id", "embedding", "cluster_id")),
+          graft.operators.Dedup.admitIncomingSemantic(_, _, "vec_id", "embedding",
+            centroids),
+          MemoryStream[(Long, Seq[Float])], Seq("vec_id", "embedding"), vecBatches,
+          Some(Streams.IvfAppend(path, "vec_id", "embedding", centroids)))).toMap
+      // only the evolving corpus's final generation outlives the query
+      assert(left("Evolving").size === 1, left)
+      assert(left.removed("Evolving").values.forall(_.isEmpty), left)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
 
   test("running vocab sketch: stream-maintained state ≡ one-shot batch sketch") {
