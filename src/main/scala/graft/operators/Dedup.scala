@@ -68,7 +68,7 @@ object Dedup {
     finally {
       val mine = st.pop()
       mine.foreach { df =>
-        try df.unpersist(blocking = false)
+        try release(df)
         catch { case NonFatal(_) => () }
       }
     }
@@ -82,9 +82,20 @@ object Dedup {
   def releaseAdmissionCaches(): Unit = {
     var df = orphanCaches.poll()
     while (df != null) {
-      try df.unpersist(blocking = false)
+      try release(df)
       catch { case NonFatal(_) => () }
       df = orphanCaches.poll()
+    }
+  }
+
+  /** Unpersist `df` and, when it is a local checkpoint, the checkpointed
+    * RDD under it — `Dataset.unpersist` alone only drops cache-manager
+    * entries, leaving checkpoint blocks to garbage collection. */
+  private[graft] def release(df: DataFrame): Unit = if (df != null) {
+    df.unpersist(blocking = false)
+    Some(df.queryExecution.logical).collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
     }
   }
 
@@ -92,6 +103,39 @@ object Dedup {
     * (docs, idCol, textCol) — the near-dup tier's one varying part
     * (see [[admitIncoming]]). */
   type Buckets = (DataFrame, String, String) => DataFrame
+
+  /** The corpus side of [[admitIncoming]]: every corpus document's token
+    * fingerprint, `fps` (`_id`, `_fp`), and its near-dup bucket
+    * relation, `buckets` (`_id`, band_id, band_hash). Supplied, it
+    * replaces the kernel's derivation from `corpus`, so a maintained
+    * copy (the versioned store's per-generation sidecar,
+    * [[graft.sources.VersionedCorpus.derived]]) turns the per-batch
+    * corpus cost into a key scan instead of a re-fingerprint and
+    * re-MinHash of every corpus text. */
+  final case class CorpusKeys(fps: DataFrame, buckets: DataFrame)
+
+  object CorpusKeys {
+    /** The name [[rows]] is kept under: it encodes the derivation (the
+      * default [[NearDup.minHashBuckets]] signature, 32 hashes in 8
+      * bands) and the columns it reads. */
+    def name(idCol: String, textCol: String): String =
+      s"admit-fp-minhash-32x8.$idCol.$textCol"
+
+    /** Both tiers' keys in one row-local pass, one row per document:
+      * (`_id`, `_fp`, `_bk`), `_bk` the array of (band_id, band_hash)
+      * band keys [[NearDup.minHashBuckets]] explodes. */
+    def rows(corpus: DataFrame, idCol: String, textCol: String): DataFrame =
+      corpus.select(col(idCol).as("_id"), tokenFingerprint(col(textCol)).as("_fp"),
+          NearDup.minHashSignature(TextAnalysis.tokens(col(textCol)), 32).as("_sig"))
+        .select(col("_id"), col("_fp"), NearDup.bandKeys(col("_sig"), 8, 4).as("_bk"))
+
+    /** The keys of [[rows]]: `buckets` row-identical to
+      * [[NearDup.minHashBuckets]] of the same documents. */
+    def of(rows: DataFrame): CorpusKeys = CorpusKeys(
+      rows.select(col("_id"), col("_fp")),
+      rows.select(col("_id"), explode(col("_bk")).as("_bk"))
+        .select(col("_id"), col("_bk.band_id"), col("_bk.band_hash")))
+  }
 
   /** Canonical text fingerprint: the sorted token multiset. Catches
     * reordered-but-identical word-soup documents, not just byte-equal
@@ -402,6 +446,14 @@ object Dedup {
     *      corpus id cannot mix texts);
     *   3. admit what survives both tiers.
     *
+    * `keys` supplies the corpus side of both tiers (see [[CorpusKeys]];
+    * its `buckets` must be the relation `buckets` gives); without it
+    * both are derived from `corpus`. Supplied, the exact tier first
+    * keeps only the corpus fingerprints some incoming row carries — a
+    * semi-join against the broadcast batch fingerprints, on the corpus
+    * scan — so no exchange carries a corpus-sized relation. `corpus`
+    * is then read only for the verify tier's candidate texts.
+    *
     * Returns the admitted INCOMING rows with all their columns. Incoming
     * rows are only ever compared against the corpus, never against each
     * other — which is exactly what makes the micro-batched streaming
@@ -424,7 +476,8 @@ object Dedup {
                     minJaccard: Double = 0.8,
                     maxCandidates: Int = 1 << 20,
                     buckets: Buckets =
-                      NearDup.minHashBuckets(_, _, _)): DataFrame = {
+                      NearDup.minHashBuckets(_, _, _),
+                    keys: Option[CorpusKeys] = None): DataFrame = {
     // exactKept feeds THREE consumers (the candidate collect below, the
     // Jaccard verify, and the final anti-join), and its subtree carries
     // whatever the caller stacked under `incoming` — cleanAndAdmit puts
@@ -437,11 +490,22 @@ object Dedup {
     // releaseAdmissionCaches) unpersists it once the caller's consuming
     // action is done. CacheManager holds a strong reference until then;
     // ContextCleaner alone would never reap it.
-    val exactKept = registerCache(incrementalExact(incoming,
-      tokenFingerprint(col(textCol)), corpus, tokenFingerprint(col(textCol)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val fp = tokenFingerprint(col(textCol))
+    val exact = keys.fold(incrementalExact(incoming, fp, corpus, fp)) { k =>
+      // both uses of the batch read one lazy local checkpoint, so
+      // `incoming` is computed once (a streaming batch counts every
+      // computation as input rows); unlike a persist, it adds no
+      // cache-materialization job under adaptive execution
+      val batch = registerCache(incoming.localCheckpoint(false))
+      val hits = k.fps.join(NearDup.hintIfSmall(batch.select(fp.as("__graft_bfp"))),
+        col("_fp") === col("__graft_bfp"), "left_semi")
+      batch.join(hits, fp === hits("_fp"), "left_anti")
+    }
+    val exactKept = registerCache(
+      exact.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val candLineage = NearDup.bucketPairs(buckets(exactKept, idCol, textCol),
-      buckets(corpus, idCol, textCol), NearDup.PairRule.AnyKey, cross = true)
+      keys.fold(buckets(corpus, idCol, textCol))(_.buckets),
+      NearDup.PairRule.AnyKey, cross = true)
     NearDup.materializePairsOpt(candLineage, maxCandidates) match {
       case Some(cands) =>
         // the verified reject set is bounded by `cands` — ALREADY

@@ -139,7 +139,7 @@ object NearDup {
     * decides, exactly like this file's df-sliver join. Estimates are
     * plan-level (a filter over a big scan estimates big without CBO),
     * so the gate errs toward the safe shuffle. */
-  private def hintIfSmall(df: DataFrame): DataFrame = {
+  private[operators] def hintIfSmall(df: DataFrame): DataFrame = {
     val thr = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     if (thr > 0 && graft.PlanGate.planBytes(df) <= BigInt(thr)) broadcast(df)
     else df

@@ -13,6 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * {{{
   *   <root>/gen=<N>/part-*.parquet     data files, written FIRST
   *   <root>/_manifest/<N>.json         commit record, written LAST
+  *   <root>/_derived/<name>/gen=<N>/   derived sidecars (optional)
   * }}}
   *
   * The manifest write is the commit point: readers resolve a snapshot
@@ -85,6 +86,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The fused two-generation [[applyChanges]] publishes its upsert
   * generation, then its delete generation: a crash between them leaves
   * the upsert half committed, and replaying the batch converges.
+  *
+  * DERIVED SIDECARS ([[derived]]): a relation derived from the rows,
+  * kept per generation under `<root>/_derived/<name>/gen=<N>/` — the
+  * maintained-artifact form of a per-batch corpus scan (the streaming
+  * admission loop keeps its text keys this way).
+  *   - Contract: `derive` is a deterministic, row-local function of the
+  *     rows, so a generation's sidecar is a function of immutable data
+  *     and a replayed or concurrent backfill writes the same rows; the
+  *     name encodes the derivation.
+  *   - Writes: a missing sidecar of a live generation is backfilled on
+  *     read — staged under `_staging/`, then renamed into place, so a
+  *     crash leaves staging garbage ([[cleanStaging]]) or a complete
+  *     sidecar, never a torn one. A store written before sidecars
+  *     existed needs no migration. [[compact]] (tombstone-free window)
+  *     and [[optimize]] carry their inputs' sidecars to the output by
+  *     file copy; a crash before the carry leaves the output to the
+  *     next read's backfill.
+  *   - Tombstones: a generation merge-on-read resolves against a later
+  *     tombstone generation is derived from its resolved rows at read
+  *     time, never from its sidecar.
+  *   - [[vacuum]] / [[vacuumPacked]] delete the sidecars of the
+  *     generations they reclaim. [[snapshot]], [[commits]] and the
+  *     generation-id scan never list `_derived/`.
   *
   * APPENDS are multi-writer safe: appends commute, so any interleaving
   * of claims is a correct serialization (spec-pinned with racing
@@ -201,13 +225,9 @@ object VersionedCorpus {
   private def onDiskGens(root: String): Seq[Long] = {
     val rootPath = java.nio.file.Paths.get(root)
     if (!java.nio.file.Files.isDirectory(rootPath)) return Seq.empty
-    import scala.jdk.CollectionConverters._
-    val stream = java.nio.file.Files.list(rootPath)
-    try stream.iterator().asScala.map(_.getFileName.toString)
+    listDir(rootPath).map(_.getFileName.toString)
       .filter(_.startsWith("gen="))
       .flatMap(n => scala.util.Try(n.stripPrefix("gen=").toLong).toOption)
-      .toList
-    finally stream.close()
   }
 
   /** The store's schema contract, pinned at the first commit: every
@@ -738,7 +758,8 @@ object VersionedCorpus {
     -1L // unreachable
   }
 
-  /** Remove staging directories left by crashed concurrent appends.
+  /** Remove staging directories left by crashed concurrent appends and
+    * by crashed [[derived]] backfills and sidecar carries.
     * Run it when no appender is active (a live writer's staging dir is
     * indistinguishable from a dead one's — the standard retention
     * caveat, made explicit instead of a timer heuristic). */
@@ -1013,7 +1034,7 @@ object VersionedCorpus {
     * never listed, let alone read. */
   def snapshot(spark: SparkSession, root: String,
                asOf: Long = Long.MaxValue): DataFrame =
-    snapshotImpl(spark, root, asOf, _ => true, None)
+    snapshotImpl(spark, root, asOf, resolveWindow(root, asOf), _ => true, None)
 
   /** PREDICATE-PRUNED SNAPSHOT over a pinned stats column
     * ([[pinStats]]): data generations whose recorded `[min, max]` for
@@ -1030,8 +1051,8 @@ object VersionedCorpus {
                     lo: Long, hi: Long,
                     asOf: Long = Long.MaxValue): DataFrame = {
     import org.apache.spark.sql.functions.col
-    snapshotImpl(spark, root, asOf, _.mayOverlapCol(statCol, lo, hi),
-      Some(col(statCol).between(lo, hi)))
+    snapshotImpl(spark, root, asOf, resolveWindow(root, asOf),
+      _.mayOverlapCol(statCol, lo, hi), Some(col(statCol).between(lo, hi)))
   }
 
   /** (key → max tombstone generation), the merge-on-read visibility
@@ -1197,11 +1218,31 @@ object VersionedCorpus {
     perGen.toMap
   }
 
+  /** Split a window's data generations into those merge-on-read must
+    * resolve against a LATER tombstone generation and the clean rest,
+    * decided driver-side from the manifests alone: a data generation
+    * needs resolution only if some tombstone generation committed after
+    * its effective position (`pos`) has a key range that can overlap
+    * its own (missing bounds → conservative). */
+  private def splitByTombstones(dataGens: Seq[Commit], tombGens: Seq[Commit])
+      : (Seq[Commit], Seq[Commit]) = {
+    def overlaps(a: Commit, b: Commit): Boolean =
+      (a.klo, a.khi, b.klo, b.khi) match {
+        case (Some(alo), Some(ahi), Some(blo), Some(bhi)) =>
+          alo <= bhi && blo <= ahi
+        case _ => true
+      }
+    dataGens.partition(c => tombGens.exists(t => t.gen > c.pos && overlaps(c, t)))
+  }
+
+  /** The snapshot of `wanted` (a [[resolveWindow]] result for `asOf`),
+    * restricted to the data generations `keep` accepts; tombstone
+    * generations are always consulted. */
   private def snapshotImpl(spark: SparkSession, root: String, asOf: Long,
+                           wanted: Seq[Commit],
                            keep: Commit => Boolean,
                            rowPred: Option[org.apache.spark.sql.Column])
       : DataFrame = {
-    val wanted = resolveWindow(root, asOf)
     val dataGens = wanted.filter(c => c.kind != "delete" && keep(c))
     val tombGens = wanted.filter(_.tombstones)
     val paths = (dataGens ++ tombGens).map(c => dataDir(root, c.gen).toString)
@@ -1255,18 +1296,11 @@ object VersionedCorpus {
       val pinnedFields = pinned.fieldNames.toSeq
       require(!pinnedFields.exists(n => n == "_vc_gen" || n == "_vc_tmax"),
         "store schema uses the reserved column names _vc_gen/_vc_tmax")
-      def overlaps(a: Commit, b: Commit): Boolean =
-        (a.klo, a.khi, b.klo, b.khi) match {
-          case (Some(alo), Some(ahi), Some(blo), Some(bhi)) =>
-            alo <= bhi && blo <= ahi
-          case _ => true
-        }
       // NOTE: tombstone visibility compares against the EFFECTIVE
       // position (`pos`) — for optimize outputs that is the top of the
       // replaced run, so a delete committed after the run but before
       // the optimize still kills the packed rows
-      val (mergeGens, cleanGens) = dataGens.partition(c =>
-        tombGens.exists(t => t.gen > c.pos && overlaps(c, t)))
+      val (mergeGens, cleanGens) = splitByTombstones(dataGens, tombGens)
       val clean =
         if (cleanGens.isEmpty) None
         else Some(spark.read.schema(pinned).parquet(
@@ -1368,6 +1402,106 @@ object VersionedCorpus {
     // parquet scans (PushedFilters), where row-group stats prune inside
     // the generations the manifest stats could not skip
     rowPred.fold(out)(out.filter)
+  }
+
+  private def derivedDir(root: String) =
+    java.nio.file.Paths.get(root, "_derived")
+  private def sidecarDir(root: String, name: String, gen: Long) =
+    derivedDir(root).resolve(name).resolve(s"gen=$gen")
+
+  /** DERIVED SIDECARS — `derive` of the current snapshot, kept on disk
+    * one generation at a time (see the object header). Every live data
+    * generation without a `_derived/<name>/gen=<N>` gets one first: ONE
+    * job stages `derive(generation rows)` of all of them and each is
+    * renamed into place. The result is one scan over the live sidecars,
+    * unioned with `derive` of the resolved rows of every generation
+    * merge-on-read resolves against a later tombstone — those are never
+    * read from a sidecar, so a deleted row stops contributing exactly as
+    * it stops appearing in [[snapshot]]. Row for row, the result is
+    * `derive(snapshot(spark, root))`.
+    *
+    * `derive` must be a deterministic, row-local function of the rows
+    * (projections, row-local expressions, explodes — no aggregate, join
+    * or window), and `name` must change whenever `derive` does: a
+    * sidecar is read back under its name alone. */
+  def derived(spark: SparkSession, root: String, name: String,
+              derive: DataFrame => DataFrame): DataFrame = {
+    require(name.matches("[A-Za-z0-9][A-Za-z0-9_.=-]*"),
+      s"derived relation name '$name' must match [A-Za-z0-9][A-Za-z0-9_.=-]*")
+    val window = resolveWindow(root, Long.MaxValue)
+    val dataGens = window.filter(_.kind != "delete")
+    require(dataGens.nonEmpty,
+      s"the snapshot under $root resolves to tombstone-only generations")
+    val (merge, clean) = splitByTombstones(dataGens, window.filter(_.tombstones))
+    val pinned = pinnedSchema(root)
+    def rows(c: Commit) = spark.read.schema(pinned).parquet(dataDir(root, c.gen).toString)
+    val missing = clean.filterNot(c =>
+      java.nio.file.Files.isDirectory(sidecarDir(root, name, c.gen)))
+    if (missing.nonEmpty) {
+      import org.apache.spark.sql.functions.lit
+      val staging = newStaging(root)
+      missing.map(c => derive(rows(c)).withColumn("_vc_gen", lit(c.gen)))
+        .reduce(_ unionByName _)
+        .write.partitionBy("_vc_gen").parquet(staging.toString)
+      // a generation with no derived rows gets an empty sidecar
+      missing.foreach(c => placeSidecar(
+        java.nio.file.Files.createDirectories(staging.resolve(s"_vc_gen=${c.gen}")),
+        sidecarDir(root, name, c.gen)))
+      org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
+    }
+    val schema = derive(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pinned)).schema
+    val stored = if (clean.isEmpty) None else Some(spark.read.schema(schema)
+      .parquet(clean.map(c => sidecarDir(root, name, c.gen).toString): _*))
+    val resolved = if (merge.isEmpty) None else Some(derive(
+      snapshotImpl(spark, root, Long.MaxValue, window, merge.contains, None)))
+    (stored ++ resolved).reduce(_ unionByName _)
+  }
+
+  /** Rename a complete staged sidecar into place. Losing the rename to
+    * a concurrent backfill is fine: that one holds the same rows. */
+  private def placeSidecar(staged: java.nio.file.Path,
+                           to: java.nio.file.Path): Unit = {
+    java.nio.file.Files.createDirectories(to.getParent)
+    try java.nio.file.Files.move(staged, to,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    catch {
+      case e: java.nio.file.FileSystemException =>
+        if (!java.nio.file.Files.isDirectory(to)) throw e
+        org.apache.commons.io.FileUtils.deleteDirectory(staged.toFile)
+    }
+  }
+
+  /** The sidecar carry step of [[compact]] and [[optimize]]: `out` holds
+    * exactly the rows of the generations `inputs`, so for every name all
+    * of them have a sidecar of, `out`'s sidecar is their files, copied —
+    * no Spark job. A name some input lacks is left to the next
+    * [[derived]] read, which backfills it. */
+  private def carrySidecars(root: String, inputs: Seq[Commit], out: Long): Unit =
+    for {
+      name <- sidecarNames(root)
+      if inputs.forall(c =>
+        java.nio.file.Files.isDirectory(sidecarDir(root, name, c.gen)))
+    } {
+      val staging = java.nio.file.Files.createDirectories(newStaging(root))
+      for {
+        c <- inputs
+        f <- listDir(sidecarDir(root, name, c.gen))
+        n = f.getFileName.toString
+        if !n.startsWith(".") && !n.startsWith("_")
+      } java.nio.file.Files.copy(f, staging.resolve(s"g${c.gen}-$n"))
+      placeSidecar(staging, sidecarDir(root, name, out))
+    }
+
+  /** The names of the derived relations kept under `root`. */
+  private def sidecarNames(root: String): List[String] =
+    if (!java.nio.file.Files.isDirectory(derivedDir(root))) Nil
+    else listDir(derivedDir(root)).map(_.getFileName.toString)
+
+  private def listDir(p: java.nio.file.Path): List[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val st = java.nio.file.Files.list(p)
+    try st.iterator().asScala.toList finally st.close()
   }
 
   /** CHANGE DATA FEED, read side — the log IS the feed: every commit
@@ -1710,7 +1844,8 @@ object VersionedCorpus {
   def compact(spark: SparkSession, root: String,
               sortByKey: Boolean = false): Long = {
     import org.apache.spark.sql.functions.col
-    val snap0 = snapshot(spark, root)
+    val window = resolveWindow(root, Long.MaxValue)
+    val snap0 = snapshotImpl(spark, root, Long.MaxValue, window, _ => true, None)
     val snap =
       if (!sortByKey) snap0
       else {
@@ -1719,7 +1854,10 @@ object VersionedCorpus {
             s"$root — call pinKey(...) or make a keyed commit first"))
         snap0.repartitionByRange(col(key)).sortWithinPartitions(col(key))
       }
-    publish(root, stageWrite(snap, root, "base" -> "").head)
+    val base = publish(root, stageWrite(snap, root, "base" -> "").head)
+    // without a tombstone the base holds exactly the window's rows
+    if (!window.exists(_.tombstones)) carrySidecars(root, window, base)
+    base
   }
 
   /** [[compact]] when the tail of small generations has grown past
@@ -1799,7 +1937,9 @@ object VersionedCorpus {
       require(packed.rows == total,
         s"optimize rewrite under $root lost rows: run ${run.head.gen}.." +
           s"${run.last.gen} holds $total, packed file holds ${packed.rows}")
-      publish(root, packed, Some(run.head.gen -> run.last.gen))
+      val gen = publish(root, packed, Some(run.head.gen -> run.last.gen))
+      carrySidecars(root, run, gen)
+      gen
     }
   }
 
@@ -1818,8 +1958,8 @@ object VersionedCorpus {
   }
 
   /** Delete generation data superseded by the NEWEST base generation
-    * (everything older than it), with the Bloom sidecars of those
-    * generations. A manifest-less `gen=` directory below that base —
+    * (everything older than it), with the Bloom and derived sidecars
+    * of those generations. A manifest-less `gen=` directory below that base —
     * a crashed commit's orphan — goes too: no snapshot reads it, even
     * if its manifest were published later. After vacuum, [[snapshot]]
     * with `asOf` before that base fails explicitly. Manifests are kept,
@@ -1833,11 +1973,12 @@ object VersionedCorpus {
     }
   }
 
-  /** Delete generation `gen`'s data directory and Bloom sidecar. */
+  /** Delete generation `gen`'s data directory, Bloom sidecar and
+    * derived sidecars. */
   private def reclaim(root: String, gen: Long): Unit = {
-    val p = dataDir(root, gen)
-    if (java.nio.file.Files.isDirectory(p))
-      org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
+    (dataDir(root, gen) +: sidecarNames(root).map(sidecarDir(root, _, gen)))
+      .filter(java.nio.file.Files.isDirectory(_))
+      .foreach(p => org.apache.commons.io.FileUtils.deleteDirectory(p.toFile))
     java.nio.file.Files.deleteIfExists(bloomFile(root, gen))
   }
 }

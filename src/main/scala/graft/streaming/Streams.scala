@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
@@ -116,6 +115,17 @@ object Streams {
       * committed batch left behind. Seed `root` with the initial corpus
       * (`VersionedCorpus.append`) before starting.
       *
+      * A relation the kernel reads through [[Corpus.derived]] is the
+      * store's per-generation sidecar (`VersionedCorpus.derived` over the
+      * `cols` projection): only generations without one are derived, the
+      * first batch backfilling a store written before sidecars existed.
+      * Each batch runs admit → append → the new generation's sidecars
+      * for every name the kernel read (one batch-sized job each) →
+      * `maybeCompact`, so a compaction always finds its inputs'
+      * sidecars and carries them to the base by file copy; the batch
+      * after it derives nothing. A crash between the append and the
+      * sidecar write only leaves the next batch to backfill it.
+      *
       * Failure replay is idempotent by construction: a re-run micro-batch
       * whose admissions already committed admits zero rows (each is
       * byte- or cosine-1.0-identical to its committed copy; earlier
@@ -143,14 +153,33 @@ object Streams {
       * (read-your-appends) and a restart resumes from what was durably
       * appended; re-processing an appended batch is the one hazard.
       *
-      * The admitted rows are held by an EAGER local checkpoint, not a
-      * persist: the append writes to the very path the kernel read, and
-      * Spark's by-path cache refresh would invalidate a merely persisted
-      * frame and RECOMPUTE it against the post-append table, where the
-      * batch's own rows now live: every admission would vanish from the
-      * sink's view (observed). The checkpoint has no file lineage. */
+      * The admitted rows are held by a local checkpoint, not a persist,
+      * materialized by the count that gates the append: the append
+      * writes to the very path the kernel read, and Spark's by-path
+      * cache refresh would invalidate a merely persisted frame and
+      * RECOMPUTE it against the post-append table, where the batch's own
+      * rows now live: every admission would vanish from the sink's view
+      * (observed). The checkpoint has no file lineage. */
     final case class IvfTable(path: String, cols: Seq[String])
         extends CorpusState
+  }
+
+  /** The corpus one micro-batch is admitted against: its `rows`, and
+    * relations derived from them. `derived(name, f)` is `f(rows)` —
+    * except over a [[CorpusState.Durable]] store, where it is the
+    * store's maintained sidecar of `f` under `name` (see
+    * [[graft.sources.VersionedCorpus.derived]]: `f` must be row-local and
+    * `name` must encode it). */
+  final class Corpus private[Streams] (val rows: DataFrame,
+      stored: Option[(String, DataFrame => DataFrame) => DataFrame]) {
+    /** Every (name, f) read in this batch, in reading order. */
+    private[Streams] val read =
+      scala.collection.mutable.LinkedHashMap.empty[String, DataFrame => DataFrame]
+
+    def derived(name: String, f: DataFrame => DataFrame): DataFrame = {
+      read(name) = f
+      stored.fold(f(rows))(_(name, f))
+    }
   }
 
   /** [[admissionLoop]]'s one after-commit step: the committed admissions
@@ -165,7 +194,7 @@ object Streams {
   /** The streaming ADMISSION loop — every admission or ingestion writer
     * is this one `foreachBatch` body: each micro-batch runs the kernel
     * `admit(batch, corpus)` inside [[Dedup.withAdmissionScope]] against
-    * the corpus `state` holds, commits the admitted rows the way that
+    * the [[Corpus]] `state` holds, commits the admitted rows the way that
     * state does, appends them to `index` when rows were committed, and
     * hands them to `sink`. The kernel is a [[graft.operators.Dedup]]
     * admission kernel — the batch row's own code, so stream ≡ batch holds
@@ -174,7 +203,7 @@ object Streams {
     * [[CorpusState.Static]] corpus commits nothing, so it takes no
     * `index`. Returns the unstarted writer. */
   def admissionLoop(stream: DataFrame, state: CorpusState,
-                    admit: (DataFrame, DataFrame) => DataFrame,
+                    admit: (DataFrame, Corpus) => DataFrame,
                     index: Option[IvfAppend] = None)
                    (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     import CorpusState._
@@ -194,35 +223,43 @@ object Streams {
       // (commit, index append, sink, next generation): the kernel's
       // batch-scoped persists are released when the batch body returns
       Dedup.withAdmissionScope[Unit] {
+        def inMemory(rows: DataFrame) = new Corpus(rows, None)
         state match {
-          case Static(corpus) => sink(admit(batch, corpus), batchId)
+          case Static(corpus) => sink(admit(batch, inMemory(corpus)), batchId)
           case Evolving(initial, cols) =>
             val corpus = corpusGen.at(batchId,
               initial.select(cols.map(col): _*).persist(lvl))
-            val admitted = admit(batch, corpus).persist(lvl)
+            val admitted = admit(batch, inMemory(corpus)).persist(lvl)
             try {
               afterCommit(admitted, admitted.count() > 0L)
               sink(admitted, batchId)
               corpusGen.swap(corpus.union(admitted.select(cols.map(col): _*)))
             } finally admitted.unpersist()
           case Durable(root, cols, compactEvery, vacuumAfter) =>
-            val admitted = admit(batch,
-                VersionedCorpus.snapshot(spark, root).select(cols.map(col): _*))
-              .persist(lvl)
+            def sidecar(name: String, f: DataFrame => DataFrame) =
+              VersionedCorpus.derived(spark, root, name,
+                rows => f(rows.select(cols.map(col): _*)))
+            val corpus = new Corpus(
+              VersionedCorpus.snapshot(spark, root).select(cols.map(col): _*),
+              Some(sidecar))
+            val admitted = admit(batch, corpus).persist(lvl)
             try {
               val gen = VersionedCorpus.append(admitted, root)
+              if (gen >= 0L) corpus.read.foreach { case (name, f) => sidecar(name, f) }
               VersionedCorpus.maybeCompact(spark, root, compactEvery, vacuumAfter)
               afterCommit(admitted, gen >= 0L)
               sink(admitted, batchId)
             } finally admitted.unpersist()
           case IvfTable(path, cols) =>
+            // lazy: the one count below materializes the checkpoint
+            // before the index append rewrites `path`
             val admitted = admit(batch,
-                spark.read.parquet(path).select(cols.map(col): _*))
-              .localCheckpoint(true)
+                inMemory(spark.read.parquet(path).select(cols.map(col): _*)))
+              .localCheckpoint(false)
             try {
               afterCommit(admitted, admitted.count() > 0L)
               sink(admitted, batchId)
-            } finally release(admitted)
+            } finally Dedup.release(admitted)
         }
       }
     }
@@ -245,7 +282,7 @@ object Streams {
       * (re)started query releases the previous run's generation and
       * starts from `init` (null for an empty state). */
     def at(batchId: Long, init: => DataFrame): DataFrame = {
-      if (batchId == 0L) { release(cur); cur = init }
+      if (batchId == 0L) { Dedup.release(cur); cur = init }
       else if (cur == null) throw new IllegalStateException(
         s"$what: micro-batch $batchId arrived with no in-memory generation " +
           "(a writer resumed from a stream checkpoint): it lives in process " +
@@ -257,20 +294,12 @@ object Streams {
     def swap(next: DataFrame): DataFrame = {
       val n = next.localCheckpoint(false)
       n.count() // materialize before releasing the predecessor
-      release(cur)
+      Dedup.release(cur)
       cur = n
       n
     }
   }
 
-  /** Unpersist `df` and, when it is a local checkpoint, the checkpointed
-    * RDD under it — `Dataset.unpersist` alone only drops cache-manager
-    * entries, leaving checkpoint blocks to garbage collection. */
-  private def release(df: DataFrame): Unit = if (df != null) {
-    df.unpersist()
-    Some(df.queryExecution.logical).collect {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false) }
-  }
 
   /** Text admission ([[graft.operators.Dedup.admitIncoming]]: exact
     * fingerprint anti-join + cross-set MinHash-LSH near-dup scan +
@@ -280,7 +309,7 @@ object Streams {
                            minJaccard: Double = 0.8)
                           (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     admissionLoop(docStream, CorpusState.Static(corpus),
-      Dedup.admitIncoming(_, _, idCol, textCol, minJaccard))(sink)
+      (b, c) => Dedup.admitIncoming(b, c.rows, idCol, textCol, minJaccard))(sink)
 
   /** Clean-then-admit ([[graft.operators.Dedup.cleanAndAdmit]]: token
     * runs copied from the corpus are stripped, emptied docs dropped, the
@@ -296,8 +325,8 @@ object Streams {
                                 gramIndexPath: Option[String] = None)
                                (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     admissionLoop(docStream, CorpusState.Static(corpus),
-      Dedup.cleanAndAdmit(_, _, idCol, textCol, k, minKeptTokens, minJaccard,
-        hashGrams = false, gramIndexPath = gramIndexPath))(sink)
+      (b, c) => Dedup.cleanAndAdmit(b, c.rows, idCol, textCol, k, minKeptTokens,
+        minJaccard, hashGrams = false, gramIndexPath = gramIndexPath))(sink)
 
   /** Quality-gated admission ([[graft.operators.Dedup.gateAndAdmit]]:
     * the row-local Gopher gate first, so quality rejects never pay the
@@ -307,7 +336,7 @@ object Streams {
                                 minJaccard: Double = 0.8)
                                (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     admissionLoop(docStream, CorpusState.Static(corpus),
-      Dedup.gateAndAdmit(_, _, idCol, textCol, minJaccard))(sink)
+      (b, c) => Dedup.gateAndAdmit(b, c.rows, idCol, textCol, minJaccard))(sink)
 
   /** [[incrementalAdmission]] against a [[CorpusState.Evolving]] corpus
     * of (idCol, textCol). */
@@ -318,10 +347,12 @@ object Streams {
                                   (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     admissionLoop(docStream,
       CorpusState.Evolving(initialCorpus, Seq(idCol, textCol)),
-      Dedup.admitIncoming(_, _, idCol, textCol, minJaccard))(sink)
+      (b, c) => Dedup.admitIncoming(b, c.rows, idCol, textCol, minJaccard))(sink)
 
   /** [[incrementalAdmission]] against a [[CorpusState.Durable]] corpus
-    * store at `root`. */
+    * store at `root`, the kernel's corpus keys ([[Dedup.CorpusKeys]])
+    * read from the store's sidecar: per batch, the corpus costs a key
+    * scan, not a re-fingerprint and re-MinHash of every stored text. */
   def incrementalAdmissionDurable(docStream: DataFrame, root: String,
                                   idCol: String, textCol: String,
                                   minJaccard: Double = 0.8,
@@ -331,7 +362,10 @@ object Streams {
       : DataStreamWriter[Row] =
     admissionLoop(docStream,
       CorpusState.Durable(root, Seq(idCol, textCol), compactEvery, vacuumAfter),
-      Dedup.admitIncoming(_, _, idCol, textCol, minJaccard))(sink)
+      (b, c) => Dedup.admitIncoming(b, c.rows, idCol, textCol, minJaccard,
+        keys = Some(Dedup.CorpusKeys.of(c.derived(
+          Dedup.CorpusKeys.name(idCol, textCol),
+          Dedup.CorpusKeys.rows(_, idCol, textCol))))))(sink)
 
   /** Vector admission ([[graft.operators.Dedup.admitIncomingVectors]]:
     * cross-set sign-LSH buckets + exact-cosine verify ≥ `minCosine`)
@@ -341,7 +375,8 @@ object Streams {
                                  minCosine: Double = 0.9, nBits: Int = 8)
                                 (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     admissionLoop(vecStream, CorpusState.Static(corpus),
-      Dedup.admitIncomingVectors(_, _, idCol, vecCol, minCosine, nBits))(sink)
+      (b, c) => Dedup.admitIncomingVectors(b, c.rows, idCol, vecCol, minCosine,
+        nBits))(sink)
 
   /** Cell-partitioned semantic admission
     * ([[graft.operators.Dedup.admitIncomingSemantic]]: incoming vectors
@@ -354,7 +389,8 @@ object Streams {
                                    minCosine: Double = 0.9)
                                   (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     admissionLoop(vecStream, CorpusState.Static(corpusIdx),
-      Dedup.admitIncomingSemantic(_, _, idCol, vecCol, centroids, minCosine))(sink)
+      (b, c) => Dedup.admitIncomingSemantic(b, c.rows, idCol, vecCol, centroids,
+        minCosine))(sink)
 
   /** INVERTED-INDEX ingestion loop — keep a persisted
     * [[graft.operators.TextIndex]] current as documents stream in:

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * listeners only in `obs/JobMeter.scala`, one call site each for the
   * versioned store's commit-file writers, the near-dup closer's
   * broadcast hint and the text and vector admission kernels' reject
-  * anti-join, one streaming admission loop, no swallowed `Throwable`,
+  * anti-join, the derived-sidecar directory written only by its backfill
+  * and carry step, one streaming admission loop, no swallowed `Throwable`,
   * and no orphaned scaladoc. [[hits]] skips comment lines. */
 class SourceHygieneSpec extends AnyFunSuite {
   private val mainRoot = Paths.get("src", "main", "scala")
@@ -73,6 +74,27 @@ class SourceHygieneSpec extends AnyFunSuite {
       assert(enclosing.startsWith("private def publish("),
         s"$name( is called from `$enclosing`, not the publish step")
     }
+  }
+
+  test("derived sidecars are written only by VersionedCorpus.derived and its carry step") {
+    val store = "graft/sources/VersionedCorpus.scala"
+    def defName(c: (String, Int, String)) =
+      enclosingDef(c._1, c._2).takeWhile(_ != '(')
+    val spelled = hits("\"_derived\"".r)
+    assert(spelled.map(c => (c._1, defName(c))) === Seq(store -> "private def derivedDir"),
+      "the _derived directory is spelled outside derivedDir:\n" + spelled.mkString("\n"))
+    // a sidecar lands in _derived/ by placeSidecar: a backfill or a carry
+    val places = hits("""\bplaceSidecar\(""".r).filterNot(_._3.contains("def placeSidecar("))
+    assert(places.map(_._1).distinct === Seq(store) &&
+      places.map(defName).toSet === Set("def derived", "private def carrySidecars"),
+      "placeSidecar( call sites:\n" + places.mkString("\n"))
+    // every path into _derived/: the snapshot and log readers list none
+    val users = hits("""\b(derivedDir|sidecarDir|sidecarNames)\(""".r)
+      .filterNot(c => """def (derivedDir|sidecarDir|sidecarNames)\(""".r.findFirstIn(c._3).isDefined)
+    assert(users.map(_._1).distinct === Seq(store) &&
+      users.map(defName).toSet.subsetOf(Set("private def sidecarDir", "def derived",
+        "private def carrySidecars", "private def sidecarNames", "private def reclaim")),
+      "paths into _derived/ built in:\n" + users.map(defName).distinct.mkString("\n"))
   }
 
   test("every near-dup bucket join closes through NearDup.bucketPairs") {

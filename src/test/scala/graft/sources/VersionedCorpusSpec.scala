@@ -1277,13 +1277,23 @@ class VersionedCorpusSpec extends AnyFunSuite {
     val mdir = java.nio.file.Paths.get(root, "_manifest")
     assert(Files.exists(mdir.resolve(s"$gD.bloom")), "the orphan has a sidecar")
     VersionedCorpus.applyChanges(batch, root, "doc_id", "op", "seq")
-    val base = VersionedCorpus.compact(spark, root)
-    VersionedCorpus.vacuum(root)
     def names(dir: java.nio.file.Path): Set[String] = {
       val st = Files.list(dir)
       try st.iterator().asScala.map(_.getFileName.toString).toSet
       finally st.close()
     }
+    // every data generation here resolves against a later tombstone:
+    // derived reads them all on the fly and writes no sidecar
+    def ids = VersionedCorpus.derived(spark, root, "ids", _.select("doc_id"))
+      .as[Long].collect().toSet
+    assert(ids === full.keySet)
+    val dmir = java.nio.file.Paths.get(root, "_derived", "ids")
+    def derivedGens: Set[Long] =
+      if (!Files.isDirectory(dmir)) Set.empty
+      else names(dmir).map(_.stripPrefix("gen=").toLong)
+    assert(derivedGens.isEmpty)
+    val base = VersionedCorpus.compact(spark, root)
+    VersionedCorpus.vacuum(root)
     val dataGens = names(java.nio.file.Paths.get(root))
       .filter(_.startsWith("gen=")).map(_.stripPrefix("gen=").toLong)
     assert(dataGens === Set(base), s"vacuum left data dirs $dataGens")
@@ -1293,11 +1303,25 @@ class VersionedCorpusSpec extends AnyFunSuite {
     checkModel(root, full, "after vacuum")
     val run = Seq(30 until 35, 35 until 40, 40 until 42).map(r =>
       VersionedCorpus.append(docs(r, "t"), root))
-    assert(VersionedCorpus.optimize(spark, root).size === 1)
+    val all = full.keySet ++ (30L until 42L)
+    assert(ids === all)
+    assert(derivedGens === (run :+ base).toSet)
+    val packed = VersionedCorpus.optimize(spark, root)
+    assert(packed.size === 1)
+    assert(derivedGens.contains(packed.head), "optimize carried no derived sidecar")
     VersionedCorpus.vacuumPacked(root)
     val left = names(mdir)
     assert(run.forall(g => !left.contains(s"$g.bloom")),
       s"vacuumPacked left sidecars ${left.toSeq.sorted}")
+    assert(derivedGens === Set(base, packed.head),
+      s"vacuumPacked left derived sidecars $derivedGens")
+    assert(ids === all)
+    // a tombstone-free compaction carries the sidecars; vacuum then drops
+    // those of every generation it reclaims
+    val base2 = VersionedCorpus.compact(spark, root)
+    VersionedCorpus.vacuum(root)
+    assert(derivedGens === Set(base2), s"vacuum left derived sidecars $derivedGens")
+    assert(ids === all)
     checkModel(root, full ++ (30L until 42L).map(i => i -> s"t text number $i"),
       "after vacuumPacked")
   }
@@ -1362,5 +1386,127 @@ class VersionedCorpusSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(at))
       bloomed(1000L)
     }
+  }
+
+  // ── derived sidecars ────────────────────────────────────────────────
+  private val soupWords = ("alpha beta gamma delta epsilon zeta eta theta iota " +
+    "kappa lambda mu nu xi omicron pi rho sigma tau upsilon phi chi psi omega " +
+    "red green blue cyan magenta yellow black white").split(" ").toIndexedSeq
+
+  /** `n` documents of 60 words, ids from `first`, seeded per id. */
+  private def soup(first: Long, n: Int): Seq[(Long, String)] =
+    (first until first + n).map { id =>
+      val r = new scala.util.Random(id)
+      id -> Seq.fill(60)(soupWords(r.nextInt(soupWords.size))).mkString(" ")
+    }
+
+  /** A batch against `stored`: fresh documents, exact copies (one with
+    * its words reordered), near copies (one word replaced) and a copy of
+    * `extra` (a text the store no longer holds, if any). */
+  private def admissionBatch(stored: Seq[(Long, String)], first: Long,
+                             extra: Option[String] = None) = {
+    val r = new scala.util.Random(first)
+    val picks = r.shuffle(stored).take(12)
+    val exact = picks.take(4).zipWithIndex.map { case ((_, t), i) =>
+      (first + i, if (i == 0) t.split(" ").reverse.mkString(" ") else t) }
+    val near = picks.drop(4).zipWithIndex.map { case ((_, t), i) =>
+      val w = t.split(" "); w(30) = "zzz"; (first + 100 + i, w.mkString(" ")) }
+    (soup(first + 200, 10) ++ exact ++ near ++ extra.map(first + 300 -> _))
+      .toDF("doc_id", "text")
+  }
+
+  private val keysName = graft.operators.Dedup.CorpusKeys.name("doc_id", "text")
+
+  private def sidecars(root: String): Set[Long] = {
+    val dir = java.nio.file.Paths.get(root, "_derived", keysName)
+    if (!Files.isDirectory(dir)) Set.empty
+    else {
+      val st = Files.list(dir)
+      try st.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("gen=")).map(_.stripPrefix("gen=").toLong).toSet
+      finally st.close()
+    }
+  }
+
+  /** The ids `admitIncoming` admits from `batch`, with the corpus keys
+    * read from the store's sidecars and, for the reference, derived from
+    * the snapshot; both must agree, and the result is returned. */
+  private def admitBoth(root: String, batch: org.apache.spark.sql.DataFrame,
+                        what: String): Set[Long] = {
+    import graft.operators.Dedup
+    val corpus = VersionedCorpus.snapshot(spark, root).select("doc_id", "text")
+    def ids(df: org.apache.spark.sql.DataFrame) = Dedup.withAdmissionScope(
+      df.select("doc_id").as[Long].collect().toSet)
+    val plain = ids(Dedup.admitIncoming(batch, corpus, "doc_id", "text"))
+    val keyed = ids(Dedup.admitIncoming(batch, corpus, "doc_id", "text",
+      keys = Some(Dedup.CorpusKeys.of(VersionedCorpus.derived(spark, root,
+        keysName, Dedup.CorpusKeys.rows(_, "doc_id", "text"))))))
+    assert(keyed === plain, what)
+    plain
+  }
+
+  private def liveGens(root: String): Set[Long] = {
+    val all = VersionedCorpus.commits(root)
+    val base = all.filter(_.base).map(_.gen).lastOption.getOrElse(-1L)
+    all.filter(c => c.gen >= base && c.kind != "delete").map(_.gen).toSet
+  }
+
+  test("derived sidecars: admissions from sidecars ≡ admissions against the snapshot in every store state") {
+    val root = freshRoot()
+    val docs = soup(0L, 120)
+    docs.grouped(40).foreach(g => VersionedCorpus.append(g.toDF("doc_id", "text"), root))
+    // a store written before sidecars existed: the first read backfills
+    assert(sidecars(root).isEmpty)
+    val first = admitBoth(root, admissionBatch(docs, 1000L), "pre-sidecar store")
+    assert(first.nonEmpty && first.forall(_ >= 1200L), first)
+    assert(sidecars(root) === liveGens(root), "fully sidecarred")
+    admitBoth(root, admissionBatch(docs, 1000L), "fully sidecarred")
+    // mixed: a new generation without a sidecar beside sidecarred ones
+    val more = soup(2000L, 40)
+    val g = VersionedCorpus.append(more.toDF("doc_id", "text"), root)
+    assert(!sidecars(root).contains(g))
+    admitBoth(root, admissionBatch(docs ++ more, 3000L), "mixed")
+    assert(sidecars(root) === liveGens(root))
+    // compaction carries the inputs' sidecars by file copy: the base has
+    // one before any read
+    val base = VersionedCorpus.compact(spark, root)
+    assert(sidecars(root).contains(base), "the compaction carried no sidecar")
+    admitBoth(root, admissionBatch(docs ++ more, 4000L), "after a carrying compaction")
+    VersionedCorpus.vacuum(root)
+    assert(sidecars(root) === Set(base), "vacuum left sidecars of reclaimed generations")
+    admitBoth(root, admissionBatch(docs ++ more, 5000L), "after compact + vacuum")
+    // a deleted document stops blocking admission: its exact copy is admitted
+    val (goneId, goneText) = docs(7)
+    VersionedCorpus.delete(Seq(goneId).toDF("doc_id"), root, "doc_id")
+    val left = (docs ++ more).filterNot(_._1 == goneId)
+    val afterDelete = admitBoth(root,
+      admissionBatch(left, 6000L, extra = Some(goneText)), "after a delete")
+    assert(afterDelete.contains(6300L), "the deleted document's copy was rejected")
+    assert(!admitBoth(root, admissionBatch(docs, 6000L, extra = Some(docs(8)._2)),
+      "a stored document's copy").contains(6300L))
+  }
+
+  test("derived sidecars survive crashes: staging is never read, a lost sidecar is backfilled") {
+    val root = freshRoot()
+    val docs = soup(0L, 90)
+    docs.grouped(30).foreach(g => VersionedCorpus.append(g.toDF("doc_id", "text"), root))
+    val batch = admissionBatch(docs, 1000L)
+    val want = admitBoth(root, batch, "first read")
+    // a backfill that died mid-write: a staging dir holding the batch's
+    // own keys as generation 0's sidecar — read, it would reject the
+    // whole batch. It is never read.
+    val staging = java.nio.file.Paths.get(root, "_staging", "crashed-backfill")
+    graft.operators.Dedup.CorpusKeys.rows(batch, "doc_id", "text")
+      .withColumn("_vc_gen", lit(0L))
+      .write.partitionBy("_vc_gen").parquet(staging.toString)
+    assert(admitBoth(root, batch, "beside a half-written staging dir") === want)
+    VersionedCorpus.cleanStaging(root)
+    assert(!Files.exists(staging.getParent), "cleanStaging left the sidecar staging")
+    // a sidecar lost after it was placed is backfilled, decisions unchanged
+    val lost = liveGens(root).max
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      java.nio.file.Paths.get(root, "_derived", keysName, s"gen=$lost").toFile)
+    assert(admitBoth(root, batch, "after losing a sidecar") === want)
+    assert(sidecars(root) === liveGens(root))
   }
 }

@@ -552,16 +552,26 @@ class StreamsSpec extends AnyFunSuite {
       val q = Streams.admissionLoop(
         mem.toDF().toDF("vec_id", "embedding"),
         Streams.CorpusState.IvfTable(path, Seq("vec_id", "embedding", "cluster_id")),
-        graft.operators.Dedup.admitIncomingSemantic(_, _, "vec_id", "embedding",
+        (b, c) => graft.operators.Dedup.admitIncomingSemantic(b, c.rows, "vec_id", "embedding",
           centroids, minCosine = 0.9),
         Some(Streams.IvfAppend(path, "vec_id", "embedding", centroids))) {
           (adm, _) =>
             val ids = adm.select("vec_id").as[Long].collect()
             admitted.synchronized { admitted ++= ids }
         }.start()
-      batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+      val meter = graft.obs.JobMeter.install(spark)
+      val jobs = batches.map { b =>
+        val c0 = meter.read()
+        mem.addData(b); q.processAllAvailable()
+        (meter.read() - c0).jobs
+      }
       q.stop()
+      spark.sparkContext.removeSparkListener(meter)
       assert(admitted.toSet === Set(2L, 4L))
+      // the one count that gates the index append also materializes the
+      // admitted rows' checkpoint: an eager checkpoint plus that count
+      // ran 14 jobs per micro-batch
+      assert(jobs === Seq(13L, 13L))
       // the table holds corpus + admitted, each exactly once
       val ids = spark.read.parquet(path).select("vec_id")
         .as[Long].collect().toSeq
@@ -600,7 +610,7 @@ class StreamsSpec extends AnyFunSuite {
       val q = (if (evolving)
         Streams.admissionLoop(vecs,
           Streams.CorpusState.Evolving(corpus, Seq("vec_id", "embedding")),
-          graft.operators.Dedup.admitIncomingVectors(_, _, "vec_id", "embedding"))(sink)
+          (b, c) => graft.operators.Dedup.admitIncomingVectors(b, c.rows, "vec_id", "embedding"))(sink)
       else
         Streams.incrementalVectorAdmission(
           vecs, corpus, "vec_id", "embedding")(sink))
@@ -645,7 +655,7 @@ class StreamsSpec extends AnyFunSuite {
       val q = Streams.admissionLoop(
         mem.toDF().toDF("vec_id", "embedding"),
         Streams.CorpusState.Evolving(corpus, Seq("vec_id", "embedding")),
-        graft.operators.Dedup.admitIncomingVectors(_, _, "vec_id", "embedding"),
+        (b, c) => graft.operators.Dedup.admitIncomingVectors(b, c.rows, "vec_id", "embedding"),
         Some(Streams.IvfAppend(path, "vec_id", "embedding", cents))) { (adm, _) =>
           val ids = adm.select("vec_id").as[Long].collect()
           admitted.synchronized { admitted ++= ids }
@@ -702,7 +712,7 @@ class StreamsSpec extends AnyFunSuite {
         val q = Streams.admissionLoop(
           mem.toDF().toDF("vec_id", "embedding"),
           Streams.CorpusState.Durable(root, Seq("vec_id", "embedding")),
-          graft.operators.Dedup.admitIncomingVectors(_, _, "vec_id", "embedding"),
+          (b, c) => graft.operators.Dedup.admitIncomingVectors(b, c.rows, "vec_id", "embedding"),
           Some(Streams.IvfAppend(path, "vec_id", "embedding", cents))) { (adm, _) =>
             val ids = adm.select("vec_id").as[Long].collect()
             admitted.synchronized { admitted ++= ids }; ()
@@ -843,13 +853,13 @@ class StreamsSpec extends AnyFunSuite {
       Seq((1L, Seq(1.0f, 0.01f)), (2L, Seq(0.7f, -0.7f))),
       Seq((3L, Seq(0.71f, -0.69f)), (4L, Seq(-0.9f, 1.0f))),
       Seq((5L, Seq(0.0f, 1.0f))))
-    val textAdmit = (b: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.DataFrame) =>
-      graft.operators.Dedup.admitIncoming(b, c, "doc_id", "text")
+    val textAdmit = (b: org.apache.spark.sql.DataFrame, c: Streams.Corpus) =>
+      graft.operators.Dedup.admitIncoming(b, c.rows, "doc_id", "text")
     // RDDs still persisted after 3 micro-batches and a stop, beyond
     // those persisted before the query started
     def run[T](state: Streams.CorpusState,
                admit: (org.apache.spark.sql.DataFrame,
-                 org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame,
+                 Streams.Corpus) => org.apache.spark.sql.DataFrame,
                mem: MemoryStream[T], cols: Seq[String], batches: Seq[Seq[T]],
                index: Option[Streams.IvfAppend] = None): Set[Int] = {
       val before = spark.sparkContext.getPersistentRDDs.keySet
@@ -870,7 +880,7 @@ class StreamsSpec extends AnyFunSuite {
         "Durable" -> run(Durable(root, textCols), textAdmit,
           MemoryStream[(Long, String)], textCols, textBatches),
         "IvfTable" -> run(IvfTable(path, Seq("vec_id", "embedding", "cluster_id")),
-          graft.operators.Dedup.admitIncomingSemantic(_, _, "vec_id", "embedding",
+          (b, c) => graft.operators.Dedup.admitIncomingSemantic(b, c.rows, "vec_id", "embedding",
             centroids),
           MemoryStream[(Long, Seq[Float])], Seq("vec_id", "embedding"), vecBatches,
           Some(Streams.IvfAppend(path, "vec_id", "embedding", centroids)))).toMap
@@ -1042,9 +1052,19 @@ class StreamsSpec extends AnyFunSuite {
         }
       .option("checkpointLocation", cpDir)
       .start()
+    // the kernel's corpus keys live beside the store: after each run,
+    // every committed generation has its sidecar
+    def sidecarsCover(): Unit = {
+      val dir = java.nio.file.Paths.get(root, "_derived",
+        graft.operators.Dedup.CorpusKeys.name("doc_id", "text"))
+      val gens = graft.sources.VersionedCorpus.commits(root).map(_.gen)
+      assert(gens.forall(g => java.nio.file.Files.isDirectory(dir.resolve(s"gen=$g"))),
+        s"generations $gens, sidecars under $dir")
+    }
     drop(Seq((10L, "r s t r s t"), (11L, "one two three four five six")))
     val q1 = startQ(); q1.processAllAvailable(); q1.stop()
     assert(admitted.sorted.toSeq === Seq(10L, 11L))
+    sidecarsCover()
     // new files land while the writer is DOWN — the replay it was killed
     // in the middle of; each file is its own micro-batch on resume
     drop(Seq((20L, "r s t r s t r s t"), // near-dup of 10 → reject
@@ -1058,6 +1078,7 @@ class StreamsSpec extends AnyFunSuite {
     assert(graft.sources.VersionedCorpus.snapshot(spark, root)
       .select("doc_id").as[Long].collect().toSet
       === Set(1L, 10L, 11L, 22L, 31L))
+    sidecarsCover()
   }
 
   test("CDC + view maintenance loop: view ≡ full aggregate after every batch, across a restart") {
