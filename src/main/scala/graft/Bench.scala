@@ -8,8 +8,9 @@ import scala.util.control.NonFatal
   *     per-query seconds (3-decimal precision, MIN across `reps`
   *     REP-MAJOR passes over the whole list — env
   *     `SPARK_GRAFT_BENCH_REPS`, default 3) plus an `"infra"` map
-  *     timing the one-time shared builds (IVF index incl. its recall
-  *     calibration, MinHash edge table, dedup-cluster edge memo), then
+  *     timing the one-time shared builds, one line per `Queries.memos`
+  *     entry (IVF/PQ indexes incl. their recall calibration, MinHash
+  *     edge table, layout stores, table statistics, …), then
   *   - a minimal `{"metric":"total","value":…,"unit":"sec","failed":…}` as
   *     the VERY LAST stdout line. The harness that captures our output keeps
   *     only a ~2 KB tail, and the full line (70+ queries) can overflow it —
@@ -158,89 +159,32 @@ object Bench {
       graft.operators.PrefixSum.releaseCaches()
       graft.operators.Dedup.releaseAdmissionCaches()
     }
-    // the IVF index and the MinHash verified-candidate relation are
-    // one-time infrastructure (built ONCE per corpus, consumed by
-    // several queries — on a cluster both are persisted tables, the
-    // same asymmetry as the fixture parquet itself): trigger the shared
-    // builds for the TIMED dir here so the probe/dedup rows measure the
-    // steady-state consumption, not the amortized build. The builds ARE
-    // timed, as their own "infra" JSON entries — the asymmetry stays
-    // auditable instead of invisible. (When the timed dir IS the warm
-    // sibling — an sf0.001 smoke — the warmup loop already built the
-    // memos, so the infra lines show the memo-hit cost, not a build.)
-    // MIN of 2 real rebuilds per infra line (memos cleared between
-    // passes): the r10 audit caught the one-shot `_ivfpq_build` timing
-    // reporting 14.7 s for a build that replays at ~4.9 s — the same VM-
-    // throttle spike class the per-query min-of-reps filters, hitting
-    // the only unprotected measurements in the file. The pass order
-    // matters (ivfpq consumes the ivf memo built two lines above it), so
-    // the whole sequence reruns per pass rather than per line.
+    // the shared fixture artifacts (`Queries.memos`: indexes, edge
+    // tables, layout stores, table statistics) are one-time
+    // infrastructure, built once per corpus and consumed by several
+    // queries, like the fixture parquet itself. Each memo is built for the
+    // TIMED dir here, so the rows that read it measure steady-state
+    // consumption, and the build is timed as its own "infra" line, named
+    // by the memo. (When the timed dir IS the warm sibling, an sf0.001
+    // smoke, the warmup loop already built the memos, so the lines show
+    // the memo-hit cost.) A line is the MIN of SPARK_GRAFT_INFRA_REPS
+    // (default 2) real rebuilds, memos cleared between passes: the r10
+    // audit caught a one-shot `_ivfpq_build` reporting 14.7 s for a build
+    // that replays at ~4.9 s. The whole registry reruns per pass, in
+    // declaration order, so a memo that reads another finds it built.
     val infra = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val infraBuilds: Seq[(String, () => Unit)] = Seq(
-      "_ivf_build" -> (() => { Queries.sharedIvfIndex(spark, sfDir); () }),
-      "_pq_build" -> (() => { Queries.sharedPqIndex(spark, sfDir); () }),
-      "_sq_build" -> (() => { Queries.sharedSqIndex(spark, sfDir); () }),
-      "_ivfpq_build" -> (() => { Queries.sharedIvfPqIndex(spark, sfDir); () }),
-      "_ivff_build" -> (() => { Queries.sharedFixedIvf(spark, sfDir); () }),
-      "_pqf_encode" -> (() => { Queries.sharedFixedPq(spark, sfDir); () }),
-      "_ivfpqf_build" -> (() => { Queries.sharedFixedIvfPq(spark, sfDir); () }),
-      "_forget_fixture_build" -> (() => {
-        val (root, _) = Queries.forgetFixtureCopy(spark, sfDir)
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(root).getParentFile)
-      }),
-      "_textindex_build" -> (() => {
-        val root = Queries.textIndexFixtureCopy(spark, sfDir)
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(root).getParentFile)
-      }),
-      "_minhash_build" -> (() =>
-        { Queries.sharedMinhashVerified(spark, sfDir).count(); () }),
-      // the three closed-form signature relations the fixed-twin rows
-      // join over (same maintained-artifact asymmetry as _minhash_build)
-      "_polymh_build" -> (() =>
-        { Queries.sharedPolyMinhashBanded(spark, sfDir).count(); () }),
-      "_polysh_build" -> (() =>
-        { Queries.sharedPolySimhashBanded(spark, sfDir).count(); () }),
-      "_polywn_build" -> (() =>
-        { Queries.sharedPolyWinnowFps(spark, sfDir).count(); () }),
-      "_dedup_edges_build" -> (() =>
-        { Queries.sharedDedupEdges(spark, sfDir).count(); () }),
-      "_dedup_cc_build" -> (() =>
-        { Queries.sharedDedupLabels(spark, sfDir).count(); () }),
-      "_exact_pairs_build" -> (() =>
-        { Queries.sharedExactPairs(spark, sfDir).count(); () }),
-      "_bucketed_build" -> (() =>
-        { Queries.sharedBucketedTables(spark, sfDir); () }),
-      "_zorder_build" -> (() =>
-        { Queries.sharedZorderPath(spark, sfDir); () }),
-      "_gramidx_build" -> (() =>
-        { Queries.sharedGramIndexPath(spark, sfDir); () }),
-      "_hivepart_build" -> (() =>
-        { Queries.sharedHivePartPath(spark, sfDir); () }),
-      // the two table-statistics memos (embeddings (N, dim); documents
-      // (N, avgdl) — BM25 index metadata): cleared by
-      // clearSharedBuildCaches like every memo, so without their own
-      // lines the corpus-stats jobs the BM25/LSH rows moved out of
-      // per-rep time would vanish from the archived record entirely
-      // (first timed rep rebuilds, min-of-reps filters it) while the
-      // DuckDB oracle still computes them inline — the r13-advice
-      // invisible-asymmetry flag. Same auditability contract as every
-      // other shared build.
-      "_embstats_build" -> (() => { Queries.embStats(spark, sfDir); () }),
-      "_docstats_build" -> (() => { Queries.docStats(spark, sfDir); () }))
     val infraReps = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_INFRA_REPS", "2").toInt)
     for (pass <- 0 until infraReps) {
       if (pass > 0) Queries.clearSharedBuildCaches(sfDir)
-      infraBuilds.foreach { case (name, f) =>
+      Queries.memos.foreach { m =>
         val t0 = System.nanoTime()
-        val ok = try { f(); true } catch { case NonFatal(_) => false }
+        val ok = try { m.get(spark, sfDir); true } catch { case NonFatal(_) => false }
         val dt = (System.nanoTime() - t0) / 1e9
-        val prev = infra.get(name)
+        val prev = infra.get(m.name)
         // a failed pass never overwrites a measured success; a line is
         // negative (failed) only when no pass succeeded
-        infra(name) =
+        infra(m.name) =
           if (ok) prev.filter(_ >= 0).fold(dt)(math.min(_, dt))
           else prev.getOrElse(-dt)
       }

@@ -2,10 +2,10 @@ package graft
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 import graft.functions.{Embedder, TransformerEmbedder, VectorFunctions}
 import graft.functions.VectorFunctions._
@@ -993,93 +993,6 @@ object Queries
       java.util.Arrays.asList(sorted: _*), df.schema)
   }
 
-  /** One shared IVF index per fixture dir: `ivf_probe` and
-    * `ivf_probe_part` need (assignments, centroids) from the SAME k-means
-    * parameters, and a declared-set pass (Verify, a Bench round) runs
-    * both — without sharing, the set pays k-means twice. The shared form
-    * is the AT-SCALE one: the indexed corpus written as a parquet table
-    * PARTITIONED BY cluster_id (`IvfIndex.writePartitioned`) — the
-    * driver holds only the k centroid rows and a path string, never a
-    * corpus-sized collect (the earlier cache of collected assignment
-    * rows was exactly the driver-side-materialization class the 100 TB
-    * mandate forbids). Probes read the table back: `ivf_probe_part` via
-    * partition pruning, `ivf_probe` via the semi-join shape over the
-    * same distributed relation. The map is keyed by dir (ONE entry per
-    * fixture dir) and the VALUE carries the source file's (mtime,
-    * length) fingerprint: a mismatch rebuilds — and deletes the
-    * superseded index dir — instead of serving stale assignments (same
-    * guard as `Streams`' schema probe). */
-  private[graft] final case class IvfBuilt(
-      fingerprint: String,
-      indexPath: String,
-      centRows: Seq[org.apache.spark.sql.Row],
-      centSchema: org.apache.spark.sql.types.StructType,
-      k: Int,
-      nprobe: Int)
-
-  /** Shared-index handle consumed by the `ivf_*` queries: the partitioned
-    * table's path, the (tiny) centroid relation, and the CORPUS-SCALED
-    * operating point the build chose — probes must read the declared
-    * `nprobe` from here, not hardcode one, so the `ivf_recall` row always
-    * certifies the point the declared probes actually run at. */
-  private[graft] final case class SharedIvf(
-      indexPath: String, centroids: DataFrame, k: Int, nprobe: Int)
-
-  private[graft] val ivfBuildCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfBuilt]()
-
-  // staleness guards share Tables.fixtureFingerprint — ONE definition of
-  // "the fixture regenerated", not one drifting copy per memo
-  private[graft] def embFingerprint(dir: String): String =
-    Tables.fixtureFingerprint(dir, "embeddings")
-
-  /** Per-dir (rowCount, dim) of the embeddings table — TABLE STATISTICS,
-    * the catalog metadata every deployment already holds (row counts come
-    * from parquet footers, the dim from the schema contract), memoized
-    * fingerprint-fresh like every shared artifact. Consumers that size
-    * an operator from corpus stats (the LSH nBits rule) read this
-    * instead of paying a dedicated count job per invocation. */
-  private[graft] val embStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long, Int)]()
-
-  private[graft] def embStats(s: SparkSession, dir: String): (Long, Int) = {
-    val fp = embFingerprint(dir)
-    val st = embStatsCache.compute(dir, (_, cached) =>
-      if (cached != null && cached._1 == fp) cached
-      else {
-        val emb = T(s, dir, "embeddings")
-        val r = emb.agg(count(lit(1)).as("n"),
-          first(size(col("embedding"))).as("d")).head()
-        (fp, r.getLong(0), r.getInt(1))
-      })
-    (st._2, st._3)
-  }
-
-  /** Per-dir (docCount, avgTokenLength) of the documents table — BM25
-    * INDEX METADATA (every BM25 deployment persists (N, avgdl) with its
-    * index; [[graft.operators.TextIndex]] does too). Memoized
-    * fingerprint-fresh like [[embStats]] so scan-based BM25 rows skip a
-    * full corpus tokenize per invocation. Computed by the exact
-    * expression the in-plan form used (count + avg(size(tokens))),
-    * under the same session config, so the scores are bit-identical. */
-  private[graft] val docStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Double, Double)]()
-
-  private[graft] def docStats(s: SparkSession, dir: String): (Double, Double) = {
-    val fp = Tables.fixtureFingerprint(dir, "documents")
-    val st = docStatsCache.compute(dir, (_, cached) =>
-      if (cached != null && cached._1 == fp) cached
-      else {
-        val r = T(s, dir, "documents")
-          .select(size(graft.operators.TextAnalysis.tokens(col("text")))
-            .cast("double").as("_dl"))
-          .agg(count(lit(1)).cast("double").as("n"), avg(col("_dl")).as("avgdl"))
-          .head()
-        (fp, r.getDouble(0), r.getDouble(1))
-      })
-    (st._2, st._3)
-  }
-
   /** The lazy `near_dup_embed_lsh` pipeline over a (vec_id, embedding)
     * frame with known (count, dim): sign-LSH bucket projection →
     * materialized candidate pairs → exact-cosine verify. The sizing rule
@@ -1100,50 +1013,6 @@ object Queries
       .filter(col("cos") >= 0.3)
   }
 
-  /** Per-dir memo of the `dedup_clusters*` edge relation — the bounded
-    * all-pairs Jaccard verification tier over the doc_id < 128 slice
-    * (SQL-expressible, same shape as `jaccard_pairs`; bucketed LSH
-    * candidates are the scale path for edge generation). Both declared
-    * clustering rows (propagation and star contraction) consume the SAME
-    * edges, and a set pass runs both — without sharing, the set would
-    * pay the verify tier twice. The verified edge set is tiny by
-    * construction (dup families inside a 128-doc slice), so the memo
-    * holds the collected LocalRelation rows — driver-bounded, the
-    * `materializePairs` class. Fingerprint-guarded like `ivfBuildCache`. */
-  private[graft] val dedupEdgesCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (String, Seq[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType)]()
-
-  private[graft] def sharedDedupEdges(s: SparkSession, dir: String): DataFrame = {
-    val fp = Tables.fixtureFingerprint(dir, "documents")
-    val built = dedupEdgesCache.compute(dir, (_, cached) =>
-      if (cached != null && cached._1 == fp) cached
-      else {
-        val sub = T(s, dir, "documents").filter(col("doc_id") < 128)
-        // length-band prefilter (the set-similarity-join size bound):
-        // J(A,B) ≥ 0.8 ⇒ min(|A|,|B|) ≥ 0.8·max(|A|,|B|), so pairs
-        // outside the band can never verify — 0.79 leaves margin for the
-        // 4-decimal rounding at the threshold. Result-identical, so the
-        // oracle needs no mirror of it; halves the verify work here and
-        // is the standard pruning step of a distributed similarity join.
-        val sized = sub.select(col("doc_id"),
-          size(array_distinct(NearDup.shingles(col("text"), 1))).as("_ns"))
-        val pairs = sized.select(col("doc_id").as("id_a"), col("_ns").as("_na"))
-          .crossJoin(sized.select(col("doc_id").as("id_b"), col("_ns").as("_nb")))
-          .filter(col("id_a") < col("id_b") &&
-            least(col("_na"), col("_nb")).cast("double") >=
-              lit(0.79) * greatest(col("_na"), col("_nb")))
-          .select(col("id_a"), col("id_b"))
-        val edges = NearDup.materializePairs(
-          NearDup.jaccardVerify(sub, "doc_id", "text", pairs, shingleSize = 1)
-            .filter(col("jaccard") >= 0.8)
-            .select(col("id_a"), col("id_b")))
-        (fp, edges.collect().toSeq, edges.schema)
-      })
-    s.createDataFrame(java.util.Arrays.asList(built._2: _*), built._3)
-  }
-
   /** Near-dup clustering end-to-end: similarity edges → connected
     * components → per-doc component id. Near-duplication is not
     * transitive, so pair-level dedup under-deletes; the component id IS
@@ -1161,42 +1030,10 @@ object Queries
     // generation fits 256 edges, then the driver finishes the geometric
     // tail exactly as it would at corpus scale.
     val cc = Dedup.connectedComponents(sub.select("doc_id"), "doc_id",
-      sharedDedupEdges(s, dir), "id_a", "id_b",
+      sharedDedupEdges.get(s, dir).frame(s), "id_a", "id_b",
       starContraction = starContraction, localFinishEdges = 256)
     try localFrame(cc.orderBy("doc_id"))
     finally cc.unpersist()
-  }
-
-  /** Per-dir memo of the propagation-mode COMPONENT LABELS over
-    * [[sharedDedupEdges]] — the `sharedIvfIndex` discipline applied to
-    * clustering: at corpus scale the component id of every document is
-    * a MAINTAINED table (rebuilt when the corpus version changes, read
-    * by every downstream consumer), not something each query re-derives,
-    * so the rows that CONSUME labels (`dedup_clusters`,
-    * `dedup_best_rep`) read this memo while the bench prices the build
-    * once as the auditable `_dedup_cc_build` infra line. The LIVE
-    * clustering paths stay benchmarked per-rep where the algorithm is
-    * the point: `dedup_clusters_star` runs the full star contraction
-    * and `dedup_pipeline_lsh` runs propagation over the (different)
-    * MinHash edge set. Vertex slice is 128 docs by construction →
-    * driver-bounded LocalRelation rows, fingerprint-guarded. */
-  private[graft] val dedupLabelsCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (String, Seq[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType)]()
-
-  private[graft] def sharedDedupLabels(s: SparkSession, dir: String): DataFrame = {
-    val fp = Tables.fixtureFingerprint(dir, "documents")
-    val built = dedupLabelsCache.compute(dir, (_, cached) =>
-      if (cached != null && cached._1 == fp) cached
-      else {
-        val sub = T(s, dir, "documents").filter(col("doc_id") < 128)
-        val cc = Dedup.connectedComponents(sub.select("doc_id"), "doc_id",
-          sharedDedupEdges(s, dir), "id_a", "id_b")
-        try (fp, cc.collect().toSeq, cc.schema)
-        finally cc.unpersist()
-      })
-    s.createDataFrame(java.util.Arrays.asList(built._2: _*), built._3)
   }
 
   /** The recursive-CTE oracle replaying the whole clustering chain —
@@ -1221,95 +1058,129 @@ object Queries
        |SELECT v AS doc_id, min(comp) AS component FROM r GROUP BY v
        |ORDER BY doc_id""".stripMargin
 
-  /** One shared MinHash-LSH verified-candidate relation per fixture dir:
-    * `minhash_pairs` and `dedup_pipeline_lsh` both need the SAME
-    * signature pass → band self-join → exact-Jaccard verify over the
-    * documents table (default 32 hashes / 4 bands / 3-gram verify), and
-    * a declared-set pass runs both — without sharing, the set pays the
-    * corpus-wide signature scan twice. The verified pair set goes to
-    * DISK as a parquet edge table and the memo holds only the PATH —
-    * the `sharedIvfIndex` discipline: at web scale the verified dup-edge
-    * relation is corpus-order (30-50 % dup rates), so it must never ride
-    * through the driver; consumers re-read the table, exactly as a
-    * cluster deployment reads the edge table its candidate job
-    * persisted. Fingerprint-guarded, one entry per dir (same bound as
-    * `ivfBuildCache` / `Streams.nanosCache`). */
-  private[graft] final case class MinhashEdges(fingerprint: String, path: String)
+  /** Generic source/sink round-trip through `fmt` (B32): write a typed
+    * lineitem slice (long, decimal, date, string columns), read it back
+    * with the writer's schema, aggregate. The oracle computes the same
+    * aggregate straight from parquet, so any type/precision loss in the
+    * sink→source cycle breaks the hash match. Same eager-materialize +
+    * temp-dir-per-invocation discipline as `q_csv_roundtrip`. */
+  private[graft] def formatRoundTrip(s: SparkSession, dir: String,
+                              fmt: String): DataFrame =
+    withScratchDir(s"graft-${fmt}rt") { tmpRoot =>
+      val tmp = s"$tmpRoot/slice"
+      val src = T(s, dir, "lineitem").filter(col("l_orderkey") < 100)
+        .select(col("l_orderkey"), col("l_quantity"), col("l_shipdate"),
+          col("l_returnflag"))
+      src.write.format(fmt).mode("overwrite").save(tmp)
+      // explicit schema on re-read: JSON lines are schemaless text, so this
+      // is what pins decimal/date types through the text cycle
+      val back = s.read.format(fmt).schema(src.schema).load(tmp)
+      localFrame(back.agg(count(lit(1)).as("n"),
+        r4(dbl(decSum(col("l_quantity")))).as("sum_qty"),
+        max(col("l_shipdate")).as("max_ship"),
+        countDistinct(col("l_returnflag")).as("n_flags")))
+    }
 
-  private[graft] val minhashEdgeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, MinhashEdges]()
+  private[graft] val formatRoundTripOracle: String =
+    """SELECT count(*) AS n,
+      |  round(CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE), 4) AS sum_qty,
+      |  max(l_shipdate) AS max_ship,
+      |  CAST(count(DISTINCT l_returnflag) AS BIGINT) AS n_flags
+      |FROM lineitem WHERE l_orderkey < 100""".stripMargin
 
-  private[graft] def docsFingerprint(dir: String): String =
-    Tables.fixtureFingerprint(dir, "documents")
+  // ----- shared fixture artifacts ------------------------------------------
+  //
+  // An artifact several declared rows consume (an index, an edge table, a
+  // layout store, table statistics) is built once per fixture dir and
+  // reused across the session's queries, the way a deployment maintains it
+  // once per corpus version. Each is one [[Memo]]: its name is its Bench
+  // infra line, its tables are what it must stay fresh against, and
+  // [[memos]] lists them for [[clearSharedBuildCaches]] and Bench's infra
+  // passes.
 
-  /** Per-dir memos of the closed-form signature/fingerprint relations
-    * the fixed-twin rows join over — the [[sharedMinhashVerified]]
-    * maintained-artifact discipline applied to the polynomial-hash
-    * family: at scale the per-doc signature table is maintained by the
-    * ingestion job and every candidate query JOINS it, never re-runs
-    * the signature pass. Each relation builds once per fixture dir
-    * (fingerprint-guarded) and is served as a LocalRelation — all
-    * three are driver-bounded by construction (banded rows = slice
-    * docs × bands; winnow fingerprints ≈ grams/4 per doc over the
-    * ≤ 2000-doc slice). The bench prices each build as its own infra
-    * line (`_poly*_build`). */
-  private[graft] val polyRelCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (String, Seq[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType)]()
-
-  private def sharedPolyRelation(s: SparkSession, dir: String, kind: String)
-                                (build: => DataFrame): DataFrame = {
-    val fp = docsFingerprint(dir)
-    val built = polyRelCache.compute(s"$dir|$kind", (_, cached) =>
-      if (cached != null && cached._1 == fp) cached
-      else {
-        val df = build
-        (fp, PlanGate.withAqeOffIfSmall(df)(_.collect()).toSeq, df.schema)
-      })
-    s.createDataFrame(java.util.Arrays.asList(built._2: _*), built._3)
+  /** Driver-bounded rows and their schema: the collected form of a small
+    * artifact (centroids, verified edges, component labels, signature
+    * relations), served to the caller's session as a local relation. */
+  private[graft] final case class LocalRows(rows: Seq[Row], schema: StructType) {
+    def frame(s: SparkSession): DataFrame =
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
-  private[graft] def fixedSlice(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "documents").filter(col("doc_id") < 2000)
-
-  private[graft] def sharedPolyMinhashBanded(s: SparkSession,
-                                             dir: String): DataFrame =
-    sharedPolyRelation(s, dir, "mh")(
-      NearDup.minHashPolyBanded(fixedSlice(s, dir), "doc_id", "text"))
-
-  private[graft] def sharedPolySimhashBanded(s: SparkSession,
-                                             dir: String): DataFrame =
-    sharedPolyRelation(s, dir, "sh")(
-      NearDup.simHashPolyBanded(fixedSlice(s, dir), "doc_id", "text"))
-
-  private[graft] def sharedPolyWinnowFps(s: SparkSession,
-                                         dir: String): DataFrame =
-    sharedPolyRelation(s, dir, "wn")(
-      NearDup.winnowPolyFps(fixedSlice(s, dir), "doc_id", "text"))
-
-  private[graft] def sharedMinhashVerified(s: SparkSession, dir: String): DataFrame = {
-    val fp = docsFingerprint(dir)
-    val built = minhashEdgeCache.compute(dir, (_, cached) =>
-      if (cached != null && cached.fingerprint == fp) cached
-      else {
-        // superseded edge dirs are NOT deleted eagerly — same
-        // concurrent-reader reasoning as sharedIvfIndex: compute()
-        // serializes builders, not consumers mid-scan on the old path.
-        // tmpRoot is driver-local /tmp, which suits this local-mode
-        // harness; a cluster deployment points it at shared storage
-        // (the edge table must be reachable by every executor).
-        val docs = T(s, dir, "documents")
-        val cands = NearDup.minHashCandidatesMaterialized(docs, "doc_id", "text")
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-mhedges")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(tmpRoot.toFile)
-        val path = s"$tmpRoot/edges"
-        NearDup.jaccardVerify(docs, "doc_id", "text", cands)
-          .write.mode("overwrite").parquet(path)
-        MinhashEdges(fp, path)
-      })
-    s.read.parquet(built.path)
+  private[graft] object LocalRows {
+    def of(df: DataFrame): LocalRows = LocalRows(df.collect().toSeq, df.schema)
   }
+
+  /** Every [[Memo]] in declaration order, which is Bench's infra order: a
+    * memo whose build reads another is declared after it (`_ivfpq_build`
+    * after `_ivf_build`, `_ivfpqf_build` after `_ivff_build`,
+    * `_dedup_cc_build` after `_dedup_edges_build`). Declared before the
+    * first memo, which registers itself here while the object
+    * initialises. */
+  private[graft] val memos = scala.collection.mutable.ArrayBuffer[Memo[_]]()
+
+  /** One shared fixture artifact, one entry per fixture dir. `get` serves
+    * the entry built against the current [[Tables.fixtureFingerprint]] of
+    * every table in `tables`; a changed fingerprint (a regenerated
+    * fixture) or a [[clear]] makes the next `get` rebuild. A superseded
+    * artifact dir is not deleted on rebuild but left to its exit hook
+    * ([[artifactDir]]): `compute` serializes builders, not readers, and a
+    * concurrent query may still be scanning the old path. Each memo keeps
+    * its own map, because some builds read another memo (`_ivfpq_build`
+    * reads `_ivf_build`), which on one shared map would be a recursive
+    * `compute`. */
+  private[graft] final class Memo[V](val name: String, tables: Seq[String],
+                                     build: (SparkSession, String) => V) {
+    private val byDir =
+      new java.util.concurrent.ConcurrentHashMap[String, (String, V)]()
+    memos += this
+
+    def get(s: SparkSession, dir: String): V = {
+      val key = tables.map(Tables.fixtureFingerprint(dir, _)).mkString("|")
+      byDir.compute(dir, (_, cached) =>
+        if (cached != null && cached._1 == key) cached
+        else (key, build(s, dir)))._2
+    }
+
+    def clear(dir: String): Unit = byDir.remove(dir)
+  }
+
+  private def memo[V](name: String, tables: String*)(
+      build: (SparkSession, String) => V): Memo[V] =
+    new Memo(name, tables, build)
+
+  /** A fresh temp dir for a shared artifact, deleted with its contents
+    * when the JVM exits. Driver-local /tmp suits this local-mode harness;
+    * a cluster deployment points it at storage every executor reaches. */
+  private[graft] def artifactDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    // a shutdown hook, not forceDeleteOnExit: that registers only the
+    // files present now, and the exit-time delete of the dir, by then
+    // holding the artifact, fails
+    sys.addShutdownHook { org.apache.commons.io.FileUtils.deleteQuietly(d); () }
+    d.toString
+  }
+
+  /** Run `body` in a fresh temp dir owned by the call: deleted when `body`
+    * returns or throws. */
+  private[graft] def withScratchDir[A](prefix: String)(body: String => A): A = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    try body(d.toString)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
+  }
+
+  /** Run `body` on a private file copy of the store at `src`, in a
+    * scratch dir that is deleted afterwards, also when the copy itself
+    * fails. Every path inside a store is relative (`gen=N`, shard files,
+    * cluster partitions), so a directory copy is a faithful store; the
+    * rows that mutate a memoized store mutate this copy. */
+  private[graft] def withWorkCopy[A](src: String, prefix: String)(
+      body: String => A): A =
+    withScratchDir(prefix) { work =>
+      val dst = s"$work/f"
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(src), new java.io.File(dst))
+      body(dst)
+    }
 
   /** Corpus-scaled IVF sizing — the standard public recipe: k ≈ √n
     * clusters (so cluster population ≈ √n tracks corpus growth in both
@@ -1335,87 +1206,68 @@ object Queries
     * meet — certified live by the `ivf_recall` row on every pass. */
   private[graft] val IvfRecallTarget = 0.9
 
-  /** Returns the shared-index handle (partitioned-index path, centroids,
-    * chosen (k, nprobe)). The index write is the one corpus-sized
-    * materialization, and it goes to DISK as the partitioned table — the
-    * cluster-persistent layout — not through the driver. */
-  private[graft] def sharedIvfIndex(s: SparkSession, dir: String): SharedIvf = {
-    val fp = embFingerprint(dir)
-    val built = ivfBuildCache.compute(dir, (_, cached) =>
-      if (cached != null && cached.fingerprint == fp) cached
-      else {
-        // a superseded index dir is NOT deleted eagerly: compute()
-        // serializes builders, not consumers — a concurrent probe may be
-        // mid-scan on the old path, and deleting under it would kill
-        // that job. The old tmpRoot stays on disk until process exit
-        // (forceDeleteOnExit below), bounded by the regeneration count.
-        val emb = T(s, dir, "embeddings")
-        // the count is one column-pruned metadata-cheap job; its result
-        // fixes the corpus-scaled k (and the calibration ladder's start)
-        val (k, npStart) = ivfSizing(emb.count())
-        // iters = 3: the converged-enough centroid set the recall row
-        // (`ivf_recall`) certifies — build cost is 3 jobs over the
-        // (cached) vectors, paid once per fixture dir and reported as
-        // the bench's `_ivf_build` infra line
-        val (assign, cents) = IvfIndex.build(emb, "vec_id", "embedding",
-          k = k, iters = 3)
-        try {
-          val tmpRoot = java.nio.file.Files.createTempDirectory("graft-ivfidx")
-          org.apache.commons.io.FileUtils.forceDeleteOnExit(tmpRoot.toFile)
-          val path = s"$tmpRoot/ivf"
-          IvfIndex.writePartitioned(emb, "vec_id", assign, path)
-          // RECALL-CALIBRATED operating point (the public autotune
-          // recipe, e.g. FAISS's recall-targeted parameter sweep): pick
-          // the smallest ladder nprobe whose MINIMUM recall@10 over the
-          // fixed probe vectors reaches the target, against the exact
-          // brute-force top-10. The entire measurement is ONE
-          // distributed job (`IvfIndex.calibrationTopK`): per-(query,
-          // cluster) top-10 tagged with the query's cluster rank, from
-          // which the driver evaluates every nprobe — including
-          // nprobe = k, which IS the exact answer — so calibration adds
-          // a single job to the build instead of one probe per ladder
-          // step (all amortized into the auditable `_ivf_build` infra
-          // line). It is what makes the declared probes' nprobe a
-          // measured quality statement instead of a guess; at corpus
-          // scale the calibration queries are a held-out sample, same
-          // shape.
-          val calib = Seq((1L, QueryVectors.q1), (2L, QueryVectors.q2))
-          val centRows = cents.collect().toSeq
-          val centsSeq = centRows.map(r =>
-            (r.getInt(0), r.getSeq[Double](1).toIndexedSeq)).toIndexedSeq
-          // calibrate from the still-cached assignment relation (join on
-          // the persisted assign, not the freshly-written files): same
-          // rows as the table, minus k parquet-footer reads
-          val sweep = IvfIndex.calibrationTopKOf(
-            emb.join(assign, "vec_id"), "vec_id",
-            "embedding", centsSeq, calib, k = 10)
-          def topAt(qid: Long, np: Int): Set[Long] =
-            sweep.iterator.filter(t => t._1 == qid && t._2 < np).toSeq
-              .sortBy(t => (-t._4, t._3)).take(10).map(_._3).toSet
-          val exact = calib.map { case (qid, _) => qid -> topAt(qid, k) }.toMap
-          def minRecall(np: Int): Double = calib.map { case (qid, _) =>
-            (exact(qid) & topAt(qid, np)).size.toDouble / exact(qid).size
-          }.min
-          val ladder = Iterator.iterate(npStart)(np => math.min(k, np * 2))
-            .takeWhile(_ < k).toSeq :+ k
-          val nprobe = ladder.find(minRecall(_) >= IvfRecallTarget).getOrElse(k)
-          IvfBuilt(fp, path, centRows, cents.schema, k, nprobe)
-        } finally { assign.unpersist(); cents.unpersist() }
-      })
-    SharedIvf(built.indexPath,
-      s.createDataFrame(java.util.Arrays.asList(built.centRows: _*), built.centSchema),
-      built.k, built.nprobe)
+  /** The shared IVF index: `ivf_probe` and `ivf_probe_part` need
+    * (assignments, centroids) from the SAME k-means parameters, and a
+    * declared-set pass (Verify, a Bench round) runs both. The shared form
+    * is the AT-SCALE one: the indexed corpus written as a parquet table
+    * PARTITIONED BY cluster_id (`IvfIndex.writePartitioned`), so the
+    * driver holds only the k centroid rows and a path, never a
+    * corpus-sized collect. Probes read the table back: `ivf_probe_part`
+    * via partition pruning, `ivf_probe` via the semi-join shape over the
+    * same distributed relation. `k` and `nprobe` are the CORPUS-SCALED
+    * operating point the build chose; probes read the declared `nprobe`
+    * from here, so the `ivf_recall` row always certifies the point the
+    * declared probes run at. */
+  private[graft] final case class SharedIvf(
+      indexPath: String, centroids: LocalRows, k: Int, nprobe: Int)
+
+  private[graft] val sharedIvfIndex = memo("_ivf_build", "embeddings") { (s, dir) =>
+    val emb = T(s, dir, "embeddings")
+    // the count is one column-pruned metadata-cheap job; its result
+    // fixes the corpus-scaled k (and the calibration ladder's start)
+    val (k, npStart) = ivfSizing(emb.count())
+    // iters = 3: the converged-enough centroid set the recall row
+    // (`ivf_recall`) certifies — build cost is 3 jobs over the (cached)
+    // vectors, paid once per fixture dir
+    val (assign, cents) = IvfIndex.build(emb, "vec_id", "embedding",
+      k = k, iters = 3)
+    try {
+      val path = s"${artifactDir("graft-ivfidx")}/ivf"
+      IvfIndex.writePartitioned(emb, "vec_id", assign, path)
+      // RECALL-CALIBRATED operating point (the public autotune recipe,
+      // e.g. FAISS's recall-targeted parameter sweep): pick the smallest
+      // ladder nprobe whose MINIMUM recall@10 over the fixed probe vectors
+      // reaches the target, against the exact brute-force top-10. The
+      // entire measurement is ONE distributed job
+      // (`IvfIndex.calibrationTopK`): per-(query, cluster) top-10 tagged
+      // with the query's cluster rank, from which the driver evaluates
+      // every nprobe — including nprobe = k, which IS the exact answer —
+      // so calibration adds a single job to the build instead of one
+      // probe per ladder step. At corpus scale the calibration queries
+      // are a held-out sample, same shape.
+      val calib = Seq((1L, QueryVectors.q1), (2L, QueryVectors.q2))
+      val centRows = cents.collect().toSeq
+      val centsSeq = centRows.map(r =>
+        (r.getInt(0), r.getSeq[Double](1).toIndexedSeq)).toIndexedSeq
+      // calibrate from the still-cached assignment relation (join on the
+      // persisted assign, not the freshly-written files): same rows as
+      // the table, minus k parquet-footer reads
+      val sweep = IvfIndex.calibrationTopKOf(
+        emb.join(assign, "vec_id"), "vec_id",
+        "embedding", centsSeq, calib, k = 10)
+      def topAt(qid: Long, np: Int): Set[Long] =
+        sweep.iterator.filter(t => t._1 == qid && t._2 < np).toSeq
+          .sortBy(t => (-t._4, t._3)).take(10).map(_._3).toSet
+      val exact = calib.map { case (qid, _) => qid -> topAt(qid, k) }.toMap
+      def minRecall(np: Int): Double = calib.map { case (qid, _) =>
+        (exact(qid) & topAt(qid, np)).size.toDouble / exact(qid).size
+      }.min
+      val ladder = Iterator.iterate(npStart)(np => math.min(k, np * 2))
+        .takeWhile(_ < k).toSeq :+ k
+      val nprobe = ladder.find(minRecall(_) >= IvfRecallTarget).getOrElse(k)
+      SharedIvf(path, LocalRows(centRows, cents.schema), k, nprobe)
+    } finally { assign.unpersist(); cents.unpersist() }
   }
-
-  /** Shared PQ handle: the encoded-codes table's path, the trained
-    * codebooks (m·ks·d driver-side doubles — tiny), and the CALIBRATED
-    * re-rank depth the declared PQ rows run at. */
-  private[graft] final case class SharedPq(
-      fingerprint: String, codesPath: String,
-      codebooks: PqIndex.Codebooks, m: Int, ks: Int, rerank: Int)
-
-  private[graft] val pqBuildCache =
-    new java.util.concurrent.ConcurrentHashMap[String, SharedPq]()
 
   /** Recall target the declared PQ operating point must meet — certified
     * live by the `pq_recall` row, same contract as [[IvfRecallTarget]]. */
@@ -1427,189 +1279,132 @@ object Queries
     * k-bounded-small no matter what the recall sweep would prefer. */
   private[graft] val PqMaxRerank = 512
 
-  /** One shared PQ build per fixture dir: train codebooks (m=8 subspaces
-    * × ks=16 cells over the 64-dim fixture — 8-byte codes, 32×
-    * compression; the classic 256-cell/8-bit variant needs unsigned
-    * bytes, PqIndex scaladoc), encode the corpus to a parquet codes
-    * table (disk, never the driver — the sharedIvfIndex discipline), and
-    * CALIBRATE the re-rank depth: the smallest ladder `r` whose minimum
-    * recall@10 over the fixture query vectors meets [[PqRecallTarget]],
-    * evaluated driver-side from ONE bounded ADC ordering per query.
-    * (Correctness of that evaluation: `searchRerank(k, r)` keeps the
-    * exact-scored top-k of the ADC top-r, and any exact-top-10 member
-    * inside the ADC top-r is beaten by < 10 rows there, so
-    * recall(r) = |exact10 ∩ adcTop(r)| / 10 — no per-ladder-step jobs.)
-    * Near-uniform random fixture embeddings are PQ's worst case (no
-    * cluster structure to compress), so the calibrated `r` lands deeper
-    * than it would on real embeddings — the honest operating point,
-    * same reasoning as the IVF nprobe calibration. */
-  private[graft] def sharedPqIndex(s: SparkSession, dir: String): SharedPq = {
-    val fp = embFingerprint(dir)
-    val built = pqBuildCache.compute(dir, (_, cached) =>
-      if (cached != null && cached.fingerprint == fp) cached
-      else {
-        val emb = T(s, dir, "embeddings")
-        val m = 8
-        val ks = 16
-        val cb = PqIndex.trainCodebooks(emb, "vec_id", "embedding",
-          m = m, ks = ks, iters = 2)
-        // superseded dirs are not deleted eagerly — compute() serializes
-        // builders, not consumers mid-scan (the sharedIvfIndex rule)
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-pqidx")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(tmpRoot.toFile)
-        val path = s"$tmpRoot/codes"
-        PqIndex.encode(emb, "vec_id", "embedding", cb)
-          .write.mode("overwrite").parquet(path)
-        val enc = s.read.parquet(path)
-        val calib = Seq((1L, QueryVectors.q1), (2L, QueryVectors.q2))
-        val rMax = math.min(emb.count(), PqMaxRerank.toLong).toInt
-        def adcTop(q: Seq[Double]): IndexedSeq[Long] = enc
-          .select(col("vec_id"),
-            round(PqIndex.adcScore(col("codes"), q, cb), 4).as("sim"))
-          .orderBy(desc("sim"), asc("vec_id")).limit(rMax)
-          .collect().map(_.getLong(0)).toIndexedSeq
-        val measured = calib.map { case (_, q) =>
-          val exact = Search.topK(emb, "embedding", "vec_id", q, k = 10)
-            .select(col("vec_id")).collect().map(_.getLong(0)).toSet
-          (adcTop(q), exact)
-        }
-        def minRecall(r: Int): Double = measured.map { case (adc, exact) =>
-          (adc.take(r).toSet & exact).size.toDouble / exact.size
-        }.min
-        val ladder = Iterator.iterate(10)(_ * 2).takeWhile(_ < rMax)
-          .toSeq :+ rMax
-        val rerank = ladder.find(minRecall(_) >= PqRecallTarget)
-          .getOrElse(rMax)
-        SharedPq(fp, path, cb, m, ks, rerank)
-      })
-    built
+  /** The calibrated re-rank depth of a compressed index: the smallest
+    * ladder depth r (10, 20, 40, …, rMax) whose MINIMUM recall@10 over
+    * the fixture query vectors meets [[PqRecallTarget]]. `ordering(q,
+    * rMax)` is the index's top-rMax candidate ids for query q, best
+    * first. One bounded ordering per query evaluates every r, because
+    * `searchRerank(k, r)` keeps the exact-scored top-k of the ordering's
+    * top r, and an exact top-10 member inside that top r is beaten by
+    * fewer than 10 rows there: recall(r) = |exact10 ∩ top(r)| / 10, with
+    * no per-ladder-step jobs. */
+  private def calibratedRerank(emb: DataFrame)(
+      ordering: (Seq[Double], Int) => IndexedSeq[Long]): Int = {
+    val rMax = math.min(emb.count(), PqMaxRerank.toLong).toInt
+    val measured = Seq(QueryVectors.q1, QueryVectors.q2).map { q =>
+      val exact = Search.topK(emb, "embedding", "vec_id", q, k = 10)
+        .select(col("vec_id")).collect().map(_.getLong(0)).toSet
+      (ordering(q, rMax), exact)
+    }
+    def minRecall(r: Int): Double = measured.map { case (top, exact) =>
+      (top.take(r).toSet & exact).size.toDouble / exact.size
+    }.min
+    val ladder = Iterator.iterate(10)(_ * 2).takeWhile(_ < rMax).toSeq :+ rMax
+    ladder.find(minRecall(_) >= PqRecallTarget).getOrElse(rMax)
+  }
+
+  /** Shared PQ handle: the encoded-codes table's path, the trained
+    * codebooks (m·ks·d driver-side doubles — tiny), and the CALIBRATED
+    * re-rank depth the declared PQ rows run at. */
+  private[graft] final case class SharedPq(
+      codesPath: String, codebooks: PqIndex.Codebooks, m: Int, ks: Int,
+      rerank: Int)
+
+  /** The shared PQ build: train codebooks (m=8 subspaces × ks=16 cells
+    * over the 64-dim fixture — 8-byte codes, 32× compression; the classic
+    * 256-cell/8-bit variant needs unsigned bytes, PqIndex scaladoc),
+    * encode the corpus to a parquet codes table (disk, never the driver),
+    * and calibrate the re-rank depth on the ADC ordering
+    * ([[calibratedRerank]]). Near-uniform random fixture embeddings are
+    * PQ's worst case (no cluster structure to compress), so the
+    * calibrated depth lands deeper than it would on real embeddings — the
+    * honest operating point, same reasoning as the IVF nprobe
+    * calibration. */
+  private[graft] val sharedPqIndex = memo("_pq_build", "embeddings") { (s, dir) =>
+    val emb = T(s, dir, "embeddings")
+    val m = 8
+    val ks = 16
+    val cb = PqIndex.trainCodebooks(emb, "vec_id", "embedding",
+      m = m, ks = ks, iters = 2)
+    val path = s"${artifactDir("graft-pqidx")}/codes"
+    PqIndex.encode(emb, "vec_id", "embedding", cb)
+      .write.mode("overwrite").parquet(path)
+    val enc = s.read.parquet(path)
+    SharedPq(path, cb, m, ks, calibratedRerank(emb) { (q, rMax) =>
+      enc.select(col("vec_id"),
+          round(PqIndex.adcScore(col("codes"), q, cb), 4).as("sim"))
+        .orderBy(desc("sim"), asc("vec_id")).limit(rMax)
+        .collect().map(_.getLong(0)).toIndexedSeq
+    })
   }
 
   /** Shared SQ8 handle: the scalar-quantized codes table's path, the
     * per-dimension grid (2·d driver-side doubles), and the calibrated
     * re-rank depth the declared SQ rows run at. */
   private[graft] final case class SharedSq(
-      fingerprint: String, codesPath: String,
-      params: SqIndex.SqParams, rerank: Int)
+      codesPath: String, params: SqIndex.SqParams, rerank: Int)
 
-  private[graft] val sqBuildCache =
-    new java.util.concurrent.ConcurrentHashMap[String, SharedSq]()
-
-  /** One shared SQ8 build per fixture dir — the LOW-LOSS end of the
-    * compression dial (4× vs PQ's 32×): train the per-dimension grid
-    * (ONE partial-aggregated exchange), encode the corpus to a parquet
-    * codes table, and calibrate the re-rank depth exactly like
-    * [[sharedPqIndex]] — the smallest ladder `r` whose minimum recall@10
-    * over the fixture query vectors meets [[PqRecallTarget]], evaluated
-    * from ONE bounded quantized ordering per query (the same
-    * bounded-candidates argument: `searchRerank(k, r)` keeps the
-    * exact-scored top-k of the quantized top-r, so
-    * recall(r) = |exact10 ∩ sqTop(r)| / 10). With 127 levels per
-    * dimension the quantized ordering is nearly exact, so the calibrated
-    * depth should land at or near the ladder floor — the measured
-    * contrast with PQ's deeper calibrated depth IS the dial evidence. */
-  private[graft] def sharedSqIndex(s: SparkSession, dir: String): SharedSq = {
-    val fp = embFingerprint(dir)
-    val built = sqBuildCache.compute(dir, (_, cached) =>
-      if (cached != null && cached.fingerprint == fp) cached
-      else {
-        val emb = T(s, dir, "embeddings")
-        val p = SqIndex.trainParams(emb, "vec_id", "embedding")
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-sqidx")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(tmpRoot.toFile)
-        val path = s"$tmpRoot/codes"
-        SqIndex.encode(emb, "vec_id", "embedding", p)
-          .write.mode("overwrite").parquet(path)
-        val enc = s.read.parquet(path)
-        val calib = Seq((1L, QueryVectors.q1), (2L, QueryVectors.q2))
-        val rMax = math.min(emb.count(), PqMaxRerank.toLong).toInt
-        def sqTop(q: Seq[Double]): IndexedSeq[Long] = enc
-          .select(col("vec_id"),
-            round(SqIndex.sqScore(col("codes"), q, p), 4).as("sim"))
-          .orderBy(desc("sim"), asc("vec_id")).limit(rMax)
-          .collect().map(_.getLong(0)).toIndexedSeq
-        val measured = calib.map { case (_, q) =>
-          val exact = Search.topK(emb, "embedding", "vec_id", q, k = 10)
-            .select(col("vec_id")).collect().map(_.getLong(0)).toSet
-          (sqTop(q), exact)
-        }
-        def minRecall(r: Int): Double = measured.map { case (sq, exact) =>
-          (sq.take(r).toSet & exact).size.toDouble / exact.size
-        }.min
-        val ladder = Iterator.iterate(10)(_ * 2).takeWhile(_ < rMax)
-          .toSeq :+ rMax
-        val rerank = ladder.find(minRecall(_) >= PqRecallTarget)
-          .getOrElse(rMax)
-        SharedSq(fp, path, p, rerank)
-      })
-    built
+  /** The shared SQ8 build — the LOW-LOSS end of the compression dial (4×
+    * vs PQ's 32×): train the per-dimension grid (ONE partial-aggregated
+    * exchange), encode the corpus to a parquet codes table, and calibrate
+    * the re-rank depth on the quantized ordering exactly like
+    * [[sharedPqIndex]]. With 127 levels per dimension the quantized
+    * ordering is nearly exact, so the calibrated depth should land at or
+    * near the ladder floor — the measured contrast with PQ's deeper
+    * calibrated depth IS the dial evidence. */
+  private[graft] val sharedSqIndex = memo("_sq_build", "embeddings") { (s, dir) =>
+    val emb = T(s, dir, "embeddings")
+    val p = SqIndex.trainParams(emb, "vec_id", "embedding")
+    val path = s"${artifactDir("graft-sqidx")}/codes"
+    SqIndex.encode(emb, "vec_id", "embedding", p)
+      .write.mode("overwrite").parquet(path)
+    val enc = s.read.parquet(path)
+    SharedSq(path, p, calibratedRerank(emb) { (q, rMax) =>
+      enc.select(col("vec_id"),
+          round(SqIndex.sqScore(col("codes"), q, p), 4).as("sim"))
+        .orderBy(desc("sim"), asc("vec_id")).limit(rMax)
+        .collect().map(_.getLong(0)).toIndexedSeq
+    })
   }
 
   /** Shared residual IVF-PQ handle: the cluster-partitioned residual-
     * codes table, the residual codebooks, and the calibrated
     * (nprobe, rerank) operating point. */
   private[graft] final case class SharedIvfPq(
-      fingerprint: String, codesPath: String,
-      codebooks: PqIndex.Codebooks, nprobe: Int, rerank: Int)
+      codesPath: String, codebooks: PqIndex.Codebooks, nprobe: Int,
+      rerank: Int)
 
-  private[graft] val ivfPqBuildCache =
-    new java.util.concurrent.ConcurrentHashMap[String, SharedIvfPq]()
-
-  /** One shared residual IVF-PQ build per fixture dir — the COMPOSED
-    * index (partition pruning × compressed scan): reuses the shared IVF
-    * build's cells (assignments read back from its partitioned table —
-    * no second k-means), trains the residual codebooks on vec − centroid,
-    * and writes the codes table partitioned by cluster_id. The re-rank
-    * depth is calibrated exactly like [[sharedPqIndex]], but the ADC
-    * ordering is restricted to the shared IVF nprobe's clusters — so the
-    * certified recall already prices in BOTH approximations (cells
-    * skipped by the probe AND residual quantization error). */
-  private[graft] def sharedIvfPqIndex(s: SparkSession, dir: String): SharedIvfPq = {
-    val fp = embFingerprint(dir)
-    val built = ivfPqBuildCache.compute(dir, (_, cached) =>
-      if (cached != null && cached.fingerprint == fp) cached
-      else {
-        val ivf = sharedIvfIndex(s, dir)
-        val emb = T(s, dir, "embeddings")
-        val assign = s.read.parquet(ivf.indexPath)
-          .select(col("vec_id"), col("cluster_id"))
-        val res = PqIndex.residuals(emb, "vec_id", "embedding",
-          assign, ivf.centroids).select(col("vec_id"), col("res"))
-        val cb = PqIndex.trainCodebooks(res, "vec_id", "res",
-          m = 8, ks = 16, iters = 2)
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-ivfpq")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(tmpRoot.toFile)
-        val path = s"$tmpRoot/codes"
-        PqIndex.encodeResidual(emb, "vec_id", "embedding", assign,
-            ivf.centroids, cb)
-          .repartition(col("cluster_id"))
-          .write.partitionBy("cluster_id").mode("overwrite").parquet(path)
-        // calibration: ADC ordering RESTRICTED to the probed clusters
-        // (one bounded probe per query at r = rMax evaluates every
-        // smaller r — same bounded-candidates argument as sharedPqIndex)
-        val calib = Seq((1L, QueryVectors.q1), (2L, QueryVectors.q2))
-        val rMax = math.min(emb.count(), PqMaxRerank.toLong).toInt
-        val measured = calib.map { case (_, q) =>
-          val adc = PqIndex.probeIvfPq(s, path, "vec_id", ivf.centroids,
-              q, cb, k = rMax, nprobe = ivf.nprobe)
-            .select(col("vec_id")).collect().map(_.getLong(0)).toIndexedSeq
-          val exact = Search.topK(emb, "embedding", "vec_id", q, k = 10)
-            .select(col("vec_id")).collect().map(_.getLong(0)).toSet
-          (adc, exact)
-        }
-        def minRecall(r: Int): Double = measured.map { case (adc, exact) =>
-          (adc.take(r).toSet & exact).size.toDouble / exact.size
-        }.min
-        val ladder = Iterator.iterate(10)(_ * 2).takeWhile(_ < rMax)
-          .toSeq :+ rMax
-        val rerank = ladder.find(minRecall(_) >= PqRecallTarget)
-          .getOrElse(rMax)
-        SharedIvfPq(fp, path, cb, ivf.nprobe, rerank)
-      })
-    built
+  /** The shared residual IVF-PQ build — the COMPOSED index (partition
+    * pruning × compressed scan): reuses the shared IVF build's cells
+    * (assignments read back from its partitioned table — no second
+    * k-means), trains the residual codebooks on vec − centroid, and
+    * writes the codes table partitioned by cluster_id. The re-rank depth
+    * is calibrated like [[sharedPqIndex]], but on the ADC ordering
+    * restricted to the shared IVF nprobe's clusters — so the certified
+    * recall prices in BOTH approximations (cells skipped by the probe AND
+    * residual quantization error). */
+  private[graft] val sharedIvfPqIndex = memo("_ivfpq_build", "embeddings") { (s, dir) =>
+    val ivf = sharedIvfIndex.get(s, dir)
+    val cents = ivf.centroids.frame(s)
+    val emb = T(s, dir, "embeddings")
+    val assign = s.read.parquet(ivf.indexPath)
+      .select(col("vec_id"), col("cluster_id"))
+    val res = PqIndex.residuals(emb, "vec_id", "embedding",
+      assign, cents).select(col("vec_id"), col("res"))
+    val cb = PqIndex.trainCodebooks(res, "vec_id", "res",
+      m = 8, ks = 16, iters = 2)
+    val path = s"${artifactDir("graft-ivfpq")}/codes"
+    PqIndex.encodeResidual(emb, "vec_id", "embedding", assign, cents, cb)
+      .repartition(col("cluster_id"))
+      .write.partitionBy("cluster_id").mode("overwrite").parquet(path)
+    SharedIvfPq(path, cb, ivf.nprobe, calibratedRerank(emb) { (q, rMax) =>
+      PqIndex.probeIvfPq(s, path, "vec_id", cents, q, cb, k = rMax,
+          nprobe = ivf.nprobe)
+        .select(col("vec_id")).collect().map(_.getLong(0)).toIndexedSeq
+    })
   }
 
-  // ----- fixed-seed (deterministic-init) artifact memos ------------------
+  // ----- fixed-seed (deterministic-init) artifacts ------------------------
   //
   // The `_fixed` hash-gate rows (pq_topk_fixed, ivfpq_topk_fixed,
   // ivf_probe_many_fixed) used to re-run the REAL encode of their corpus
@@ -1620,440 +1415,345 @@ object Queries
   // discipline as the calibrated shared indexes: the fixed-seed artifact
   // is a PURE FUNCTION of the fixture (centroids/codebooks are the
   // smallest-id vectors' (sub)vectors — no float iteration, no RNG), so
-  // it is built ONCE per dir, priced as its own auditable infra line
-  // (`_ivff_build`, `_pqf_encode`, `_ivfpqf_build` in Bench), and every
-  // rep measures the deployed consumption path — partition-pruned probe,
-  // ADC scan, bounded re-rank. Fingerprint-guarded and cleared by
-  // [[clearSharedBuildCaches]] like every memo; correctness is untouched
-  // (Verify runs each row once, and the artifact bytes are identical to
-  // the per-invocation build the rows ran before).
+  // it is one memo, and every rep measures the deployed consumption path —
+  // partition-pruned probe, ADC scan, bounded re-rank. Correctness is
+  // untouched (Verify runs each row once, and the artifact bytes are
+  // identical to the per-invocation build the rows ran before).
 
-  private[graft] final case class FixedIvfBuilt(
-      fingerprint: String, indexPath: String,
-      centRows: Seq[org.apache.spark.sql.Row],
-      centSchema: org.apache.spark.sql.types.StructType)
+  /** Fixed-centroid partitioned index: ivf_assign's seed rule (the 8
+    * smallest-id vectors are the centroids), written cluster-partitioned —
+    * the deployed layout ivf_probe_many_fixed's reps probe. */
+  private[graft] final case class FixedIvf(indexPath: String, centroids: LocalRows)
 
-  private[graft] val fixedIvfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, FixedIvfBuilt]()
-
-  /** Fixed-centroid partitioned index (ivf_assign's seed rule: the 8
-    * smallest-id vectors), written cluster-partitioned — the deployed
-    * layout ivf_probe_many_fixed's reps probe. Returns (path, centroids). */
-  private[graft] def sharedFixedIvf(s: SparkSession, dir: String): (String, DataFrame) = {
-    val fp = embFingerprint(dir)
-    val built = fixedIvfCache.compute(dir, (_, cached) =>
-      if (cached != null && cached.fingerprint == fp) cached
-      else {
-        import s.implicits._
-        val emb = T(s, dir, "embeddings")
-        val seeds = emb.orderBy("vec_id").limit(8)
-          .select(transform(col("embedding"), _.cast("double")).as("c"))
-          .collect().toIndexedSeq.zipWithIndex
-          .map { case (r, i) => (i, r.getSeq[Double](0)) }
-        val cents = seeds.toDF("cluster_id", "centroid")
-        val assign = IvfIndex.assignTo(emb, "vec_id", "embedding", cents)
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-ivff")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(tmpRoot.toFile)
-        val path = s"$tmpRoot/ivf"
-        IvfIndex.writePartitioned(emb, "vec_id", assign, path)
-        FixedIvfBuilt(fp, path, cents.collect().toSeq, cents.schema)
-      })
-    (built.indexPath, s.createDataFrame(
-      java.util.Arrays.asList(built.centRows: _*), built.centSchema))
+  private[graft] val sharedFixedIvf = memo("_ivff_build", "embeddings") { (s, dir) =>
+    import s.implicits._
+    val emb = T(s, dir, "embeddings")
+    val seeds = emb.orderBy("vec_id").limit(8)
+      .select(transform(col("embedding"), _.cast("double")).as("c"))
+      .collect().toIndexedSeq.zipWithIndex
+      .map { case (r, i) => (i, r.getSeq[Double](0)) }
+    val cents = seeds.toDF("cluster_id", "centroid")
+    val assign = IvfIndex.assignTo(emb, "vec_id", "embedding", cents)
+    val path = s"${artifactDir("graft-ivff")}/ivf"
+    IvfIndex.writePartitioned(emb, "vec_id", assign, path)
+    FixedIvf(path, LocalRows.of(cents))
   }
-
-  private[graft] final case class FixedPqBuilt(
-      fingerprint: String, codesPath: String, codebooks: PqIndex.Codebooks)
-
-  private[graft] val fixedPqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, FixedPqBuilt]()
 
   /** Fixed-codebook PQ codes over the vec_id % 8 = 0 slice (the 16
     * smallest-id vectors' subvectors as codebooks — trainCodebooks'
     * deterministic init), encoded once to a parquet codes table. */
-  private[graft] def sharedFixedPq(s: SparkSession, dir: String): FixedPqBuilt = {
-    val fp = embFingerprint(dir)
-    fixedPqCache.compute(dir, (_, cached) =>
-      if (cached != null && cached.fingerprint == fp) cached
-      else {
-        val emb = T(s, dir, "embeddings").filter(col("vec_id") % 8 === 0)
-        val seeds = emb.orderBy("vec_id").limit(16)
-          .select(transform(col("embedding"), _.cast("double")).as("v"))
-          .collect().map(_.getSeq[Double](0).toIndexedSeq).toIndexedSeq
-        val cb: PqIndex.Codebooks = IndexedSeq.tabulate(8) { mi =>
-          seeds.zipWithIndex.map { case (v, c) =>
-            (c, v.slice(mi * 8, mi * 8 + 8)) }
-        }
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-pqf")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(tmpRoot.toFile)
-        val path = s"$tmpRoot/codes"
-        PqIndex.encode(emb, "vec_id", "embedding", cb)
-          .write.mode("overwrite").parquet(path)
-        FixedPqBuilt(fp, path, cb)
-      })
+  private[graft] final case class FixedPq(codesPath: String,
+                                          codebooks: PqIndex.Codebooks)
+
+  private[graft] val sharedFixedPq = memo("_pqf_encode", "embeddings") { (s, dir) =>
+    val emb = T(s, dir, "embeddings").filter(col("vec_id") % 8 === 0)
+    val seeds = emb.orderBy("vec_id").limit(16)
+      .select(transform(col("embedding"), _.cast("double")).as("v"))
+      .collect().map(_.getSeq[Double](0).toIndexedSeq).toIndexedSeq
+    val cb: PqIndex.Codebooks = IndexedSeq.tabulate(8) { mi =>
+      seeds.zipWithIndex.map { case (v, c) =>
+        (c, v.slice(mi * 8, mi * 8 + 8)) }
+    }
+    val path = s"${artifactDir("graft-pqf")}/codes"
+    PqIndex.encode(emb, "vec_id", "embedding", cb)
+      .write.mode("overwrite").parquet(path)
+    FixedPq(path, cb)
   }
 
-  private[graft] final case class FixedIvfPqBuilt(
-      fingerprint: String, codesPath: String,
-      centRows: Seq[org.apache.spark.sql.Row],
-      centSchema: org.apache.spark.sql.types.StructType,
-      codebooks: PqIndex.Codebooks)
+  /** Fixed residual IVF-PQ artifact: the fixed IVF's seed centroids
+    * (read from [[sharedFixedIvf]], as [[sharedIvfPqIndex]] reads the
+    * shared IVF) × fixed residual codebooks (the 16 smallest-id
+    * residuals' subvectors), codes written cluster-partitioned. */
+  private[graft] final case class FixedIvfPq(codesPath: String,
+      centroids: LocalRows, codebooks: PqIndex.Codebooks)
 
-  private[graft] val fixedIvfPqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, FixedIvfPqBuilt]()
-
-  /** Fixed residual IVF-PQ artifact: seed centroids (8 smallest-id
-    * vectors) × fixed residual codebooks (16 smallest-id residuals'
-    * subvectors), codes written cluster-partitioned. Returns
-    * (codesPath, centroids, codebooks). */
-  private[graft] def sharedFixedIvfPq(s: SparkSession, dir: String)
-      : (String, DataFrame, PqIndex.Codebooks) = {
-    val fp = embFingerprint(dir)
-    val built = fixedIvfPqCache.compute(dir, (_, cached) =>
-      if (cached != null && cached.fingerprint == fp) cached
-      else {
-        import s.implicits._
-        val emb = T(s, dir, "embeddings")
-        val seeds = emb.orderBy("vec_id").limit(8)
-          .select(transform(col("embedding"), _.cast("double")).as("c"))
-          .collect().toIndexedSeq.zipWithIndex
-          .map { case (r, i) => (i, r.getSeq[Double](0)) }
-        val cents = seeds.toDF("cluster_id", "centroid")
-        val assign = IvfIndex.assignTo(emb, "vec_id", "embedding", cents)
-        val res = PqIndex.residuals(emb, "vec_id", "embedding", assign, cents)
-        val rseeds = res.orderBy("vec_id").limit(16).select("res")
-          .collect().map(_.getSeq[Double](0).toIndexedSeq).toIndexedSeq
-        val cb: PqIndex.Codebooks = IndexedSeq.tabulate(8) { mi =>
-          rseeds.zipWithIndex.map { case (v, c) =>
-            (c, v.slice(mi * 8, mi * 8 + 8)) }
-        }
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-ivfpqf")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(tmpRoot.toFile)
-        val path = s"$tmpRoot/codes"
-        PqIndex.encodeResidual(emb, "vec_id", "embedding", assign, cents, cb)
-          .repartition(col("cluster_id"))
-          .write.partitionBy("cluster_id").mode("overwrite").parquet(path)
-        FixedIvfPqBuilt(fp, path, cents.collect().toSeq, cents.schema, cb)
-      })
-    (built.codesPath, s.createDataFrame(
-      java.util.Arrays.asList(built.centRows: _*), built.centSchema),
-      built.codebooks)
-  }
-
-  private[graft] final case class ForgetFixtureBuilt(
-      fingerprint: String, root: String,
-      centRows: Seq[org.apache.spark.sql.Row],
-      centSchema: org.apache.spark.sql.types.StructType)
-
-  private[graft] val forgetFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ForgetFixtureBuilt]()
-
-  private[graft] final case class TextIndexBuilt(fingerprint: String,
-                                                 root: String)
-
-  private[graft] val textIndexFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, TextIndexBuilt]()
-
-  /** The half-corpus text index `q_store_textindex` appends to and
-    * queries — built ONCE per fixture dir (the `_textindex_build` infra
-    * line, same build-vs-mutate split as `forgetFixtureCopy`: a
-    * deployment builds its inverted index once and every ingestion
-    * batch appends to the standing artifact), then file-copied per
-    * invocation so the row's append can mutate freely. Returns the
-    * work-copy root; callers delete its PARENT when done. */
-  private[graft] def textIndexFixtureCopy(s: SparkSession,
-                                          dir: String): String = {
-    val fp = Tables.fixtureFingerprint(dir, "documents")
-    val built = textIndexFixtureCache.compute(dir, (_, cached) =>
-      if (cached != null && cached.fingerprint == fp) cached
-      else {
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-tixfx")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(tmpRoot.toFile)
-        val docs = T(s, dir, "documents").select(col("doc_id"), col("text"))
-        graft.operators.TextIndex.build(docs.filter(col("doc_id") % 2 === 0),
-          "doc_id", "text", s"$tmpRoot/index", shards = 32)
-        TextIndexBuilt(fp, tmpRoot.toString)
-      })
-    val work = java.nio.file.Files.createTempDirectory("graft-tix-work")
-    org.apache.commons.io.FileUtils.copyDirectory(
-      new java.io.File(built.root), new java.io.File(s"$work/f"))
-    s"$work/f"
+  private[graft] val sharedFixedIvfPq = memo("_ivfpqf_build", "embeddings") { (s, dir) =>
+    val fixed = sharedFixedIvf.get(s, dir)
+    val cents = fixed.centroids.frame(s)
+    val emb = T(s, dir, "embeddings")
+    val assign = IvfIndex.assignTo(emb, "vec_id", "embedding", cents)
+    val res = PqIndex.residuals(emb, "vec_id", "embedding", assign, cents)
+    val rseeds = res.orderBy("vec_id").limit(16).select("res")
+      .collect().map(_.getSeq[Double](0).toIndexedSeq).toIndexedSeq
+    val cb: PqIndex.Codebooks = IndexedSeq.tabulate(8) { mi =>
+      rseeds.zipWithIndex.map { case (v, c) =>
+        (c, v.slice(mi * 8, mi * 8 + 8)) }
+    }
+    val path = s"${artifactDir("graft-ivfpqf")}/codes"
+    PqIndex.encodeResidual(emb, "vec_id", "embedding", assign, cents, cb)
+      .repartition(col("cluster_id"))
+      .write.partitionBy("cluster_id").mode("overwrite").parquet(path)
+    FixedIvfPq(path, fixed.centroids, cb)
   }
 
   /** The three-store fixture `q_forget_e2e` mutates — corpus store +
-    * inverted text index + partitioned vector index — built ONCE per dir
-    * and FILE-COPIED to a fresh work dir per invocation (the
-    * [[day1SliceCopy]] discipline: what the row certifies is the FORGET
-    * composition and the post-forget searches, not the repeated
-    * construction of yesterday's stores, which at scale already exist).
-    * Every store path inside a root is relative (`gen=N`, shard files,
-    * cluster partitions), so a directory copy is a faithful store. The
-    * centroids ride in the memo; the declared probe runs nprobe = k
-    * (every cell), so the float-iterated centroid VALUES cannot affect
-    * the result — the oracle stays byte-exact. Caller must delete the
-    * returned work root. Build is priced as the `_forget_fixture_build`
-    * infra line; fingerprint covers both source tables. */
-  private[graft] def forgetFixtureCopy(s: SparkSession, dir: String)
-      : (String, DataFrame) = {
-    val fp = Tables.fixtureFingerprint(dir, "documents") + "|" +
-      embFingerprint(dir)
-    val built = forgetFixtureCache.compute(dir, (_, cached) =>
-      if (cached != null && cached.fingerprint == fp) cached
-      else {
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-forgetfx")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(tmpRoot.toFile)
-        val corpusRoot = s"$tmpRoot/corpus"
-        val tix = s"$tmpRoot/tix"
-        val vix = s"$tmpRoot/vix"
-        val docs = T(s, dir, "documents")
-          .select(col("doc_id"), col("text"), col("lang"))
-        val emb = T(s, dir, "embeddings")
-        VersionedCorpus.append(docs, corpusRoot)
-        VersionedCorpus.pinKey(corpusRoot, "doc_id")
-        graft.operators.TextIndex.build(docs, "doc_id", "text", tix,
-          shards = 16)
-        val (assign, cents) = IvfIndex.build(emb, "vec_id", "embedding",
-          k = 8, iters = 2)
-        try {
-          IvfIndex.writePartitioned(emb, "vec_id", assign, vix)
-          ForgetFixtureBuilt(fp, tmpRoot.toString,
-            cents.collect().toSeq, cents.schema)
-        } finally { assign.unpersist(); cents.unpersist() }
-      })
-    val work = java.nio.file.Files.createTempDirectory("graft-forget-work")
-    org.apache.commons.io.FileUtils.copyDirectory(
-      new java.io.File(built.root), new java.io.File(s"$work/f"))
-    (s"$work/f", s.createDataFrame(
-      java.util.Arrays.asList(built.centRows: _*), built.centSchema))
-  }
+    * inverted text index + partitioned vector index under `root` — which
+    * the row receives as a work copy ([[withWorkCopy]]): what it
+    * certifies is the FORGET composition and the post-forget searches,
+    * not the repeated construction of yesterday's stores, which at scale
+    * already exist. The declared probe runs nprobe = k (every cell), so
+    * the float-iterated centroid VALUES cannot affect the result — the
+    * oracle stays byte-exact. */
+  private[graft] final case class ForgetFixture(root: String, centroids: LocalRows)
 
-  /** Generic source/sink round-trip through `fmt` (B32): write a typed
-    * lineitem slice (long, decimal, date, string columns), read it back
-    * with the writer's schema, aggregate. The oracle computes the same
-    * aggregate straight from parquet, so any type/precision loss in the
-    * sink→source cycle breaks the hash match. Same eager-materialize +
-    * temp-dir-per-invocation discipline as `q_csv_roundtrip`. */
-  private[graft] def formatRoundTrip(s: SparkSession, dir: String,
-                              fmt: String): DataFrame = {
-    val tmpRoot = java.nio.file.Files.createTempDirectory(s"graft-${fmt}rt")
-    try {
-      val tmp = s"$tmpRoot/slice"
-      val src = T(s, dir, "lineitem").filter(col("l_orderkey") < 100)
-        .select(col("l_orderkey"), col("l_quantity"), col("l_shipdate"),
-          col("l_returnflag"))
-      src.write.format(fmt).mode("overwrite").save(tmp)
-      // explicit schema on re-read: JSON lines are schemaless text, so this
-      // is what pins decimal/date types through the text cycle
-      val back = s.read.format(fmt).schema(src.schema).load(tmp)
-      localFrame(back.agg(count(lit(1)).as("n"),
-        r4(dbl(decSum(col("l_quantity")))).as("sum_qty"),
-        max(col("l_shipdate")).as("max_ship"),
-        countDistinct(col("l_returnflag")).as("n_flags")))
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot.toFile)
-  }
-
-  private[graft] val formatRoundTripOracle: String =
-    """SELECT count(*) AS n,
-      |  round(CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE), 4) AS sum_qty,
-      |  max(l_shipdate) AS max_ship,
-      |  CAST(count(DISTINCT l_returnflag) AS BIGINT) AS n_flags
-      |FROM lineitem WHERE l_orderkey < 100""".stripMargin
-
-  /** Per-dir memo of the EXACT ≥ 0.8 Jaccard pair set over the full
-    * documents table, computed subquadratically by
-    * [[NearDup.prefixJaccardJoin]] — the ground-truth artifact the
-    * recall instruments compare candidate tiers against. Corpus-version
-    * keyed like every memo; pair count is dup-family-sized (hundreds on
-    * the fixtures), so the rows are driver-bounded LocalRelation
-    * material. Built once per set pass as the `_exact_pairs_build`
-    * infra line; the LIVE algorithm stays benchmarked per-rep by the
-    * `exact_jaccard_join` row. */
-  private[graft] val exactPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (String, Seq[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType)]()
-
-  private[graft] def sharedExactPairs(s: SparkSession, dir: String): DataFrame = {
-    val fp = Tables.fixtureFingerprint(dir, "documents")
-    val built = exactPairsCache.compute(dir, (_, cached) =>
-      if (cached != null && cached._1 == fp) cached
-      else {
-        val pairs = NearDup.prefixJaccardJoin(T(s, dir, "documents"),
-          "doc_id", "text", minJaccard = 0.8)
-        (fp, pairs.collect().toSeq, pairs.schema)
-      })
-    s.createDataFrame(java.util.Arrays.asList(built._2: _*), built._3)
-  }
-
-  /** Per-dir memo of the BUCKETED join tables (`q_bucketed_join`):
-    * the layout is one-time infrastructure — a deployment writes its
-    * fact tables bucketed ONCE and every recurring join reads them —
-    * so the row prices the zero-exchange co-located read while the
-    * build is the `_bucketed_build` infra line (the same
-    * build-vs-consume split every index row uses; the r12 audit
-    * flagged the per-rep rebuild as 0.7-1.0 s vs a millisecond oracle
-    * that only replays the read). Table names are dir-keyed constants
-    * so a rebuild overwrites rather than leaks catalog entries. */
-  private[graft] val bucketedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
-
-  private[graft] def sharedBucketedTables(s: SparkSession, dir: String)
-      : (String, String) = {
-    val fp = Tables.fixtureFingerprint(dir, "lineitem") + "|" +
-      Tables.fixtureFingerprint(dir, "orders")
-    val built = bucketedCache.compute(dir, (_, cached) =>
-      if (cached != null && cached._1 == fp) cached
-      else {
-        val tag = java.lang.Integer.toHexString(dir.hashCode)
-        val lt = s"li_bkt_$tag"
-        val ot = s"ord_bkt_$tag"
-        s.sql(s"DROP TABLE IF EXISTS $lt")
-        s.sql(s"DROP TABLE IF EXISTS $ot")
-        // the warehouse location can outlive the in-memory catalog (a
-        // previous JVM's run left files the fresh catalog knows nothing
-        // about) — saveAsTable refuses a name whose location exists, so
-        // clear the orphaned dirs too
-        val wh = new java.net.URI(
-          s.sessionState.conf.warehousePath).getPath
-        Seq(lt, ot).foreach { t =>
-          val d = new java.io.File(wh, t)
-          if (d.exists())
-            org.apache.commons.io.FileUtils.deleteDirectory(d)
-        }
-        graft.sources.Bucketing.writeBucketed(
-          T(s, dir, "lineitem").filter(col("l_orderkey") < 2000)
-            .select(col("l_orderkey"), col("l_extendedprice")),
-          lt, "l_orderkey", buckets = 8)
-        graft.sources.Bucketing.writeBucketed(
-          T(s, dir, "orders").filter(col("o_orderkey") < 2000)
-            .select(col("o_orderkey"), col("o_orderpriority")),
-          ot, "o_orderkey", buckets = 8)
-        (fp, lt, ot)
-      })
-    (built._2, built._3)
-  }
-
-  /** Per-dir memo of the Z-ordered lineitem slice
-    * (`q_zorder_roundtrip`): clustering is a one-time layout rewrite;
-    * the row prices the clustered READ, the write is the
-    * `_zorder_build` infra line. */
-  private[graft] val zorderCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  private[graft] def sharedZorderPath(s: SparkSession, dir: String): String = {
-    val fp = Tables.fixtureFingerprint(dir, "lineitem")
-    bucketableTempMemo(zorderCache, dir, fp, "graft-zort") { path =>
-      graft.sources.Layout.writeZOrdered(
-        T(s, dir, "lineitem").filter(col("l_orderkey") < 3000)
-          .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-            col("l_quantity")),
-        path, "l_partkey", "l_suppkey", numFiles = 4)
+  private[graft] val forgetFixture =
+    memo("_forget_fixture_build", "documents", "embeddings") { (s, dir) =>
+      val root = artifactDir("graft-forgetfx")
+      val docs = T(s, dir, "documents")
+        .select(col("doc_id"), col("text"), col("lang"))
+      val emb = T(s, dir, "embeddings")
+      VersionedCorpus.append(docs, s"$root/corpus")
+      VersionedCorpus.pinKey(s"$root/corpus", "doc_id")
+      graft.operators.TextIndex.build(docs, "doc_id", "text", s"$root/tix",
+        shards = 16)
+      val (assign, cents) = IvfIndex.build(emb, "vec_id", "embedding",
+        k = 8, iters = 2)
+      try {
+        IvfIndex.writePartitioned(emb, "vec_id", assign, s"$root/vix")
+        ForgetFixture(root, LocalRows.of(cents))
+      } finally { assign.unpersist(); cents.unpersist() }
     }
+
+  /** The half-corpus text index `q_store_textindex` appends to and
+    * queries, under `<root>/index`: a deployment builds its inverted index
+    * once and every ingestion batch appends to the standing artifact, so
+    * the row appends to a work copy ([[withWorkCopy]]). */
+  private[graft] val textIndexFixture = memo("_textindex_build", "documents") { (s, dir) =>
+    val root = artifactDir("graft-tixfx")
+    val docs = T(s, dir, "documents").select(col("doc_id"), col("text"))
+    graft.operators.TextIndex.build(docs.filter(col("doc_id") % 2 === 0),
+      "doc_id", "text", s"$root/index", shards = 32)
+    root
   }
 
-  /** Per-dir memo of the corpus GRAM-KEY index
-    * (`incr_span_strip_indexed`): the strip tier's maintained artifact
-    * — distinct corpus 8-gram keys + Bloom sidecar, built once per
-    * corpus version (the `_gramidx_build` infra line); the row prices
-    * the per-batch PROBE, which touches the corpus zero times. */
-  private[graft] val gramIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+  /** The MinHash-LSH verified-candidate edge table: `minhash_pairs` and
+    * `dedup_pipeline_lsh` both need the SAME signature pass → band
+    * self-join → exact-Jaccard verify over the documents table (default 32
+    * hashes / 4 bands / 3-gram verify). The verified pair set goes to
+    * DISK as a parquet table and the memo holds only its PATH: at web
+    * scale the verified dup-edge relation is corpus-order (30-50 % dup
+    * rates), so it must never ride through the driver; consumers re-read
+    * the table, as a cluster deployment reads the edge table its
+    * candidate job persisted. */
+  private[graft] val sharedMinhashEdges = memo("_minhash_build", "documents") { (s, dir) =>
+    val docs = T(s, dir, "documents")
+    val cands = NearDup.minHashCandidatesMaterialized(docs, "doc_id", "text")
+    val path = s"${artifactDir("graft-mhedges")}/edges"
+    NearDup.jaccardVerify(docs, "doc_id", "text", cands)
+      .write.mode("overwrite").parquet(path)
+    path
+  }
 
-  private[graft] def sharedGramIndexPath(s: SparkSession, dir: String): String = {
-    val fp = docsFingerprint(dir)
-    bucketableTempMemo(gramIndexCache, dir, fp, "graft-gramidx") { path =>
-      SpanDedup.buildGramIndex(
-        T(s, dir, "documents").filter(col("doc_id") < 250),
-        "doc_id", "text", path, k = 8)
-      ()
+  private[graft] def fixedSlice(s: SparkSession, dir: String): DataFrame =
+    T(s, dir, "documents").filter(col("doc_id") < 2000)
+
+  /** A closed-form signature/fingerprint relation the fixed-twin rows
+    * join over — the maintained-artifact discipline of
+    * [[sharedMinhashEdges]] applied to the polynomial-hash family: at
+    * scale the per-doc signature table is maintained by the ingestion job
+    * and every candidate query JOINS it, never re-runs the signature
+    * pass. Driver-bounded by construction (banded rows = slice docs ×
+    * bands; winnow fingerprints ≈ grams/4 per doc over the ≤ 2000-doc
+    * slice). */
+  private def polyRelation(name: String)(
+      relation: (DataFrame, String, String) => DataFrame): Memo[LocalRows] =
+    memo(name, "documents") { (s, dir) =>
+      val df = relation(fixedSlice(s, dir), "doc_id", "text")
+      LocalRows(collectGated(df).toSeq, df.schema)
     }
+
+  private[graft] val sharedPolyMinhashBanded =
+    polyRelation("_polymh_build")(NearDup.minHashPolyBanded(_, _, _))
+
+  private[graft] val sharedPolySimhashBanded =
+    polyRelation("_polysh_build")(NearDup.simHashPolyBanded(_, _, _))
+
+  private[graft] val sharedPolyWinnowFps =
+    polyRelation("_polywn_build")(NearDup.winnowPolyFps(_, _, _))
+
+  /** The `dedup_clusters*` edge relation — the bounded all-pairs Jaccard
+    * verification tier over the doc_id < 128 slice (SQL-expressible,
+    * same shape as `jaccard_pairs`; bucketed LSH candidates are the scale
+    * path for edge generation). Both declared clustering rows
+    * (propagation and star contraction) consume the SAME edges. The
+    * verified edge set is tiny by construction (dup families inside a
+    * 128-doc slice), so the memo holds the collected rows — driver-
+    * bounded, the `materializePairs` class. */
+  private[graft] val sharedDedupEdges = memo("_dedup_edges_build", "documents") { (s, dir) =>
+    val sub = T(s, dir, "documents").filter(col("doc_id") < 128)
+    // length-band prefilter (the set-similarity-join size bound):
+    // J(A,B) ≥ 0.8 ⇒ min(|A|,|B|) ≥ 0.8·max(|A|,|B|), so pairs outside
+    // the band can never verify — 0.79 leaves margin for the 4-decimal
+    // rounding at the threshold. Result-identical, so the oracle needs no
+    // mirror of it; halves the verify work here and is the standard
+    // pruning step of a distributed similarity join.
+    val sized = sub.select(col("doc_id"),
+      size(array_distinct(NearDup.shingles(col("text"), 1))).as("_ns"))
+    val pairs = sized.select(col("doc_id").as("id_a"), col("_ns").as("_na"))
+      .crossJoin(sized.select(col("doc_id").as("id_b"), col("_ns").as("_nb")))
+      .filter(col("id_a") < col("id_b") &&
+        least(col("_na"), col("_nb")).cast("double") >=
+          lit(0.79) * greatest(col("_na"), col("_nb")))
+      .select(col("id_a"), col("id_b"))
+    LocalRows.of(NearDup.materializePairs(
+      NearDup.jaccardVerify(sub, "doc_id", "text", pairs, shingleSize = 1)
+        .filter(col("jaccard") >= 0.8)
+        .select(col("id_a"), col("id_b"))))
   }
 
-  /** Per-dir memo of the hive-partitioned events table
-    * (`q_partitioned_prune`): the partitioned layout is the deployed
-    * store; the row prices the partition-pruned read, the write is the
-    * `_hivepart_build` infra line. */
-  private[graft] val hivePartCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+  /** The propagation-mode COMPONENT LABELS over [[sharedDedupEdges]]: at
+    * corpus scale the component id of every document is a MAINTAINED
+    * table (rebuilt when the corpus version changes, read by every
+    * downstream consumer), so the rows that CONSUME labels
+    * (`dedup_clusters`, `dedup_best_rep`) read this memo. The LIVE
+    * clustering paths stay benchmarked per-rep where the algorithm is the
+    * point: `dedup_clusters_star` runs the full star contraction and
+    * `dedup_pipeline_lsh` runs propagation over the (different) MinHash
+    * edge set. The vertex slice is 128 docs by construction, so the rows
+    * are driver-bounded. */
+  private[graft] val sharedDedupLabels = memo("_dedup_cc_build", "documents") { (s, dir) =>
+    val sub = T(s, dir, "documents").filter(col("doc_id") < 128)
+    val cc = Dedup.connectedComponents(sub.select("doc_id"), "doc_id",
+      sharedDedupEdges.get(s, dir).frame(s), "id_a", "id_b")
+    try LocalRows.of(cc)
+    finally cc.unpersist()
+  }
 
-  private[graft] def sharedHivePartPath(s: SparkSession, dir: String): String = {
-    val fp = Tables.fixtureFingerprint(dir, "events")
-    bucketableTempMemo(hivePartCache, dir, fp, "graft-part") { path =>
-      T(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"))
-        .write.partitionBy("event_type").mode("overwrite").parquet(path)
+  /** The EXACT ≥ 0.8 Jaccard pair set over the full documents table,
+    * computed subquadratically by [[NearDup.prefixJaccardJoin]] — the
+    * ground-truth artifact the recall instruments compare candidate tiers
+    * against. The pair count is dup-family-sized (hundreds on the
+    * fixtures), so the rows are driver-bounded. The LIVE algorithm stays
+    * benchmarked per-rep by the `exact_jaccard_join` row. */
+  private[graft] val sharedExactPairs = memo("_exact_pairs_build", "documents") { (s, dir) =>
+    LocalRows.of(NearDup.prefixJaccardJoin(T(s, dir, "documents"),
+      "doc_id", "text", minJaccard = 0.8))
+  }
+
+  /** The BUCKETED join tables (`q_bucketed_join`), as (lineitem table,
+    * orders table): the layout is one-time infrastructure — a deployment
+    * writes its fact tables bucketed ONCE and every recurring join reads
+    * them — so the row prices the zero-exchange co-located read (the r12
+    * audit flagged the per-rep rebuild as 0.7-1.0 s vs a millisecond
+    * oracle that only replays the read). Table names are dir-keyed
+    * constants so a rebuild overwrites rather than leaks catalog
+    * entries. */
+  private[graft] val sharedBucketedTables =
+    memo("_bucketed_build", "lineitem", "orders") { (s, dir) =>
+      val tag = java.lang.Integer.toHexString(dir.hashCode)
+      val lt = s"li_bkt_$tag"
+      val ot = s"ord_bkt_$tag"
+      s.sql(s"DROP TABLE IF EXISTS $lt")
+      s.sql(s"DROP TABLE IF EXISTS $ot")
+      // the warehouse location can outlive the in-memory catalog (a
+      // previous JVM's run left files the fresh catalog knows nothing
+      // about) — saveAsTable refuses a name whose location exists, so
+      // clear the orphaned dirs too
+      val wh = new java.net.URI(s.sessionState.conf.warehousePath).getPath
+      Seq(lt, ot).foreach { t =>
+        val d = new java.io.File(wh, t)
+        if (d.exists())
+          org.apache.commons.io.FileUtils.deleteDirectory(d)
+      }
+      graft.sources.Bucketing.writeBucketed(
+        T(s, dir, "lineitem").filter(col("l_orderkey") < 2000)
+          .select(col("l_orderkey"), col("l_extendedprice")),
+        lt, "l_orderkey", buckets = 8)
+      graft.sources.Bucketing.writeBucketed(
+        T(s, dir, "orders").filter(col("o_orderkey") < 2000)
+          .select(col("o_orderkey"), col("o_orderpriority")),
+        ot, "o_orderkey", buckets = 8)
+      (lt, ot)
     }
+
+  /** The Z-ordered lineitem slice (`q_zorder_roundtrip`): clustering is a
+    * one-time layout rewrite; the row prices the clustered READ. */
+  private[graft] val sharedZorderPath = memo("_zorder_build", "lineitem") { (s, dir) =>
+    val path = s"${artifactDir("graft-zort")}/t"
+    graft.sources.Layout.writeZOrdered(
+      T(s, dir, "lineitem").filter(col("l_orderkey") < 3000)
+        .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
+          col("l_quantity")),
+      path, "l_partkey", "l_suppkey", numFiles = 4)
+    path
   }
 
-  /** Shared temp-dir memo plumbing for the layout stores above:
-    * fingerprint-keyed rebuild into a fresh deleteOnExit temp dir (the
-    * superseded dir is left to the exit hook — a concurrent reader may
-    * still hold the old path, same discipline as sharedIvfIndex). */
-  private def bucketableTempMemo(
-      cache: java.util.concurrent.ConcurrentHashMap[String, (String, String)],
-      dir: String, fp: String, tag: String)(write: String => Unit): String =
-    cache.compute(dir, (_, cached) =>
-      if (cached != null && cached._1 == fp) cached
-      else {
-        val tmpRoot = java.nio.file.Files.createTempDirectory(tag)
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(tmpRoot.toFile)
-        val path = s"$tmpRoot/t"
-        write(path)
-        (fp, path)
-      })._2
-
-  /** Drop every shared-build memo for `dir` so the next consumer
-    * rebuilds from scratch — the bench's infra-rep hook. The round-10
-    * audit showed the single-shot infra timings absorb the same VM-
-    * throttle spikes the per-query min-of-reps exists to filter
-    * (`_ivfpq_build` reported 14.7 s for a build that measures ~4.9 s
-    * under identical replayed conditions); clearing between reps lets
-    * the bench report the min of REAL rebuilds. Superseded temp dirs
-    * are left for the existing deleteOnExit/consumer-safety discipline
-    * (see the sharedIvfIndex scaladoc); cached frames are driver-local
-    * rows or paths, so dropping entries leaks nothing executor-side. */
-  private[graft] def clearSharedBuildCaches(dir: String): Unit = {
-    ivfBuildCache.remove(dir)
-    pqBuildCache.remove(dir)
-    sqBuildCache.remove(dir)
-    ivfPqBuildCache.remove(dir)
-    fixedIvfCache.remove(dir)
-    fixedPqCache.remove(dir)
-    fixedIvfPqCache.remove(dir)
-    forgetFixtureCache.remove(dir)
-    textIndexFixtureCache.remove(dir)
-    minhashEdgeCache.remove(dir)
-    dedupEdgesCache.remove(dir)
-    dedupLabelsCache.remove(dir)
-    exactPairsCache.remove(dir)
-    bucketedCache.remove(dir)
-    zorderCache.remove(dir)
-    hivePartCache.remove(dir)
-    embStatsCache.remove(dir)
-    docStatsCache.remove(dir)
-    gramIndexCache.remove(dir)
-    polyRelCache.keySet.removeIf(_.startsWith(dir + "|"))
+  /** The corpus GRAM-KEY index (`incr_span_strip_indexed`): the strip
+    * tier's maintained artifact — distinct corpus 8-gram keys + Bloom
+    * sidecar, built once per corpus version; the row prices the per-batch
+    * PROBE, which touches the corpus zero times. */
+  private[graft] val sharedGramIndexPath = memo("_gramidx_build", "documents") { (s, dir) =>
+    val path = s"${artifactDir("graft-gramidx")}/t"
+    SpanDedup.buildGramIndex(
+      T(s, dir, "documents").filter(col("doc_id") < 250),
+      "doc_id", "text", path, k = 8)
+    path
   }
 
-  /** Per-source memo of the "day-1" index slice (`vec_id % 10 =!= 0`)
-    * the incremental-append rows mutate: the slice is WRITTEN once per
-    * shared-index generation (keyed by the source table's path, which
-    * is itself fingerprint-fresh — a rebuilt shared index gets a new
-    * temp dir), and each invocation receives a cheap FILE COPY of it to
-    * append into. What each rep then measures is the maintenance path
-    * itself — assign/encode + partition append + probe — not the
-    * re-creation of yesterday's table, which at scale already exists.
-    * Caller must delete the returned copy's parent dir when done. */
-  private[graft] val day1SliceCache =
+  /** The hive-partitioned events table (`q_partitioned_prune`): the
+    * partitioned layout is the deployed store; the row prices the
+    * partition-pruned read. */
+  private[graft] val sharedHivePartPath = memo("_hivepart_build", "events") { (s, dir) =>
+    val path = s"${artifactDir("graft-part")}/t"
+    T(s, dir, "events")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        col("value"))
+      .write.partitionBy("event_type").mode("overwrite").parquet(path)
+    path
+  }
+
+  /** (rowCount, dim) of the embeddings table — TABLE STATISTICS, the
+    * catalog metadata every deployment already holds (row counts come
+    * from parquet footers, the dim from the schema contract). Consumers
+    * that size an operator from corpus stats (the LSH nBits rule) read
+    * this instead of paying a dedicated count job per invocation. */
+  private[graft] val embStats = memo("_embstats_build", "embeddings") { (s, dir) =>
+    val r = T(s, dir, "embeddings").agg(count(lit(1)).as("n"),
+      first(size(col("embedding"))).as("d")).head()
+    (r.getLong(0), r.getInt(1))
+  }
+
+  /** (docCount, avgTokenLength) of the documents table — BM25 INDEX
+    * METADATA (every BM25 deployment persists (N, avgdl) with its index;
+    * [[graft.operators.TextIndex]] does too), so scan-based BM25 rows
+    * skip a full corpus tokenize per invocation. Computed by the exact
+    * expression the in-plan form used (count + avg(size(tokens))), under
+    * the same session config, so the scores are bit-identical. */
+  private[graft] val docStats = memo("_docstats_build", "documents") { (s, dir) =>
+    val r = T(s, dir, "documents")
+      .select(size(graft.operators.TextAnalysis.tokens(col("text")))
+        .cast("double").as("_dl"))
+      .agg(count(lit(1)).cast("double").as("n"), avg(col("_dl")).as("avgdl"))
+      .head()
+    (r.getDouble(0), r.getDouble(1))
+  }
+
+  /** Drop every memo's entry for `dir`, so the next `get` rebuilds —
+    * Bench's infra-rep hook: single-shot infra timings absorb the VM-
+    * throttle spikes the per-query min-of-reps exists to filter (the
+    * round-10 audit saw `_ivfpq_build` report 14.7 s for a build that
+    * measures ~4.9 s), so Bench reports the min of REAL rebuilds. Entries
+    * are driver-local rows or paths, so dropping one leaks nothing
+    * executor-side. */
+  private[graft] def clearSharedBuildCaches(dir: String): Unit =
+    memos.foreach(_.clear(dir))
+
+  /** The "day-1" slice (`vec_id % 10 =!= 0`) of a shared index table,
+    * which the incremental-append rows append to; each call runs `body`
+    * on a work copy ([[withWorkCopy]]), so a rep measures the maintenance
+    * path itself — assign/encode + partition append + probe — not the
+    * re-creation of yesterday's table. The one memo that is not a
+    * [[Memo]]: it is keyed by the source table's PATH, and a rebuilt
+    * source gets a new [[artifactDir]], so an entry is never stale and is
+    * never cleared (an entry whose source was rebuilt is not asked for
+    * again, bounded by the rebuild count). */
+  private val day1SliceCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private[graft] def day1SliceCopy(s: SparkSession, sourcePath: String,
-                            tag: String): String = {
-    val memo = day1SliceCache.computeIfAbsent(sourcePath, { _ =>
-      val tmpRoot = java.nio.file.Files.createTempDirectory(s"graft-$tag-day1")
-      org.apache.commons.io.FileUtils.forceDeleteOnExit(tmpRoot.toFile)
-      val p = s"$tmpRoot/t"
+  private[graft] def withDay1SliceCopy[A](s: SparkSession, sourcePath: String,
+                                          tag: String)(body: String => A): A = {
+    val slice = day1SliceCache.computeIfAbsent(sourcePath, { _ =>
+      val p = s"${artifactDir(s"graft-$tag-day1")}/t"
       // repartition by cluster co-locates each cell in one task → one
       // file per cell, which also keeps every subsequent copy cheap
       s.read.parquet(sourcePath).filter(col("vec_id") % 10 =!= 0)
@@ -2061,11 +1761,7 @@ object Queries
         .write.partitionBy("cluster_id").mode("overwrite").parquet(p)
       p
     })
-    val work = java.nio.file.Files.createTempDirectory(s"graft-$tag-work")
-    val dst = s"$work/t"
-    org.apache.commons.io.FileUtils.copyDirectory(
-      new java.io.File(memo), new java.io.File(dst))
-    dst
+    withWorkCopy(slice, s"graft-$tag-work")(body)
   }
 
   /** The full declared registry: tier maps concatenated in the original

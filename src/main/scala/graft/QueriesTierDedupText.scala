@@ -177,7 +177,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
         // relation (signatures are per-doc, so splitting the memo ≡
         // splitting the docs — the operator's own shape); the cross
         // join closer is the one minHashCrossCandidates runs
-        val banded = sharedPolyMinhashBanded(s, dir)
+        val banded = sharedPolyMinhashBanded.get(s, dir).frame(s)
         val cands = NearDup.materializePairs(
           NearDup.bucketPairs(
             banded.filter(col("_id") >= 250),
@@ -197,7 +197,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // (exhaustive recall at hamming ≤ 2 with 3 bands — no banding
       // loss for the oracle to disagree with).
       (s, dir) => {
-        val banded = sharedPolySimhashBanded(s, dir)
+        val banded = sharedPolySimhashBanded.get(s, dir).frame(s)
         localFrameOrdered(
           NearDup.bucketPairs(
             banded.filter(col("_id") >= 250),
@@ -213,7 +213,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // fingerprint-bucket candidates with n_shared ≥ 2 under the
       // closed-form hash.
       (s, dir) => {
-        val fps = sharedPolyWinnowFps(s, dir)
+        val fps = sharedPolyWinnowFps.get(s, dir).frame(s)
         localFrameOrdered(
           NearDup.bucketPairs(
             fps.filter(col("_id") >= 250),
@@ -273,7 +273,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // Closed-form hash banded fresh (NearDup.minHashPolyBanded); the
       // index build is the `_gramidx_build` infra line.
       (s, dir) => cleanAdmitRow(fixedSlice(s, dir),
-        NearDup.minHashPolyBanded(_, _, _), Some(sharedGramIndexPath(s, dir))),
+        NearDup.minHashPolyBanded(_, _, _), Some(sharedGramIndexPath.get(s, dir))),
       Some(incrCleanAdmitFixedOracleSql),
       "clean-then-admit verdict with the strip tier through the maintained gram-key index: Bloom-routed probe, corpus untouched per batch, full DuckDB replay"),
 
@@ -333,7 +333,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
               emb.filter(col("vec_id") % 5 === 0),
               emb.filter(col("vec_id") % 5 =!= 0),
               "vec_id", "embedding", minCosine = 0.3,
-              dim = embStats(s, dir)._2)
+              dim = embStats.get(s, dir)._2)
             .groupBy((col("vec_id") % 100).as("id_bucket"))
             .agg(count(lit(1)).as("n_admitted"),
               min(col("vec_id")).as("first_id")), "id_bucket"))
@@ -358,14 +358,14 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // incr_admit_vec's fixture-calibration rationale. Float k-means
       // cells → rows-only per the contract.
       (s, dir) => {
-        val ivf = sharedIvfIndex(s, dir)
+        val ivf = sharedIvfIndex.get(s, dir)
         val emb = T(s, dir, "embeddings")
         val idx = s.read.parquet(ivf.indexPath)
           .filter(col("vec_id") % 5 =!= 0)
           .select(col("vec_id"), col("embedding"), col("cluster_id"))
         localFrameOrdered(Dedup.admitIncomingSemantic(
             emb.filter(col("vec_id") % 5 === 0),
-            idx, "vec_id", "embedding", ivf.centroids, minCosine = 0.3)
+            idx, "vec_id", "embedding", ivf.centroids.frame(s), minCosine = 0.3)
           .groupBy((col("vec_id") % 100).as("id_bucket"))
           .agg(count(lit(1)).as("n_admitted"),
             min(col("vec_id")).as("first_id")), "id_bucket")
@@ -471,30 +471,31 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // VersionedCorpusSpec); seeded-hash near-dup tier → rows-only
       // per the contract.
       (s, dir) => {
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-vcadmit")
-        try Dedup.withAdmissionScope {
-          val root = s"$tmpRoot/corpus"
-          val docs = T(s, dir, "documents")
-            .select(col("doc_id"), col("text"), col("lang"))
-          VersionedCorpus.append(docs.filter(col("doc_id") < 250), root)
-          def admit(day: DataFrame): DataFrame =
-            Dedup.admitIncoming(day,
-              VersionedCorpus.snapshot(s, root)
-                .select(col("doc_id"), col("text")),
-              "doc_id", "text")
-          val g1 = VersionedCorpus.append(
-            admit(docs.filter(col("doc_id") >= 250 && col("doc_id") < 375)),
-            root)
-          val g2 = VersionedCorpus.append(
-            admit(docs.filter(col("doc_id") >= 375)), root)
-          def dayRows(g: Long, day: Long): DataFrame =
-            s.read.parquet(s"$root/gen=$g")
-              .select(col("doc_id"), col("lang"), lit(day).as("day"))
-          localFrameOrdered(dayRows(g1, 1L).union(dayRows(g2, 2L))
-            .groupBy(col("day"), col("lang"))
-            .agg(count(lit(1)).as("n_admitted"),
-              min(col("doc_id")).as("first_id")), "day", "lang")
-        } finally org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot.toFile)
+        withScratchDir("graft-vcadmit") { tmpRoot =>
+          Dedup.withAdmissionScope {
+            val root = s"$tmpRoot/corpus"
+            val docs = T(s, dir, "documents")
+              .select(col("doc_id"), col("text"), col("lang"))
+            VersionedCorpus.append(docs.filter(col("doc_id") < 250), root)
+            def admit(day: DataFrame): DataFrame =
+              Dedup.admitIncoming(day,
+                VersionedCorpus.snapshot(s, root)
+                  .select(col("doc_id"), col("text")),
+                "doc_id", "text")
+            val g1 = VersionedCorpus.append(
+              admit(docs.filter(col("doc_id") >= 250 && col("doc_id") < 375)),
+              root)
+            val g2 = VersionedCorpus.append(
+              admit(docs.filter(col("doc_id") >= 375)), root)
+            def dayRows(g: Long, day: Long): DataFrame =
+              s.read.parquet(s"$root/gen=$g")
+                .select(col("doc_id"), col("lang"), lit(day).as("day"))
+            localFrameOrdered(dayRows(g1, 1L).union(dayRows(g2, 2L))
+              .groupBy(col("day"), col("lang"))
+              .agg(count(lit(1)).as("n_admitted"),
+                min(col("doc_id")).as("first_id")), "day", "lang")
+          }
+        }
       },
       None,
       "durable sequential ingestion: two-day replay with the corpus as an on-disk versioned store (restart-safe batch twin)"),
@@ -511,8 +512,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // same slices straight from the source table — any row lost or
       // duplicated by append/compact/vacuum bookkeeping breaks it.
       (s, dir) => {
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-vctt")
-        try {
+        withScratchDir("graft-vctt") { tmpRoot =>
           val root = s"$tmpRoot/corpus"
           val docs = T(s, dir, "documents")
             .select(col("doc_id"), col("text"), col("lang"))
@@ -537,7 +537,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
           val post = localFrame(
             stats(VersionedCorpus.snapshot(s, root), "post_vacuum"))
           localFrameOrdered(pre.union(post), "snap")
-        } finally org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot.toFile)
+        }
       },
       Some("""SELECT * FROM (
          |  SELECT 'asof_first' AS snap, count(*) AS n_docs,
@@ -571,8 +571,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // it. The " rev2" suffix shifts char mass so an unapplied upsert
       // is visible in the hash, not just the row count.
       (s, dir) => {
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-vcmg")
-        try {
+        withScratchDir("graft-vcmg") { tmpRoot =>
           val root = s"$tmpRoot/corpus"
           val docs = T(s, dir, "documents")
             .select(col("doc_id"), col("text"), col("lang"))
@@ -600,7 +599,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
           val post = localFrame(
             stats(VersionedCorpus.snapshot(s, root), "post_compact"))
           localFrameOrdered(pre.union(post), "snap")
-        } finally org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot.toFile)
+        }
       },
       Some("""SELECT * FROM (
          |  SELECT 'asof_upsert' AS snap, count(*) AS n_docs,
@@ -639,8 +638,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // equality, not aggregate counts — so a wrong winner, a leaked
       // tombstone, or a lost insert shows up as a hash mismatch.
       (s, dir) => {
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-cdc")
-        try {
+        withScratchDir("graft-cdc") { tmpRoot =>
           val root = s"$tmpRoot/corpus"
           val docs = T(s, dir, "documents")
             .select(col("doc_id"), col("text"), col("lang"))
@@ -656,7 +654,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
           VersionedCorpus.applyChanges(changes, root, "doc_id", "op", "seq")
           localFrameOrdered(VersionedCorpus.snapshot(s, root)
             .select(col("doc_id"), col("text"), col("lang")), "doc_id")
-        } finally org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot.toFile)
+        }
       },
       Some("""SELECT doc_id, text, lang FROM (
          |  SELECT doc_id, text, lang FROM documents WHERE doc_id < 100
@@ -684,8 +682,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // resurrected-after-delete, deleted, upserted, tail, absent —
       // and must reproduce exactly the rows direct SQL derives.
       (s, dir) => {
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-vclk")
-        try {
+        withScratchDir("graft-vclk") { tmpRoot =>
           val root = s"$tmpRoot/corpus"
           val docs = T(s, dir, "documents")
             .select(col("doc_id"), col("text"), col("lang"))
@@ -704,7 +701,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
             .reduce(_ unionByName _)
           localFrameOrdered(out.select(col("doc_id"), col("text"), col("lang")),
             "doc_id")
-        } finally org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot.toFile)
+        }
       },
       Some("""SELECT doc_id, text, lang FROM (
          |  SELECT doc_id, text, lang FROM documents
@@ -729,8 +726,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // safely (a probe hashing differently from the build would
       // falsely prune present keys and break the hash here).
       (s, dir) => {
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-vcbl")
-        try {
+        withScratchDir("graft-vcbl") { tmpRoot =>
           val root = s"$tmpRoot/corpus"
           val docs = T(s, dir, "documents")
             .select(col("doc_id"), col("text"), col("lang"))
@@ -752,7 +748,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
             .reduce(_ unionByName _)
           localFrameOrdered(out.select(col("doc_id"), col("text"), col("lang")),
             "doc_id")
-        } finally org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot.toFile)
+        }
       },
       Some("""SELECT doc_id, text, lang FROM (
          |  SELECT doc_id, text, lang FROM documents
@@ -776,8 +772,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // new column (first-file schema), invented non-null values, or
       // lost evolved rows through the tombstone join breaks the hash.
       (s, dir) => {
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-vcev")
-        try {
+        withScratchDir("graft-vcev") { tmpRoot =>
           val root = s"$tmpRoot/corpus"
           val docs = T(s, dir, "documents")
             .select(col("doc_id"), col("text"), col("lang"))
@@ -796,7 +791,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
               sum(col("doc_id")).as("sum_ids"),
               count(col("lang")).as("n_with_lang"),
               countDistinct(col("lang")).as("n_langs")))
-        } finally org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot.toFile)
+        }
       },
       Some("""SELECT count(*) AS n_docs,
          |  CAST(sum(doc_id) AS BIGINT) AS sum_ids,
@@ -820,8 +815,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // directly — a stale untouched group, a lost preimage group, or
       // a surviving emptied group breaks it.
       (s, dir) => {
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-mv")
-        try {
+        withScratchDir("graft-mv") { tmpRoot =>
           val src = s"$tmpRoot/src"; val view = s"$tmpRoot/view"
           val cursor = s"$tmpRoot/cursor.txt"
           val docs = T(s, dir, "documents")
@@ -870,7 +864,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
               .unionAll(slice(150, 160).select("doc_id")))
           refresh()
           localFrameOrdered(IncrementalView.read(s, view), "bucket")
-        } finally org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot.toFile)
+        }
       },
       Some("""WITH final AS (
          |  SELECT doc_id,
@@ -899,8 +893,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // asserted in VersionedCorpusSpec; THIS row certifies the
       // answers under merge-on-read resolution).
       (s, dir) => {
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-vcw")
-        try {
+        withScratchDir("graft-vcw") { tmpRoot =>
           val root = s"$tmpRoot/corpus"
           val docs = T(s, dir, "documents")
             .select(col("doc_id"), col("text"), col("lang"))
@@ -920,7 +913,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
           localFrameOrdered(VersionedCorpus.snapshotWhere(s, root, "day", 1L, 2L)
             .select(col("doc_id"), col("text"), col("lang"), col("day")),
             "doc_id")
-        } finally org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot.toFile)
+        }
       },
       Some("""SELECT doc_id,
          |  CASE WHEN doc_id >= 210 AND doc_id < 220 THEN text || ' u1'
@@ -943,8 +936,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // SQL row-for-row (pruning is asserted in VersionedCorpusSpec;
       // THIS row certifies the answers).
       (s, dir) => {
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-vcrg")
-        try {
+        withScratchDir("graft-vcrg") { tmpRoot =>
           val root = s"$tmpRoot/corpus"
           val docs = T(s, dir, "documents")
             .select(col("doc_id"), col("text"), col("lang"))
@@ -960,7 +952,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
             docs.filter(col("doc_id") >= 55 && col("doc_id") < 60), root)
           localFrameOrdered(VersionedCorpus.lookupKeyRange(s, root, 40L, 160L)
             .select(col("doc_id"), col("text"), col("lang")), "doc_id")
-        } finally org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot.toFile)
+        }
       },
       Some("""SELECT doc_id, text, lang FROM (
          |  SELECT doc_id, text, lang FROM documents
@@ -986,8 +978,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // an upsert losing to a packed run committed before it, or a
       // row lost/duplicated in the rewrite breaks the hash.
       (s, dir) => {
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-opt")
-        try {
+        withScratchDir("graft-opt") { tmpRoot =>
           val root = s"$tmpRoot/corpus"
           val docs = T(s, dir, "documents")
             .select(col("doc_id"), col("text"), col("lang"))
@@ -1008,7 +999,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
           VersionedCorpus.vacuumPacked(root)
           localFrameOrdered(VersionedCorpus.snapshot(s, root)
             .select(col("doc_id"), col("text"), col("lang")), "doc_id")
-        } finally org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot.toFile)
+        }
       },
       Some("""SELECT doc_id,
          |  CASE WHEN doc_id >= 30 AND doc_id < 90 THEN text || ' u1'
@@ -1033,8 +1024,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // row, wrong label, lost delete key, or mis-numbered commit
       // breaks the hash.
       (s, dir) => {
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-cdf")
-        try {
+        withScratchDir("graft-cdf") { tmpRoot =>
           val root = s"$tmpRoot/corpus"
           val docs = T(s, dir, "documents")
             .select(col("doc_id"), col("text"), col("lang"))
@@ -1056,7 +1046,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
               col("_change_type").as("change_type"),
               col("_commit_gen").as("commit_gen"))
             .orderBy(col("commit_gen"), col("doc_id")))
-        } finally org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot.toFile)
+        }
       },
       Some("""SELECT doc_id, text, lang, change_type, commit_gen FROM (
          |  SELECT doc_id, text, lang, 'insert' AS change_type,
@@ -1086,8 +1076,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // 100 TB), and the second pull folds a delete-then-resurrect
       // sequence whose order only the generation stamps can resolve.
       (s, dir) => {
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-rep")
-        try {
+        withScratchDir("graft-rep") { tmpRoot =>
           val src = s"$tmpRoot/src"; val dst = s"$tmpRoot/dst"
           val cursor = s"$tmpRoot/cursor.txt"
           val docs = T(s, dir, "documents")
@@ -1107,7 +1096,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
           VersionedCorpus.replicate(s, src, dst, "doc_id", cursor) // pull 2
           localFrameOrdered(VersionedCorpus.snapshot(s, dst)
             .select(col("doc_id"), col("text"), col("lang")), "doc_id")
-        } finally org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot.toFile)
+        }
       },
       Some("""SELECT doc_id, text, lang FROM (
          |  SELECT doc_id, text, lang FROM documents WHERE doc_id < 50
@@ -1301,7 +1290,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       (s, dir) =>
         SpanDedup.crossStripSpansIndexed(
             T(s, dir, "documents").filter(col("doc_id") >= 250),
-            "doc_id", "text", sharedGramIndexPath(s, dir), k = 8)
+            "doc_id", "text", sharedGramIndexPath.get(s, dir), k = 8)
           .select(col("_id").as("doc_id"), col("kept_tokens"),
             md5(col("cleaned_text")).as("cleaned_md5"))
           .orderBy(asc("doc_id")),
@@ -1627,7 +1616,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // stage parallelizes and the dedicated corpus-count broadcast job
       // disappears — same index-metadata rationale as the BM25 rows
       (s, dir) => TextAnalysis.tfIdf(T(s, dir, "documents"), "doc_id", "text",
-          corpusN = Some(docStats(s, dir)._1))
+          corpusN = Some(docStats.get(s, dir)._1))
         .orderBy(desc("tfidf"), asc("doc_id"), asc("word")).limit(100),
       Some("""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word
          |             FROM documents),
@@ -1645,7 +1634,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
     "q_bm25" -> DeclaredQuery(
       (s, dir) => TextAnalysis.bm25(T(s, dir, "documents"), "doc_id", "text",
           Seq("spark", "data", "join"),
-          corpusStats = Some(docStats(s, dir)))
+          corpusStats = Some(docStats.get(s, dir)))
         .orderBy(desc("bm25"), asc("doc_id")).limit(50),
       Some("""WITH d AS (SELECT doc_id,
          |         len(list_filter(string_split(text, ' '), t -> t <> ''))::DOUBLE AS dl,
@@ -1673,7 +1662,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
           "doc_id", "text",
           Seq(1L -> Seq("spark", "data", "join"),
             2L -> Seq("table", "row", "fast")), k = 10,
-          corpusStats = Some(docStats(s, dir)))
+          corpusStats = Some(docStats.get(s, dir)))
         .orderBy(col("qid"), col("rank")),
       Some("""WITH q AS (SELECT CAST(qid AS BIGINT) AS qid, word FROM (VALUES
          |        (1, 'spark'), (1, 'data'), (1, 'join'),
@@ -1718,16 +1707,14 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // replays only the expected scores (exclude from any
       // engine-vs-engine proxy).
       (s, dir) => {
-        val root = textIndexFixtureCopy(s, dir)
-        try {
+        withWorkCopy(textIndexFixture.get(s, dir), "graft-tix-work") { root =>
           val idx = s"$root/index"
           val docs = T(s, dir, "documents").select(col("doc_id"), col("text"))
           TextIndex.append(docs.filter(col("doc_id") % 2 === 1),
             "doc_id", "text", idx)
           localFrame(TextIndex.bm25(s, idx, Seq("vector", "table", "fast"))
             .orderBy(desc("bm25"), asc("doc_id")).limit(50))
-        } finally org.apache.commons.io.FileUtils.deleteDirectory(
-          new java.io.File(root).getParentFile)
+        }
       },
       Some("""WITH d AS (SELECT doc_id,
          |         len(list_filter(string_split(text, ' '), t -> t <> ''))::DOUBLE AS dl,
@@ -1759,14 +1746,14 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
       // or a probe reading a dead vector breaks the hash. LIFECYCLE
       // row: Spark mutates three real stores; exclude from
       // engine-vs-engine proxies. The three-store fixture comes from
-      // the forgetFixtureCopy memo (built once per dir, priced as the
+      // the forgetFixture memo (built once per dir, priced as the
       // `_forget_fixture_build` infra line; each invocation receives a
       // cheap FILE COPY to mutate) — what the row measures is the
       // erasure composition + both post-forget searches, not the
       // re-construction of yesterday's stores.
       (s, dir) => {
-        val (root, cents) = forgetFixtureCopy(s, dir)
-        try {
+        val fx = forgetFixture.get(s, dir)
+        withWorkCopy(fx.root, "graft-forget-work") { root =>
           val corpusRoot = s"$root/corpus"; val tix = s"$root/tix"
           val vix = s"$root/vix"
           val removed = Forget.forget(s,
@@ -1780,12 +1767,12 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
             .select(lit("bm25").as("src"), col("doc_id"),
               col("bm25").as("score"))
           val vec = IvfIndex.probePartitioned(s, vix, "vec_id", "embedding",
-              cents, QueryVectors.q2, k = 10, nprobe = 8, score = cosine)
+              fx.centroids.frame(s), QueryVectors.q2, k = 10, nprobe = 8,
+              score = cosine)
             .select(lit("cosine").as("src"), col("vec_id").as("doc_id"),
               col("sim").as("score"))
           localFrameOrdered(kw.unionByName(vec), "src", "-score", "doc_id")
-        } finally org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(root).getParentFile)
+        }
       },
       Some(s"""WITH surv AS (SELECT * FROM documents
          |  WHERE NOT (doc_id >= 100 AND doc_id < 150)),
@@ -1822,7 +1809,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
         // fused join is k-sized by construction
         val kw = TextAnalysis.bm25(T(s, dir, "documents"), "doc_id", "text",
             Seq("spark", "data", "join"),
-            corpusStats = Some(docStats(s, dir)))
+            corpusStats = Some(docStats.get(s, dir)))
           .orderBy(desc("bm25"), asc("doc_id")).limit(50)
           .withColumn("rank",
             row_number().over(Window.orderBy(desc("bm25"), asc("doc_id"))))
@@ -1881,7 +1868,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
           "doc_id", "text",
           Seq(1L -> Seq("spark", "data", "join"),
             2L -> Seq("table", "row", "fast")), k = 20,
-          corpusStats = Some(docStats(s, dir)))
+          corpusStats = Some(docStats.get(s, dir)))
         val qs = Seq((1L, QueryVectors.q1), (2L, QueryVectors.q2))
           .toDF("qid", "qvec")
         val vec = Search.knnJoinAgg(qs, "qid", "qvec",
@@ -1956,7 +1943,7 @@ private[graft] trait QueriesTierDedupText { this: Queries.type =>
     * side's ids (signatures are per-doc, so this equals banding the
     * side). */
   private def polyMemoBuckets(s: SparkSession, dir: String): Dedup.Buckets = {
-    val banded = sharedPolyMinhashBanded(s, dir)
+    val banded = sharedPolyMinhashBanded.get(s, dir).frame(s)
     (df, idCol, _) =>
       banded.join(df.select(col(idCol).as("_id")), Seq("_id"), "left_semi")
   }

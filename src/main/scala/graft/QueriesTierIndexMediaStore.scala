@@ -29,7 +29,7 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
     * tagged-union collect (Search.collectIdLists) and its planView. */
   private def pqRecallFixedRankings(s: SparkSession,
                                     dir: String): Seq[DataFrame] = {
-    val pqf = sharedFixedPq(s, dir)
+    val pqf = sharedFixedPq.get(s, dir)
     val emb8 = T(s, dir, "embeddings").filter(col("vec_id") % 8 === 0)
     val enc = s.read.parquet(pqf.codesPath)
     val calib = Seq(QueryVectors.q1, QueryVectors.q2)
@@ -238,12 +238,12 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
         // broadcast(near clusters) → candidate-id prune of the corpus)
         // over the distributed index relation — no corpus-sized rows
         // ever touch the driver.
-        val ivf = sharedIvfIndex(s, dir)
+        val ivf = sharedIvfIndex.get(s, dir)
         val assign = s.read.parquet(ivf.indexPath)
           .select(col("vec_id"), col("cluster_id"))
         localFrame(
           IvfIndex.probe(T(s, dir, "embeddings"), "vec_id", "embedding",
-            assign, ivf.centroids, QueryVectors.q1, k = 10,
+            assign, ivf.centroids.frame(s), QueryVectors.q1, k = 10,
             nprobe = ivf.nprobe)
             .select(col("vec_id"), col("sim")))
       },
@@ -258,10 +258,10 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // asserted in IvfIndexSpec). Float-iterative like ivf_probe →
       // rows-only per the contract.
       (s, dir) => {
-        val ivf = sharedIvfIndex(s, dir)
+        val ivf = sharedIvfIndex.get(s, dir)
         localFrame(
           IvfIndex.probePartitioned(s, ivf.indexPath, "vec_id",
-            "embedding", ivf.centroids, QueryVectors.q1, k = 10,
+            "embedding", ivf.centroids.frame(s), QueryVectors.q1, k = 10,
             nprobe = ivf.nprobe)
             .select(col("vec_id"), col("sim")))
       },
@@ -324,13 +324,14 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // bounded TopKAggregator. Per-query results ≡ probePartitioned
       // (IvfIndexSpec). Float-iterative → rows-only per the contract.
       (s, dir) => {
-        val ivf = sharedIvfIndex(s, dir)
+        val ivf = sharedIvfIndex.get(s, dir)
         import s.implicits._
         val qs = Seq((1L, QueryVectors.q1), (2L, QueryVectors.q2))
           .toDF("qid", "qvec")
         localFrameOrdered(
           IvfIndex.probeMany(s, ivf.indexPath, "vec_id", "embedding",
-            ivf.centroids, qs, "qid", "qvec", k = 10, nprobe = ivf.nprobe)
+            ivf.centroids.frame(s), qs, "qid", "qvec", k = 10,
+            nprobe = ivf.nprobe)
             .select(col("qid"), col("vec_id"), col("sim"), col("rank")),
           "qid", "rank")
       },
@@ -354,13 +355,13 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // each rep measures the deployed probe, not a rebuild — the same
       // build-vs-consume split every calibrated index row already uses.
       (s, dir) => {
-        val (path, cents) = sharedFixedIvf(s, dir)
+        val ivff = sharedFixedIvf.get(s, dir)
         import s.implicits._
         val qs = Seq((1L, QueryVectors.q1), (2L, QueryVectors.q2))
           .toDF("qid", "qvec")
         localFrameOrdered(
-          IvfIndex.probeMany(s, path, "vec_id", "embedding", cents, qs,
-              "qid", "qvec", k = 10, nprobe = 3)
+          IvfIndex.probeMany(s, ivff.indexPath, "vec_id", "embedding",
+              ivff.centroids.frame(s), qs, "qid", "qvec", k = 10, nprobe = 3)
             .select(col("qid"), col("vec_id"), col("sim"),
               col("rank").cast("long").as("rank")),
           "qid", "rank")
@@ -411,7 +412,7 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // Per-query results ≡ one searchRerank per query (SqIndexSpec).
       // Grid placement is float min/max → rows-only per the contract.
       (s, dir) => {
-        val sq = sharedSqIndex(s, dir)
+        val sq = sharedSqIndex.get(s, dir)
         import s.implicits._
         val qs = Seq((1L, QueryVectors.q1), (2L, QueryVectors.q2))
           .toDF("qid", "qvec")
@@ -435,7 +436,7 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // table and grid as the calibrated row; depth pinned at 50 so
       // the replay is a static SQL string.
       (s, dir) => {
-        val sq = sharedSqIndex(s, dir)
+        val sq = sharedSqIndex.get(s, dir)
         import s.implicits._
         val qs = Seq((1L, QueryVectors.q1), (2L, QueryVectors.q2))
           .toDF("qid", "qvec")
@@ -499,7 +500,7 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // hash-rank selection itself is exactly SamplingSpec's naive
       // ground truth.
       (s, dir) => {
-        val ivf = sharedIvfIndex(s, dir)
+        val ivf = sharedIvfIndex.get(s, dir)
         val idx = s.read.parquet(ivf.indexPath)
           .select(col("vec_id"), col("cluster_id"))
         val sampled = Sampling.clusterBalanced(idx, "vec_id",
@@ -563,7 +564,7 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // full-depth-rerank ≡ exact brute force asserted in PqIndexSpec
       // and the operating point certified by `pq_recall`.
       (s, dir) => {
-        val pq = sharedPqIndex(s, dir)
+        val pq = sharedPqIndex.get(s, dir)
         PqIndex.searchRerank(s.read.parquet(pq.codesPath),
             T(s, dir, "embeddings"), "vec_id", "embedding",
             QueryVectors.q1, pq.codebooks, k = 10, r = pq.rerank)
@@ -585,13 +586,13 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // completeness check (r = corpus ⇒ recall 1.0 exactly) lives in
       // PqIndexSpec — it would need a corpus-order collect here.
       (s, dir) => {
-        val pq = sharedPqIndex(s, dir)
+        val pq = sharedPqIndex.get(s, dir)
         val emb = T(s, dir, "embeddings")
         val enc = s.read.parquet(pq.codesPath)
         // corpus row count from the maintained stats memo (the
         // `_embstats_build` infra line) instead of a fresh count job —
         // the BM25 rows' corpusStats discipline applied here (r20)
-        val rMax = math.min(embStats(s, dir)._1, PqMaxRerank.toLong).toInt
+        val rMax = math.min(embStats.get(s, dir)._1, PqMaxRerank.toLong).toInt
         val dial = Seq(math.max(10, pq.rerank / 2), pq.rerank,
           math.min(rMax, pq.rerank * 2)).distinct.sorted
         val calib = Seq((1L, QueryVectors.q1), (2L, QueryVectors.q2))
@@ -738,7 +739,7 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // placement is float min/max → rows-only per the contract;
       // full-depth-rerank ≡ exact brute force asserted in SqIndexSpec.
       (s, dir) => {
-        val sq = sharedSqIndex(s, dir)
+        val sq = sharedSqIndex.get(s, dir)
         SqIndex.searchRerank(s.read.parquet(sq.codesPath),
             T(s, dir, "embeddings"), "vec_id", "embedding",
             QueryVectors.q1, sq.params, k = 10, r = sq.rerank)
@@ -756,12 +757,12 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // the bounded-candidates argument in sharedSqIndex's scaladoc —
       // so the dial costs ONE bounded quantized ordering per query.
       (s, dir) => {
-        val sq = sharedSqIndex(s, dir)
+        val sq = sharedSqIndex.get(s, dir)
         val emb = T(s, dir, "embeddings")
         val enc = s.read.parquet(sq.codesPath)
         // memoized corpus count + one tagged-union collect for all four
         // bounded rankings (see pq_recall) — lists element-identical
-        val rMax = math.min(embStats(s, dir)._1, PqMaxRerank.toLong).toInt
+        val rMax = math.min(embStats.get(s, dir)._1, PqMaxRerank.toLong).toInt
         val dial = Seq(math.max(10, sq.rerank / 2), sq.rerank,
           math.min(rMax, sq.rerank * 2)).distinct.sorted
         val calib = Seq((1L, QueryVectors.q1), (2L, QueryVectors.q2))
@@ -805,7 +806,7 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // number that hash-matches an independent engine is the
       // strongest form of quality evidence this engine reports.
       (s, dir) => {
-        val sq = sharedSqIndex(s, dir)
+        val sq = sharedSqIndex.get(s, dir)
         val emb = T(s, dir, "embeddings")
         val enc = s.read.parquet(sq.codesPath)
         val dial = Seq(10, 20, 50)
@@ -896,7 +897,7 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // the SAME shared build the calibrated row uses, so this row
       // certifies the deployed artifact, not a parallel re-derivation.
       (s, dir) => {
-        val sq = sharedSqIndex(s, dir)
+        val sq = sharedSqIndex.get(s, dir)
         SqIndex.searchRerank(s.read.parquet(sq.codesPath),
             T(s, dir, "embeddings"), "vec_id", "embedding",
             QueryVectors.q1, sq.params, k = 10, r = 50)
@@ -954,7 +955,7 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // ADC scan + re-rank, not a re-encode of yesterday's artifact.
       (s, dir) => {
         val emb = T(s, dir, "embeddings").filter(col("vec_id") % 8 === 0)
-        val pqf = sharedFixedPq(s, dir)
+        val pqf = sharedFixedPq.get(s, dir)
         PqIndex.searchRerank(s.read.parquet(pqf.codesPath), emb,
             "vec_id", "embedding", QueryVectors.q1, pqf.codebooks,
             k = 10, r = 50)
@@ -1016,10 +1017,11 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // the deployed partition-pruned ADC probe + re-rank.
       (s, dir) => {
         val emb = T(s, dir, "embeddings")
-        val (path, cents, cb) = sharedFixedIvfPq(s, dir)
+        val ivfpqf = sharedFixedIvfPq.get(s, dir)
         localFrameOrdered(
-          PqIndex.probeIvfPq(s, path, "vec_id", cents, QueryVectors.q1,
-              cb, k = 10, nprobe = 3,
+          PqIndex.probeIvfPq(s, ivfpqf.codesPath, "vec_id",
+              ivfpqf.centroids.frame(s), QueryVectors.q1, ivfpqf.codebooks,
+              k = 10, nprobe = 3,
               rerank = Some((emb, "embedding", 50)))
             .withColumn("rank", col("rank").cast("long")), "rank")
       },
@@ -1091,10 +1093,11 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // lossless-codebook ≡ exact is asserted in PqIndexSpec, the
       // operating point is certified by `ivfpq_recall`.
       (s, dir) => {
-        val ix = sharedIvfPqIndex(s, dir)
-        val ivf = sharedIvfIndex(s, dir)
-        PqIndex.probeIvfPq(s, ix.codesPath, "vec_id", ivf.centroids,
-          QueryVectors.q1, ix.codebooks, k = 10, nprobe = ix.nprobe,
+        val ix = sharedIvfPqIndex.get(s, dir)
+        val ivf = sharedIvfIndex.get(s, dir)
+        PqIndex.probeIvfPq(s, ix.codesPath, "vec_id",
+          ivf.centroids.frame(s), QueryVectors.q1, ix.codebooks, k = 10,
+          nprobe = ix.nprobe,
           rerank = Some((T(s, dir, "embeddings"), "embedding", ix.rerank)))
           .orderBy(col("rank"))
       },
@@ -1110,19 +1113,19 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // sharedPqIndex scaladoc); the declared depth must meet
       // PqRecallTarget by construction of the calibration.
       (s, dir) => {
-        val ix = sharedIvfPqIndex(s, dir)
-        val ivf = sharedIvfIndex(s, dir)
+        val ix = sharedIvfPqIndex.get(s, dir)
+        val cents = sharedIvfIndex.get(s, dir).centroids.frame(s)
         val emb = T(s, dir, "embeddings")
         // memoized corpus count + one tagged-union collect for all four
         // bounded rankings (see pq_recall) — lists element-identical
-        val rMax = math.min(embStats(s, dir)._1, PqMaxRerank.toLong).toInt
+        val rMax = math.min(embStats.get(s, dir)._1, PqMaxRerank.toLong).toInt
         val dial = Seq(math.max(10, ix.rerank / 2), ix.rerank,
           math.min(rMax, ix.rerank * 2)).distinct.sorted
         val calib = Seq((1L, QueryVectors.q1), (2L, QueryVectors.q2))
         val lists = Search.collectIdLists(
           calib.map { case (_, q) =>
             PqIndex.probeIvfPq(s, ix.codesPath, "vec_id",
-                ivf.centroids, q, ix.codebooks, k = dial.max,
+                cents, q, ix.codebooks, k = dial.max,
                 nprobe = ix.nprobe)
               .select(col("vec_id"))
           } ++ calib.map { case (_, q) =>
@@ -1159,7 +1162,8 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // recall arithmetic. Same sharedFixedIvfPq artifact as the topk
       // twin; `ivfpq_recall` keeps the calibrated dial.
       (s, dir) => {
-        val (path, cents, cb) = sharedFixedIvfPq(s, dir)
+        val ivfpqf = sharedFixedIvfPq.get(s, dir)
+        val cents = ivfpqf.centroids.frame(s)
         val emb = T(s, dir, "embeddings")
         val dial = Seq(10, 20, 50)
         val calib = Seq((1L, QueryVectors.q1), (2L, QueryVectors.q2))
@@ -1167,8 +1171,8 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
         // pq_recall) — lists element-identical, scheduler floor paid once
         val lists = Search.collectIdLists(
           calib.map { case (_, q) =>
-            PqIndex.probeIvfPq(s, path, "vec_id", cents, q, cb,
-                k = dial.max, nprobe = 3)
+            PqIndex.probeIvfPq(s, ivfpqf.codesPath, "vec_id", cents, q,
+                ivfpqf.codebooks, k = dial.max, nprobe = 3)
               .select(col("vec_id"))
           } ++ calib.map { case (_, q) =>
             Search.topK(emb, "embedding", "vec_id", q, k = 10)
@@ -1282,22 +1286,21 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // whole corpus; a vector lost (or double-appended) by the append
       // path breaks the match column. Rows-only per the contract.
       (s, dir) => {
-        val ix = sharedIvfPqIndex(s, dir)
-        val ivf = sharedIvfIndex(s, dir)
+        val ix = sharedIvfPqIndex.get(s, dir)
+        val ivf = sharedIvfIndex.get(s, dir)
+        val cents = ivf.centroids.frame(s)
         val emb = T(s, dir, "embeddings")
         // memoized day-1 codes slice, file-copied fresh (append mutates)
-        val path = day1SliceCopy(s, ix.codesPath, "ivfpqapp")
-        try {
+        withDay1SliceCopy(s, ix.codesPath, "ivfpqapp") { path =>
           val incoming = emb.filter(col("vec_id") % 10 === 0)
           PqIndex.encodeResidual(incoming, "vec_id", "embedding",
-              IvfIndex.assignTo(incoming, "vec_id", "embedding",
-                ivf.centroids),
-              ivf.centroids, ix.codebooks)
+              IvfIndex.assignTo(incoming, "vec_id", "embedding", cents),
+              cents, ix.codebooks)
             .repartition(col("cluster_id"))
             .write.partitionBy("cluster_id").mode("append").parquet(path)
           // corpus row count from the maintained stats memo — no count job
-          val n = embStats(s, dir)._1.toInt
-          val probed = PqIndex.probeIvfPq(s, path, "vec_id", ivf.centroids,
+          val n = embStats.get(s, dir)._1.toInt
+          val probed = PqIndex.probeIvfPq(s, path, "vec_id", cents,
               QueryVectors.q1, ix.codebooks, k = 10, nprobe = ivf.k,
               rerank = Some((emb, "embedding", math.max(10, n))))
             .select(col("vec_id"), col("sim"))
@@ -1308,8 +1311,7 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
             .select(col("vec_id"), col("sim"), col("sim_exact"),
               (col("sim") === col("sim_exact")).as("matches")),
             "-sim", "vec_id")
-        } finally org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(path).getParentFile)
+        }
       },
       None,
       "incremental IVF-PQ append: frozen centroids + frozen codebooks + partition append; exhaustive probe ≡ exact top-10"),
@@ -1327,7 +1329,7 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // index would surface here as a driver-visible drop, not a
       // spec-only one.
       (s, dir) => {
-        val ivf = sharedIvfIndex(s, dir)
+        val ivf = sharedIvfIndex.get(s, dir)
         val emb = T(s, dir, "embeddings")
         // the accelerate-vs-recall dial, anchored to the build's chosen
         // point: half the declared nprobe (the cheap end), the declared
@@ -1346,7 +1348,7 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
         // failure the nprobe = k row exists to catch.
         val dial = Seq(math.max(2, ivf.nprobe / 2), ivf.nprobe, ivf.k)
           .distinct
-        val centsSeq = ivf.centroids.collect().toIndexedSeq
+        val centsSeq = ivf.centroids.rows.toIndexedSeq
           .map(r => (r.getInt(0), r.getSeq[Double](1).toIndexedSeq))
         val calib = Seq((1L, QueryVectors.q1), (2L, QueryVectors.q2))
         val sweep = IvfIndex.calibrationTopK(s, ivf.indexPath, "vec_id",
@@ -1392,12 +1394,12 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // layout breaks the hash). The index table is the SAME
       // sharedFixedIvf artifact the hash-gated probe rows consume.
       (s, dir) => {
-        val (path, cents) = sharedFixedIvf(s, dir)
+        val ivff = sharedFixedIvf.get(s, dir)
         val emb = T(s, dir, "embeddings")
-        val centsSeq = cents.collect().toIndexedSeq
+        val centsSeq = ivff.centroids.rows.toIndexedSeq
           .map(r => (r.getInt(0), r.getSeq[Double](1).toIndexedSeq))
         val calib = Seq((1L, QueryVectors.q1), (2L, QueryVectors.q2))
-        val sweep = IvfIndex.calibrationTopK(s, path, "vec_id",
+        val sweep = IvfIndex.calibrationTopK(s, ivff.indexPath, "vec_id",
           "embedding", centsSeq, calib, k = 10)
         def topAt(qid: Long, np: Int): Set[Long] =
           sweep.iterator.filter(t => t._1 == qid && t._2 < np).toSeq
@@ -1491,20 +1493,20 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // per the contract; byte-level append ≡ rebuild-with-same-
       // centroids equivalence is asserted in IvfIndexSpec.
       (s, dir) => {
-        val ivf = sharedIvfIndex(s, dir)
+        val ivf = sharedIvfIndex.get(s, dir)
         val emb = T(s, dir, "embeddings")
         // day-1 index: shared table rows NOT in the incoming slice
         // (cluster_id rides along from the existing assignment) — a
         // memoized slice, file-copied fresh since the append mutates it
-        val path = day1SliceCopy(s, ivf.indexPath, "ivfapp")
-        try {
+        val cents = ivf.centroids.frame(s)
+        withDay1SliceCopy(s, ivf.indexPath, "ivfapp") { path =>
           // day-2: assign incoming against the FROZEN centroids, append
           val incoming = emb.filter(col("vec_id") % 10 === 0)
           IvfIndex.appendPartitioned(incoming, "vec_id",
-            IvfIndex.assignTo(incoming, "vec_id", "embedding", ivf.centroids),
+            IvfIndex.assignTo(incoming, "vec_id", "embedding", cents),
             path)
           val probed = IvfIndex.probePartitioned(s, path, "vec_id",
-            "embedding", ivf.centroids, QueryVectors.q1, k = 10,
+            "embedding", cents, QueryVectors.q1, k = 10,
             nprobe = ivf.k)
             .select(col("vec_id"), col("sim"))
           val exact = graft.operators.Search
@@ -1514,8 +1516,7 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
             .select(col("vec_id"), col("sim"), col("sim_exact"),
               (col("sim") === col("sim_exact")).as("matches")),
             "-sim", "vec_id")
-        } finally org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(path).getParentFile)
+        }
       },
       None,
       "incremental IVF append: assign-to-existing-centroids + partition append; probe@k ≡ exact top-10"),
@@ -1541,8 +1542,7 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
         val incoming = emb.filter(col("vec_id") % 10 === 0)
         // day-1 grid, trained WITHOUT the incoming slice
         val p = SqIndex.trainParams(day1, "vec_id", "embedding")
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-sqapp")
-        try {
+        withScratchDir("graft-sqapp") { tmpRoot =>
           val path = s"$tmpRoot/codes"
           SqIndex.encode(day1, "vec_id", "embedding", p)
             .write.mode("overwrite").parquet(path)
@@ -1559,8 +1559,7 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
             .select(col("vec_id"), col("sim"), col("sim_exact"),
               (col("sim") === col("sim_exact")).as("matches")),
             "-sim", "vec_id")
-        } finally org.apache.commons.io.FileUtils
-          .deleteDirectory(tmpRoot.toFile)
+        }
       },
       // PROMOTED (round 10): the grid is pure min/max over the day-1
       // slice, so the whole frozen-grid maintenance cycle — including
@@ -1642,7 +1641,7 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // (one corpus-wide signature scan per declared-set pass; the memo
       // itself runs minHashCandidatesMaterialized + jaccardVerify, the
       // same chain this query always declared)
-      (s, dir) => sharedMinhashVerified(s, dir)
+      (s, dir) => s.read.parquet(sharedMinhashEdges.get(s, dir))
         .filter(col("jaccard") >= 0.8)
         .orderBy(col("id_a"), col("id_b")),
       None,
@@ -1660,7 +1659,7 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
         // per-invocation aggregation job; the persisted (id, vec)
         // working set is populated by the bucket self-join itself, and
         // the verify side reads the same cache
-        val (n, d) = embStats(s, dir)
+        val (n, d) = embStats.get(s, dir)
         val base = T(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1710,7 +1709,7 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // uses — the chain stays end-to-end certified, the signature
       // pass runs once per set pass instead of once per row
       (s, dir) => {
-        val banded = sharedPolyMinhashBanded(s, dir)
+        val banded = sharedPolyMinhashBanded.get(s, dir).frame(s)
         localFrameOrdered(NearDup.bucketPairs(banded, banded,
           NearDup.PairRule.AnyKey, cross = false), "id_a", "id_b")
       },
@@ -1728,7 +1727,7 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // 3 bands, hamming ≤ 2 candidates are exhaustively recalled, so
       // the output is banding-loss-free by construction.
       (s, dir) => {
-        val banded = sharedPolySimhashBanded(s, dir)
+        val banded = sharedPolySimhashBanded.get(s, dir).frame(s)
         localFrameOrdered(NearDup.bucketPairs(banded, banded,
           NearDup.PairRule.Hamming(2, bigint = true), cross = false),
           "id_a", "id_b")
@@ -1744,7 +1743,7 @@ private[graft] trait QueriesTierIndexMediaStore { this: Queries.type =>
       // is tie-rule-independent (equal window minima select the same
       // value), which is what makes the twin exactly replayable.
       (s, dir) => {
-        val fps = sharedPolyWinnowFps(s, dir)
+        val fps = sharedPolyWinnowFps.get(s, dir).frame(s)
         localFrameOrdered(NearDup.bucketPairs(fps, fps,
           NearDup.PairRule.MinShared(2), cross = false), "id_a", "id_b")
       },

@@ -88,8 +88,9 @@ private[graft] trait QueriesTierNearDupVerify { this: Queries.type =>
       // rows-only; the VALUE is the point: banding that loses dup
       // pairs surfaces here as a recall drop, driver-visible.
       (s, dir) => {
-        val exact = sharedExactPairs(s, dir).select(col("id_a"), col("id_b"))
-        val got = sharedMinhashVerified(s, dir)
+        val exact = sharedExactPairs.get(s, dir).frame(s)
+          .select(col("id_a"), col("id_b"))
+        val got = s.read.parquet(sharedMinhashEdges.get(s, dir))
           .filter(col("jaccard") >= 0.8).select(col("id_a"), col("id_b"))
         val hit = exact.join(got, Seq("id_a", "id_b"), "left_semi")
         localFrame(exact.agg(count(lit(1)).as("n_exact"))
@@ -113,7 +114,8 @@ private[graft] trait QueriesTierNearDupVerify { this: Queries.type =>
       // values are the point.
       (s, dir) => {
         val docs = T(s, dir, "documents")
-        val exact = sharedExactPairs(s, dir).select(col("id_a"), col("id_b"))
+        val exact = sharedExactPairs.get(s, dir).frame(s)
+          .select(col("id_a"), col("id_b"))
         def coverage(tier: String, cands: DataFrame): DataFrame = {
           val hit = exact.join(cands.select(col("id_a"), col("id_b")),
             Seq("id_a", "id_b"), "left_semi")
@@ -124,7 +126,8 @@ private[graft] trait QueriesTierNearDupVerify { this: Queries.type =>
         }
         localFrameOrdered(
           coverage("minhash",
-            sharedMinhashVerified(s, dir).filter(col("jaccard") >= 0.8))
+            s.read.parquet(sharedMinhashEdges.get(s, dir))
+              .filter(col("jaccard") >= 0.8))
           .unionAll(coverage("simhash",
             NearDup.simHashCandidates(docs, "doc_id", "text")))
           .unionAll(coverage("winnow",
@@ -140,7 +143,7 @@ private[graft] trait QueriesTierNearDupVerify { this: Queries.type =>
       // labels table. The live clustering algorithms stay benchmarked
       // in `dedup_clusters_star` (contraction, this oracle) and
       // `dedup_pipeline_lsh` (propagation over the MinHash edges).
-      (s, dir) => sharedDedupLabels(s, dir).orderBy("doc_id"),
+      (s, dir) => sharedDedupLabels.get(s, dir).frame(s).orderBy("doc_id"),
       Some(dedupClustersOracle),
       "dedup clustering: Jaccard edges → connected components (min-label propagation)"),
 
@@ -176,7 +179,7 @@ private[graft] trait QueriesTierNearDupVerify { this: Queries.type =>
         // quality argmax per component, sizes join — runs live, and is
         // the same single-shuffle keepBestByKey shape dedupFromEdges
         // plans at any scale
-        val cc = sharedDedupLabels(s, dir)
+        val cc = sharedDedupLabels.get(s, dir).frame(s)
         val sizes = cc.groupBy(col("component")).agg(count(lit(1)).as("n_docs"))
         val reps = Dedup.keepBestByKey(sub.join(cc, "doc_id"),
           col("component"), col("n_types"), col("doc_id"))
@@ -229,7 +232,7 @@ private[graft] trait QueriesTierNearDupVerify { this: Queries.type =>
         // the sharedIvfIndex discipline); stages 3-4 run live. The
         // un-memoized full chain is the lshDedupPipeline operator,
         // exercised end-to-end in DedupSpec.
-        val edges = sharedMinhashVerified(s, dir)
+        val edges = s.read.parquet(sharedMinhashEdges.get(s, dir))
           .filter(col("jaccard") >= 0.8)
           .select(col("id_a"), col("id_b"))
         val out = Dedup.dedupFromEdges(
@@ -262,7 +265,7 @@ private[graft] trait QueriesTierNearDupVerify { this: Queries.type =>
         // a LocalRelation instead of re-executing the verify subtree
         // per orientation (the shared-subtree double-execution trap);
         // components + representative run live
-        val banded = sharedPolyMinhashBanded(s, dir)
+        val banded = sharedPolyMinhashBanded.get(s, dir).frame(s)
         val edges = NearDup.materializePairs(
           NearDup.jaccardVerify(slice, "doc_id", "text",
               NearDup.bucketPairs(banded, banded, NearDup.PairRule.AnyKey,
@@ -328,9 +331,9 @@ private[graft] trait QueriesTierNearDupVerify { this: Queries.type =>
       // are float-iterative → rows-only per the contract; the keep-rule
       // and cluster-scoping semantics are pinned in DedupSpec.
       (s, dir) => {
-        val ivf = sharedIvfIndex(s, dir)
+        val ivf = sharedIvfIndex.get(s, dir)
         val withRank = s.read.parquet(ivf.indexPath)
-          .join(broadcast(ivf.centroids), "cluster_id")
+          .join(broadcast(ivf.centroids.frame(s)), "cluster_id")
           .withColumn("_ccos",
             r4(VectorFunctions.cosine(col("embedding"), col("centroid"))))
         Dedup.semanticDedup(withRank, "vec_id", "embedding",

@@ -653,8 +653,7 @@ private[graft] trait QueriesTierTextAnalysis { this: Queries.type =>
         // unique temp dir per invocation (a shared fixed path would race
         // under concurrent runs); the round-trip is materialized eagerly
         // so the directory can be deleted before returning
-        val tmpRoot = java.nio.file.Files.createTempDirectory("graft-csvrt")
-        try {
+        withScratchDir("graft-csvrt") { tmpRoot =>
           val tmp = s"$tmpRoot/corpus"
           val src = T(s, dir, "embeddings").filter(col("vec_id") < 100)
             .select(col("vec_id").as("chunk_id"),
@@ -666,7 +665,7 @@ private[graft] trait QueriesTierTextAnalysis { this: Queries.type =>
             .agg(count(lit(1)).as("n"),
               r4(dbl(decSum(element_at(col("vector_embedding"), 1)))).as("sum_e1"),
               max(col("chunk_id")).as("max_id")))
-        } finally org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot.toFile)
+        }
       },
       Some("""SELECT count(*) AS n,
          |  round(CAST(sum(CAST(embedding[1] AS DECIMAL(18,4))) AS DOUBLE), 4) AS sum_e1,
@@ -711,7 +710,7 @@ private[graft] trait QueriesTierTextAnalysis { this: Queries.type =>
       // tables once and every recurring join consumes the layout, so
       // the row prices the zero-exchange read, not a per-rep rewrite.
       (s, dir) => {
-        val (lt, ot) = sharedBucketedTables(s, dir)
+        val (lt, ot) = sharedBucketedTables.get(s, dir)
         s.table(lt).join(s.table(ot),
             col("l_orderkey") === col("o_orderkey"))
           .groupBy(col("o_orderpriority"))
@@ -735,7 +734,7 @@ private[graft] trait QueriesTierTextAnalysis { this: Queries.type =>
       // infra line): a layout rewrite happens once per compaction epoch
       // in a deployment; the row prices the clustered read-back whose
       // content-neutrality the oracle certifies
-      (s, dir) => s.read.parquet(sharedZorderPath(s, dir))
+      (s, dir) => s.read.parquet(sharedZorderPath.get(s, dir))
         .agg(count(lit(1)).as("n"),
           r4(dbl(decSum(col("l_quantity")))).as("sum_qty"),
           countDistinct(col("l_partkey")).as("n_parts")),
@@ -753,7 +752,7 @@ private[graft] trait QueriesTierTextAnalysis { this: Queries.type =>
       // partitioned layout from the shared per-dir memo
       // (`_hivepart_build` infra line): the partitioned table IS the
       // deployed store; the row prices the partition-pruned read
-      (s, dir) => s.read.parquet(sharedHivePartPath(s, dir))
+      (s, dir) => s.read.parquet(sharedHivePartPath.get(s, dir))
         .filter(col("event_type") === "purchase")
         .agg(count(lit(1)).as("n"),
           r4(dbl(decSum(col("value")))).as("sum_value"),

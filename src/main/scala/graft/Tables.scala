@@ -29,8 +29,8 @@ object Tables {
   // fingerprint that rebuilds on fixture regeneration. One entry per
   // (dir, table): a replaced session's frames are evicted on next
   // access, so retained dead-session frames are bounded by the table
-  // count, not the session count. Same discipline as
-  // Queries.ivfBuildCache / Streams.nanosCache.
+  // count, not the session count. The same freshness rule as
+  // `Queries.Memo` and Streams.nanosCache.
   private final case class CachedFrame(
       session: SparkSession, fingerprint: String, frame: DataFrame)
 
@@ -38,8 +38,8 @@ object Tables {
     (String, String), CachedFrame]()
 
   /** (mtime, length) fingerprint of a fixture table file — the shared
-    * staleness guard for every per-dir memo (this cache,
-    * `Queries`' IVF/MinHash memos, `Streams`' schema probe). */
+    * staleness guard for every per-dir memo (this cache, every
+    * `Queries.Memo`, `Streams`' schema probe). */
   def fixtureFingerprint(dir: String, name: String): String = {
     val p = java.nio.file.Paths.get(dir, s"$name.parquet")
     val (mtime, len) =

@@ -654,7 +654,7 @@ object Streams {
   // not per streaming-query construction — the declared mirrors over the
   // same sfDir share a single probe. Keyed by sfDir (ONE entry per dir,
   // so in-process fixture regenerations replace instead of accumulate —
-  // same bound as Queries.ivfBuildCache); the VALUE carries the file's
+  // same bound as a Queries.Memo); the VALUE carries the file's
   // (mtime, length) fingerprint so a regeneration with the other
   // timestamp physical type re-probes instead of reusing a stale flag.
   private val nanosCache =

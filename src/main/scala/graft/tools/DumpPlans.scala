@@ -261,10 +261,10 @@ object DumpPlans {
           "→ TakeOrderedAndProject; every post-scan exchange carries " +
           "only the k-row result (top-k, then the rank window)"
       }, {
-        val ix = Queries.sharedIvfPqIndex(spark, dir)
-        val ivf = Queries.sharedIvfIndex(spark, dir)
+        val ix = Queries.sharedIvfPqIndex.get(spark, dir)
+        val ivf = Queries.sharedIvfIndex.get(spark, dir)
         graft.operators.PqIndex.probeIvfPq(spark, ix.codesPath, "vec_id",
-          ivf.centroids, graft.QueryVectors.q1, ix.codebooks,
+          ivf.centroids.frame(spark), graft.QueryVectors.q1, ix.codebooks,
           k = 10, nprobe = ix.nprobe)
       }))
   }

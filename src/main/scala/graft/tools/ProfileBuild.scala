@@ -255,12 +255,12 @@ object ProfileBuild {
         graft.operators.PqIndex.adcScoreHof(col("codes"), q, cb) }
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }
-    t("ivf_build") { graft.Queries.sharedIvfIndex(spark, dir) }
-    t("pq_build") { graft.Queries.sharedPqIndex(spark, dir) }
-    t("sq_build") { graft.Queries.sharedSqIndex(spark, dir) }
-    t("ivfpq_build") { graft.Queries.sharedIvfPqIndex(spark, dir) }
-    t("minhash_build") { graft.Queries.sharedMinhashVerified(spark, dir).count() }
-    t("dedup_edges_build") { graft.Queries.sharedDedupEdges(spark, dir).count() }
+    t("ivf_build") { graft.Queries.sharedIvfIndex.get(spark, dir) }
+    t("pq_build") { graft.Queries.sharedPqIndex.get(spark, dir) }
+    t("sq_build") { graft.Queries.sharedSqIndex.get(spark, dir) }
+    t("ivfpq_build") { graft.Queries.sharedIvfPqIndex.get(spark, dir) }
+    t("minhash_build") { graft.Queries.sharedMinhashEdges.get(spark, dir) }
+    t("dedup_edges_build") { graft.Queries.sharedDedupEdges.get(spark, dir) }
     spark.stop()
   }
 }

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * versioned store's commit-file writers, the near-dup closer's
   * broadcast hint and the text and vector admission kernels' reject
   * anti-join, the derived-sidecar directory written only by its backfill
-  * and carry step, one streaming admission loop, no swallowed `Throwable`,
+  * and carry step, one streaming admission loop, shared fixture artifacts
+  * memoized only through `Queries.Memo`, no swallowed `Throwable`,
   * and no orphaned scaladoc. [[hits]] skips comment lines. */
 class SourceHygieneSpec extends AnyFunSuite {
   private val mainRoot = Paths.get("src", "main", "scala")
@@ -50,6 +51,16 @@ class SourceHygieneSpec extends AnyFunSuite {
       .collect { case (l, i) if i + 1 < lineNo &&
         """^  (private(\[\w+\])?\s+)?def\s""".r.findFirstIn(l).isDefined => l.trim }
       .last
+
+  /** Kind and name (`def x`, `val y`, `class Z`) of the top-level
+    * object's member whose code starts at or above line `lineNo` of main
+    * source `file`. */
+  private def enclosingMember(file: String, lineNo: Int): String = {
+    val start = Files.readAllLines(mainRoot.resolve(file)).asScala
+      .take(lineNo).filter(l => l.matches("""^  \S.*""") && !isComment(l)).last
+    """\b(def|val|class|object)\s+(\w+)""".r.findFirstMatchIn(start)
+      .map(m => s"${m.group(1)} ${m.group(2)}").getOrElse(start.trim)
+  }
 
   test("SparkSession.builder appears only in GraftSession") {
     val found = hits("""SparkSession\s*\.\s*builder""".r)
@@ -146,6 +157,22 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "foreachBatch bodies calling an admission kernel outside admissionLoop:\n" +
         offenders.mkString("\n"))
+  }
+
+  test("shared fixture artifacts are memoized only through Queries.Memo") {
+    // a hand-written memo (its own map, freshness guard and temp dir) or a
+    // Bench infra line that calls a builder by name shows up here
+    def members(pattern: scala.util.matching.Regex): Set[String] =
+      hits(pattern).filter(_._1.matches("""graft/Queries\w*\.scala"""))
+        .map(h => enclosingMember(h._1, h._2)).toSet
+    assert(members("""\bConcurrentHashMap\b""".r) ===
+      Set("class Memo", "val day1SliceCache"),
+      "ConcurrentHashMap outside Memo and day1SliceCache")
+    assert(members("""\bcreateTempDirectory\b""".r) ===
+      Set("def artifactDir", "def withScratchDir"),
+      "createTempDirectory outside the temp-dir helpers")
+    val named = hits("""\bQueries\.shared""".r).filter(_._1 == "graft/Bench.scala")
+    assert(named.isEmpty, "Bench names a shared builder:\n" + named.mkString("\n"))
   }
 
   test("a Throwable is caught only to be rethrown") {
